@@ -192,7 +192,7 @@ def _dml_bucket_ids(
     table: DistributedTable,
     where: str | None,
     dirty: list[int],
-    base: int,
+    files: dict[str, dict],
 ) -> list[int]:
     """Buckets a COW rewrite must touch: the pruning survivors for
     ``where``, plus only those routing-dirty buckets that actually HOLD a
@@ -206,8 +206,7 @@ def _dml_bucket_ids(
     if not extra or where is None:
         return ids
     hits = (
-        table.scan(where=None, keep_bucket=True, version=base, pinned=True)
-        .where(F.col(BUCKET_COL).isin(extra))
+        table.read_buckets(files, extra)
         .where(F.coalesce(F.expr(where), F.lit(False)))
         .select(BUCKET_COL)
         .distinct()
@@ -233,15 +232,13 @@ def update(
     """``UPDATE t SET col=expr,... [WHERE pred]`` → matched-row count."""
     meta = table.meta
     base, snap_files, dirty0 = table.snapshot_full()
-    ids = _dml_bucket_ids(table, where, dirty0, base)
+    ids = _dml_bucket_ids(table, where, dirty0, snap_files)
     if not snap_files or not ids:
         return 0
-    # scan pinned to the SAME version the commit below is based on — a
-    # concurrent commit aborts ours (CommitConflict) instead of leaking
+    # reads the files of the SAME snapshot the commit below is based on —
+    # a concurrent commit aborts ours (CommitConflict) instead of leaking
     # its rows into our rewrite (review r6)
-    df = table.scan(where=None, keep_bucket=True, version=base, pinned=True)
-    if len(ids) < meta.buckets:
-        df = df.where(F.col(BUCKET_COL).isin(ids))
+    df = table.read_buckets(snap_files, ids)
 
     pred = F.coalesce(F.expr(where), F.lit(False)) if where else F.lit(True)
 
@@ -308,14 +305,6 @@ def update(
         # first cut scanned all buckets for the modified side too;
         # _dml_bucket_ids guarantees pred-matching rows live only in ids).
         try:
-            full = table.scan(
-                where=None, keep_bucket=True, version=base, pinned=True
-            )
-            in_ids = (
-                full.where(F.col(BUCKET_COL).isin(ids))
-                if len(ids) < meta.buckets
-                else full
-            )
             # the WHERE predicate partitions BOTH sides of the check, so it
             # must be deterministic too (review r8b: UPDATE ... WHERE
             # rand() < 0.9 would stage one set of matches and validate a
@@ -326,17 +315,16 @@ def update(
                 text = assignments[col]
                 if _DEFAULT_RE.match(text):
                     text = _resolve_default(table, col)
-                _assert_deterministic_assignment(full, text, col)
+                _assert_deterministic_assignment(df, text, col)
                 dt = meta.schema[col].dataType
-                modified = in_ids.where(pred).select(
+                modified = df.where(pred).select(
                     BUCKET_COL, F.expr(text).cast(dt).alias(col)
                 )
                 is_global = col == meta.partition_column
+                base_rows = table.read_buckets(snap_files) if is_global else df
                 # pred is NULL-coalesced to false, so ~pred is exactly
                 # the not-updated rows (their values survive the rewrite)
-                others = (full if is_global else in_ids).where(~pred).select(
-                    BUCKET_COL, col
-                )
+                others = base_rows.where(~pred).select(BUCKET_COL, col)
                 _check_unique_sides(
                     table, col, modified, others, bucket_local=not is_global
                 )
@@ -425,8 +413,7 @@ def upsert(
     dirty_extra = sorted(set(dirty0) - batch_ids)
     if dirty_extra:
         hit = (
-            table.scan(where=None, keep_bucket=True, version=base, pinned=True)
-            .where(F.col(BUCKET_COL).isin(dirty_extra))
+            table.read_buckets(snap_files, dirty_extra)
             .join(new_rows.select(*key_cols).distinct(), key_cols, "left_semi")
             .select(BUCKET_COL)
             .distinct()
@@ -435,10 +422,8 @@ def upsert(
         batch_ids |= {r[0] for r in hit}
     ids = sorted(batch_ids)
 
-    # pinned to the commit's base version — see update()
-    existing = table.scan(where=None, keep_bucket=True, version=base, pinned=True)
-    if len(ids) < meta.buckets:
-        existing = existing.where(F.col(BUCKET_COL).isin(ids))
+    # the commit's base snapshot — see update()
+    existing = table.read_buckets(snap_files, ids)
     # anti-join on the input's key set; AQE broadcasts it when the batch is
     # small (the common daily-merge case) and falls back to a key-partitioned
     # join for huge batches — don't force either. Equality is deliberately
@@ -482,13 +467,13 @@ def upsert(
         # that). Survivor-only duplicate groups no longer abort (ADVICE
         # r7, extended to bucket-local in r8).
         try:
-            full = table.scan(
-                where=None, keep_bucket=True, version=base, pinned=True
-            )
             keys = new_rows.select(*key_cols).distinct()
             for col in meta.unique_columns:
                 is_global = col == meta.partition_column
-                others = (full if is_global else existing).join(
+                base_rows = (
+                    table.read_buckets(snap_files) if is_global else existing
+                )
+                others = base_rows.join(
                     keys, key_cols, "left_anti"
                 ).select(BUCKET_COL, col)
                 _check_unique_sides(
@@ -509,9 +494,8 @@ def upsert(
 
 def delete(table: DistributedTable, where: str | None = None) -> int:
     """``DELETE FROM t [WHERE pred]`` → deleted-row count."""
-    meta = table.meta
     base, snap_files, dirty0 = table.snapshot_full()
-    ids = _dml_bucket_ids(table, where, dirty0, base)
+    ids = _dml_bucket_ids(table, where, dirty0, snap_files)
     if not snap_files or not ids:
         return 0
 
@@ -524,9 +508,7 @@ def delete(table: DistributedTable, where: str | None = None) -> int:
         _manifest_mod.commit(table.path, {}, base)
         return total
 
-    df = table.scan(where=None, keep_bucket=True, version=base, pinned=True)
-    if len(ids) < meta.buckets:
-        df = df.where(F.col(BUCKET_COL).isin(ids))
+    df = table.read_buckets(snap_files, ids)
     # same up-front guard as update() (review r9): the observe() below
     # embeds the predicate and Spark rejects nondeterministic observed
     # metrics with an opaque analyzer error otherwise

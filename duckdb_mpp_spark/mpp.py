@@ -877,6 +877,10 @@ class MppSession:
         return tbl.insert(src.select(*exprs))
 
     def _substitute_system_views(self, query: str) -> str:
+        # the views are built (three DataFrames) only for a statement that
+        # names them, never on every front-door SELECT
+        if not re.search(r"__mpp_system\.", query, re.IGNORECASE):
+            return query
         self.catalog.register_system_views(self.spark)
         return re.sub(
             r"\b(?:[\w]+\.)?__mpp_system\.(nodes|tables|shards)\b",

@@ -22,10 +22,10 @@ file index) skips the unselected bucket directories — so pruning scales to a
 100 TB table exactly like Hive-style partition pruning does: it is metadata
 work, proportional to #buckets, not data size.
 
-The same folding, evaluated on a one-row DataFrame, yields the concrete
-bucket ids for the ``Shards: k/n`` explain contract
-(``test/sql/mpp_filter.test:60-87``) and for copy-on-write DML, which must
-know which directories to rewrite.
+The same folding, evaluated on the driver over an inline relation of the
+bucket-id domain (no Spark job), yields the concrete bucket ids for the
+``Shards: k/n`` explain contract (``test/sql/mpp_filter.test:60-87``) and
+for copy-on-write DML, which must know which directories to rewrite.
 """
 
 from __future__ import annotations
@@ -401,13 +401,19 @@ def evaluate_bucket_ids(
 ) -> list[int]:
     """Concrete surviving bucket ids for a derived ``__bucket`` predicate.
 
-    Evaluates the predicate against the full bucket-id domain in ONE tiny
-    Spark job over ``spark.range(buckets)`` — O(#buckets) rows, driver-side
-    planning cost only; used for explain output and DML bucket selection,
-    never on the data path.
+    Evaluates the predicate against the full bucket-id domain held in an
+    inline ``VALUES`` relation: Catalyst's ConvertToLocalRelation folds the
+    filter on the driver, so no Spark job runs — O(#buckets) driver work,
+    the same in-process bind-time cost as the reference's
+    ``prune_shards.cpp``. The expressions are the ones the scan's partition
+    filter evaluates, so the ids match the directories a pruned scan
+    reads. Used for explain output, zone-map file selection and DML bucket
+    selection, never on the data path.
     """
     if bucket_pred is None:
         return list(range(buckets))
-    df = spark.range(buckets).selectExpr("CAST(id AS INT) AS __bucket")
-    rows = df.where(bucket_pred).collect()
+    domain = ", ".join(f"({b})" for b in range(buckets))
+    rows = spark.sql(
+        f"SELECT __bucket FROM VALUES {domain} AS t(__bucket) WHERE {bucket_pred}"
+    ).collect()
     return sorted(r[0] for r in rows)

@@ -23,7 +23,11 @@ def conf_guard(spark: SparkSession, confs: dict[str, str]):
     escapes its block is no longer masked by per-query re-application — it
     would leak into every later query in the session. Restore uses the
     saved value, never ``unset()``: unset resets to the GLOBAL default,
-    not the session's builder/tune-time value."""
+    not the session's builder/tune-time value.
+
+    A failed restore is loud: every key is still attempted, then the first
+    failure is raised — a silently swallowed restore would leak the
+    block's value into every later query of the session."""
     saved: dict[str, str | None] = {}
     for k in confs:
         try:
@@ -35,14 +39,17 @@ def conf_guard(spark: SparkSession, confs: dict[str, str]):
             spark.conf.set(k, v)
         yield spark
     finally:
+        failed: Exception | None = None
         for k, v in saved.items():
             try:
                 if v is None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
-            except Exception:
-                pass
+            except Exception as e:
+                failed = failed or e
+        if failed is not None:
+            raise failed
 
 
 def _graft_conf_overrides() -> dict[str, str]:

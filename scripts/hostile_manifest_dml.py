@@ -79,11 +79,11 @@ def _stale_head_patch(tbl, n_stale_reads):
     stale = real()
     state = {"left": n_stale_reads}
 
-    def patched(version=None, pinned=False):
+    def patched(version=None):
         if version is None and state["left"] > 0:
             state["left"] -= 1
             return stale
-        return real(version, pinned=pinned)
+        return real(version)
 
     tbl.snapshot_full = patched
     return lambda: setattr(tbl, "snapshot_full", real)

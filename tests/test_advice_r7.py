@@ -170,28 +170,31 @@ def test_update_unaffected_by_survivor_duplicate_in_rewritten_bucket(mpp):
         )
 
 
-# --- 5. version=0 pin ------------------------------------------------------
+# --- 5. version=0 base ------------------------------------------------------
 
 def test_snapshot_full_version_zero_empty_table(mpp):
     mpp.sql("CREATE TABLE pin0(k INT) PARTITION BY(k) WITH BUCKETS 2")
     t = mpp.table("pin0")
-    # internal DML pin: serve the empty v0 explicitly
-    v, files, dirty = t.snapshot_full(version=0, pinned=True)
-    assert (v, files, dirty) == (0, {}, [])
+    # a DML on the empty table plans from the head read's empty v0
+    assert t.snapshot_full() == (0, {}, [])
+    assert mpp.sql("UPDATE pin0 SET k = 2 WHERE k = 1") == 0
+    assert mpp.sql("DELETE FROM pin0 WHERE k = 1") == 0
     # user time travel to v0: a clear error, never a silent empty frame
-    # (review r7 — the pin branch must not capture VERSION AS OF 0)
+    # (review r7)
     with pytest.raises(ValueError, match="no snapshot v0"):
         t.snapshot_full(version=0)
 
 
 def test_snapshot_full_version_zero_after_commit_conflicts(mpp):
     mpp.sql("CREATE TABLE pin1(k INT) PARTITION BY(k) WITH BUCKETS 2")
-    mpp.sql("INSERT INTO pin1 VALUES(1),(2)")
     t = mpp.table("pin1")
-    assert t.snapshot_full()[0] >= 1
-    # a stale internal pin fails like a lost commit race …
+    base, files, _dirty = t.snapshot_full()  # a rewrite's base: v0
+    assert base == 0
+    mpp.sql("INSERT INTO pin1 VALUES(1),(2)")  # the head moves past it
+    # a rewrite based on the stale v0 fails like a lost commit race …
     with pytest.raises(manifest.CommitConflict):
-        t.snapshot_full(version=0, pinned=True)
+        t._commit_replace([0, 1], {}, base, files)
+    assert sorted(r.k for r in t.scan().collect()) == [1, 2]
     # … but USER time travel keeps the time-travel error type (review r7:
     # CommitConflict is what retry/abort logic is written against)
     with pytest.raises(ValueError, match="no snapshot v0"):

@@ -4,7 +4,7 @@ import datetime
 
 import pytest
 
-from tests.conftest import rows
+from tests.conftest import bucket_files, bucket_of, input_paths, rows
 
 
 @pytest.fixture()
@@ -61,3 +61,28 @@ def test_delete_flow(session):
     # expression filter (:84-93)
     assert session.sql("DELETE FROM test_delete WHERE upper(name)='TOM'") == 1
     assert rows(session.sql("SELECT count(1) AS n FROM test_delete")) == [(0,)]
+
+
+def test_keyed_delete_reads_and_rewrites_only_its_bucket(session, dml_scans):
+    # both listing arms: the default bound stats the scan's file list on
+    # the driver (no job), bound 0 hands it to Spark's listing job
+    from duckdb_mpp_spark.table import DRIVER_LISTING_FILES
+
+    session.sql(INSERT)
+    tbl = session.table("test_delete")
+    for bound, day in ((DRIVER_LISTING_FILES, "2025-01-03"), (0, "2025-01-04")):
+        files = tbl.snapshot_files()
+        with dml_scans(bound) as scans:
+            assert session.sql(f"DELETE FROM test_delete WHERE create_date='{day}'") == 1
+        bucket = bucket_of(tbl, f"'{day}'")
+        [(ids, df, jobs)] = scans
+        assert ids == [bucket]
+        assert input_paths(df) == bucket_files(tbl, files, bucket)
+        assert (jobs == 0) == (bound > 0), (bound, jobs)
+        other = f"__bucket={bucket}/"
+        after = tbl.snapshot_files()
+        assert {r for r in after if not r.startswith(other)} == {
+            r for r in files if not r.startswith(other)
+        }
+    got = rows(session.sql("SELECT create_date, name FROM test_delete ORDER BY create_date"))
+    assert got == [(d("2025-01-01"), "alex"), (d("2025-01-02"), "jack")]

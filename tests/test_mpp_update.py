@@ -4,7 +4,7 @@ import datetime
 
 import pytest
 
-from tests.conftest import rows
+from tests.conftest import bucket_files, bucket_of, input_paths, rows
 
 
 @pytest.fixture()
@@ -77,24 +77,45 @@ def test_update_with_declared_default(mpp):
     assert got == [(1, "anon"), (2, "b")]
 
 
-def test_update_only_rewrites_pruned_buckets(session):
+def test_update_only_rewrites_pruned_buckets(session, dml_scans):
     """The COW win: an UPDATE with an `=` predicate on the partition column
     must touch only 1/6 bucket directories (the reference sends UPDATE SQL
-    only to surviving shards, src/execution/mpp_physical_update.cpp:79-119)."""
+    only to surviving shards, src/execution/mpp_physical_update.cpp:79-119).
+    Both listing arms: the default bound stats the scan's file list on the
+    driver (no job), bound 0 hands it to Spark's listing job; either way
+    the scan lists only the updated bucket's files."""
     import os
 
+    from duckdb_mpp_spark.table import DRIVER_LISTING_FILES
+
     tbl = session.table("test_update")
-    before = {}
-    for bdir in os.listdir(tbl.path):
-        if bdir.startswith("__bucket="):
-            p = os.path.join(tbl.path, bdir)
-            before[bdir] = max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
-    session.sql("UPDATE test_update SET name='X' WHERE create_date='2025-01-01'")
-    changed = []
-    for bdir in os.listdir(tbl.path):
-        if bdir.startswith("__bucket="):
-            p = os.path.join(tbl.path, bdir)
-            mtime = max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
-            if bdir not in before or mtime != before[bdir]:
-                changed.append(bdir)
-    assert len(changed) == 1, changed
+    for bound, day in ((DRIVER_LISTING_FILES, "2025-01-01"), (0, "2025-01-02")):
+        before = {}
+        for bdir in os.listdir(tbl.path):
+            if bdir.startswith("__bucket="):
+                p = os.path.join(tbl.path, bdir)
+                before[bdir] = max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
+        files = tbl.snapshot_files()
+        with dml_scans(bound) as scans:
+            n = session.sql(f"UPDATE test_update SET name='X' WHERE create_date='{day}'")
+        assert n == 1
+        changed = []
+        for bdir in os.listdir(tbl.path):
+            if bdir.startswith("__bucket="):
+                p = os.path.join(tbl.path, bdir)
+                mtime = max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
+                if bdir not in before or mtime != before[bdir]:
+                    changed.append(bdir)
+        bucket = bucket_of(tbl, f"'{day}'")
+        assert changed == [f"__bucket={bucket}"], changed
+        [(ids, df, jobs)] = scans
+        assert ids == [bucket]
+        assert input_paths(df) == bucket_files(tbl, files, bucket)
+        assert (jobs == 0) == (bound > 0), (bound, jobs)
+    got = rows(session.sql("SELECT create_date, name FROM test_update ORDER BY create_date"))
+    assert got == [
+        (d("2025-01-01"), "X"),
+        (d("2025-01-02"), "X"),
+        (d("2025-01-03"), "jason"),
+        (d("2025-01-04"), "tom"),
+    ]

@@ -286,49 +286,50 @@ def test_window_topk_skewed_supplier(spark, tmp_path):
     sf_dir = str(tmp_path)
     df.coalesce(1).write.parquet(os.path.join(sf_dir, "lineitem.parquet"))
 
-    got = run_spark_query("window_topk_per_group", spark, sf_dir)
-    p = plan_text(got)
-    # fused plan shape survives the hostile data: one raw exchange keyed
-    # on l_suppkey alone (same assertion as the happy-path test)
-    import re as _re
-
-    parts = _re.findall(r"hashpartitioning\(([^)]*)\)", p)
-    assert parts and all("l_partkey" not in k for k in parts), p
-
-    # the documented bound: each partition of the fused exchange carries
-    # exactly its suppliers' raw rows — hot partition ≤ rows(hot supplier)
-    # + the uniform share of the other 999 suppliers, nowhere near a
-    # corpus collapse onto one task
-    li = load_table(spark, sf_dir, "lineitem")
-    n_width = max(
-        int(spark.sparkContext.defaultParallelism),
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-    sizes = (
-        li.repartition(n_width, F.col("l_suppkey"))
-        .groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .collect()
-    )
-    total = n_hot + n_rest
-    uniform_share = n_rest / max(len(sizes), 1)
-    assert max(r["count"] for r in sizes) <= n_hot + 20 * uniform_share, sizes
-    assert max(r["count"] for r in sizes) < 0.5 * total, sizes
-
-    # exactness under skew: the fused callable ≡ the classic two-exchange
-    # SQL algebra on the same data
-    df.createOrReplaceTempView("lineitem")
-    from duckdb_mpp_spark.queries.windows_sets import _TOPK_CORE
-
-    expected = spark.sql(_TOPK_CORE + " ORDER BY l_suppkey, rn")
-    exp_rows = [tuple(r) for r in expected.collect()]
-    got_rows = [tuple(r) for r in got.orderBy("l_suppkey", "rn").collect()]
-    assert got_rows == exp_rows
-    spark.catalog.dropTempView("lineitem")
+    # the gate registers its views (and the registered-dir conf) from the
+    # hostile dir; the finally restores both even when an assert fails
     try:
+        got = run_spark_query("window_topk_per_group", spark, sf_dir)
+        p = plan_text(got)
+        # fused plan shape survives the hostile data: one raw exchange keyed
+        # on l_suppkey alone (same assertion as the happy-path test)
+        import re as _re
+
+        parts = _re.findall(r"hashpartitioning\(([^)]*)\)", p)
+        assert parts and all("l_partkey" not in k for k in parts), p
+
+        # the documented bound: each partition of the fused exchange carries
+        # exactly its suppliers' raw rows — hot partition ≤ rows(hot supplier)
+        # + the uniform share of the other 999 suppliers, nowhere near a
+        # corpus collapse onto one task
+        li = load_table(spark, sf_dir, "lineitem")
+        n_width = max(
+            int(spark.sparkContext.defaultParallelism),
+            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        )
+        sizes = (
+            li.repartition(n_width, F.col("l_suppkey"))
+            .groupBy(F.spark_partition_id().alias("pid"))
+            .count()
+            .collect()
+        )
+        total = n_hot + n_rest
+        uniform_share = n_rest / max(len(sizes), 1)
+        assert max(r["count"] for r in sizes) <= n_hot + 20 * uniform_share, sizes
+        assert max(r["count"] for r in sizes) < 0.5 * total, sizes
+
+        # exactness under skew: the fused callable ≡ the classic two-exchange
+        # SQL algebra on the same data
+        df.createOrReplaceTempView("lineitem")
+        from duckdb_mpp_spark.queries.windows_sets import _TOPK_CORE
+
+        expected = spark.sql(_TOPK_CORE + " ORDER BY l_suppkey, rn")
+        exp_rows = [tuple(r) for r in expected.collect()]
+        got_rows = [tuple(r) for r in got.orderBy("l_suppkey", "rn").collect()]
+        assert got_rows == exp_rows
+    finally:
+        spark.catalog.dropTempView("lineitem")
         spark.conf.unset("duckdb_mpp_spark.registered_sf_dir")
-    except Exception:
-        pass
 
 
 def test_window_topk_agg_and_window_share_one_exchange(spark):

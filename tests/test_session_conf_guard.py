@@ -6,7 +6,8 @@ query, so an operator that mutates session conf without restoring it
 would leak the mutation into every later query in the session. These
 tests pin the two defenses:
 
-  1. ``conf_guard`` restores prior values (including on exception);
+  1. ``conf_guard`` restores prior values (including on exception), and
+     a restore that fails raises instead of leaking silently;
   2. the one conf-mutating gate today (mpp_colocated_contract, which
      disables auto-broadcast for its plan assert) leaves every tuned key
      and the broadcast threshold exactly as it found them.
@@ -58,3 +59,35 @@ def test_conf_mutating_gate_leaves_tuned_confs_intact(spark):
     # the conf-mutating gate: disables auto-broadcast inside conf_guard
     run_spark_query("mpp_colocated_contract", spark, SF_DIR).collect()
     assert _snapshot(spark) == before
+
+
+class _FlakyConf:
+    """Session-conf stand-in whose restore of ``fail_key`` raises."""
+
+    def __init__(self, values, fail_key):
+        self.values = dict(values)
+        self.fail_key = fail_key
+        self.restoring = False
+
+    def get(self, k):
+        return self.values[k]
+
+    def set(self, k, v):
+        if self.restoring and k == self.fail_key:
+            raise RuntimeError(f"cannot restore {k}")
+        self.values[k] = v
+
+    def unset(self, k):
+        self.values.pop(k, None)
+
+
+def test_conf_guard_failed_restore_is_loud_and_restores_the_rest():
+    class Session:
+        conf = _FlakyConf({"a": "1", "b": "2", "c": "3"}, fail_key="b")
+
+    s = Session()
+    with pytest.raises(RuntimeError, match="cannot restore b"):
+        with conf_guard(s, {"a": "x", "b": "y", "c": "z"}):
+            s.conf.restoring = True
+    # every other key was still restored before the failure surfaced
+    assert s.conf.values == {"a": "1", "b": "y", "c": "3"}

@@ -10,7 +10,7 @@ of commit N until vacuumed past.
 import pytest
 
 from duckdb_mpp_spark import dml, manifest
-from tests.conftest import rows
+from tests.conftest import bucket_files, bucket_of, input_paths, rows
 
 
 @pytest.fixture()
@@ -36,28 +36,32 @@ def test_upsert_replaces_and_appends(spark, mpp, kv_table):
     assert got[8] == "old8"  # untouched row intact
 
 
-def test_upsert_is_one_commit_and_prunes_buckets(spark, mpp, kv_table):
-    base_version, before = kv_table.snapshot()
-    batch = spark.createDataFrame([(5, 5, "NEW5")], "k INT, grp INT, v STRING")
-    mpp.upsert("kv", batch, ["grp", "k"])
-    version, files = kv_table.snapshot()
-    assert version == base_version + 1  # exactly ONE commit for the merge
-    # only grp=5's bucket was rewritten: every other bucket's files unchanged
-    target = _bucket_of(kv_table, 5)
-    untouched_before = {r for r in before if not r.startswith(target)}
-    assert untouched_before <= set(files)
-    assert {r for r in before if r.startswith(target)}.isdisjoint(files)
+def test_upsert_is_one_commit_and_prunes_buckets(spark, mpp, kv_table, dml_scans):
+    # both listing arms: the default bound stats the merge scan's file list
+    # on the driver (no job), bound 0 hands it to Spark's listing job
+    from duckdb_mpp_spark.table import DRIVER_LISTING_FILES
 
-
-def _bucket_of(tbl, grp_value):
-    from pyspark.sql import functions as F
-
-    b = (
-        tbl.spark.range(1)
-        .select(F.pmod(F.hash(F.lit(grp_value).cast("int")), F.lit(tbl.meta.buckets)))
-        .collect()[0][0]
-    )
-    return f"__bucket={b}/"
+    for bound, grp in ((DRIVER_LISTING_FILES, 5), (0, 6)):
+        base_version, before = kv_table.snapshot()
+        batch = spark.createDataFrame(
+            [(grp, grp, f"NEW{grp}")], "k INT, grp INT, v STRING"
+        )
+        with dml_scans(bound) as scans:
+            mpp.upsert("kv", batch, ["grp", "k"])
+        version, files = kv_table.snapshot()
+        assert version == base_version + 1  # exactly ONE commit for the merge
+        # only grp's bucket was rewritten: every other bucket's files unchanged
+        bucket = bucket_of(kv_table, str(grp))
+        target = f"__bucket={bucket}/"
+        untouched_before = {r for r in before if not r.startswith(target)}
+        assert untouched_before <= set(files)
+        assert {r for r in before if r.startswith(target)}.isdisjoint(files)
+        # the merge scan listed only that bucket's files
+        [(_ids, df, jobs)] = scans
+        assert input_paths(df) == bucket_files(kv_table, before, bucket)
+        assert (jobs == 0) == (bound > 0), (bound, jobs)
+    got = dict((r[0], r[2]) for r in rows(kv_table.scan(), "k"))
+    assert len(got) == 50 and got[5] == "NEW5" and got[6] == "NEW6"
 
 
 def test_upsert_requires_partition_key(spark, mpp, kv_table):
