@@ -143,51 +143,6 @@ def _assert_deterministic_where(scan_df, where: str) -> None:
         )
 
 
-def _check_unique_sides(
-    table: DistributedTable,
-    col: str,
-    modified,
-    others,
-    bucket_local: bool,
-) -> None:
-    """UNIQUE/PRIMARY KEY enforcement for COW rewrites/merges (review r4 —
-    the reference's per-shard index rejects duplicate-creating DML on
-    every path, not just INSERT). Delegates to the ONE shared primitive
-    (``table.check_unique_sides`` — unified r8 with the insert path, so
-    contract fixes land once). ``modified`` holds ONLY the values this
-    operation actually assigned/inserted (one row per modified row);
-    ``others`` holds every OTHER post-commit row's value that could share
-    the group; a duplicate group aborts only when a modified value
-    participates (ADVICE r7, extended to bucket-local constraints in r8:
-    the old staged-files formulation flagged carried-through survivor
-    rows as operation-owned too, so a pre-existing on-disk duplicate —
-    constraint added after a legacy load — with one copy inside a
-    rewritten bucket aborted an UNRELATED update).
-
-    ``bucket_local=True``: the rewrite never re-routes and MERGE replaces
-    by key, so modified rows can only collide within their own bucket and
-    ``others`` needs only the REWRITTEN buckets' surviving rows.
-    ``bucket_local=False`` is the value-GLOBAL partition column (review
-    r6), where ``others`` must cover untouched buckets too. Both inputs
-    are narrow projections of already-planned scans — one pass each, only
-    when a unique column is actually written."""
-    check_unique_sides(
-        table.meta.name, col, modified, others, bucket_local=bucket_local
-    )
-
-
-def _check_unique_global(
-    table: DistributedTable,
-    col: str,
-    modified,
-    others,
-) -> None:
-    """Value-global flavor of :func:`_check_unique_sides` (kept as the
-    named entry point the partition-column callers and the ADVICE-r7
-    regression tests use)."""
-    _check_unique_sides(table, col, modified, others, bucket_local=False)
-
-
 def _dml_bucket_ids(
     table: DistributedTable,
     where: str | None,
@@ -320,13 +275,16 @@ def update(
                 modified = df.where(pred).select(
                     BUCKET_COL, F.expr(text).cast(dt).alias(col)
                 )
+                # a rewrite never re-routes, so a bucket-local value can
+                # only collide inside its rewritten bucket; the value-global
+                # partition column must also see the untouched buckets
                 is_global = col == meta.partition_column
                 base_rows = table.read_buckets(snap_files) if is_global else df
                 # pred is NULL-coalesced to false, so ~pred is exactly
                 # the not-updated rows (their values survive the rewrite)
                 others = base_rows.where(~pred).select(BUCKET_COL, col)
-                _check_unique_sides(
-                    table, col, modified, others, bucket_local=not is_global
+                check_unique_sides(
+                    meta.name, col, modified, others, bucket_local=not is_global
                 )
         except ValueError:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -476,8 +434,8 @@ def upsert(
                 others = base_rows.join(
                     keys, key_cols, "left_anti"
                 ).select(BUCKET_COL, col)
-                _check_unique_sides(
-                    table,
+                check_unique_sides(
+                    meta.name,
                     col,
                     modified=new_rows.select(BUCKET_COL, col),
                     others=others,

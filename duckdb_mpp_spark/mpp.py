@@ -1328,35 +1328,11 @@ class MppSession:
                 and not self._cte_indirected(query, name)
                 and self._setop_confined_to_first_leg(query, name)
             ):
-                from duckdb_mpp_spark.pruning import bucket_predicate_for_where
-
-                quals = self._table_qualifiers(query, name)
-                # derive once, reuse for the zone-map bucket filter (the
-                # old flow derived it twice per registered view)
-                pred = bucket_predicate_for_where(
-                    where, tbl.meta.partition_column, tbl._part_type_ddl,
-                    tbl.meta.buckets, aliases, qualifiers=quals,
-                )
-                # routing-dirty buckets always survive pruning; dirty set
-                # and file list resolved from ONE snapshot doc (review r6)
-                from duckdb_mpp_spark.table import widen_bucket_pred
-
-                _v, snap_files, dirty = tbl.snapshot_full()
-                pred = widen_bucket_pred(pred, dirty)
-                df = None
-                if snap_files:
-                    df = tbl._zonemap_read(
-                        where, aliases, quals, snap_files, bucket_pred=pred
-                    )
-                    if tbl.last_file_skip is not None:
-                        self.last_file_skip[name] = tbl.last_file_skip
-                    if df is None:
-                        df = tbl._read_files(snap_files)
-                else:
-                    df = tbl._empty_df(True)
-                if pred and snap_files:  # snap_files already loaded above
-                    df = df.where(pred)
-                df = df.drop("__bucket")
+                df = tbl.pruned_read(
+                    where, aliases, self._table_qualifiers(query, name)
+                ).drop("__bucket")
+                if tbl.last_file_skip is not None:
+                    self.last_file_skip[name] = tbl.last_file_skip
             else:
                 df = tbl.scan()
             df.createOrReplaceTempView(name)

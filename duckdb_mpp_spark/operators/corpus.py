@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from duckdb_mpp_spark.operators.dedup import SHINGLE_WORDS, shingles
 from duckdb_mpp_spark.operators.text import _duck_tokens, token_count, tokens
-from duckdb_mpp_spark.queries import SINGLE_SORT_BYTES, Query, register
+from duckdb_mpp_spark.queries import Query, register
 from duckdb_mpp_spark.sources import load_table
 
 TWO_POW_56 = float(1 << 56)
@@ -163,7 +163,6 @@ def contamination_overlap(
     benchmark: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    _force_shape: str | None = None,
 ) -> DataFrame:
     """Docs sharing word-shingles with a benchmark/eval corpus — the
     decontamination check every training pipeline runs before a data
@@ -198,58 +197,12 @@ def contamination_overlap(
     both corpus-shuffle shapes (the r8 two-level aggregate and the
     one-exchange multi-distinct alternative), so the scale-right shape is
     also the fastest at bench scale."""
-    # A/B arm names are a closed set (ADVICE r11 #3): a typo'd arm in a
-    # measurement script ('one_pass') would otherwise silently time the
-    # default shape and the A/B would compare the default to itself.
-    # 'twoscan' IS the default shape — accepted so settle_contamination
-    # can name both arms explicitly.
-    if _force_shape not in (None, "onepass", "twoscan"):
-        raise ValueError(
-            f"_force_shape={_force_shape!r}: expected None, 'onepass' or "
-            "'twoscan' (the default two-scan hit-bounded shape)"
-        )
     # 64-bit gram keys: smaller broadcast table, bigint join keys, and
     # the count_distinct shuffle moves 8 bytes per surviving gram
     # instead of the raw ~40-byte string (collision odds 2^-64-scale)
     bench_grams = shingles(benchmark, id_col, text_col).select(
         F.xxhash64("sh").alias("sh")
     )
-    # ALTERNATE SHAPE (r11, VERDICT r10 #3) — the A/B arm that
-    # `scripts/settle_contamination.py` times, NOT a default at any
-    # scale: the id-repartition trick (repartition the raw text on the
-    # doc id once; the totals agg, hits agg and verdict join all reuse
-    # that one exchange — no semi-join barrier, no second parquet scan).
-    # Measured EQUAL to the two-scan shape at sf0.1 (0.859 vs 0.842
-    # settled, same session) because both are wave-bound, and it computes
-    # corpus-wide distinct totals even when no doc is contaminated —
-    # strictly more task work on clean corpora. A third shape (per-doc
-    # gram arrays via transform() lambdas, zero shuffles) measured 9.6 s:
-    # interpreted higher-order-function eval per gram; rejected. Settled
-    # conclusion (SCALING.md r11): every shape floors at ~4 sequential
-    # waves × the session job floor + ~0.35 s task time, which is DuckDB
-    # parity — the two-scan shape stays the one default at every scale.
-    if _force_shape == "onepass":
-        d = docs.select(F.col(id_col), F.col(text_col)).repartition(id_col)
-        dsh = shingles(d, id_col, text_col).select(
-            F.col(id_col), F.xxhash64("sh").alias("sh")
-        )
-        tot = dsh.groupBy(id_col).agg(
-            F.count_distinct("sh").alias("n_shingles")
-        )
-        hits = (
-            dsh.join(F.broadcast(bench_grams), "sh")
-            .groupBy(id_col)
-            .agg(F.count_distinct("sh").alias("n_contaminated"))
-        )
-        per = tot.join(hits, id_col)
-        return per.select(
-            id_col,
-            "n_shingles",
-            "n_contaminated",
-            F.round(
-                F.col("n_contaminated") / F.col("n_shingles").cast("double"), 6
-            ).alias("contamination_frac"),
-        )
     dsh = shingles(docs, id_col, text_col).select(
         F.col(id_col), F.xxhash64("sh").alias("sh")
     )
@@ -271,21 +224,15 @@ def contamination_overlap(
     # co-partitioned join (contrast vocab_coverage, whose three branches
     # could NOT share one exchange and where the checkpoint wins).
     # the hit-doc id hint is SIZE-SWITCHED (review r9): "contaminated docs
-    # are a sliver" is an assumption about the input, not an invariant — a
-    # corpus that republishes the eval set widely makes hits O(#docs), and
+    # are a sliver" is an assumption about the input, not an invariant —
     # a forced corpus-sized broadcast would hit Spark's broadcast limit
-    # where a shuffle semi-join degrades gracefully. Under the switch the
-    # semi-join build is provably bounded by the (small) corpus itself;
-    # past it AQE decides from the measured hit count. (The plan-stats
-    # probe lives HERE, below the onepass early return, so the A/B arm
-    # never pays a driver-side stats analysis it does not use.)
-    from duckdb_mpp_spark.table import is_small_source
+    # where a shuffle semi-join degrades gracefully
+    from duckdb_mpp_spark.table import regime
 
-    small = is_small_source(docs)
     hit_ids = hits.select(id_col)
-    docs_c = docs.join(
-        F.broadcast(hit_ids) if small else hit_ids, id_col, "left_semi"
-    )
+    if regime("contamination_hit_ids", docs) == "broadcast":
+        hit_ids = F.broadcast(hit_ids)
+    docs_c = docs.join(hit_ids, id_col, "left_semi")
     tot = (
         shingles(docs_c, id_col, text_col)
         .select(F.col(id_col), F.xxhash64("sh").alias("sh"))
@@ -725,20 +672,8 @@ ORDER BY pos
 """
 
 
-# Above this input size the single-task global window (fast at fixture
-# scale: no second scan, no offset join) hands off to the two-phase rank:
-# past it the single task IS the wall while two-phase's extra
-# column-pruned scan stays map-parallel. The SHARED constant (not a local
-# copy — review r9): this switch and ordered_result's sort switch must
-# agree, or a source between two diverged values would get the parallel
-# O(#docs) two-phase result wrapped in ordered_small's coalesce(1) —
-# exactly the corpus-sized single-task serialization both switches exist
-# to prevent.
-_SINGLE_SORT_BYTES = SINGLE_SORT_BYTES
-
-
 def global_shuffle_positions(
-    docs: DataFrame, id_col: str = "doc_id", two_phase: bool | None = None
+    docs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic global training-order position for every doc.
 
@@ -754,19 +689,17 @@ def global_shuffle_positions(
     only the plan changes: one corpus exchange on the prefix instead of one
     exchange onto a single task.
 
-    ``two_phase=None`` picks by input volume (plan stats): small inputs
-    keep the one-exchange single-task window — measured 2.2× faster at
-    sf0.1 (0.18 s vs 0.40 s), where the two-phase's extra stages are pure
-    scheduling constant — big inputs take the parallel shape. Both paths
-    are value-identical (tests/test_corpus.py pins it). The two-phase
+    The ``sort_shape`` regime picks by input volume: small inputs keep the
+    one-exchange single-task window, where the two-phase's extra stages
+    are pure scheduling constant; big inputs take the parallel shape —
+    the same regime as the gate's ordered_result, so the two agree. Both
+    paths are value-identical (tests/test_corpus.py pins it). The two-phase
     source is evaluated twice (rank + counts) rather than checkpointed:
     the second pass is a column-pruned scan + map-side count, measured
     cheaper than materializing the hashed corpus (0.40 s vs 0.51 s)."""
-    if two_phase is None:
-        from duckdb_mpp_spark.table import plan_size_bytes
+    from duckdb_mpp_spark.table import regime
 
-        size = plan_size_bytes(docs)
-        two_phase = size is None or size > _SINGLE_SORT_BYTES
+    single_task = regime("sort_shape", docs) == "single_task"
     # concat_ws, not concat (review r7): the oracle's DuckDB concat() SKIPS
     # NULL arguments, so a NULL id hashes the bare salt there while Spark's
     # null-propagating concat made the whole key NULL (sorted FIRST, tied
@@ -776,7 +709,7 @@ def global_shuffle_positions(
     key = F.md5(
         F.concat_ws("", F.lit("epoch-42:"), F.col(id_col).cast("string"))
     )
-    if not two_phase:
+    if single_task:
         # coalesce(1) BELOW the window (r9): CoalesceExec(1) reports
         # SinglePartition, which satisfies the empty-PARTITION-BY window's
         # AllTuples requirement, so Catalyst plans NO exchange at all —
@@ -818,8 +751,8 @@ def _register_shuffle():
     def shuffle_fn(spark, sf_dir):
         # ordered like the oracle's ORDER BY pos — the two-phase path
         # returns join order, not pos order (review r6). The sort strategy
-        # follows the same size switch as the shuffle itself (r8): below
-        # _SINGLE_SORT_BYTES the frame already lives in one task, so
+        # follows the same size regime as the shuffle itself (r8): in the
+        # single-task arm the frame already lives in one task, so
         # ordered_small skips orderBy's range-sampling job (the gate's
         # whole 31× ratio was scheduling constant); past it the result is
         # O(#docs) and keeps the parallel range sort — never coalesce(1)

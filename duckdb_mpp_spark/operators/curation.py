@@ -548,7 +548,7 @@ def _build_decontaminate_gate():
 
     def fn(spark, sf_dir):
         # ordered_result (r13): per-doc result frame — single-task sort
-        # under the 256 MiB source switch instead of a range sort whose
+        # in the sort_shape regime instead of a range sort whose
         # bound-sampling job re-runs the final join subtree
         from duckdb_mpp_spark.queries import ordered_result
 

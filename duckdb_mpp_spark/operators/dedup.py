@@ -224,8 +224,8 @@ def minhash_wide_with_grams(
     verify (:func:`jaccard_verify_from_docs`) exists so a 100 TB run never
     gram-sets the whole corpus — but it pays a SECOND shingle pass plus
     the semi-join/collect subtree to restrict that pass to candidates.
-    When the whole corpus is broadcast-sized anyway (the gate's existing
-    256 MiB payload switch), collecting every doc's gram set inside the
+    When the whole corpus is broadcast-sized anyway (the gate's
+    ``lsh_pairs`` regime), collecting every doc's gram set inside the
     signature aggregation is strictly less work: the shingle/hash stream
     is evaluated once, the groupBy rides the id partitioning the gate
     already created, and per-row ``collect_set`` memory is the same order
@@ -406,8 +406,7 @@ def jaccard_verify_from_docs(
     is consumed twice (candidate explode + the final probe) through its
     one distinct exchange; the gram-set table is consumed twice (doc_a /
     doc_b sides) through ONE broadcast (size-switched hint bounded by the
-    broadcast PAYLOAD — gram sets are ~1.3× candidate text bytes, so the
-    switch is 256 MiB of source docs, see the inline comment; past it
+    broadcast PAYLOAD — the ``jaccard_gram_sets`` regime; past it
     AQE's runtime decision — broadcast when the CANDIDATE set is small,
     shuffle join otherwise — takes over; the shuffle fallback moves
     array rows, ~half the bytes of the old (id, sh) gram stream).
@@ -437,18 +436,16 @@ def jaccard_verify_from_docs(
         .groupBy(id_col)
         .agg(F.collect_set("sh").alias("g"))
     )
-    from duckdb_mpp_spark.table import is_small_source
+    from duckdb_mpp_spark.table import regime
 
-    # The broadcast payload is the candidate docs' FULL gram sets — ~1.3×
-    # their text bytes, NOT one row per doc — so the hint's switch must
-    # bound the payload, not borrow substrings.py's 4 GiB per-doc-row
-    # threshold (review r9: a 3 GiB duplicate-heavy corpus where most docs
-    # are candidates would force a multi-GiB broadcast AQE cannot veto).
-    # 256 MiB of source docs caps the forced broadcast at ~350 MB worst
-    # case; past it AQE's runtime decision takes over (broadcast when the
-    # candidate subset measures small, shuffle join otherwise).
+    # The broadcast payload is the candidate docs' FULL gram sets, NOT one
+    # row per doc — so its regime bounds the payload rather than sharing
+    # span_owner_broadcast's per-doc-row bound (review r9: a 3 GiB
+    # duplicate-heavy corpus would force a multi-GiB broadcast AQE cannot
+    # veto)
     return jaccard_score_pairs(
-        gsets, pairs, id_col, broadcast_sets=is_small_source(docs)
+        gsets, pairs, id_col,
+        broadcast_sets=regime("jaccard_gram_sets", docs) == "broadcast",
     )
 
 
@@ -465,7 +462,7 @@ def jaccard_score_pairs(
     window, no groupBy (see :func:`jaccard_verify_from_docs` for why this
     beats routing grams to pairs). The gram-set table is consumed twice
     (doc_a / doc_b sides) through ONE broadcast when ``broadcast_sets``
-    (callers bound the PAYLOAD — see the 256 MiB switches at both call
+    (callers bound the PAYLOAD — see the size regimes at both call
     sites); otherwise AQE's runtime broadcast-vs-shuffle decision applies.
     Zero-intersection candidate pairs surface with jaccard 0.0 — a
     candidate pair IS a 0-similarity fact, not an absence."""
@@ -574,8 +571,8 @@ def incremental_dedup(
     path is the per-doc verdict aggregation (map-side combined; moves one
     row per batch doc). Value-identical to the shuffle plan by
     construction — a join hint changes strategy, never semantics. Callers
-    bound the PAYLOAD (the gate uses the shared 256 MiB source-bytes
-    switch; signatures are ~10⁻³ of that). At 100 TB the index never fits
+    bound the PAYLOAD (the gate uses the ``incremental_index`` regime;
+    signatures are ~10⁻³ of the source bytes). At 100 TB the index never fits
     a broadcast and the default shuffle plan with the bucket-pruned read
     + semi-join prefilter is the shape that scales."""
     if materialize_batch:
@@ -1384,8 +1381,8 @@ def incremental_index_oracle_sqls(
 
 def _register():
     def exact_fn(spark, sf_dir):
-        # size-switched single-task plan (r9): under the single-task sort
-        # budget, coalesce(1) BELOW the window makes CoalesceExec report
+        # size-switched single-task plan (r9): in the sort_shape regime's
+        # single-task arm, coalesce(1) BELOW the window makes CoalesceExec report
         # SinglePartition, which satisfies the (h)-window's clustering
         # requirement — NO exchange, no AQE stage-jobs: scan, window and
         # the final doc_id sort run as one task in one job, exactly the
@@ -1393,15 +1390,10 @@ def _register():
         # Past the budget the parallel window + range orderBy return
         # unchanged — at 100 TB this gate is the exchange-then-window
         # shape it always was.
-        from duckdb_mpp_spark.queries import (
-            SINGLE_SORT_BYTES,
-            ordered_small,
-        )
-        from duckdb_mpp_spark.table import plan_size_bytes
+        from duckdb_mpp_spark.table import regime
 
         docs = load_table(spark, sf_dir, "documents")
-        size = plan_size_bytes(docs)
-        if size is not None and size <= SINGLE_SORT_BYTES:
+        if regime("sort_shape", docs) == "single_task":
             return ordered_small(exact_dedup(docs.coalesce(1)), "doc_id")
         return exact_dedup(docs).orderBy(F.asc_nulls_last("doc_id"))
 
@@ -1472,25 +1464,25 @@ def _register():
         between the r9 FUSED small-regime plan and the candidate-filtered
         scale plan (both value-identical; the oracle checks the scores):
 
-        small (corpus under the 256 MiB broadcast payload switch): ONE
+        fused (the lsh_pairs regime's small arm): ONE
         corpus pass computes signatures AND gram sets in the same groupBy
         (minhash_wide_with_grams), eagerly checkpointed so the banding
         self-join and the gram-set broadcast both read materialized rows —
         the verify branch's second shingle pass, its candidate semi-join,
         and its collect_set groupBy all disappear from the plan.
 
-        large: the r8 checkpoint-free exchange-reuse flow — signatures and
+        exchange_reuse: the r8 checkpoint-free exchange-reuse flow — signatures and
         candidate-only gram sets each ride the one canonical corpus
         exchange; gram sets are computed for PAIR MEMBERS only, never the
         whole corpus (collect_set over an unbounded corpus is exactly what
         the fusion must not do at 100 TB). When _spread repartitioned
         (docs is not docs0), the verify branch skips its candidate-text
         repartition: the id partitioning it would create already exists."""
-        from duckdb_mpp_spark.table import is_small_source
+        from duckdb_mpp_spark.table import regime
 
         docs0 = load_table(spark, sf_dir, "documents")
         docs = _spread(docs0, "doc_id")
-        if is_small_source(docs0):
+        if regime("lsh_pairs", docs0) == "fused":
             wide = minhash_wide_with_grams(docs, fast=fast).localCheckpoint(
                 eager=True
             )
@@ -1569,10 +1561,10 @@ def _register():
         # — it is covered by the md5 twin gate (`dedup_ngram_jaccard`),
         # which shares every pipeline line except the two hash columns.
         docs, scored = _scored_pairs(spark, sf_dir, fast=True)
-        # Certificate shape is SIZE-SWITCHED (r14, guide §1.2/§2.3; same
-        # small/large branching as _scored_pairs itself):
+        # Certificate shape is SIZE-SWITCHED (r14, the jaccard_certificate
+        # regime):
         #
-        # large: the token-array frame feeds TWO joins (wa / wb sides)
+        # pair_members: the token-array frame feeds TWO joins (wa / wb sides)
         # with no exchange to reuse, so the old direct-join certificate
         # tokenized the FULL corpus once per side — two extra corpus
         # passes a 100 TB run must not pay. The pair list is result-sized
@@ -1582,14 +1574,14 @@ def _register():
         # Value-identical: the certificate joins are inner on
         # doc_a/doc_b, so rows outside the pair list never contributed.
         #
-        # small: the direct joins stand — the A/B at sf0.1 measured the
-        # candidate-restricted shape ~0.25 s SLOWER there (the two
-        # synchronous checkpoint jobs cost more than two parallel
-        # tokenize passes over a broadcast-sized corpus; broadcast hints
-        # on the checkpointed frames did not recover it).
-        from duckdb_mpp_spark.table import is_small_source
+        # direct: the token-array joins read the corpus directly (the two
+        # synchronous checkpoint jobs cost more than two parallel tokenize
+        # passes over a broadcast-sized corpus; broadcast hints on the
+        # checkpointed frames did not recover it).
+        from duckdb_mpp_spark.table import regime
 
-        if is_small_source(load_table(spark, sf_dir, "documents")):
+        corpus = load_table(spark, sf_dir, "documents")
+        if regime("jaccard_certificate", corpus) == "direct":
             found = scored.where(F.col("jaccard") >= 0.5)
             toks = docs.select("doc_id", tokens("text").alias("ws")).where(
                 F.size("ws") > 0
@@ -1654,7 +1646,7 @@ def _register():
         # one aggregation. The first invocation in a session additionally
         # builds the index (a full corpus pass + bucketed write); repeat
         # invocations — and production daily runs — do not.
-        from duckdb_mpp_spark.table import is_small_source
+        from duckdb_mpp_spark.table import regime
 
         docs = load_table(spark, sf_dir, "documents")
         # filter BEFORE spreading (r10): _spread repartitions on doc_id, and
@@ -1666,15 +1658,13 @@ def _register():
         batch_bands = minhash_bands(
             _spread(docs.where(F.col("doc_id") % 7 == F.lit(0)), "doc_id")
         ).localCheckpoint(eager=True)
-        # small-regime fusion (r10): under the shared 256 MiB source
-        # switch, the whole index's SIGNATURES are broadcast-sized, so
-        # (a) the bucket-prune collect job buys nothing a full columnar
+        # small-regime fusion (r10): in the incremental_index regime's
+        # broadcast arm the whole index's SIGNATURES are broadcast-sized,
+        # so (a) the bucket-prune collect job buys nothing a full columnar
         # read doesn't already have, and (b) the left join broadcasts the
-        # reference stream — the daily path collapses to: one batch
-        # minhash pass (checkpoint), one broadcast build, one verdict
-        # aggregation. Past the switch the r7 shape stands: bucket-pruned
+        # reference stream. Past it the r7 shape stands: bucket-pruned
         # read + shuffle join, the only plan when the index doesn't fit.
-        small = is_small_source(docs)
+        small = regime("incremental_index", docs) == "broadcast"
         idx = read_band_index(
             spark,
             _persisted_band_index(spark, sf_dir),

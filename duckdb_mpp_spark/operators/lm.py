@@ -31,7 +31,7 @@ OOV-dense or shuffled text draws zeros and backoffs.
 Scale shape (100 TB): model tables are token/bigram-keyed aggregates of
 the ~10% reference slice (map-side combinable, vocabulary-sized — far
 smaller than the corpus); the scored bigram stream joins them on the
-word keys, broadcast under the shared 256 MiB source-size switch and as
+word keys, broadcast under the ``lm_model_tables`` size regime and as
 key-partitioned shuffle joins past it (a hot function word is bounded
 per-reducer by the JOIN's build side being ONE row per word — never a
 pair blowup); the final aggregate is per-doc. No corpus-sized broadcast,
@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from duckdb_mpp_spark.operators.curation import duck_split_tag, split_tag
 from duckdb_mpp_spark.operators.text import _duck_tokens, tokens
 from duckdb_mpp_spark.sources import load_table
-from duckdb_mpp_spark.table import is_small_source
+from duckdb_mpp_spark.table import regime
 
 LM_SCALE = 1 << 20  # integer probability quantum (the Q_SCALE convention)
 
@@ -112,10 +112,9 @@ def lm_fluency_scores(
         F.coalesce(F.sum("c1"), F.lit(0)).cast("long").alias("_tot")
     )
 
-    # vocabulary-sized model tables: broadcast under the shared small-
-    # source switch; past it they stay shuffle joins on the word key (and
-    # AQE still upgrades genuinely small builds at runtime)
-    small = is_small_source(docs)
+    # vocabulary-sized model tables: broadcast, or shuffle joins on the
+    # word key (AQE still upgrades genuinely small builds at runtime)
+    small = regime("lm_model_tables", docs) == "broadcast"
 
     def side(frame: DataFrame) -> DataFrame:
         return F.broadcast(frame) if small else frame

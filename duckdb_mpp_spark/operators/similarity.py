@@ -67,19 +67,13 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def _maybe_broadcast(df: DataFrame) -> DataFrame:
-    """Size-switched broadcast hint (review r9 — the repo convention from
-    jaccard_verify/substrings): the ANN query sets are corpus-PROPORTIONAL
-    slices (``vec_id % 50 = 0`` etc.), so an unconditional ``F.broadcast``
-    would force 1-2% of a 100 TB embeddings table into a broadcast
-    relation AQE cannot veto. Under 256 MiB of PLANNED size the static
-    hint skips AQE's measure-then-decide round-trip; past it the hint
-    drops and AQE's runtime decision (broadcast if the slice measures
-    small, shuffle join otherwise) takes over. Catalyst's filter-
-    selectivity estimate errs large on modulo predicates, which errs this
-    switch in the safe (no-hint) direction."""
-    from duckdb_mpp_spark.table import is_small_source
+    """Size-switched broadcast hint (review r9, the ``ann_query_broadcast``
+    regime): the ANN query sets are corpus-PROPORTIONAL slices, so an
+    unconditional ``F.broadcast`` would force 1-2% of a 100 TB embeddings
+    table into a broadcast relation AQE cannot veto."""
+    from duckdb_mpp_spark.table import regime
 
-    return F.broadcast(df) if is_small_source(df) else df
+    return F.broadcast(df) if regime("ann_query_broadcast", df) == "broadcast" else df
 
 
 def _assert_unique_ids(df: DataFrame, col: str, what: str) -> None:

@@ -37,7 +37,7 @@ from duckdb_mpp_spark.operators.dedup import _spread, shingle_hashes
 from duckdb_mpp_spark.operators.text import _duck_tokens, tokens
 from duckdb_mpp_spark.queries import Query, register
 from duckdb_mpp_spark.sources import load_table
-from duckdb_mpp_spark.table import plan_size_bytes
+from duckdb_mpp_spark.table import regime
 
 SPAN_WORDS = 8        # duplicated-span width (words)
 KEYWORDS_PER_DOC = 3  # top-k keywords
@@ -120,16 +120,14 @@ def duplicated_span_stats(
         .agg(F.sum("n_spans").alias("n_spans"))
     )
     # uniq is ≤ one row per doc. AQE broadcasts it at runtime anyway
-    # (measured), but the static hint saves one adaptive stage round-trip
-    # (~0.14 s at sf0.1). The hint is SIZE-SWITCHED, not unconditional
-    # (review r5/r6 convention, e.g. corpus.py's offsets switch): uniq is
-    # O(#docs), so forcing a broadcast on a 10^8-doc corpus would ship GBs
-    # to every executor — past the threshold we leave the doc-keyed
-    # shuffle join to AQE's own runtime decision.
-    docs_bytes = plan_size_bytes(df)
-    small = docs_bytes is not None and docs_bytes < 4 << 30
+    # (measured), but the static hint saves one adaptive stage round-trip.
+    # The hint is SIZE-SWITCHED, not unconditional (review r5/r6): uniq is
+    # O(#docs) — past the span_owner_broadcast regime's bound we leave the
+    # doc-keyed shuffle join to AQE's own runtime decision.
+    if regime("span_owner_broadcast", df) == "broadcast":
+        uniq = F.broadcast(uniq)
     joined = totals.join(
-        F.broadcast(uniq) if small else uniq,
+        uniq,
         F.expr(f"{id_col} <=> _owner"),
         "left",
     )
@@ -144,26 +142,11 @@ def duplicated_span_stats(
     )
 
 
-# cut_duplicated_spans mid-regime budget (r14, VERDICT r13 #3): past the
-# 256 MiB small-source switch the tokenized frame used to be RECOMPUTED
-# per branch (4 regex passes). The measured crossover: recompute wins at
-# 10× sf0.1 (4.9 vs 5.4 s), a disk-backed token frame wins at 200×/~1 GB
-# (239 → 190 s, −21%). Between the small switch and this budget the
-# token frame is therefore written once to session-scratch parquet and
-# read by all four branches; past the budget the recompute shape stands
-# (a ~1.3× corpus temp write is the wrong trade against scratch-disk
-# budgets at 100 TB, where the branches are parallel columnar scans).
-# Runtime-settable for deployments with big scratch (SPARK_GRAFT_CONF).
-CUT_SPANS_DISK_FRAME_KEY = "duckdb_mpp_spark.cutSpans.diskFrameMaxBytes"
-CUT_SPANS_DISK_FRAME_BYTES = 64 << 30
-
-
 def cut_duplicated_spans(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SPAN_WORDS,
-    _force_frame: str | None = None,
 ) -> DataFrame:
     """Exact-substring span CUTTING — the removal half of Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better"), where
@@ -197,44 +180,14 @@ def cut_duplicated_spans(
     built-in, NOT a per-token interpreted lambda (the transform() trap
     measured at ~27× in dedup.shingles' docstring).
 
-    Three materialization regimes for the tokenized frame, which feeds
-    FOUR branches (gram stats, covered probe, token stream, totals):
-    under the shared 256 MiB source switch it is localCheckpointed once
-    (r13 A/B at sf0.1: 1.77 → 1.50 s); between the switch and the
-    CUT_SPANS_DISK_FRAME budget it is written once to session-scratch
-    parquet and read per branch (r14 A/B at ~1 GB: recompute 239 s vs
-    disk frame 190 s — the four regex passes outgrow one write); past
-    the budget the recompute shape stands — a ~1.3× corpus temp write is
-    the wrong trade against scratch budgets at 100 TB, where the four
-    branches are parallel columnar scans (r14 A/B at 10×: recompute
-    4.9 s vs disk frame 5.4 s — the crossover is real, not monotone).
-    ``_force_frame`` pins a regime for tests/A-B ('ckpt', 'disk',
-    'recompute'); the closed set fails loudly on typos (the ADVICE r11
-    convention)."""
-    from duckdb_mpp_spark.table import is_small_source, plan_size_bytes
-
-    if _force_frame not in (None, "ckpt", "disk", "recompute"):
-        raise ValueError(
-            f"_force_frame={_force_frame!r}: expected None, 'ckpt', "
-            "'disk' or 'recompute'"
-        )
+    The tokenized frame feeds FOUR branches (gram stats, covered probe,
+    token stream, totals); the ``cut_spans_frame`` regime materializes it
+    by a localCheckpoint, as a session-scratch parquet frame read per
+    branch, or not at all (recomputed per branch — a ~1.3× corpus temp
+    write is the wrong trade against scratch budgets at 100 TB, where
+    the four branches are parallel columnar scans)."""
     t = df.select(F.col(id_col), tokens(text_col).alias("t"))
-    frame = _force_frame
-    if frame is None:
-        if is_small_source(df):
-            frame = "ckpt"
-        else:
-            size = plan_size_bytes(df)
-            try:
-                budget = int(
-                    df.sparkSession.conf.get(
-                        CUT_SPANS_DISK_FRAME_KEY,
-                        str(CUT_SPANS_DISK_FRAME_BYTES),
-                    )
-                )
-            except Exception:
-                budget = CUT_SPANS_DISK_FRAME_BYTES
-            frame = "disk" if size is not None and size <= budget else "recompute"
+    frame = regime("cut_spans_frame", df)
     if frame == "ckpt":
         t = t.localCheckpoint(eager=True)
     elif frame == "disk":
@@ -332,18 +285,16 @@ def tfidf_keywords(
     ONCE up front — id-partitioning satisfies the (id, tok) clustering of
     the tf aggregate AND the final top-k window, so the exploded token
     stream never re-shuffles. The cross-doc side (doc_freq: one row per
-    VOCABULARY term) is size-switched: under the shared 256 MiB source
-    budget it is broadcast back to the id-partitioned tf (vocabulary of a
-    broadcast-sized corpus is MBs), leaving TWO data exchanges total (the
-    id repartition + doc_freq's own tok aggregate) where the old shape
-    had four ((id,tok) agg, tok agg, the tf join side re-hashed on tok,
-    and the window's id exchange) — measured 0.88 → 0.61 s at sf0.1,
-    value-identical. Past the budget the tok-keyed join returns: a 100 TB
+    VOCABULARY term) is size-switched (the ``tfidf_vocab`` regime): in its
+    broadcast arm it is broadcast back to the id-partitioned tf
+    (vocabulary of a broadcast-sized corpus is MBs), leaving TWO data
+    exchanges total (the id repartition + doc_freq's own tok aggregate)
+    where the old shape had four ((id,tok) agg, tok agg, the tf join side
+    re-hashed on tok, and the window's id exchange), value-identical.
+    Past its bound the tok-keyed join returns: a 100 TB
     vocabulary (~10⁸ terms with long tails) must not be forced into a
     broadcast, and the hash join on tok degrades gracefully."""
-    from duckdb_mpp_spark.table import is_small_source
-
-    small = is_small_source(df)
+    small = regime("tfidf_vocab", df) == "broadcast"
     df0 = df  # pre-repartition frame: n_total counts the SCAN, not a shuffle
     if small:
         # repartition the RAW docs, then tokenize (r14, guide §2.5 input
@@ -538,7 +489,7 @@ def _register() -> None:
         # ordered_result, NOT orderBy (r13 optimization): a range sort runs
         # a separate bound-sampling job over the un-materialized stats
         # subtree; the per-doc stats frame is source-tracked, so the
-        # single-task sort applies under the 256 MiB switch and the
+        # single-task sort applies in the sort_shape regime and the
         # parallel orderBy remains the at-scale plan. exchange=True keeps
         # the final broadcast-join stage parallel.
         from duckdb_mpp_spark.queries import ordered_result

@@ -437,7 +437,7 @@ def _register_gopher():
         )
         # ordered_result (r13): the range sort's bound-sampling job ran
         # this map-only projection twice; single-task sort under the
-        # 256 MiB source switch, parallel orderBy past it
+        # sort_shape regime, parallel orderBy past it
         from duckdb_mpp_spark.queries import ordered_result
 
         return ordered_result(out, docs, "doc_id")

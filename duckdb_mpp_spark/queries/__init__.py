@@ -101,21 +101,12 @@ def ordered_small(df: DataFrame, *cols: str, exchange: bool = False) -> DataFram
     )
 
 
-# Below this SOURCE size a result frame derived from it may take the
-# single-task sort (ordered_small) even when the result is corpus-shaped:
-# one task sorts 256 MiB in low seconds, and DuckDB effectively runs the
-# whole query in that regime anyway. Past it, orderBy's parallel range
-# sort is the only plan that scales. Shared with corpus.py's two-phase
-# global-shuffle switch, which is the same single-task-vs-parallel trade.
-SINGLE_SORT_BYTES = 256 << 20
-
-
 def ordered_result(
     df: DataFrame, source: DataFrame, *cols: str, exchange: bool = False
 ) -> DataFrame:
     """Total order for a result frame whose size tracks ``source``:
-    ordered_small (one job, no range sampling) while the source plan sits
-    under SINGLE_SORT_BYTES, parallel orderBy past it. Use for gate
+    ordered_small (one job, no range sampling) in the ``sort_shape``
+    regime's single-task arm, parallel orderBy past it. Use for gate
     results that are O(#rows of source) — thresholded/aggregated results
     that are ALWAYS small should call ordered_small directly.
     ``exchange=True``: see ordered_small — required when the frame's last
@@ -123,10 +114,9 @@ def ordered_result(
     result (window + partitioning-reusing aggregate)."""
     from pyspark.sql import functions as F
 
-    from duckdb_mpp_spark.table import plan_size_bytes
+    from duckdb_mpp_spark.table import regime
 
-    size = plan_size_bytes(source)
-    if size is not None and size <= SINGLE_SORT_BYTES:
+    if regime("sort_shape", source) == "single_task":
         return ordered_small(df, *cols, exchange=exchange)
     return df.orderBy(*[F.col(c).asc_nulls_last() for c in cols])
 
@@ -206,38 +196,13 @@ def _freshest_green_round() -> dict[str, int]:
     return out
 
 
-# Queries that must verify FIRST regardless of history — reformulated
-# gates whose recorded rows predate the reformulation (clear once the
-# next CORRECTNESS file shows them green; the derived tiers then take
-# over automatically).
-_FORCE_FIRST: frozenset[str] = frozenset({
-    # r14 (VERDICT r13 #2): every gate whose PLAN was rewritten in r13
-    # rotated out of the driver's 50-slot correctness sample (green rows
-    # predate the rewrite). Force a driver oracle row on the NEW code;
-    # clear once CORRECTNESS_r14 shows them green.
-    "q18_large_volume_customer",
-    "sketch_approx_stats",
-    "dedup_cluster_assign",
-    "dedup_cluster_keep_best",
-    "pipeline_corpus_curation",
-    "text_fingerprint",
-    "window_topk_per_group",
-})
-# (r11: events_top_transitions cleared — CORRECTNESS_r10 shows it green
-# post-reformulation, and leaving it would burn a rotation slot every
-# round; streaming_incremental_dedup, driver-stale since r7, now takes
-# the freed slot via the derived tiers. VERDICT r10 #2.)
-
-
 def _registry_names_prioritized() -> list[str]:
     """Registry names in driver-check priority order (see tier comment
-    above): forced/never-green first, then stalest-verified ascending by
+    above): never-green first, then stalest-verified ascending by
     the round of their latest green row."""
     fresh = _freshest_green_round()
 
     def prio(n: str) -> tuple[int, int]:
-        if n in _FORCE_FIRST:
-            return (0, 0)
         # Secondary key: within the never-green tier, streaming gates sort
         # LAST — each one spends seconds of driver budget on checkpoint
         # setup / trigger loops, and must not starve cheap batch gates of

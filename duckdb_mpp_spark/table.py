@@ -109,16 +109,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return None if size >= _STATS_UNKNOWN else size
 
 
-# The shared small-regime source budget (review r10: this bound was
-# hand-inlined at five operator sites that document themselves as sharing
-# one switch — tuning it in one place would silently de-synchronize the
-# regimes). Below it a SOURCE is small enough that broadcast-fused /
-# single-task plans beat the parallel shapes; past it every consumer's
-# scale-safe branch is the default. Related but distinct:
-# queries.SINGLE_SORT_BYTES governs the single-task RESULT sort (same
-# value, different decision — kept separate deliberately).
-SMALL_SOURCE_BYTES = 256 << 20
-
 # Explicit snapshot file lists up to this many files are stat'ed serially on
 # the driver while the reader is built; longer lists keep Spark's
 # distributed listing job (its own default threshold is 32 paths). Sized so
@@ -132,12 +122,100 @@ DRIVER_LISTING_FILES = 2048
 _LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def is_small_source(df: DataFrame) -> bool:
-    """True when ``df``'s planner-estimated size sits under the shared
-    small-regime budget; False when past it OR unknown (unknown must take
-    the scale-safe branch)."""
-    b = plan_size_bytes(df)
-    return b is not None and b < SMALL_SOURCE_BYTES
+MiB, GiB = 1 << 20, 1 << 30
+
+# Every plan-shape choice made from a source's planner-estimated size. Each
+# entry lists its arms from smallest to largest with EXCLUSIVE upper
+# bounds (``size < bound``); the last arm has no bound and is the
+# scale-safe shape, taken past every bound AND when the size is unknown.
+# Call sites name an entry and compare the returned arm; ``regime()`` is
+# the only place that estimates a size for such a choice.
+REGIMES: dict[str, tuple[tuple[str, int | None], ...]] = {
+    # ordered_result, global_shuffle_positions and dedup_exact: one task
+    # sorts (or windows) the whole source with no exchange and no range-
+    # sampling job. One entry so the shuffle and its result sort cannot
+    # disagree (a two-phase result under coalesce(1) would serialize a
+    # corpus-sized frame). Measured at sf0.1: the global-shuffle window
+    # 0.18 s single-task vs 0.40 s two-phase; the range sort's sampling
+    # job was the whole of the gate's 31x ratio over the oracle.
+    "sort_shape": (("single_task", 256 * MiB), ("parallel", None)),
+    # similarity._maybe_broadcast: the ANN query sets are corpus-
+    # proportional slices (``vec_id % 50 = 0``); the static hint skips
+    # AQE's measure-then-decide round-trip, and past the bound AQE's
+    # runtime choice takes over (Catalyst's modulo-selectivity estimate
+    # errs large, i.e. toward no hint).
+    "ann_query_broadcast": (("broadcast", 256 * MiB), ("adaptive", None)),
+    # contamination_overlap's hit-doc semi-join build: under the bound it
+    # is bounded by the corpus itself; past it a corpus that republishes
+    # the eval set makes hits O(#docs), so AQE decides from the measured
+    # hit count.
+    "contamination_hit_ids": (("broadcast", 256 * MiB), ("adaptive", None)),
+    # lm_fluency_scores' vocabulary-sized model tables: broadcast, or
+    # shuffle joins on the word key (AQE still upgrades small builds).
+    "lm_model_tables": (("broadcast", 256 * MiB), ("shuffle", None)),
+    # jaccard_verify_from_docs' gram-set broadcast: its payload is ~1.3x
+    # the candidate docs' text bytes, so 256 MiB of source caps the forced
+    # broadcast near 350 MB worst case; past it AQE decides.
+    "jaccard_gram_sets": (("broadcast", 256 * MiB), ("adaptive", None)),
+    # The LSH jaccard gates' _scored_pairs: ONE corpus pass builds
+    # signatures and gram sets (checkpointed, gram sets broadcast); the
+    # large arm rides one corpus exchange and builds gram sets for pair
+    # members only (collect_set over a whole corpus must not run at scale).
+    "lsh_pairs": (("fused", 256 * MiB), ("exchange_reuse", None)),
+    # dedup_ngram_jaccard_fast's certificate: direct joins tokenize the
+    # corpus once per side; the large arm checkpoints the pair list and
+    # tokenizes pair members only. At sf0.1 the pair-member shape measured
+    # ~0.25 s slower (two synchronous checkpoint jobs).
+    "jaccard_certificate": (("direct", 256 * MiB), ("pair_members", None)),
+    # dedup_incremental's reference index: broadcast its signatures and
+    # skip the bucket-prune collect (8 jobs / 11 stages -> 5 / 7, pair
+    # ratio 1.95x at sf0.1), or the bucket-pruned read + shuffle join.
+    "incremental_index": (("broadcast", 256 * MiB), ("pruned", None)),
+    # duplicated_span_stats' per-doc owner table (<= one row per doc):
+    # the hint saves one adaptive stage round-trip (~0.14 s at sf0.1);
+    # past 4 GiB of docs a forced broadcast would ship GBs to executors.
+    "span_owner_broadcast": (("broadcast", 4 * GiB), ("adaptive", None)),
+    # cut_duplicated_spans' token frame, read by four branches:
+    # localCheckpoint (1.77 -> 1.50 s at sf0.1); a scratch-parquet frame
+    # (recompute 239 s vs disk 190 s at ~1 GB); recompute, the only shape
+    # that does not write a ~1.3x corpus temp copy (it also won at 10x
+    # sf0.1: 4.9 vs 5.4 s, so the crossover is not monotone).
+    "cut_spans_frame": (
+        ("ckpt", 256 * MiB), ("disk", 64 * GiB), ("recompute", None)
+    ),
+    # tfidf_keywords: raw docs repartitioned by id before tokenizing and
+    # the vocabulary-sized doc_freq broadcast back (0.88 -> 0.61 s at
+    # sf0.1, 4 data exchanges -> 2); past it the tok-keyed hash join.
+    "tfidf_vocab": (("broadcast", 256 * MiB), ("shuffle", None)),
+}
+
+# Forced arms, by regime name — tests patch this (monkeypatch.setitem) to
+# run an arm the fixture's size would not choose. Empty in production.
+_FORCED: dict[str, str] = {}
+
+
+def regime(name: str, source: DataFrame) -> str:
+    """The arm of ``REGIMES[name]`` for ``source``'s planner-estimated
+    size (``plan_size_bytes``: no job runs; estimate BEFORE any
+    checkpoint), or the arm ``_FORCED`` names for it. Unknown names and
+    unknown forced arms raise."""
+    arms = REGIMES.get(name)
+    if arms is None:
+        raise ValueError(f"unknown regime {name!r}: expected one of {sorted(REGIMES)}")
+    forced = _FORCED.get(name)
+    if forced is not None:
+        if forced not in (arm for arm, _ in arms):
+            raise ValueError(
+                f"regime {name!r} has no arm {forced!r}: expected one of "
+                f"{[arm for arm, _ in arms]}"
+            )
+        return forced
+    size = plan_size_bytes(source)
+    if size is not None:
+        for arm, bound in arms[:-1]:
+            if size < bound:
+                return arm
+    return arms[-1][0]
 
 
 def check_unique_sides(
@@ -149,9 +227,9 @@ def check_unique_sides(
 ) -> None:
     """The ONE duplicate-detection primitive every UNIQUE/PRIMARY KEY
     enforcement path shares (insert via ``_enforce_unique``, COW
-    UPDATE/upsert via ``dml._check_unique_sides`` — unified r8 so a
-    semantics fix lands once). ``modified`` holds only the values the
-    operation creates (inserted batch rows / re-derived SET values);
+    UPDATE/upsert in ``dml`` — unified r8 so a semantics fix lands
+    once). ``modified`` holds only the values the operation creates
+    (inserted batch rows / re-derived SET values);
     ``others`` holds every other row's value that could share the group.
     A duplicate group raises only when a modified value participates: the
     operation is rejected for duplicates IT would create, never for an
@@ -612,7 +690,7 @@ class DistributedTable:
         routed = self.route(self._aligned_for_insert(df))
         # volume estimate BEFORE any checkpoint (an RDD-backed plan reports
         # Long.MaxValue stats — see write_split_factor)
-        split = self._insert_split_factor(routed)
+        split = write_split_factor(routed, self.meta.buckets)
         # snapshot resolved ONCE, before the pre-write uniqueness check:
         # the check scans THIS version and the commit below pins it as
         # base, so any commit landing in between (e.g. a partition-column
@@ -673,9 +751,6 @@ class DistributedTable:
             # the exact answer and cost nothing.
             return sum(e["rows"] for e in new_entries.values())
 
-    def _insert_split_factor(self, routed: DataFrame) -> int:
-        return write_split_factor(routed, self.meta.buckets)
-
     def _revalidate_unique(
         self,
         new_entries: dict[str, dict],
@@ -730,32 +805,7 @@ class DistributedTable:
         derived ``__bucket`` predicate only narrows which partition
         directories the file index keeps (pruning is an optimization,
         never a filter)."""
-        _v, snap_files, dirty = self.snapshot_full(version)
-        if not snap_files:
-            df = self._empty_df(with_bucket=keep_bucket)
-            if where:
-                df = df.where(where)
-            out_cols = columns or [f.name for f in self.meta.schema.fields]
-            if keep_bucket:
-                out_cols = out_cols + [BUCKET_COL]
-            return df.select(*out_cols)
-        # derive the bucket predicate ONCE; _zonemap_read reuses it (the
-        # old flow derived it twice and paid an extra O(#buckets) Spark
-        # job per filtered scan — review r4)
-        bucket_pred = bucket_predicate_for_where(
-            where, self.meta.partition_column, self._part_type_ddl,
-            self.meta.buckets, aliases, qualifiers or {self.meta.name},
-        )
-        # routing-dirty buckets always survive pruning — dirty set from
-        # the SAME version doc as snap_files (see snapshot_full)
-        bucket_pred = widen_bucket_pred(bucket_pred, dirty)
-        df = self._zonemap_read(
-            where, aliases, qualifiers, snap_files, bucket_pred=bucket_pred
-        )
-        if df is None:
-            df = self._read_files(snap_files)
-        if bucket_pred:
-            df = df.where(bucket_pred)
+        df = self.pruned_read(where, aliases, qualifiers, version)
         if where:
             df = df.where(where)
         out_cols = columns or [f.name for f in self.meta.schema.fields]
@@ -763,15 +813,40 @@ class DistributedTable:
             out_cols = out_cols + [BUCKET_COL]
         return df.select(*out_cols)
 
-    _UNSET = object()
+    def pruned_read(
+        self,
+        where: str | None,
+        aliases: set[str] | None = None,
+        qualifiers: set[str] | None = None,
+        version: int | None = None,
+    ) -> DataFrame:
+        """The one pruned-read planner, shared by ``scan`` and the front
+        door's per-query views: the snapshot's files narrowed to the
+        buckets the derived ``__bucket`` predicate keeps (widened for the
+        same snapshot's routing-dirty buckets) and, where ``where`` bounds
+        a column, by zone maps. Keeps ``__bucket`` and does NOT apply
+        ``where`` — the caller does, so pruning stays an optimization."""
+        _v, snap_files, dirty = self.snapshot_full(version)
+        if not snap_files:
+            return self._empty_df(with_bucket=True)
+        bucket_pred = widen_bucket_pred(
+            bucket_predicate_for_where(
+                where, self.meta.partition_column, self._part_type_ddl,
+                self.meta.buckets, aliases, qualifiers or {self.meta.name},
+            ),
+            dirty,
+        )
+        df = self._zonemap_read(where, qualifiers, snap_files, bucket_pred)
+        if df is None:
+            df = self._read_files(snap_files)
+        return df.where(bucket_pred) if bucket_pred else df
 
     def _zonemap_read(
         self,
         where: str | None,
-        aliases: set[str] | None,
         qualifiers: set[str] | None,
         snap_files: dict[str, dict],
-        bucket_pred=_UNSET,
+        bucket_pred: str | None,
     ) -> DataFrame | None:
         """Zone-map file skipping for SORT BY tables: derive conservative
         bounds on the sort column from ``where``, keep only files whose
@@ -803,13 +878,6 @@ class DistributedTable:
         bounds = zonemap.all_bounds(where, qualifiers or {self.meta.name})
         if not bounds:
             return None
-        if bucket_pred is DistributedTable._UNSET:
-            bucket_pred = self.widen_pred_for_dirty(
-                bucket_predicate_for_where(
-                    where, self.meta.partition_column, self._part_type_ddl,
-                    self.meta.buckets, aliases, qualifiers or {self.meta.name},
-                )
-            )
         bucket_ids = set(
             evaluate_bucket_ids(self.spark, bucket_pred, self.meta.buckets)
         )
@@ -902,17 +970,6 @@ class DistributedTable:
         Diagnostic accessor: code that also resolves a file list must take
         BOTH from one ``snapshot_full`` call instead (review r6)."""
         return _manifest_mod.dirty_buckets(self.path, version)
-
-    def widen_pred_for_dirty(
-        self, bucket_pred: str | None, version: int | None = None
-    ) -> str | None:
-        """OR the HEAD snapshot's routing-dirty buckets into a derived
-        ``__bucket`` predicate — for callers that don't hold a resolved
-        snapshot (EXPLAIN); plan-from-file-list paths use
-        ``widen_bucket_pred`` with ``snapshot_full``'s dirty set."""
-        if bucket_pred is None:
-            return None
-        return widen_bucket_pred(bucket_pred, self.routing_dirty_ids(version))
 
     def pruned_bucket_ids(
         self,

@@ -310,31 +310,37 @@ def _(spark):
 
 # --- global shuffle ----------------------------------------------------------------------
 
-@case("global_shuffle_permutation_with_dup_and_null_ids")
-def _(spark):
+def _positions(docs, arm):
+    """global_shuffle_positions rows with its ``sort_shape`` regime forced
+    to ``arm`` ('single_task' window or 'parallel' two-phase rank)."""
+    from duckdb_mpp_spark import table
     from duckdb_mpp_spark.operators.corpus import global_shuffle_positions
 
+    table._FORCED["sort_shape"] = arm
+    try:
+        return global_shuffle_positions(docs).collect()
+    finally:
+        del table._FORCED["sort_shape"]
+
+
+@case("global_shuffle_permutation_with_dup_and_null_ids")
+def _(spark):
     rows = [(i % 37, f"t {i}") for i in range(111)] + [(None, "null-doc")] * 3
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for two_phase in (False, True):
-        out = global_shuffle_positions(docs, two_phase=two_phase).collect()
-        pos = sorted(r.pos for r in out)
+    for arm in ("single_task", "parallel"):
+        pos = sorted(r.pos for r in _positions(docs, arm))
         assert pos == list(range(114)), (
-            f"two_phase={two_phase}: positions not an exact permutation"
+            f"{arm}: positions not an exact permutation"
         )
 
 
 @case("global_shuffle_paths_agree_on_unique_ids")
 def _(spark):
-    from duckdb_mpp_spark.operators.corpus import global_shuffle_positions
-
     docs = spark.createDataFrame(
         [(i, f"t {i}") for i in range(500)], "doc_id long, text string"
     )
-    single = {r.doc_id: r.pos for r in
-              global_shuffle_positions(docs, two_phase=False).collect()}
-    two = {r.doc_id: r.pos for r in
-           global_shuffle_positions(docs, two_phase=True).collect()}
+    single = {r.doc_id: r.pos for r in _positions(docs, "single_task")}
+    two = {r.doc_id: r.pos for r in _positions(docs, "parallel")}
     assert single == two, "single-task and two-phase plans disagree"
 
 

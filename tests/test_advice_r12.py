@@ -12,10 +12,7 @@
    heals column-SET drift to a superset, so every generation file's
    footer column set is now validated EQUAL to the inferred set; drifted
    layouts are rejected loudly instead of recorded with a phantom column.
-3. corpus.py — ``contamination_overlap(_force_shape=...)`` rejects
-   unknown arm names instead of silently timing the default shape
-   ('twoscan' is accepted as the default arm's explicit name).
-4. scripts/hostile_multimodal_graph.py — derives the repo root from
+3. scripts/hostile_multimodal_graph.py — derives the repo root from
    __file__ like every other script in scripts/, no hardcoded checkout.
 """
 
@@ -106,41 +103,7 @@ def test_legacy_append_uniform_footers_still_heals(spark, tmp_path):
         assert json.load(f).get("schema"), "uniform legacy layout not healed"
 
 
-# --- 3. _force_shape closed set -------------------------------------------------
-
-def _docs(spark):
-    return spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-         (2, "one two three four five six seven eight nine ten")],
-        "doc_id long, text string",
-    )
-
-
-def _bench(spark):
-    return spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-
-
-def test_force_shape_rejects_unknown_arm(spark):
-    from duckdb_mpp_spark.operators.corpus import contamination_overlap
-
-    with pytest.raises(ValueError, match="_force_shape"):
-        contamination_overlap(_docs(spark), _bench(spark),
-                              _force_shape="one_pass")  # the typo class
-
-
-def test_force_shape_twoscan_names_the_default(spark):
-    from duckdb_mpp_spark.operators.corpus import contamination_overlap
-
-    default = contamination_overlap(_docs(spark), _bench(spark)).collect()
-    named = contamination_overlap(_docs(spark), _bench(spark),
-                                  _force_shape="twoscan").collect()
-    assert sorted(map(tuple, default)) == sorted(map(tuple, named))
-
-
-# --- 4. hostile sweep derives repo from __file__ --------------------------------
+# --- 3. hostile sweep derives repo from __file__ --------------------------------
 
 def test_no_script_hardcodes_the_repo_checkout():
     # the ADVICE item named hostile_multimodal_graph.py, but the class

@@ -17,6 +17,7 @@ import pytest
 from duckdb_mpp_spark import manifest
 from duckdb_mpp_spark.mpp import MppSession, _comma_in_from_list
 from duckdb_mpp_spark.sources.tables import _nanos_timestamp_cols
+from duckdb_mpp_spark.table import check_unique_sides
 from tests.conftest import rows
 
 
@@ -114,8 +115,6 @@ def test_cte_indirected_set_op_still_correct(mpp):
 # --- 4. staged-unique global path ignores untouched-bucket duplicates ------
 
 def test_update_unaffected_by_preexisting_duplicate_elsewhere(mpp):
-    from duckdb_mpp_spark import dml
-
     # no declared constraint at insert time, so the on-disk duplicate (7,7)
     # can exist; then exercise the value-global check directly the way a
     # partition-column UPDATE would: modified = the operation's new values,
@@ -126,17 +125,19 @@ def test_update_unaffected_by_preexisting_duplicate_elsewhere(mpp):
     spark = t.spark
     full = t.scan()
     # UPDATE SET k=2 WHERE k=1: the untouched (7,7) pair must not abort
-    dml._check_unique_global(
-        t, "k",
+    check_unique_sides(
+        t.meta.name, "k",
         modified=spark.createDataFrame([(2,)], "k int"),
         others=full.where("k <> 1").select("k"),
+        bucket_local=False,
     )
     # and a modified value colliding with an untouched row still raises
     with pytest.raises(ValueError, match="Duplicate key"):
-        dml._check_unique_global(
-            t, "k",
+        check_unique_sides(
+            t.meta.name, "k",
             modified=spark.createDataFrame([(9,)], "k int"),
             others=full.where("k <> 1").select("k"),
+            bucket_local=False,
         )
 
 
@@ -145,8 +146,6 @@ def test_update_unaffected_by_survivor_duplicate_in_rewritten_bucket(mpp):
     a rewritten bucket as unmodified survivors must not abort an unrelated
     UPDATE — only duplicate groups the operation's own new values
     participate in may raise."""
-    from duckdb_mpp_spark import dml
-
     mpp.sql("CREATE TABLE gdup2(k INT, v TEXT) PARTITION BY(k) WITH BUCKETS 4")
     mpp.sql("INSERT INTO gdup2 VALUES(1,'a'),(7,'x'),(7,'y')")
     t = mpp.table("gdup2")
@@ -155,18 +154,20 @@ def test_update_unaffected_by_survivor_duplicate_in_rewritten_bucket(mpp):
     # UPDATE SET k=2 WHERE v='a': both 7s are survivors (others side), the
     # only modified value is 2 — no abort even though the 7s share the
     # rewritten layout in the real staged files
-    dml._check_unique_global(
-        t, "k",
+    check_unique_sides(
+        t.meta.name, "k",
         modified=spark.createDataFrame([(2,)], "k int"),
         others=full.where("v <> 'a'").select("k"),
+        bucket_local=False,
     )
     # two rows modified TO the same value: the operation creates the
     # duplicate itself — must raise
     with pytest.raises(ValueError, match="Duplicate key"):
-        dml._check_unique_global(
-            t, "k",
+        check_unique_sides(
+            t.meta.name, "k",
             modified=spark.createDataFrame([(2,), (2,)], "k int"),
             others=full.where("v = 'never'").select("k"),
+            bucket_local=False,
         )
 
 

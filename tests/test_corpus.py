@@ -123,36 +123,22 @@ def test_chunk_documents_geometry(spark):
     assert len(hashes) == 4  # all non-empty pieces distinct
 
 
-def test_global_shuffle_two_phase_matches_single_window(spark):
+def test_global_shuffle_two_phase_matches_single_window(spark, monkeypatch):
     """r6: global training-order positions must be identical whichever
     plan produced them — the small-input single-task window or the
     at-scale two-phase prefix rank (the md5 hex prefix partitions are
     contiguous ranges of the total (key, id) order, so per-group rank +
     group offset IS the global rank)."""
+    from duckdb_mpp_spark import table
     from duckdb_mpp_spark.operators.corpus import global_shuffle_positions
 
     docs = spark.range(0, 997).select(F.col("id").alias("doc_id"))
-    single = {
-        r["doc_id"]: r["pos"]
-        for r in global_shuffle_positions(docs, two_phase=False).collect()
-    }
-    two = {
-        r["doc_id"]: r["pos"]
-        for r in global_shuffle_positions(docs, two_phase=True).collect()
-    }
-    assert two == single
-    assert sorted(single.values()) == list(range(997))
-
-
-def test_global_shuffle_auto_switch_paths(spark, monkeypatch):
-    """The volume-adaptive default must produce identical positions on
-    both sides of the threshold (auto→single below, auto→two-phase when
-    the input exceeds it)."""
-    from duckdb_mpp_spark.operators import corpus as C
-
-    docs = spark.range(0, 503).select(F.col("id").alias("doc_id"))
-    small = {r["doc_id"]: r["pos"] for r in C.global_shuffle_positions(docs).collect()}
-    monkeypatch.setattr(C, "_SINGLE_SORT_BYTES", 0)
-    big = {r["doc_id"]: r["pos"] for r in C.global_shuffle_positions(docs).collect()}
-    assert big == small
-    assert sorted(small.values()) == list(range(503))
+    positions = {}
+    for arm in ("single_task", "parallel"):
+        monkeypatch.setitem(table._FORCED, "sort_shape", arm)
+        positions[arm] = {
+            r["doc_id"]: r["pos"]
+            for r in global_shuffle_positions(docs).collect()
+        }
+    assert positions["parallel"] == positions["single_task"]
+    assert sorted(positions["single_task"].values()) == list(range(997))

@@ -164,20 +164,3 @@ def test_token_conservation_invariant(spark):
     for r in out:
         assert r.n_kept + r.n_removed == r.n_tokens
         assert r.n_kept == (len(r.text_cleaned.split()) if r.text_cleaned else 0)
-
-
-def test_disk_frame_regime_value_identical(spark):
-    """r14 mid-regime branch: the disk-backed token frame (one scratch
-    write, four branch reads) must be value-identical to the default
-    shape, and every _force_frame arm must agree. Also pins the closed
-    arm set (a typo'd arm must fail loudly, not silently time the
-    default)."""
-    sf = "/root/testdata/sf0.001/documents.parquet"
-    if not os.path.exists(sf):
-        pytest.skip("testdata not present")
-    docs = spark.read.parquet(sf)
-    base = _rows(cut_duplicated_spans(docs))
-    for arm in ("ckpt", "disk", "recompute"):
-        assert _rows(cut_duplicated_spans(docs, _force_frame=arm)) == base, arm
-    with pytest.raises(ValueError):
-        cut_duplicated_spans(docs, _force_frame="diskframe")

@@ -269,7 +269,8 @@ def test_hourly_agg_null_keys_order_identically(spark, events_fixture_dir, shado
 
 # --- corpus: global shuffle NULL id, chunk stride contract -----------------
 
-def test_global_shuffle_null_id_position_deterministic(spark, tmp_path):
+def test_global_shuffle_null_id_position_deterministic(spark, tmp_path, monkeypatch):
+    from duckdb_mpp_spark import table
     from duckdb_mpp_spark.operators.corpus import (
         _GLOBAL_SHUFFLE_SQL,
         global_shuffle_positions,
@@ -288,10 +289,11 @@ def test_global_shuffle_null_id_position_deterministic(spark, tmp_path):
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
     want = _duck_rows(con, _GLOBAL_SHUFFLE_SQL)
-    for two_phase in (False, True):
-        res = global_shuffle_positions(docs, two_phase=two_phase).orderBy("pos")
+    for arm in ("single_task", "parallel"):
+        monkeypatch.setitem(table._FORCED, "sort_shape", arm)
+        res = global_shuffle_positions(docs).orderBy("pos")
         got = [tuple(r) for r in res.collect()]
-        assert got == want, f"two_phase={two_phase}"
+        assert got == want, arm
 
 
 def test_chunk_documents_rejects_uncovering_strides(spark):
