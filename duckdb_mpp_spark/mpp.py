@@ -165,32 +165,13 @@ def _find_keyword_top_level(text: str, word: str, start: int = 0) -> int:
     quote — ``SELECT .. -- don't\\nUNION ALL SELECT .. WHERE x = 'y'``
     hid the UNION from the set-op pruning guard and silently dropped
     leg-2 rows. Blanking is length-preserving, so every caller's returned
-    positions keep mapping 1:1 onto its original text; the quote-tracking
-    branches below stay (they are correct over blanked text, where all
-    quote regions are balanced by construction)."""
+    positions keep mapping 1:1 onto its original text, and no quoted or
+    commented text is left for the scan below to skip."""
     text = _blank_quotes_and_comments(text)
     depth, i, n, wl, wu = 0, start, len(text), len(word), word.upper()
     while i < n:
         ch = text[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if text[i] == "\\" and i + 1 < n:
-                    # Spark's default parser: backslash escapes the next
-                    # char inside a literal ('don\'t' is ONE literal)
-                    i += 2
-                    continue
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
-        elif ch == '"':
-            j = text.find('"', i + 1)
-            i = n if j < 0 else j + 1
-        elif ch == "(":
+        if ch == "(":
             depth += 1
             i += 1
         elif ch == ")":
@@ -283,30 +264,23 @@ _TYPE_MAP = {
 }
 
 
-def _split_top_level(text: str, sep: str = ",") -> list[str]:
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in text:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == "(":
+def _split_top_level(text: str) -> list[str]:
+    """Split ``text`` at the commas at paren depth 0 outside literals,
+    quoted identifiers and comments; blank pieces are dropped. Separator
+    positions are found on the length-preserving
+    :func:`_blank_quotes_and_comments` output, so ``SET note = "x, y"`` and
+    a comma inside ``/* a, b */`` never split."""
+    blank = _blank_quotes_and_comments(text)
+    out, depth, last = [], 0, 0
+    for i, ch in enumerate(blank):
+        if ch == "(":
             depth += 1
-            cur.append(ch)
         elif ch == ")":
             depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
+        elif ch == "," and depth == 0:
+            out.append(text[last:i])
+            last = i + 1
+    out.append(text[last:])
     return [s.strip() for s in out if s.strip()]
 
 
@@ -1324,9 +1298,7 @@ class MppSession:
                 where
                 and len(names) == 1
                 and not tbl.meta.colocated
-                and not self._self_joined(query, name)
-                and not self._cte_indirected(query, name)
-                and self._setop_confined_to_first_leg(query, name)
+                and self._prune_safe(query, name)
             ):
                 df = tbl.pruned_read(
                     where, aliases, self._table_qualifiers(query, name)
@@ -1464,46 +1436,50 @@ class MppSession:
 
         raise ValueError(f"unsupported COPY statement: {stripped!r}")
 
-    def _run_select(self, query: str) -> DataFrame:
+    def _prune_safe(self, query: str, name: str) -> bool:
+        """True when the query's WHERE may prune ``name``'s buckets: no
+        self-join, no CTE indirection, and no set-op leg past the first
+        reads it. Shared by view registration and EXPLAIN, so the Shards
+        header always describes what the registered view scans."""
+        return (
+            not self._self_joined(query, name)
+            and not self._cte_indirected(query, name)
+            and self._setop_confined_to_first_leg(query, name)
+        )
+
+    def _prepare_select(self, query: str) -> tuple[str, list[str]]:
+        """The front door's one SELECT rewrite — system views, time travel,
+        QUALIFY, DISTINCT ON, WHERE aliases — then view registration.
+        Returns the rewritten query and the distributed tables it reads."""
         query = self._substitute_system_views(query)
         query, versions = self._extract_time_travel(query)
         query = self._rewrite_qualify(query)
         query = self._rewrite_distinct_on(query)
         query = self._rewrite_where_aliases(query)
-        self._register_views_for_query(query, versions)
-        return self.spark.sql(query)
+        return query, self._register_views_for_query(query, versions)
+
+    def _run_select(self, query: str) -> DataFrame:
+        return self.spark.sql(self._prepare_select(query)[0])
 
     def explain(self, query: str) -> str:
         """Reference-style EXPLAIN: Shards: k/n for the (single) distributed
         table plus the Spark formatted physical plan."""
-        query = self._substitute_system_views(query)
-        query, versions = self._extract_time_travel(query)
-        query = self._rewrite_qualify(query)
-        query = self._rewrite_distinct_on(query)
-        query = self._rewrite_where_aliases(query)
-        names = self._register_views_for_query(query, versions)
+        query, names = self._prepare_select(query)
         header = []
         where = self._where_text(query)
         for name in names:
             tbl = self.table(name)
             aliases = self._alias_names(query, tbl.meta.partition_column) if where else None
-            if (
-                (len(names) != 1 and not tbl.meta.colocated)
-                or self._self_joined(query, name)
-                or self._cte_indirected(query, name)
-                or not self._setop_confined_to_first_leg(query, name)
-            ):
-                # pruning disabled — the guard mirrors _register_views_for_query
-                # (multi-table scans never embed the derived bucket
-                # predicate, review r6); the Shards header must match what
-                # the registered view actually scans. Colocated tables are
-                # exempt: their native bucketed scan is pruned by Catalyst
-                # itself, and pruning maths == bucketBy maths.
-                ids = list(range(tbl.meta.buckets))
-            else:
+            # multi-table scans never embed the derived bucket predicate
+            # (review r6). Colocated tables are exempt: their native
+            # bucketed scan is pruned by Catalyst itself, and pruning
+            # maths == bucketBy maths.
+            if (len(names) == 1 or tbl.meta.colocated) and self._prune_safe(query, name):
                 ids = tbl.pruned_bucket_ids(
                     where, aliases, qualifiers=self._table_qualifiers(query, name)
                 )
+            else:
+                ids = list(range(tbl.meta.buckets))
             header.append(f"Table: {name}")
             header.append(f"Shards: {len(ids)}/{tbl.meta.buckets}")
             if where:

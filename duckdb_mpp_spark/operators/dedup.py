@@ -555,13 +555,13 @@ def incremental_dedup(
     prefilter below keeps the claim honest: the batch's distinct band keys
     are a tiny set AQE broadcasts, so the index is filtered to
     co-occupying rows map-side — the index bytes that reach a shuffle are
-    O(matches), not O(index). Feed the index side from
-    :func:`read_band_index` over a :func:`write_band_index` layout (r7) and
-    even the index BYTES READ are bucket-pruned to the batch's co-occupied
-    band-key buckets — no full index scan remains anywhere in the daily
-    path. The index is NEVER re-hashed: new docs' bands append into the
-    persisted layout (``write_band_index(mode='append')``), keeping each
-    daily run O(batch + matches).
+    O(matches), not O(index). Store the index in a
+    :func:`create_band_index` table and read it with
+    :func:`probe_band_index`, and even the index BYTES READ are
+    bucket-pruned to the batch's co-occupied band keys — no full index
+    scan remains anywhere in the daily path. The index is NEVER
+    re-hashed: new docs' bands append into the table (``insert``, one
+    snapshot commit), keeping each daily run O(batch + matches).
 
     ``broadcast_ref=True`` is the small-regime fusion (r10, the jaccard
     recipe applied here): hint the unioned reference stream — index bands
@@ -586,9 +586,9 @@ def incremental_dedup(
         # map-side index prefilter: drops exactly the index rows the left
         # join below would drop anyway (no co-occupying batch band),
         # value-identical. Pass ``prefilter=False`` when the index side is
-        # already a :func:`read_band_index` bucket-pruned read — the read
-        # itself then bounds index bytes at bucket granularity and the
-        # extra broadcast-build stage buys nothing (r7 A/B).
+        # already a bucket-pruned table read — the read itself then bounds
+        # index bytes at bucket granularity and the extra broadcast-build
+        # stage buys nothing (r7 A/B).
         index_hits = index_bands.join(
             nb.select("band", "band_key").distinct(),
             ["band", "band_key"],
@@ -638,331 +638,41 @@ def incremental_dedup(
 
 
 # ---------------------------------------------------------------------------
-# persisted band index, bucketed by band key (the daily-crawl index store)
+# persisted band index: a DistributedTable routed on the band key
 # ---------------------------------------------------------------------------
 
-# bucket count for the persisted index layout. Partition-directory count is
-# a METADATA cost (one dir listing entry per bucket), so size it to the
-# deployment: at 100 TB of corpus the signatures are ~100 GB and 4096
-# buckets keep each bucket ~25 MB of parquet — here 64 keeps the fixture
-# layouts small. The written layout records its own n (``_band_index_meta
-# .json`` inside the directory — Spark ignores underscore-prefixed files);
-# readers and appenders validate against it, so a modulus mismatch fails
-# loudly instead of silently pruning the wrong buckets (review r7).
-BAND_INDEX_BUCKETS = 64
-
-_BAND_INDEX_META = "_band_index_meta.json"
-
-
-def _band_index_has_data(path: str) -> bool:
-    """True when the layout directory holds any band-bucket DATA: a
-    ``band_bucket=`` partition directory or a bare ``*.parquet`` file.
-    Underscore/dot bookkeeping never counts — and neither does any OTHER
-    stray entry (ADVICE r8: treating "any non-underscore entry" as data
-    made a stray file or empty subdirectory look populated-but-metaless,
-    so appends hard-failed with the 'crashed writer' error and reads
-    silently lost bucket pruning on a layout that was actually fresh)."""
-    import os
-
-    if not os.path.isdir(path):
-        return False
-    for name in os.listdir(path):
-        if name.startswith(("_", ".")):
-            continue
-        full = os.path.join(path, name)
-        if name.startswith("band_bucket=") and os.path.isdir(full):
-            return True
-        if name.endswith(".parquet") and os.path.isfile(full):
-            return True
-    return False
-
-
-def _band_index_check_meta(
-    path: str, n_buckets: int, write: bool, schema_json: str | None = None
-) -> int | None:
-    """Record (``write=True``) or validate the layout's bucket count: any
-    mismatch with an existing recorded n raises — loud beats silently
-    pruning the wrong buckets. Returns the effective n (= the recorded one
-    when present), or ``None`` when the directory holds data but no meta
-    (ADVICE r7: a crash between a writer's data and meta writes, or a
-    legacy layout, must not let later calls silently TRUST the caller's
-    n_buckets — that is exactly the wrong-bucket pruning the meta file
-    exists to prevent). Callers map ``None`` to their safe behavior:
-    reads disable pruning (a full read is modulus-independent), appends
-    raise (appending under an unknown modulus scatters the generation)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, _BAND_INDEX_META)
-    if write:
-        os.makedirs(path, exist_ok=True)
-        tmp = meta_path + ".tmp"
-        doc: dict = {"n_buckets": int(n_buckets)}
-        if schema_json is not None:
-            # DATA schema (pre-partition-column), so readers skip the
-            # parquet footer-inference job — a production index's schema
-            # is layout metadata, not something to re-derive per daily
-            # run (r10; inference was one of the probe's per-run jobs)
-            doc["schema"] = schema_json
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, meta_path)
-        return n_buckets
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            stored = int(json.load(f)["n_buckets"])
-        if stored != n_buckets:
-            raise ValueError(
-                f"band index at {path} was written with n_buckets={stored}; "
-                f"got n_buckets={n_buckets} — a mismatched modulus would "
-                "silently prune the wrong buckets"
-            )
-        return stored
-    if _band_index_has_data(path):
-        return None  # populated but meta-less: modulus unknown
-    return n_buckets
-
-
-def _band_index_schema(path: str):
-    """The layout's recorded DATA schema (StructType), or None for layouts
-    written before the hint existed / with unreadable meta — readers then
-    fall back to footer inference, never fail."""
-    import json
-    import os
-
-    from pyspark.sql.types import StructType
-
-    meta_path = os.path.join(path, _BAND_INDEX_META)
-    try:
-        with open(meta_path) as f:
-            raw = json.load(f).get("schema")
-        return StructType.fromJson(json.loads(raw)) if raw else None
-    except Exception:
-        return None
-
-
-def _validate_legacy_footers(path: str, expected_cols: set[str]) -> None:
-    """Every data file's footer column set must EQUAL ``expected_cols``
-    (ADVICE r11 #2). mergeSchema already rejects type conflicts; this
-    closes the silent case — column-set drift across legacy generations —
-    which mergeSchema heals to a superset that misdescribes the narrower
-    generation (phantom-NULL backfill on read, spurious rejection of
-    future appends matching the narrow schema). pyarrow footer reads:
-    metadata-only, no data pages, driver-side over a legacy layout's
-    bounded file count (1 file/bucket/generation), and one-time — the
-    validated schema is recorded so the layout never re-enters this path."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            cols = set(pq.ParquetFile(full).schema_arrow.names)
-            if cols != expected_cols:
-                raise ValueError(
-                    f"band index at {path}: generation file {full} has "
-                    f"columns {sorted(cols)} but the layout merges to "
-                    f"{sorted(expected_cols)} — column-set drift across "
-                    "legacy generations would be healed to the superset "
-                    "(phantom NULLs for the narrow generation); rewrite "
-                    "with mode='overwrite'"
-                )
-
-
-def band_bucket_expr(n_buckets: int = BAND_INDEX_BUCKETS):
-    """Bucket id of a band signature row: ``pmod(xxhash64(band, band_key),
-    n)`` — the same hash-routing rule DistributedTable uses for rows
-    (``table.py``), applied to the dedup index's join key. Internal-only
-    (never compared to the oracle), so the fast non-portable hash is fine."""
-    return F.pmod(F.xxhash64("band", "band_key"), F.lit(n_buckets)).cast("int")
-
-
-def write_band_index(
-    bands: DataFrame,
-    path: str,
-    n_buckets: int = BAND_INDEX_BUCKETS,
-    mode: str = "overwrite",
-    min_doc_only: bool = False,
-    id_col: str = "doc_id",
-) -> None:
-    """Persist band signatures bucketed by band key: parquet
-    directory-partitioned on ``band_bucket = pmod(xxhash64(band, band_key),
-    n)``. This is the storage half of the incremental-dedup contract — the
-    engine's analog of the reference carrying shard-local indexes into
-    shard DDL (``create_distributed_table.cpp:107``): the index lives
-    pre-partitioned on its join key, so a daily run's read is pruned to
-    the batch's co-occupied buckets (:func:`read_band_index`) instead of
-    scanning the whole index (the one O(index) step the r6 shape had
-    left). ``mode='append'`` is the daily union-in of new docs' bands:
-    appending writes only the touched buckets' new files and never
-    rewrites existing data — the same append-only economics as a
-    DistributedTable insert. Cost: ONE shuffle of the (tiny) signature
-    stream on the bucket id — repartitioning before the write keeps it to
-    one file per bucket per run instead of #tasks × #buckets.
-
-    ``min_doc_only=True`` stores ONE row per band key — the smallest doc
-    id holding it — instead of every (doc, band) occupant. For the
-    incremental-dedup verdict that is lossless (``dup_of`` is the min over
-    matching index docs = the min over matched keys' per-key mins) and it
-    changes the daily join's fan-out from O(bucket co-occupancy) to
-    O(batch bands): a hot band key held by a million indexed docs joins as
-    ONE row. Appends stay correct — a key appearing in several append
-    generations yields several rows whose min the verdict aggregation
-    takes anyway. Only valid for smallest-match consumers (dedup
-    verdicts); keep the full layout for signature-similarity uses."""
-    if min_doc_only:
-        # Project FIRST so every downstream check sees the frame that is
-        # actually written: the append schema guard below must compare
-        # the post-projection columns against the recorded layout, not
-        # the caller's richer input frame — extra input columns the
-        # groupBy drops are not drift (ADVICE r10 #1).
-        bands = bands.groupBy("band", "band_key").agg(
-            F.min(id_col).alias(id_col)
-        )
-    if mode == "append":
-        # validate BEFORE appending — a mismatched modulus would scatter
-        # the new generation across the wrong buckets (overwrite replaces
-        # the whole layout, so it re-records instead of validating)
-        effective = _band_index_check_meta(path, n_buckets, write=False)
-        if effective is None:
-            raise ValueError(
-                f"band index at {path} holds data but no "
-                f"{_BAND_INDEX_META} (crashed writer or legacy layout); "
-                "appending under an unknown modulus would scatter the new "
-                "generation across the wrong buckets — rewrite the index "
-                "with mode='overwrite' first"
-            )
-        # Appends NEVER rewrite the recorded schema (review r10): the hint
-        # read_band_index applies must describe EVERY generation's files,
-        # and an appender whose frame drifted (doc_id INT vs the layout's
-        # BIGINT, a different producer's nullability) would otherwise
-        # force its schema onto older parquet — or, left unvalidated, mix
-        # footer-incompatible generations the hint then misreads. Validate
-        # loudly instead, same convention as the modulus check above.
-        recorded = _band_index_schema(path)
-        if recorded is None and not _band_index_has_data(path):
-            # fresh first-ever append: nothing to validate against —
-            # record the incoming frame's schema as the layout schema
-            # (an improvement over the pre-r11 behavior, which left
-            # append-created layouts schema-less forever)
-            recorded = bands.schema
-        if recorded is None:
-            # Legacy/pre-hint layout (meta without a parseable schema):
-            # don't skip validation — infer the layout's schema from the
-            # existing parquet footers. mergeSchema reads EVERY
-            # generation's footer (metadata-only, no data pages) and
-            # raises on TYPE-incompatible generations (StructType.merge
-            # throws for any differing non-decimal types). The one drift
-            # it heals SILENTLY is column-SET drift — a column present in
-            # one generation and absent in another merges to the superset,
-            # which read_band_index's hint would then backfill with NULLs
-            # for the generation that never wrote it (ADVICE r11 #2). So
-            # after inference, every file footer's column set must EQUAL
-            # the inferred set (pyarrow footer reads: metadata-only,
-            # driver-side, one-time — the schema is recorded after this
-            # heal so future appends skip both steps).
-            try:
-                recorded = (
-                    bands.sparkSession.read.option("mergeSchema", "true")
-                    .parquet(path)
-                    .drop("band_bucket")
-                    .schema
-                )
-            except Exception as exc:
-                raise ValueError(
-                    f"band index at {path} records no schema and its "
-                    "existing generations have footer-incompatible "
-                    "schemas — appending would deepen the mix; rewrite "
-                    "with mode='overwrite'"
-                ) from exc
-            _validate_legacy_footers(path, {f.name for f in recorded.fields})
-        # name -> type comparison: column ORDER and nullability are
-        # parquet-read-irrelevant (name-based resolution; the hint's
-        # fields are nullable), but a TYPE drift would misread
-        incoming = {
-            f.name: f.dataType.simpleString() for f in bands.schema.fields
-        }
-        rec = {f.name: f.dataType.simpleString() for f in recorded.fields}
-        if incoming != rec:
-            raise ValueError(
-                f"band index at {path} records schema {rec}; append frame "
-                f"has {incoming} — a mixed-schema layout would make the "
-                "recorded read-schema hint misread one generation. Align "
-                "the frame or rewrite with mode='overwrite'"
-            )
-        # meta BEFORE data (ADVICE r7): it is validated-equal anyway, and
-        # writing it first closes the crash window where a fresh layout's
-        # first append leaves data with no recorded modulus. A schema
-        # inferred above (legacy layout) is recorded here, healing the
-        # layout once all existing generations validated.
-        _band_index_check_meta(
-            path, n_buckets, write=True, schema_json=recorded.json()
-        )
-    (
-        bands.withColumn("band_bucket", band_bucket_expr(n_buckets))
-        .repartition(n_buckets, "band_bucket")
-        .write.mode(mode)
-        .partitionBy("band_bucket")
-        .parquet(path)
+def create_band_index(mpp, name: str, buckets: int):
+    """Create the persisted band index ``name`` in ``mpp``'s warehouse: a
+    DistributedTable ``(doc_id BIGINT, band INT, band_key TEXT)``
+    hash-routed on ``band_key`` — the index carried inside the one storage
+    primitive, as the reference carries shard-local indexes in shard DDL
+    (``create_distributed_table.cpp:107``). Rows sharing a band key share
+    a bucket, so a batch's co-occupying index rows sit in the buckets
+    ``route(batch_bands)`` names; appends are snapshot commits, so a
+    reader planned from a file list keeps its view across them, and the
+    catalog fixes the schema and the bucket count."""
+    return mpp.create_distributed_table(
+        name, "doc_id BIGINT, band INT, band_key TEXT", "band_key", buckets
     )
-    # overwrite records AFTER the write (Spark's overwrite clears the
-    # directory, meta included); a crash in between leaves data-without-
-    # meta, which reads/appends now treat loudly instead of trusting the
-    # caller's modulus (ADVICE r7)
-    if mode != "append":
-        _band_index_check_meta(
-            path, n_buckets, write=True, schema_json=bands.schema.json()
-        )
 
 
-def read_band_index(
-    spark,
-    path: str,
-    batch_bands: DataFrame | None = None,
-    n_buckets: int = BAND_INDEX_BUCKETS,
-) -> DataFrame:
-    """Read a :func:`write_band_index` layout; with ``batch_bands``, prune
-    to the buckets the batch's band keys can possibly co-occupy. The
-    pruning filter is on the partition DIRECTORY column, so Spark's file
-    index skips non-matching buckets entirely — bytes read are
-    O(co-occupied buckets), the bucket-pruned analog of
-    ``DistributedTable.scan``'s shard pruning. The distinct-bucket collect
-    is O(n_buckets) driver metadata (bounded by the layout constant, never
-    row-sized — same convention as pruning.py's bucket-id evaluation).
-    A tiny daily batch touches few buckets and reads almost nothing; a
-    batch touching every bucket degrades gracefully to a full (still
-    parallel, still columnar) read — never worse than the unbucketed
-    layout."""
-    effective = _band_index_check_meta(path, n_buckets, write=False)
-    reader = spark.read.option("basePath", path)
-    schema = _band_index_schema(path)
-    if schema is not None:
-        # recorded DATA schema: skips the footer-inference job; the
-        # band_bucket partition column is directory-derived and appended
-        # by partition discovery regardless of the explicit schema
-        reader = reader.schema(schema)
-    idx = reader.parquet(path)
-    if effective is None:
-        # populated but meta-less (crashed writer / legacy layout): the
-        # write-time modulus is unknown, so pruning could skip buckets
-        # that hold matching keys — fall back to a full (still parallel,
-        # still columnar) read, which is modulus-independent (ADVICE r7)
-        return idx.drop("band_bucket")
-    n_buckets = effective
+def probe_band_index(tbl, batch_bands: DataFrame | None = None) -> DataFrame:
+    """The rows of band-index table ``tbl`` a batch can match: only the
+    buckets ``batch_bands``' band keys route to — one distinct-bucket
+    collect, O(#buckets) driver metadata, as ``dml.upsert`` finds its
+    affected buckets — or the whole table when ``batch_bands`` is None.
+    The plan lists only those buckets' snapshot files, so a tiny daily
+    batch reads almost nothing of the index and a batch touching every
+    bucket degrades to a full (still parallel, still columnar) read."""
+    from duckdb_mpp_spark.table import BUCKET_COL
+
+    ids = None
     if batch_bands is not None:
-        hit = [
+        ids = [
             r[0]
-            for r in batch_bands.select(
-                band_bucket_expr(n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
+            for r in tbl.route(batch_bands).select(BUCKET_COL).distinct().collect()
         ]
-        idx = idx.where(F.col("band_bucket").isin(hit))
-    return idx.drop("band_bucket")
+    return tbl.read_buckets(tbl.snapshot_files(), ids)
 
 
 # session-lifetime persisted index per sf_dir for the dedup_incremental
@@ -970,33 +680,40 @@ def read_band_index(
 # so the index build happens once per (process, sf_dir), like _gate_tmpdir
 # warehouses in queries/mpp_layer.py. Content is deterministic from sf_dir
 # (minhash of the non-batch docs), so reuse can never change results.
-_BAND_INDEX_DIRS: dict[str, str] = {}
+_BAND_INDEX_TABLES: dict = {}
 
 # fixture-scale bucket count: 16 keeps each bucket a real file (~1k keys)
-# instead of confetti — A/B r7: 16 vs 64 dirs was −6% gate wall (fewer
-# listing/scan-planning units) with identical pruning semantics. Deployments
-# size n_buckets to ~tens of MB of signatures per bucket (module constant
-# note on BAND_INDEX_BUCKETS).
+# instead of confetti — A/B r7: 16 vs 64 buckets was −6% gate wall (fewer
+# listing/scan-planning units) with identical pruning semantics. At 100 TB
+# of corpus the signatures are ~100 GB; size the count to ~tens of MB of
+# signatures per bucket.
 _GATE_INDEX_BUCKETS = 16
 
 
-def _persisted_band_index(spark, sf_dir: str) -> str:
-    path = _BAND_INDEX_DIRS.get(sf_dir)
-    if path is None:
+def _persisted_band_index(spark, sf_dir: str):
+    """The gate's band index table for ``sf_dir``, built on first use. It
+    stores ONE row per band key — the smallest doc id holding it. For the
+    verdict that is lossless (``dup_of`` is the min over matching index
+    docs = the min over matched keys' per-key mins, also across append
+    generations) and it bounds the daily join's fan-out at O(batch bands):
+    a hot band key held by a million indexed docs joins as ONE row."""
+    tbl = _BAND_INDEX_TABLES.get(sf_dir)
+    if tbl is None:
+        from duckdb_mpp_spark.mpp import MppSession
         from duckdb_mpp_spark.tmputil import session_tmpdir
 
-        path = session_tmpdir("band_index_")
+        mpp = MppSession(spark, session_tmpdir("band_index_"))
+        tbl = create_band_index(mpp, "band_index", _GATE_INDEX_BUCKETS)
         idx_docs = _spread(load_table(spark, sf_dir, "documents"), "doc_id").where(
             F.col("doc_id") % 7 != F.lit(0)
         )
-        write_band_index(
-            minhash_bands(idx_docs),
-            path,
-            n_buckets=_GATE_INDEX_BUCKETS,
-            min_doc_only=True,
+        tbl.insert(
+            minhash_bands(idx_docs)
+            .groupBy("band", "band_key")
+            .agg(F.min("doc_id").alias("doc_id"))
         )
-        _BAND_INDEX_DIRS[sf_dir] = path
-    return path
+        _BAND_INDEX_TABLES[sf_dir] = tbl
+    return tbl
 
 
 # ---------------------------------------------------------------------------
@@ -1324,14 +1041,14 @@ def incremental_index_oracle_sqls(
     Two index sources:
     - ``index_relation`` given (the honest engine-vs-engine mode): a
       DuckDB relation expression over an ALREADY-PERSISTED index — e.g.
-      ``read_parquet('<write_band_index dir>/*/*.parquet')`` pointing at
-      the very layout the Spark gate reads, so BOTH engines probe the
+      ``read_parquet([...])`` over the snapshot file list of the very
+      band-index table the Spark gate reads, so BOTH engines probe the
       same parquet artifact and neither gets an in-memory-table or
       recompute (dis)advantage. ``build_sql`` is None.
     - default: ``build_sql`` persists DuckDB's own band index for the
-      non-batch corpus once (untimed, min-doc-per-key like the
-      ``min_doc_only`` layout — value-identity with the Spark layout is
-      the gate's r7 parity argument); used where no Spark layout exists.
+      non-batch corpus once (untimed, min-doc-per-key like the gate's
+      table — value-identity with the Spark index is the gate's r7
+      parity argument); used where no Spark index exists.
 
     Used by scripts/bench_sf1.py; the registry oracle stays
     self-contained (the driver runs one statement)."""
@@ -1636,16 +1353,16 @@ def _register():
     def incremental_fn(spark, sf_dir):
         # Deterministic batch split stands in for "today's crawl" (docs with
         # id % 7 == 0); the rest of the corpus is the ALREADY-INDEXED side.
-        # r7: the index side is genuinely persisted — written ONCE per
-        # (session, sf_dir) by _persisted_band_index in the bucketed-by-
-        # band-key layout (write_band_index) and only READ here, exactly
-        # like production where yesterday's index is carried over, never
-        # re-hashed. Each run therefore pays: one minhash pass over the
-        # BATCH (1/7 of the corpus — the only re-hashing a daily run
-        # fundamentally needs), one bucket-pruned index read, one join +
-        # one aggregation. The first invocation in a session additionally
-        # builds the index (a full corpus pass + bucketed write); repeat
-        # invocations — and production daily runs — do not.
+        # The index is genuinely persisted — a band-index DistributedTable
+        # written ONCE per (session, sf_dir) by _persisted_band_index and
+        # only READ here, exactly like production where yesterday's index
+        # is carried over, never re-hashed. Each run therefore pays: one
+        # minhash pass over the BATCH (1/7 of the corpus — the only
+        # re-hashing a daily run fundamentally needs), one bucket-pruned
+        # index read, one join + one aggregation. The first invocation in a
+        # session additionally builds the index (a full corpus pass + one
+        # table insert); repeat invocations — and production daily runs —
+        # do not.
         from duckdb_mpp_spark.table import regime
 
         docs = load_table(spark, sf_dir, "documents")
@@ -1662,14 +1379,11 @@ def _register():
         # broadcast arm the whole index's SIGNATURES are broadcast-sized,
         # so (a) the bucket-prune collect job buys nothing a full columnar
         # read doesn't already have, and (b) the left join broadcasts the
-        # reference stream. Past it the r7 shape stands: bucket-pruned
-        # read + shuffle join, the only plan when the index doesn't fit.
+        # reference stream. Past it the r7 shape stands: bucket-pruned read
+        # + shuffle join, the only plan when the index doesn't fit.
         small = regime("incremental_index", docs) == "broadcast"
-        idx = read_band_index(
-            spark,
-            _persisted_band_index(spark, sf_dir),
-            batch_bands=None if small else batch_bands,
-            n_buckets=_GATE_INDEX_BUCKETS,
+        idx = probe_band_index(
+            _persisted_band_index(spark, sf_dir), None if small else batch_bands
         )
         return ordered_small(
             incremental_dedup(

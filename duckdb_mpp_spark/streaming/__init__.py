@@ -626,23 +626,21 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of this query, each leaving the index larger — exercised by
     tests/test_streaming.py. At 100 TB the index is ~10⁻³ of corpus bytes
     and the per-batch cost is O(batch + matches), independent of corpus
-    size. (The hash-routed index table here plays the role the bucketed
-    ``write_band_index`` layout plays for the batch gate: signatures land
-    pre-partitioned on their join key.)"""
+    size. The index table comes from the batch gate's recipe,
+    :func:`create_band_index`: signatures land pre-partitioned on their
+    join key. Unlike
+    the gate's index it stores every (doc, band) occupant, not the min doc
+    per key."""
     from duckdb_mpp_spark.mpp import MppSession
-    from duckdb_mpp_spark.operators.dedup import minhash_bands
+    from duckdb_mpp_spark.operators.dedup import create_band_index, minhash_bands
 
     docs = load_table(spark, sf_dir, "documents")
     mpp = MppSession(spark, _gate_tmpdir("dedup_stream_mpp_"))
-    mpp.sql(
-        "CREATE TABLE crawl_band_index(doc_id BIGINT, band INT, "
-        "band_key TEXT) PARTITION BY (band_key) WITH BUCKETS 8"
-    )
+    index_tbl = create_band_index(mpp, "crawl_band_index", 8)
     mpp.sql(
         "CREATE TABLE crawl_verdicts(doc_id BIGINT, verdict TEXT, "
         "dup_of BIGINT) PARTITION BY (doc_id) WITH BUCKETS 8"
     )
-    index_tbl = mpp.table("crawl_band_index")
     verdict_tbl = mpp.table("crawl_verdicts")
     # persisted index: signatures of the already-crawled corpus
     index_tbl.insert(minhash_bands(docs.where("doc_id % 7 != 0")))

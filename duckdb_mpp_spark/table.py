@@ -646,7 +646,10 @@ class DistributedTable:
         unique column over the batch plus the AFFECTED (+dirty) buckets
         only — opt-in, and the batch is already checkpointed so nothing is
         re-evaluated. A failing check raises before any file is staged, so
-        the table is untouched."""
+        the table is untouched. ``insert`` re-runs it with the ingested
+        files as ``routed`` after every commit rebase, so a racing writer's
+        duplicate aborts the commit, while duplicates already on disk never
+        reject the batch."""
         ids = sorted(
             r[0]
             for r in routed.select(BUCKET_COL).distinct().collect()
@@ -726,17 +729,20 @@ class DistributedTable:
         try:
             routed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
             new_entries = self._ingest_staged(tmp)
+            # commit-race closure of the pre-check (review r4): after a
+            # rebase, the ingested files are re-checked against the NEW head
+            revalidate = None
+            if self.meta.unique_columns:
+                def revalidate(head_files, head_dirty):
+                    self._enforce_unique(
+                        self.read_buckets(new_entries), head_files, head_dirty
+                    )
             # An EMPTY insert still publishes a (no-op) snapshot: one
             # version per insert call is a load-bearing contract — time
             # travel / VERSION AS OF arithmetic counts operations, and the
             # r5 attempt to skip the commit broke exactly that. Pipelines
             # with frequently-empty batches guard with df.isEmpty() at the
             # source (the streaming sinks already do).
-            revalidate = (
-                (lambda bf, bd: self._revalidate_unique(new_entries, bf, bd))
-                if self.meta.unique_columns
-                else None
-            )
             self._commit_append(
                 new_entries, base, files, revalidate, stream_batch=stream_batch
             )
@@ -750,44 +756,6 @@ class DistributedTable:
             # dml._observed_matched). The committed footer row counts are
             # the exact answer and cost nothing.
             return sum(e["rows"] for e in new_entries.values())
-
-    def _revalidate_unique(
-        self,
-        new_entries: dict[str, dict],
-        base_files: dict[str, dict],
-        base_dirty: list[int] | None = None,
-    ) -> None:
-        """Re-check uniqueness of an ingested (not yet committed) batch
-        against a REBASED snapshot — the commit-race closure of
-        ``_enforce_unique`` (review r4). Bucket-local columns read only the
-        new files plus the rebased snapshot's files in the affected
-        buckets; the value-global partition-column constraint additionally
-        reads the rebased head's routing-dirty buckets (a racing
-        partition-column UPDATE may have just misplaced a colliding value
-        there — review r6)."""
-        affected = {int(rel.split("=", 1)[1].split("/", 1)[0]) for rel in new_entries}
-        merged = self.read_buckets({**base_files, **new_entries}, affected)
-        dirty_extra = set(base_dirty or []) - affected
-        for col in self.meta.unique_columns:
-            group = [col] if col == self.meta.partition_column else [BUCKET_COL, col]
-            side = merged.select(BUCKET_COL, col)
-            if group == [col] and dirty_extra:
-                side = side.unionByName(
-                    self.read_buckets(base_files, dirty_extra).select(BUCKET_COL, col)
-                )
-            dup = (
-                side.where(F.col(col).isNotNull())
-                .groupBy(*group)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .where(F.col("n") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"Constraint Error: Duplicate key \"{col}: {dup[0][col]}\" "
-                    f'violates unique constraint in table "{self.meta.name}"'
-                )
 
     # -- read path --------------------------------------------------------
     def scan(

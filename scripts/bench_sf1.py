@@ -261,31 +261,34 @@ def time_duck(
 def time_duck_incremental_probe(sf_dir: str) -> float:
     """Apples-to-apples dedup_incremental column (VERDICT r9 #1): DuckDB
     probes THE SAME persisted parquet band index the Spark gate reads
-    (the write_band_index layout the gate's warm pass created for this
-    sf_dir), and the timed query is the daily run only — batch minhash +
-    index join + verdicts. Neither engine recomputes the index and
-    neither gets an in-memory-table advantage. Call AFTER time_spark for
-    the same sf_dir (the Spark warm pass builds the layout)."""
+    (the snapshot file list of the band-index table the gate's warm pass
+    created for this sf_dir), and the timed query is the daily run only —
+    batch minhash + index join + verdicts. Neither engine recomputes the
+    index and neither gets an in-memory-table advantage. Call AFTER
+    time_spark for the same sf_dir (the Spark warm pass builds the index)."""
     from duckdb_mpp_spark.operators.dedup import (
-        _BAND_INDEX_DIRS,
+        _BAND_INDEX_TABLES,
         incremental_index_oracle_sqls,
     )
 
-    if sf_dir not in _BAND_INDEX_DIRS:
+    if sf_dir not in _BAND_INDEX_TABLES:
         # the ordering contract from the docstring, enforced (ADVICE r10):
         # the Spark dedup_incremental gate's warm pass registers the
-        # persisted layout for this sf_dir; a standalone/partial section
+        # persisted index for this sf_dir; a standalone/partial section
         # run that skipped it must not die on a bare KeyError
         raise RuntimeError(
             f"no persisted band index registered for {sf_dir}: run the "
             "Spark dedup_incremental gate for this sf_dir first "
             "(time_spark with GATES including dedup_incremental) — its "
-            "warm pass builds and registers the write_band_index layout "
+            "warm pass builds and registers the band-index table "
             "this probe times DuckDB against"
         )
-    idx_dir = _BAND_INDEX_DIRS[sf_dir]
+    tbl = _BAND_INDEX_TABLES[sf_dir]
+    paths = ", ".join(
+        f"'{os.path.join(tbl.path, rel)}'" for rel in sorted(tbl.snapshot_files())
+    )
     _, probe = incremental_index_oracle_sqls(
-        index_relation=f"SELECT * FROM read_parquet('{idx_dir}/*/*.parquet')"
+        index_relation=f"SELECT * FROM read_parquet([{paths}])"
     )
     con = duckdb.connect()
     con.execute("SET threads=32")

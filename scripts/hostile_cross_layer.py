@@ -17,9 +17,9 @@ protocol's safety claims exactly where the layers INTERACT:
 - vacuum vs the in-flight-writer staging window: files ingested but not
   yet committed survive the default orphan grace and are reclaimed with
   ``grace=0`` (the documented trust-single-writer mode).
-- the incremental band index (its own layout, OUTSIDE the manifest
-  protocol): an open reader racing a daily append must see a consistent
-  old-or-new view, never crash or a torn mix.
+- the incremental band index (a DistributedTable): a reader planned
+  before a daily append keeps its snapshot's view, and bucket-pruned
+  probes see the appended rows.
 
 Prints one JSON line with per-case verdicts; exit code 1 on any fail.
 """
@@ -215,44 +215,29 @@ def _(spark):
     assert tbl.scan().count() == 8
 
 
-@case("band_index_reader_survives_concurrent_append")
+@case("band_index_reader_keeps_its_view_across_append")
 def _(spark):
-    from duckdb_mpp_spark.operators.dedup import (
-        read_band_index,
-        write_band_index,
-    )
+    from duckdb_mpp_spark.operators.dedup import create_band_index, probe_band_index
 
-    path = tempfile.mkdtemp(prefix="hostile_xlayer_idx_") + "/idx"
-    bands0 = spark.createDataFrame(
+    tbl = create_band_index(_mpp(spark), "idx", 8)
+    tbl.insert(spark.createDataFrame(
         [(i, i % 4, f"key{i % 8}") for i in range(32)],
         "doc_id long, band int, band_key string",
-    )
-    write_band_index(bands0, path, n_buckets=8)
-    # opened BEFORE the daily append (n_buckets must match the layout —
-    # the meta guard rejects a mismatched modulus loudly, verified below)
-    reader = read_band_index(spark, path, n_buckets=8)
-    bands1 = spark.createDataFrame(
+    ))
+    # planned from the snapshot BEFORE the daily append
+    reader = probe_band_index(tbl)
+    tbl.insert(spark.createDataFrame(
         [(100 + i, i % 4, f"new{i}") for i in range(16)],
         "doc_id long, band int, band_key string",
-    )
-    write_band_index(bands1, path, n_buckets=8, mode="append")
-    # the open reader must deliver a CONSISTENT view: the old snapshot or
-    # the appended one, never a crash and never a torn subset of either
+    ))
     n = reader.count()
-    assert n in (32, 48), f"torn read across append: {n} rows"
-    assert read_band_index(spark, path, n_buckets=8).count() == 48
-    # a reader with the WRONG modulus must be rejected loudly (a silent
-    # mismatch would prune the wrong buckets) — the cross-layer guard
-    try:
-        read_band_index(spark, path)  # module default n_buckets != 8
-        raise AssertionError("mismatched n_buckets read was not rejected")
-    except ValueError as e:
-        assert "n_buckets" in str(e)
-    # and bucket-pruned probes against the post-append index stay correct
+    assert n == 32, f"reader planned before the append saw {n} rows, not 32"
+    assert probe_band_index(tbl).count() == 48
+    # bucket-pruned probes against the post-append index stay correct
     probe = spark.createDataFrame(
         [(999, 1, "new1")], "doc_id long, band int, band_key string"
     )
-    pruned = read_band_index(spark, path, batch_bands=probe, n_buckets=8)
+    pruned = probe_band_index(tbl, probe)
     assert pruned.where("band_key = 'new1'").count() == 1
 
 

@@ -202,35 +202,36 @@ def bench_dedup(spark, docs_dir: str) -> dict[str, float]:
         lambda: contamination_overlap(docs, bench_side),
     )
 
-    # Incremental dedup DAILY RUN against the persisted bucketed band index
-    # (r7): the index build (full-corpus hash + bucketed write) is untimed
-    # setup — production carries it over from prior runs — so this row
-    # isolates what a daily run pays: batch-only hashing (1/7 of corpus),
-    # a bucket-pruned index read, one broadcast/shuffle join, one
+    # Incremental dedup DAILY RUN against the persisted band-index table
+    # (r7): the index build (full-corpus hash + one table insert) is
+    # untimed setup — production carries it over from prior runs — so this
+    # row isolates what a daily run pays: batch-only hashing (1/7 of
+    # corpus), a bucket-pruned index read, one broadcast/shuffle join, one
     # aggregation. Near-linear here means the daily path scales with the
-    # BATCH, the whole point of the bucketed layout.
+    # BATCH, the whole point of routing the index on its join key.
     import tempfile
 
+    from duckdb_mpp_spark.mpp import MppSession
     from duckdb_mpp_spark.operators.dedup import (
+        create_band_index,
         incremental_dedup,
-        read_band_index,
-        write_band_index,
+        probe_band_index,
     )
 
     idx_dir = tempfile.mkdtemp(prefix="probe_band_idx_")
-    write_band_index(
-        minhash_bands(docs.where(F.col("doc_id") % 7 != F.lit(0))),
-        idx_dir,
-        min_doc_only=True,
+    idx = create_band_index(MppSession(spark, idx_dir), "band_index", 64)
+    idx.insert(
+        minhash_bands(docs.where(F.col("doc_id") % 7 != F.lit(0)))
+        .groupBy("band", "band_key")
+        .agg(F.min("doc_id").alias("doc_id"))
     )
 
     def daily_incremental():
         b = minhash_bands(
             docs.where(F.col("doc_id") % 7 == F.lit(0))
         ).localCheckpoint(eager=False)
-        idx = read_band_index(spark, idx_dir, batch_bands=b)
         return incremental_dedup(
-            idx, b, materialize_batch=False, prefilter=False
+            probe_band_index(idx, b), b, materialize_batch=False, prefilter=False
         )
 
     run("dedup_incremental_daily", daily_incremental)

@@ -1,15 +1,6 @@
 """Regression tests for the ADVICE-r10 findings fixed in round 11.
 
-1. dedup.py — ``write_band_index(min_doc_only=True, mode='append')``
-   validates the schema that is actually WRITTEN (the post-projection
-   (band, band_key, id) frame), not the caller's richer input frame: an
-   appender whose frame carries extra columns the groupBy drops is
-   accepted; a genuine type drift on a written column still raises.
-2. dedup.py — appends to a SCHEMA-LESS layout (legacy meta without a
-   schema field) no longer skip type-drift validation: the layout schema
-   is inferred from the existing parquet footers (mergeSchema — every
-   generation checked), the incoming frame is validated against it, and
-   a passing append RECORDS the schema so the layout is healed.
+1.-2. dedup band index — now a DistributedTable; see tests/test_band_index.py.
 3. scripts/bench_sf1.py — ``time_duck_incremental_probe`` on an sf_dir
    whose Spark gate never ran raises a RuntimeError naming the ordering
    contract, not a bare KeyError on a process-global dict.
@@ -20,95 +11,11 @@
    is measurement infrastructure with no importable seam).
 """
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
-
-from duckdb_mpp_spark.operators.dedup import (
-    _BAND_INDEX_META,
-    read_band_index,
-    write_band_index,
-)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _mk_bands(spark, extra=False, id_type="long"):
-    rows = [(i, i % 4, f"key{i % 8}") + ((f"junk{i}",) if extra else ())
-            for i in range(32)]
-    schema = f"doc_id {id_type}, band int, band_key string" + (
-        ", scratch string" if extra else ""
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-# --- 1. min_doc_only append validates the written projection -----------------
-
-def test_min_doc_only_append_accepts_extra_input_columns(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    write_band_index(_mk_bands(spark), path, n_buckets=8, min_doc_only=True)
-    # the appender's frame carries a scratch column the groupBy drops;
-    # the written layout is identical, so this must NOT be rejected
-    write_band_index(
-        _mk_bands(spark, extra=True), path, n_buckets=8,
-        mode="append", min_doc_only=True,
-    )
-    got = read_band_index(spark, path, n_buckets=8)
-    assert set(got.columns) >= {"doc_id", "band", "band_key"}
-    assert "scratch" not in got.columns
-    # one row per (band, band_key) per generation, min doc id each
-    assert got.count() == 2 * _mk_bands(spark).select(
-        "band", "band_key").distinct().count()
-
-
-def test_min_doc_only_append_still_rejects_type_drift(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    write_band_index(_mk_bands(spark), path, n_buckets=8, min_doc_only=True)
-    with pytest.raises(ValueError, match="records schema"):
-        write_band_index(
-            _mk_bands(spark, extra=True, id_type="int"), path, n_buckets=8,
-            mode="append", min_doc_only=True,
-        )
-
-
-# --- 2. schema-less layout appends validate via footer inference -------------
-
-def _strip_schema(path):
-    meta = os.path.join(path, _BAND_INDEX_META)
-    with open(meta) as f:
-        doc = json.load(f)
-    doc.pop("schema", None)
-    with open(meta, "w") as f:
-        json.dump(doc, f)
-
-
-def test_schemaless_append_validates_against_inferred_and_heals(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    write_band_index(_mk_bands(spark), path, n_buckets=8)
-    _strip_schema(path)  # legacy pre-hint layout
-    write_band_index(_mk_bands(spark), path, n_buckets=8, mode="append")
-    # healed: the meta now records the schema inferred from the footers
-    with open(os.path.join(path, _BAND_INDEX_META)) as f:
-        assert json.load(f).get("schema"), "append did not heal the meta"
-    assert read_band_index(spark, path, n_buckets=8).count() == 64
-
-
-def test_schemaless_append_rejects_type_drift(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    write_band_index(_mk_bands(spark), path, n_buckets=8)
-    _strip_schema(path)
-    # doc_id INT vs the layout's BIGINT: exactly the footer-incompatible
-    # mix the guard exists for — must raise even with no recorded schema
-    with pytest.raises(ValueError, match="records schema|append frame"):
-        write_band_index(
-            _mk_bands(spark, id_type="int"), path, n_buckets=8, mode="append"
-        )
-    # and the failed append must not have healed/recorded anything bogus
-    with open(os.path.join(path, _BAND_INDEX_META)) as f:
-        doc = json.load(f)
-    assert "schema" not in doc or doc["schema"] is None
 
 
 # --- 3. incremental probe names the ordering contract ------------------------

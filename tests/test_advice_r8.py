@@ -9,9 +9,7 @@
    machine: a lone quote inside a comment is inert and can no longer blank
    genuine code (which could erase a real ``FROM name`` in a WITH prefix
    and re-enable pruning on a CTE-fed source).
-3. dedup band index — a populated-but-metaless layout (crashed writer /
-   legacy) is never silently trusted: reads fall back to an unpruned read,
-   appends raise; fresh appends write meta BEFORE data.
+3. dedup band index — now a DistributedTable; see tests/test_band_index.py.
 4. sources/tables.py — the INT96-vs-INT64 physical-type check covers every
    member file; mixed encodings fail loudly instead of getting one
    uniform (wrong for half the files) treatment.
@@ -19,7 +17,6 @@
    (tests live in test_advice_r7.py alongside the r6-contract tests).
 """
 
-import os
 import shutil
 
 import pytest
@@ -105,65 +102,6 @@ def test_cte_indirection_survives_lone_quote_in_comment(mpp):
         "SELECT k FROM c WHERE k = 'x' || 2 UNION ALL SELECT k FROM c"
     )
     assert mpp._cte_indirected(q, "stq") is True
-
-
-# --- 3. band index meta lifecycle -------------------------------------------
-
-def _mk_bands(spark):
-    return spark.createDataFrame(
-        [(i, i % 4, f"key{i % 8}") for i in range(32)],
-        "doc_id long, band int, band_key string",
-    )
-
-
-def test_metaless_populated_index_read_falls_back_unpruned(spark, tmp_path):
-    from duckdb_mpp_spark.operators.dedup import (
-        _BAND_INDEX_META,
-        read_band_index,
-        write_band_index,
-    )
-
-    path = str(tmp_path / "idx")
-    bands = _mk_bands(spark)
-    write_band_index(bands, path, n_buckets=8)
-    os.remove(os.path.join(path, _BAND_INDEX_META))  # crashed-writer layout
-    # read succeeds (full, unpruned) and returns EVERY row even with a
-    # batch that would have pruned under a (possibly wrong) modulus
-    got = read_band_index(spark, path, batch_bands=bands.limit(1), n_buckets=8)
-    assert got.count() == 32
-
-
-def test_metaless_populated_index_append_raises(spark, tmp_path):
-    from duckdb_mpp_spark.operators.dedup import (
-        _BAND_INDEX_META,
-        write_band_index,
-    )
-
-    path = str(tmp_path / "idx")
-    bands = _mk_bands(spark)
-    write_band_index(bands, path, n_buckets=8)
-    os.remove(os.path.join(path, _BAND_INDEX_META))
-    with pytest.raises(ValueError, match="no .*meta|unknown modulus|overwrite"):
-        write_band_index(bands, path, n_buckets=8, mode="append")
-
-
-def test_fresh_append_writes_meta_before_data(spark, tmp_path):
-    from duckdb_mpp_spark.operators.dedup import (
-        _BAND_INDEX_META,
-        read_band_index,
-        write_band_index,
-    )
-
-    path = str(tmp_path / "idx")
-    bands = _mk_bands(spark)
-    # first-ever write in append mode: meta must be recorded (before data,
-    # so a crash mid-write can never leave data without a modulus)
-    write_band_index(bands, path, n_buckets=8, mode="append")
-    assert os.path.exists(os.path.join(path, _BAND_INDEX_META))
-    # and the recorded modulus validates later appends
-    with pytest.raises(ValueError, match="n_buckets"):
-        write_band_index(bands, path, n_buckets=16, mode="append")
-    assert read_band_index(spark, path, n_buckets=8).count() == 32
 
 
 # --- 4. mixed INT96/INT64 timestamp files fail loudly ------------------------

@@ -7,11 +7,7 @@
 2. queries/__init__.py — ``ordered_small`` sorts asc NULLS LAST (the r6
    cross-dialect convention), so a NULL sort key cannot diverge row order
    from the DuckDB oracle's default NULLS LAST.
-3. dedup band index — ``_band_index_has_data`` counts only
-   ``band_bucket=`` partition dirs and ``*.parquet`` files as data; a
-   stray file or empty subdirectory no longer makes a fresh layout look
-   populated-but-metaless (which hard-failed appends and silently
-   disabled read pruning).
+3. dedup band index — now a DistributedTable; see tests/test_band_index.py.
 4. corpus.py — contamination_overlap's scale shape: covered by
    tests/test_corpus.py (duplicate-id exactness) plus the hit-bounded
    shuffle note in SCALING.md; the r9 rework keeps every shuffle
@@ -19,8 +15,6 @@
 5. dml.py — the WHERE-determinism guard names the nondeterministic
    predicate itself in its error, not the (innocent) first unique column.
 """
-
-import os
 
 import pytest
 
@@ -96,62 +90,6 @@ def test_ordered_small_sorts_nulls_last(spark):
     )
     got = [tuple(r) for r in ordered_small(df, "k", "v").collect()]
     assert got == [(1, "c"), (2, "b"), (None, "a"), (None, "d")]
-
-
-# --- 3. band-index data detection ---------------------------------------------
-
-def test_band_index_stray_entries_do_not_count_as_data(tmp_path):
-    from duckdb_mpp_spark.operators.dedup import _band_index_has_data
-
-    layout = tmp_path / "idx"
-    layout.mkdir()
-    assert _band_index_has_data(str(layout)) is False
-    # stray file: not data
-    (layout / "README.txt").write_text("scratch")
-    assert _band_index_has_data(str(layout)) is False
-    # empty subdirectory: not data
-    (layout / "junk").mkdir()
-    assert _band_index_has_data(str(layout)) is False
-    # a band_bucket= partition dir IS data
-    (layout / "band_bucket=3").mkdir()
-    assert _band_index_has_data(str(layout)) is True
-
-
-def test_band_index_bare_parquet_counts_as_data(tmp_path):
-    from duckdb_mpp_spark.operators.dedup import _band_index_has_data
-
-    layout = tmp_path / "idx"
-    layout.mkdir()
-    (layout / "part-000.parquet").write_bytes(b"PAR1")
-    assert _band_index_has_data(str(layout)) is True
-    # a band_bucket=-NAMED plain FILE is not a partition dir
-    layout2 = tmp_path / "idx2"
-    layout2.mkdir()
-    (layout2 / "band_bucket=0").write_text("not a dir")
-    assert _band_index_has_data(str(layout2)) is False
-
-
-def test_fresh_layout_with_stray_file_still_appendable(tmp_path, spark):
-    # end-to-end: before the fix, the stray file made the first append to
-    # a genuinely FRESH layout raise the crashed-writer error
-    from duckdb_mpp_spark.operators.dedup import (
-        minhash_bands,
-        write_band_index,
-    )
-
-    layout = str(tmp_path / "idx")
-    os.makedirs(layout)
-    with open(os.path.join(layout, "scratch.txt"), "w") as f:
-        f.write("stray")
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id INT, text STRING",
-    )
-    write_band_index(minhash_bands(docs), layout, mode="append")
-    files = []
-    for _root, _dirs, names in os.walk(layout):
-        files += [n for n in names if n.endswith(".parquet")]
-    assert files, "append wrote no data"
 
 
 # --- 5. WHERE-determinism guard names the predicate ---------------------------

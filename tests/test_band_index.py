@@ -1,34 +1,28 @@
-"""Persisted band-key-bucketed index (r7) — the storage half of
-incremental dedup's daily-crawl contract.
+"""The persisted band index: a DistributedTable ``(doc_id, band,
+band_key)`` routed on ``band_key`` — the storage half of incremental
+dedup's daily-crawl contract.
 
-Covers: write/read roundtrip fidelity, genuine partition pruning (the
-bucket filter must reach the file index as a PartitionFilter, not a
-post-scan filter), append-mode daily union-in, and value-identity of the
-gate path against the in-memory formulation.
+Covers: roundtrip fidelity, the pruned read listing only the batch's
+buckets' files, appends growing the index (and a reader planned before an
+append keeping its view), value-identity of the gate path against the
+in-memory formulation, and losslessness of the gate's min-doc-per-key
+rows.
 """
-
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from duckdb_mpp_spark.operators.dedup import (
-    band_bucket_expr,
+    create_band_index,
     incremental_dedup,
     minhash_bands,
-    read_band_index,
-    write_band_index,
+    probe_band_index,
 )
 from duckdb_mpp_spark.sources import load_table
+from duckdb_mpp_spark.table import BUCKET_COL
+from tests.conftest import bucket_files, input_paths
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def plan_text(df, mode="formatted"):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
 
 
 @pytest.fixture(scope="module")
@@ -38,10 +32,8 @@ def bands(spark):
 
 
 @pytest.fixture()
-def index_dir():
-    d = tempfile.mkdtemp(prefix="band_index_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def index(mpp):
+    return create_band_index(mpp, "band_index", 8)
 
 
 def _rows(df):
@@ -50,101 +42,78 @@ def _rows(df):
     )
 
 
-def test_roundtrip(spark, bands, index_dir):
-    write_band_index(bands, index_dir)
-    back = read_band_index(spark, index_dir)
-    assert _rows(back) == _rows(bands)
+def _verdicts(index_bands, batch, **kw):
+    return sorted(tuple(r) for r in incremental_dedup(index_bands, batch, **kw).collect())
 
 
-def test_bucket_pruning_reaches_file_index(spark, bands, index_dir):
-    write_band_index(bands, index_dir)
-    # a single-doc batch touches at most N_BANDS buckets of 64
+def _min_doc(bands):
+    return bands.groupBy("band", "band_key").agg(F.min("doc_id").alias("doc_id"))
+
+
+def test_roundtrip(bands, index):
+    index.insert(bands)
+    assert _rows(probe_band_index(index)) == _rows(bands)
+
+
+def test_bucket_pruning_reaches_file_index(bands, index):
+    index.insert(bands)
     one = bands.where(F.col("doc_id") == bands.agg(F.min("doc_id")).collect()[0][0])
-    pruned = read_band_index(spark, index_dir, batch_bands=one)
-    p = plan_text(pruned)
-    assert "band_bucket" in p and "PartitionFilters" in p, p
-    # the pruned read must return exactly the hit buckets' contents
-    hit = {r[0] for r in one.select(band_bucket_expr().alias("b")).distinct().collect()}
-    assert len(hit) <= 4
-    expect = _rows(
-        bands.where(band_bucket_expr().isin(list(hit)))
+    pruned = probe_band_index(index, one)
+    hit = {r[0] for r in index.route(one).select(BUCKET_COL).distinct().collect()}
+    assert 0 < len(hit) < index.meta.buckets
+    files = index.snapshot_files()
+    assert input_paths(pruned) == set().union(
+        *(bucket_files(index, files, b) for b in hit)
     )
-    assert _rows(pruned) == expect
+    # exactly the hit buckets' contents
+    assert _rows(pruned) == _rows(index.route(bands).where(F.col(BUCKET_COL).isin(list(hit))))
 
 
-def test_append_mode_unions_new_bands(spark, bands, index_dir):
-    old = bands.where(F.col("doc_id") % 2 == 0)
-    new = bands.where(F.col("doc_id") % 2 != 0)
-    write_band_index(old, index_dir)
-    write_band_index(new, index_dir, mode="append")
-    assert _rows(read_band_index(spark, index_dir)) == _rows(bands)
+def test_append_mode_unions_new_bands(bands, index):
+    index.insert(bands.where(F.col("doc_id") % 2 == 0))
+    reader = probe_band_index(index)  # planned before the append
+    index.insert(bands.where(F.col("doc_id") % 2 != 0))
+    assert len(index.history()) == 2
+    assert _rows(reader) == _rows(bands.where(F.col("doc_id") % 2 == 0))
+    assert _rows(probe_band_index(index)) == _rows(bands)
 
 
-def test_incremental_dedup_over_persisted_index_value_identical(
-    spark, bands, index_dir
-):
+def test_incremental_dedup_over_persisted_index_value_identical(bands, index):
     batch = bands.where(F.col("doc_id") % 7 == 0)
     idx_mem = bands.where(F.col("doc_id") % 7 != 0)
-    write_band_index(idx_mem, index_dir)
-    idx_disk = read_band_index(spark, index_dir, batch_bands=batch)
-    got = sorted(
-        tuple(r) for r in incremental_dedup(idx_disk, batch).collect()
-    )
-    want = sorted(
-        tuple(r) for r in incremental_dedup(idx_mem, batch).collect()
-    )
-    assert got == want and len(got) > 0
+    index.insert(idx_mem)
+    got = _verdicts(probe_band_index(index, batch), batch)
+    assert got == _verdicts(idx_mem, batch) and len(got) > 0
 
 
-def test_min_doc_only_layout_lossless_for_verdicts(spark, bands, index_dir):
-    """min-doc-per-key storage (the gate layout) must yield identical
+def test_min_doc_only_layout_lossless_for_verdicts(bands, index):
+    """min-doc-per-key rows (the gate's index) must yield identical
     verdicts AND identical dup_of ids, including across append
     generations (several per-key min rows)."""
     batch = bands.where(F.col("doc_id") % 7 == 0)
     idx_mem = bands.where(F.col("doc_id") % 7 != 0)
     # two append generations, split mid-corpus
-    g1 = idx_mem.where(F.col("doc_id") % 3 == 1)
-    g2 = idx_mem.where(F.col("doc_id") % 3 != 1)
-    write_band_index(g1, index_dir, n_buckets=8, min_doc_only=True)
-    write_band_index(g2, index_dir, n_buckets=8, mode="append", min_doc_only=True)
-    idx_disk = read_band_index(spark, index_dir, batch_bands=batch, n_buckets=8)
-    got = sorted(
-        tuple(r)
-        for r in incremental_dedup(idx_disk, batch, prefilter=False).collect()
-    )
-    want = sorted(
-        tuple(r) for r in incremental_dedup(idx_mem, batch).collect()
-    )
-    assert got == want and len(got) > 0
+    index.insert(_min_doc(idx_mem.where(F.col("doc_id") % 3 == 1)))
+    index.insert(_min_doc(idx_mem.where(F.col("doc_id") % 3 != 1)))
+    got = _verdicts(probe_band_index(index, batch), batch, prefilter=False)
+    assert got == _verdicts(idx_mem, batch) and len(got) > 0
 
 
-def test_append_schema_drift_rejected_and_hint_preserved(spark, bands, index_dir):
-    """r10 (review): the layout meta records the DATA schema so reads skip
-    footer inference. Appends must NEVER rewrite that hint with their own
-    frame's schema (it must describe every generation's files) — a
-    type-drifted appender is rejected loudly, and a clean append leaves
-    the recorded hint intact."""
-    import json
+def test_directory_partitioned_writes_only_in_table_and_dml():
+    """One bucketed layout: a DataFrameWriter ``.partitionBy(`` appears
+    only in the DistributedTable (``table.py``) and its COW DML
+    (``dml.py``), plus the hive-partitioned file sink of COPY/``write_df``
+    (``sources/formats.py``), which partitions on user-named columns."""
     import os
+    import re
 
-    from duckdb_mpp_spark.operators.dedup import _BAND_INDEX_META
-
-    g1 = bands.where(F.col("doc_id") % 3 == 1)
-    write_band_index(g1, index_dir, n_buckets=8)
-    meta_path = os.path.join(index_dir, _BAND_INDEX_META)
-    with open(meta_path) as f:
-        recorded = json.load(f)["schema"]
-    assert recorded  # overwrite recorded the hint
-
-    # clean append: same columns/types -> accepted, hint unchanged
-    g2 = bands.where(F.col("doc_id") % 3 != 1)
-    write_band_index(g2, index_dir, n_buckets=8, mode="append")
-    with open(meta_path) as f:
-        assert json.load(f)["schema"] == recorded
-
-    # drifted append: doc_id INT vs the layout's BIGINT -> loud rejection
-    drifted = g2.withColumn("doc_id", F.col("doc_id").cast("int"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mixed-schema"):
-        write_band_index(drifted, index_dir, n_buckets=8, mode="append")
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "duckdb_mpp_spark")
+    writers = set()
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f)) as fh:
+                    src = re.sub(r"Window\s*\.\s*partitionBy\(", "", fh.read())
+                if ".partitionBy(" in src:
+                    writers.add(os.path.relpath(os.path.join(root, f), pkg))
+    assert writers == {"table.py", "dml.py", os.path.join("sources", "formats.py")}

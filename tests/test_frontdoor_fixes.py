@@ -75,6 +75,21 @@ def test_delete_where_literal_containing_where(t1):
     assert rows(t1.sql("SELECT count(*) AS n FROM t1")) == [(3,)]
 
 
+@pytest.mark.parametrize(
+    "stmt,note,v",
+    [
+        ('UPDATE t SET note = "x, y", v = 1 WHERE id = 1', "x, y", 1),
+        ("UPDATE t SET note = 'x' /* a, b */, v = 2 WHERE id = 1", "x", 2),
+    ],
+)
+def test_update_set_comma_in_quotes_or_comment_does_not_split(mpp, stmt, note, v):
+    # the SET list splits only at top-level commas of the blanked text
+    mpp.sql("CREATE TABLE t(id INT, note TEXT, v INT) PARTITION BY (id) WITH BUCKETS 4")
+    mpp.sql("INSERT INTO t VALUES (1, 'a', 0), (2, 'b', 0)")
+    assert mpp.sql(stmt) == 1
+    assert rows(mpp.sql("SELECT id, note, v FROM t"), "id") == [(1, note, v), (2, "b", 0)]
+
+
 def test_split_where_tail_is_quote_and_paren_aware():
     # WHERE inside a string literal or a parenthesized subquery is depth>0 /
     # quoted — the top-level split must land on the real WHERE only.
@@ -435,39 +450,42 @@ def test_predicate_trailing_whitespace_still_prunes():
     assert parse_predicate("c0 = 1\n") is not None
 
 
-def test_concurrent_insert_unique_race_detected(spark, mpp):
+def test_concurrent_insert_unique_race_detected(spark, mpp, monkeypatch):
     """review r4: two concurrent inserts of the same UNIQUE key — both
     pass the pre-commit check against the same base snapshot; the loser's
-    rebase-and-retry must re-validate against the new head and abort."""
-    import shutil
-    import uuid
-
-    from duckdb_mpp_spark.table import BUCKET_COL
+    rebase-and-retry must re-validate against the new head and abort. The
+    re-check is the pre-check's own primitive, so a duplicate already on
+    disk in the affected bucket never rejects the batch."""
+    import dataclasses
 
     mpp.sql("CREATE TABLE cr(id INT UNIQUE, grp INT) PARTITION BY (grp) WITH BUCKETS 2")
     mpp.sql("INSERT INTO cr VALUES (1, 10)")
+    # an inconsistency already on disk in group 10's bucket: id 5 twice,
+    # written by a writer that does not know the constraint
+    blind = mpp.table("cr")
+    blind.meta = dataclasses.replace(blind.meta, unique_columns=[])
+    blind.insert(spark.createDataFrame([(5, 10), (5, 10)], "id INT, grp INT"))
+
     tbl = mpp.table("cr")
-    base, files = tbl.snapshot()
-    # writer A: stage + ingest id=42 against the current snapshot (its
-    # _enforce_unique against this snapshot would pass)
-    routed = tbl.route(
-        tbl._aligned_for_insert(
-            spark.createDataFrame([(42, 10)], "id INT, grp INT")
-        )
-    )
-    tmp = tbl.path + f".stage-{uuid.uuid4().hex[:8]}"
-    routed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-    new_entries = tbl._ingest_staged(tmp)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # writer B lands id=42 first — the head moves
-    mpp.sql("INSERT INTO cr VALUES (42, 10)")
+    real_ingest = tbl._ingest_staged
+
+    def insert_racing(own_id, racing_id):
+        # writer B commits between writer A's ingest and A's commit, so A's
+        # commit conflicts, rebases and re-checks against B's head
+        def ingest(tmp):
+            entries = real_ingest(tmp)
+            mpp.sql(f"INSERT INTO cr VALUES ({racing_id}, 10)")
+            return entries
+
+        monkeypatch.setattr(tbl, "_ingest_staged", ingest)
+        return tbl.insert(spark.createDataFrame([(own_id, 10)], "id INT, grp INT"))
+
+    assert insert_racing(42, 43) == 1
     with pytest.raises(ValueError, match="unique constraint"):
-        tbl._commit_append(
-            new_entries, base, files,
-            lambda bf, bd: tbl._revalidate_unique(new_entries, bf, bd),
-        )
-    # only writer B's row is visible; A's files stay unreferenced orphans
-    assert mpp.sql("SELECT COUNT(*) AS n FROM cr WHERE id = 42").collect()[0][0] == 1
+        insert_racing(44, 44)
+    # only writer B's id 44 is visible; A's files stay unreferenced orphans
+    got = mpp.sql("SELECT id, COUNT(*) AS n FROM cr GROUP BY id")
+    assert rows(got, "id") == [(1, 1), (5, 2), (42, 1), (43, 1), (44, 1)]
 
 
 # -- review r4, pass 3: front-door parsing/rewrite fixes ----------------------

@@ -4,9 +4,7 @@
    identifiers before its backward keyword scan (a 'select' inside either
    misclassified a relation-list comma and re-enabled pruning on a
    CTE-fed source — the wrong-results direction the guard prevents).
-2. operators/dedup.py — the band index records its own n_buckets and
-   readers/appenders validate it (a mismatched modulus silently pruned
-   the wrong buckets).
+2. dedup band index — now a DistributedTable; see tests/test_band_index.py.
 3. streaming — the replay-detection lineage id lives IN the checkpoint
    dir, so a deleted/reset checkpoint mints a new lineage instead of
    silently skipping every new batch under the old maximum.
@@ -21,18 +19,10 @@
 
 import os
 import shutil
-import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from duckdb_mpp_spark import manifest
-from duckdb_mpp_spark.operators.dedup import (
-    minhash_bands,
-    read_band_index,
-    write_band_index,
-)
-from duckdb_mpp_spark.sources import load_table
 from tests.conftest import rows
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -85,55 +75,6 @@ def test_cte_fed_setop_rows_survive_comment_near_comma(mpp):
     )
     # leg1: {2}; leg2: all three — pruning leg 2's source on a=2 loses rows
     assert [r[0] for r in got] == [1, 2, 2, 3]
-
-
-# --- 2. band index n_buckets recorded + validated --------------------------
-
-@pytest.fixture()
-def index_dir():
-    d = tempfile.mkdtemp(prefix="band_index_meta_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def bands(spark):
-    docs = load_table(spark, SF_DIR, "documents").limit(50)
-    return minhash_bands(docs).localCheckpoint()
-
-
-def test_read_with_wrong_n_buckets_fails_loudly(spark, bands, index_dir):
-    write_band_index(bands, index_dir, n_buckets=8)
-    with pytest.raises(ValueError, match="n_buckets=8"):
-        read_band_index(spark, index_dir, n_buckets=16)
-
-
-def test_append_with_wrong_n_buckets_fails_before_writing(
-    spark, bands, index_dir
-):
-    write_band_index(bands, index_dir, n_buckets=8)
-    with pytest.raises(ValueError, match="n_buckets=8"):
-        write_band_index(bands, index_dir, n_buckets=16, mode="append")
-    # the failed append must not have scattered rows into the layout
-    n = read_band_index(spark, index_dir, n_buckets=8).count()
-    assert n == bands.count()
-
-
-def test_overwrite_rerecords_n_buckets(spark, bands, index_dir):
-    write_band_index(bands, index_dir, n_buckets=8)
-    write_band_index(bands, index_dir, n_buckets=16)  # full replace
-    assert read_band_index(spark, index_dir, n_buckets=16).count() == bands.count()
-    with pytest.raises(ValueError, match="n_buckets=16"):
-        read_band_index(spark, index_dir, n_buckets=8)
-
-
-def test_reader_defaults_to_recorded_n_buckets(spark, bands, index_dir):
-    # the recorded n is authoritative: a reader passing the module default
-    # against a differently-sized layout gets the RECORDED modulus
-    write_band_index(bands, index_dir, n_buckets=8)
-    one = bands.limit(1)
-    pruned = read_band_index(spark, index_dir, batch_bands=one, n_buckets=8)
-    assert pruned.count() > 0
 
 
 # --- 3. lineage identity dies with the checkpoint --------------------------
