@@ -15,8 +15,8 @@ reference's single BIGINT result (``mpp_physical_update.cpp:105-107``). The
 count comes from an ``Observation`` on the rewrite job itself (the same
 pattern as ``DistributedTable.insert``), so the surviving buckets are read
 exactly ONCE per DML — no separate count pass. When the predicate matches
-nothing the rewritten temp dir is discarded and the table is left untouched
-(no spurious file-generation churn, rowids stay stable).
+nothing the stage is discarded and the table is left untouched (no
+spurious file-generation churn, rowids stay stable).
 
 Semantics matched deliberately:
 - Updating the partition column does NOT re-route rows to new buckets —
@@ -26,10 +26,11 @@ Semantics matched deliberately:
 - ``DEFAULT`` in a SET list resolves to the column's declared default or
   NULL (``ResolveDefaults``, ``src/execution/mpp_physical_insert.cpp:150-181``).
 
-Atomicity: rewrite to a temp dir, ingest the staged files as new immutable
-data files, then publish ONE new snapshot replacing the affected buckets'
-file lists (table._commit_replace / manifest.commit). The publish is a
-conditional-put of a single manifest file — object-store-safe, no directory
+Atomicity: every verb takes the table's one stage → ingest → commit path
+(``table.py`` module docstring): ``DistributedTable._staged`` writes the
+rewritten buckets, and ``DistributedTable._commit(..., replaced=ids)``
+publishes ONE snapshot swapping their file lists. The publish is a
+conditional put of a single manifest file — object-store-safe, no directory
 renames — and the base-version check surfaces write-write conflicts instead
 of silently losing a concurrent writer's commit (optimistic concurrency;
 the reference's remote DML is not transactional at all, SURVEY §2.A17).
@@ -38,8 +39,6 @@ the reference's remote DML is not transactional at all, SURVEY §2.A17).
 from __future__ import annotations
 
 import re
-import shutil
-import uuid
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -56,34 +55,6 @@ from duckdb_mpp_spark.table import (
 )
 
 _DEFAULT_RE = re.compile(r"^\s*DEFAULT\s*$", re.IGNORECASE)
-
-
-def _resolve_default(table: DistributedTable, colname: str) -> str:
-    return table.meta.defaults.get(colname, "NULL")
-
-
-def _commit_rewrite(
-    table: DistributedTable,
-    tmp_path: str,
-    bucket_ids: list[int],
-    base: int,
-    base_files: dict[str, dict],
-    dirty_buckets: list[int] | None = None,
-    stream_batch: tuple[str, int] | None = None,
-) -> None:
-    """Ingest the staged rewrite and publish the snapshot that swaps the
-    affected buckets' files. A bucket with no surviving rows simply has no
-    files in the new snapshot. ``dirty_buckets``: None inherits the base
-    snapshot's routing-dirty set; a list replaces it (partition-column
-    UPDATE widens it — see ``DistributedTable.routing_dirty_ids``)."""
-    try:
-        new_entries = table._ingest_staged(tmp_path)
-    finally:
-        shutil.rmtree(tmp_path, ignore_errors=True)
-    table._commit_replace(
-        bucket_ids, new_entries, base, base_files, dirty_buckets=dirty_buckets,
-        stream_batch=stream_batch,
-    )
 
 
 def _observed_matched(obs: Observation, df, pred) -> int:
@@ -170,13 +141,55 @@ def _dml_bucket_ids(
     return sorted(set(ids) | {r[0] for r in hits})
 
 
-def _rewrite_sort_cols(table: DistributedTable) -> list[str]:
-    """COW rewrites preserve SORT BY clustering (zone maps stay tight after
-    UPDATE/DELETE); unsorted tables just cluster by bucket."""
-    cols = [BUCKET_COL]
-    if table.meta.sort_column:
-        cols.append(table.meta.sort_column)
-    return cols
+def _rewrite_matched(
+    table: DistributedTable, where: str | None, rewrite, check=None
+) -> int:
+    """The copy-on-write body UPDATE and DELETE share → matched-row count.
+
+    Reads the touched buckets (``_dml_bucket_ids``) of ONE snapshot, stages
+    ``rewrite(scan, pred)`` — the rows those buckets keep, ``__bucket``
+    included — and publishes them in place of the buckets' files. The
+    count is an ``Observation`` on the staging job, taken BEFORE
+    ``rewrite`` so it counts matched rows even when ``rewrite`` filters
+    them out. ``check(scan, pred, files, dirty, ids)`` runs between stage
+    and commit: it raises to abort, and returns the new snapshot's
+    routing-dirty set (None inherits the base's)."""
+    base, files, dirty = table.snapshot_full()
+    ids = _dml_bucket_ids(table, where, dirty, files)
+    if not files or not ids:
+        return 0
+    # reads the files of the SAME snapshot the commit below is based on —
+    # a concurrent commit aborts ours (CommitConflict) instead of leaking
+    # its rows into our rewrite (review r6)
+    scan = table.read_buckets(files, ids)
+    pred = F.lit(True)
+    if where is not None:
+        # before the observe() below, which embeds the predicate (ADVICE
+        # r8 + review r9): see _assert_deterministic_where
+        _assert_deterministic_where(scan, where)
+        pred = F.coalesce(F.expr(where), F.lit(False))
+    obs = Observation()
+    frame = rewrite(
+        scan.observe(
+            obs,
+            F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
+            .cast("long")
+            .alias("matched"),
+        ),
+        pred,
+    )
+    # big-bucket rewrites fan out over input_parts/len(ids) tasks per
+    # bucket (content-independent split key; see table.py), sized on the
+    # rewritten plan: a delete removing most of a bucket must not
+    # oversplit the small remainder into near-empty files (review r6)
+    split = write_split_factor(frame, len(ids))
+    with table._staged(spread_for_bucket_write(frame, len(ids), split)) as ingest:
+        matched = _observed_matched(obs, scan, pred)
+        if matched == 0:
+            return 0
+        new_dirty = check(scan, pred, files, dirty, ids) if check else None
+        table._commit(ingest(), base, files, replaced=ids, dirty=new_dirty)
+    return matched
 
 
 def update(
@@ -186,123 +199,70 @@ def update(
 ) -> int:
     """``UPDATE t SET col=expr,... [WHERE pred]`` → matched-row count."""
     meta = table.meta
-    base, snap_files, dirty0 = table.snapshot_full()
-    ids = _dml_bucket_ids(table, where, dirty0, snap_files)
-    if not snap_files or not ids:
-        return 0
-    # reads the files of the SAME snapshot the commit below is based on —
-    # a concurrent commit aborts ours (CommitConflict) instead of leaking
-    # its rows into our rewrite (review r6)
-    df = table.read_buckets(snap_files, ids)
+    texts = {
+        col: meta.defaults.get(col, "NULL") if _DEFAULT_RE.match(text) else text
+        for col, text in assignments.items()
+    }
 
-    pred = F.coalesce(F.expr(where), F.lit(False)) if where else F.lit(True)
+    def rewrite(scan, pred):
+        out_cols = [
+            F.when(pred, F.expr(texts[f.name]).cast(f.dataType))
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in texts
+            else F.col(f.name)
+            for f in meta.schema.fields
+        ]
+        return table._not_null_checked(scan.select(*out_cols, BUCKET_COL), texts)
 
-    # WHERE determinism is validated BEFORE staging, for EVERY update
-    # (ADVICE r8 + review r9): see _assert_deterministic_where.
-    if where is not None:
-        _assert_deterministic_where(df, where)
-
-    out_cols = []
-    for field in meta.schema.fields:
-        if field.name in assignments:
-            text = assignments[field.name]
-            if _DEFAULT_RE.match(text):
-                text = _resolve_default(table, field.name)
-            new_val = F.expr(text).cast(field.dataType)
-            out_cols.append(
-                F.when(pred, new_val).otherwise(F.col(field.name)).alias(field.name)
+    def check(scan, pred, files, dirty, ids):
+        for col in meta.unique_columns:
+            if col not in texts:
+                continue
+            # The modified side is re-derived from the base scan (pred +
+            # the assignment expression), NOT read back from the staged
+            # files — staged files mix modified rows with carried-through
+            # survivors, and flagging survivors as operation-owned aborted
+            # unrelated UPDATEs on pre-existing duplicates (ADVICE r7,
+            # extended to the bucket-local columns in r8). Re-derivation
+            # requires the assignment to be deterministic (review r8); the
+            # WHERE predicate partitions BOTH sides, and was checked before
+            # staging (review r8b).
+            _assert_deterministic_assignment(scan, texts[col], col)
+            dt = meta.schema[col].dataType
+            modified = scan.where(pred).select(
+                BUCKET_COL, F.expr(texts[col]).cast(dt).alias(col)
             )
-        else:
-            out_cols.append(F.col(field.name))
-    out_cols.append(F.col(BUCKET_COL))
-
-    obs = Observation()
-    tmp = table.path + f".cow-{uuid.uuid4().hex[:8]}"
-    (
-        df.observe(
-            obs,
-            F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("matched"),
-        )
-        .select(*out_cols)
-        .transform(
-            # big-bucket rewrites fan out over input_parts/len(ids) tasks
-            # per bucket (content-independent split key; see table.py)
-            lambda d: spread_for_bucket_write(
-                d, len(ids), write_split_factor(df, len(ids))
+            # The partition-column constraint is value-GLOBAL (table.py
+            # _enforce_unique): SET k = 1 lands the new value in a bucket
+            # the rewrite never touched, so its others side covers the
+            # whole table. Every other unique column is bucket-local and —
+            # because the rewrite never re-routes — both sides restrict to
+            # the rewritten buckets (review r8; _dml_bucket_ids guarantees
+            # pred-matching rows live only in ids).
+            is_global = col == meta.partition_column
+            base_rows = table.read_buckets(files) if is_global else scan
+            # pred is NULL-coalesced to false, so ~pred is exactly the
+            # not-updated rows (their values survive the rewrite)
+            others = base_rows.where(~pred).select(BUCKET_COL, col)
+            check_unique_sides(
+                meta.name, col, modified, others, bucket_local=not is_global
             )
-        )
-        .sortWithinPartitions(*_rewrite_sort_cols(table))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(tmp)
-    )
-    matched = _observed_matched(obs, df, pred)
-    if matched == 0:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return 0
-    changed_unique = [c for c in meta.unique_columns if c in assignments]
-    if changed_unique:
-        # The modified side is re-derived from the base scan (pred + the
-        # assignment expression), NOT read back from the staged files —
-        # staged files mix modified rows with carried-through survivors,
-        # and flagging survivors as operation-owned aborted unrelated
-        # UPDATEs on pre-existing duplicates (ADVICE r7, extended to the
-        # bucket-local columns in r8). Re-derivation requires the
-        # assignment to be deterministic (guarded below, review r8). The
-        # partition-column constraint is value-GLOBAL (table.py
-        # _enforce_unique): an assignment like SET k = 1 lands the new
-        # value in a bucket the staged rewrite never touched, so its
-        # others side must cover the whole table; every other unique
-        # column is bucket-local and — because the rewrite never re-routes
-        # — both sides restrict to the rewritten buckets (review r8: the
-        # first cut scanned all buckets for the modified side too;
-        # _dml_bucket_ids guarantees pred-matching rows live only in ids).
-        try:
-            # the WHERE predicate partitions BOTH sides of the check, so it
-            # must be deterministic too (review r8b: UPDATE ... WHERE
-            # rand() < 0.9 would stage one set of matches and validate a
-            # different one — silent UNIQUE violation or spurious abort).
-            # Checked before staging (early_unique above); nothing to
-            # re-check here.
-            for col in changed_unique:
-                text = assignments[col]
-                if _DEFAULT_RE.match(text):
-                    text = _resolve_default(table, col)
-                _assert_deterministic_assignment(df, text, col)
-                dt = meta.schema[col].dataType
-                modified = df.where(pred).select(
-                    BUCKET_COL, F.expr(text).cast(dt).alias(col)
-                )
-                # a rewrite never re-routes, so a bucket-local value can
-                # only collide inside its rewritten bucket; the value-global
-                # partition column must also see the untouched buckets
-                is_global = col == meta.partition_column
-                base_rows = table.read_buckets(snap_files) if is_global else df
-                # pred is NULL-coalesced to false, so ~pred is exactly
-                # the not-updated rows (their values survive the rewrite)
-                others = base_rows.where(~pred).select(BUCKET_COL, col)
-                check_unique_sides(
-                    meta.name, col, modified, others, bucket_local=not is_global
-                )
-        except ValueError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    # Assigning the partition column keeps rows in their bucket (reference
-    # shard-local semantics, see module docstring) — which breaks the
-    # bucket == pmod(hash(col), n) invariant pruning relies on. Flag every
-    # rewritten bucket routing-dirty so pruned reads keep including them
-    # (wrong-results class caught by tests/test_pruning_property.py r6);
-    # OPTIMIZE/compact re-routes and clears. A STRUCT-typed partition
-    # column ('s.a') is re-valued by assigning its top-level field ('s'),
-    # so match on the top-level name too (review r6).
-    dirty = None
-    part_top = meta.partition_column.split(".", 1)[0]
-    if meta.partition_column in assignments or part_top in assignments:
-        dirty = sorted(set(dirty0) | set(ids))
-    _commit_rewrite(table, tmp, ids, base, snap_files, dirty_buckets=dirty)
-    return matched
+        # Assigning the partition column keeps rows in their bucket
+        # (reference shard-local semantics, see module docstring) — which
+        # breaks the bucket == pmod(hash(col), n) invariant pruning relies
+        # on. Flag every rewritten bucket routing-dirty so pruned reads keep
+        # including them (wrong-results class caught by
+        # tests/test_pruning_property.py r6); OPTIMIZE/compact re-routes and
+        # clears. A STRUCT-typed partition column ('s.a') is re-valued by
+        # assigning its top-level field ('s'), so match on the top-level
+        # name too (review r6).
+        part_top = meta.partition_column.split(".", 1)[0]
+        if meta.partition_column in texts or part_top in texts:
+            return sorted(set(dirty) | set(ids))
+        return None
+
+    return _rewrite_matched(table, where, rewrite, check)
 
 
 def upsert(
@@ -380,7 +340,7 @@ def upsert(
         batch_ids |= {r[0] for r in hit}
     ids = sorted(batch_ids)
 
-    # the commit's base snapshot — see update()
+    # the commit's base snapshot — see _rewrite_matched
     existing = table.read_buckets(snap_files, ids)
     # anti-join on the input's key set; AQE broadcasts it when the batch is
     # small (the common daily-merge case) and falls back to a key-partitioned
@@ -403,28 +363,20 @@ def upsert(
     split = split_from_bytes(
         staged_bytes or None, len(ids), _max_partition_bytes(staged)
     )
-    tmp = table.path + f".cow-{uuid.uuid4().hex[:8]}"
-    (
-        spread_for_bucket_write(staged, len(ids), split)
-        .sortWithinPartitions(*_rewrite_sort_cols(table))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(tmp)
-    )
-    if meta.unique_columns:
-        # The modified side is the (checkpointed) input batch itself —
-        # values fixed, no re-evaluation hazard. partition-column
-        # constraint stays value-GLOBAL (review r6, live repro): with a
-        # COMPOSITE upsert key, a misplaced row in a dirty bucket can
-        # share the partition value but differ on the other key fields —
-        # it is then neither replaced (full-key match fails) nor visible
-        # bucket-locally; its surviving value rides the global others
-        # side. Every other unique column is bucket-local: routed input
-        # rows collide only within their own bucket, so both sides
-        # restrict to the rewritten buckets (``existing`` is exactly
-        # that). Survivor-only duplicate groups no longer abort (ADVICE
-        # r7, extended to bucket-local in r8).
-        try:
+    with table._staged(spread_for_bucket_write(staged, len(ids), split)) as ingest:
+        if meta.unique_columns:
+            # The modified side is the (checkpointed) input batch itself —
+            # values fixed, no re-evaluation hazard. partition-column
+            # constraint stays value-GLOBAL (review r6, live repro): with a
+            # COMPOSITE upsert key, a misplaced row in a dirty bucket can
+            # share the partition value but differ on the other key fields
+            # — it is then neither replaced (full-key match fails) nor
+            # visible bucket-locally; its surviving value rides the global
+            # others side. Every other unique column is bucket-local:
+            # routed input rows collide only within their own bucket, so
+            # both sides restrict to the rewritten buckets (``existing`` is
+            # exactly that). Survivor-only duplicate groups no longer abort
+            # (ADVICE r7, extended to bucket-local in r8).
             keys = new_rows.select(*key_cols).distinct()
             for col in meta.unique_columns:
                 is_global = col == meta.partition_column
@@ -441,66 +393,20 @@ def upsert(
                     others=others,
                     bucket_local=not is_global,
                 )
-        except ValueError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    _commit_rewrite(
-        table, tmp, ids, base, snap_files, stream_batch=stream_batch
-    )
+        table._commit(
+            ingest(), base, snap_files, replaced=ids, stream_batch=stream_batch
+        )
     return applied
 
 
 def delete(table: DistributedTable, where: str | None = None) -> int:
     """``DELETE FROM t [WHERE pred]`` → deleted-row count."""
-    base, snap_files, dirty0 = table.snapshot_full()
-    ids = _dml_bucket_ids(table, where, dirty0, snap_files)
-    if not snap_files or not ids:
+    if where is not None:
+        return _rewrite_matched(table, where, lambda scan, pred: scan.where(~pred))
+    # delete-all: metadata-only — count from the snapshot and publish an
+    # empty one. No scan job, no file deletion (vacuum reclaims).
+    base, files, _dirty = table.snapshot_full()
+    if not files:
         return 0
-
-    if where is None:
-        # delete-all: metadata-only — count from the snapshot and publish
-        # an empty one. No scan job, no file deletion (vacuum reclaims).
-        total = sum(e["rows"] for e in snap_files.values())
-        from duckdb_mpp_spark import manifest as _manifest_mod
-
-        _manifest_mod.commit(table.path, {}, base)
-        return total
-
-    df = table.read_buckets(snap_files, ids)
-    # same up-front guard as update() (review r9): the observe() below
-    # embeds the predicate and Spark rejects nondeterministic observed
-    # metrics with an opaque analyzer error otherwise
-    _assert_deterministic_where(df, where)
-    pred = F.coalesce(F.expr(where), F.lit(False))
-    obs = Observation()
-    tmp = table.path + f".cow-{uuid.uuid4().hex[:8]}"
-    (
-        # observe BEFORE the anti-filter so the metric counts matched
-        # (deleted) rows while the write keeps the survivors — one read
-        df.observe(
-            obs,
-            F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
-            .cast("long")
-            .alias("matched"),
-        )
-        .where(~pred)
-        .transform(
-            # size on the SURVIVOR plan (anti-filter applied): a delete
-            # removing most of a bucket must not oversplit the small
-            # remainder into near-empty files (review r6); Catalyst's
-            # filter-selectivity estimate is the best job-free proxy
-            lambda d: spread_for_bucket_write(
-                d, len(ids), write_split_factor(df.where(~pred), len(ids))
-            )
-        )
-        .sortWithinPartitions(*_rewrite_sort_cols(table))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(tmp)
-    )
-    matched = _observed_matched(obs, df, pred)
-    if matched == 0:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return 0
-    _commit_rewrite(table, tmp, ids, base, snap_files)
-    return matched
+    table._commit({}, base, files, replaced=list(range(table.meta.buckets)))
+    return sum(e["rows"] for e in files.values())

@@ -244,11 +244,20 @@ def current_version(table_path: str) -> int:
     re-raise ``CommitConflict`` against the same immovable head. Resolving
     reads only cached immutable bucket manifests, so the agreement costs
     nothing on the happy path."""
+    head = _head(table_path)
+    return head[0] if head else 0
+
+
+def _head(table_path: str) -> tuple[int, dict, dict[str, dict]] | None:
+    """The newest readable AND resolvable version as ``(version, doc,
+    files)``, or None — the one head rule ``current_version``, ``load_full``,
+    ``dirty_buckets`` and ``applied_stream_batch`` share."""
     for v in reversed(_list_versions(table_path)):
         doc = _read_version_doc(table_path, v)
-        if doc is not None and _resolve_doc(table_path, doc) is not None:
-            return v
-    return 0
+        files = _resolve_doc(table_path, doc) if doc is not None else None
+        if files is not None:
+            return v, doc, files
+    return None
 
 
 def _write_manifest_file(table_path: str, content: dict) -> str:
@@ -282,16 +291,12 @@ def dirty_buckets(table_path: str, version: int | None = None) -> list[int]:
     ``version=None`` reads the head, with the same readable-AND-resolvable
     head rule as ``load``/``current_version`` — the dirty set must describe
     the snapshot readers actually plan from."""
-    if not os.path.isdir(table_path):
-        return []
     if version is not None:
         doc = _read_version_doc(table_path, version)
-        return sorted(int(b) for b in (doc or {}).get("dirty", []))
-    for v in reversed(_list_versions(table_path)):
-        doc = _read_version_doc(table_path, v)
-        if doc is not None and _resolve_doc(table_path, doc) is not None:
-            return sorted(int(b) for b in doc.get("dirty", []))
-    return []
+    else:
+        head = _head(table_path)
+        doc = head[1] if head else None
+    return sorted(int(b) for b in (doc or {}).get("dirty", []))
 
 
 # Stream-map retention horizon (review r7): entries a lineage has not
@@ -321,14 +326,9 @@ def applied_stream_batch(table_path: str, lineage: str) -> int | None:
     that lineage has ever committed. Reads the head snapshot doc with the
     same readable-AND-resolvable rule as ``load`` — replay detection must
     describe the snapshot a re-delivered batch would actually append to."""
-    if not os.path.isdir(table_path):
-        return None
-    for v in reversed(_list_versions(table_path)):
-        doc = _read_version_doc(table_path, v)
-        if doc is not None and _resolve_doc(table_path, doc) is not None:
-            val = (doc.get("stream") or {}).get(str(lineage))
-            return None if val is None else _stream_entry(val)[0]
-    return None
+    head = _head(table_path)
+    val = (head[1].get("stream") or {}).get(str(lineage)) if head else None
+    return None if val is None else _stream_entry(val)[0]
 
 
 def commit(
@@ -490,15 +490,11 @@ def load_full(
     """
     if not os.path.isdir(table_path):
         return 0, {}, []
-    versions = _list_versions(table_path)
-    for v in reversed(versions):
-        doc = _read_version_doc(table_path, v)
-        if doc is None:
-            continue
-        files = _resolve_doc(table_path, doc)
-        if files is not None:
-            return v, files, sorted(int(b) for b in doc.get("dirty", []))
-    if os.path.isdir(_commits_path(table_path)) and not versions:
+    head = _head(table_path)
+    if head is not None:
+        v, doc, files = head
+        return v, files, sorted(int(b) for b in doc.get("dirty", []))
+    if os.path.isdir(_commits_path(table_path)) and not _list_versions(table_path):
         return 0, {}, []  # snapshot-native table, nothing committed yet
     files = {
         rel: file_entry(os.path.join(table_path, rel), sort_col)

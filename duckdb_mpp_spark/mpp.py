@@ -734,7 +734,7 @@ class MppSession:
         # VACUUM t — reclaim data files unreferenced by the current snapshot
         # (COW leftovers / crashed writers) and prune the commit log; returns
         # the number of files removed. Physical deletion is deliberately
-        # decoupled from the DML commit itself (table._commit_replace).
+        # decoupled from the commit that unreferences them (table._commit).
         vm = re.match(r"^\s*VACUUM\s+(?P<name>[\w.\"]+)\s*$", stripped, re.IGNORECASE)
         if vm and self.catalog.exists(_ident(vm.group("name"))):
             name = _ident(vm.group("name"))

@@ -20,11 +20,22 @@ Layout: ``<warehouse>/<name>_<oid>/__bucket=<i>/part-*.parquet``
   an ``Observation`` on the write job itself (no second pass over the data).
 
 Commit protocol (manifest.py): data files are immutable and the versioned
-snapshot manifest is the source of truth — every write stages new files,
-then publishes a new snapshot via conditional-put; every read plans from the
-current snapshot's explicit file list. No reader ever depends on a directory
-listing or an atomic rename, which is what makes COW DML safe on an object
-store and gives readers snapshot isolation against concurrent rewrites.
+snapshot manifest is the source of truth; every read plans from the current
+snapshot's explicit file list. Every mutation — insert, compact and the COW
+DML in ``dml.py`` — takes the same three steps through two primitives:
+
+1. stage: ``_staged(frame)`` writes the bucket-routed frame in ONE job into
+   a ``<path>.stage-<hex>`` directory (removed on every exit);
+2. ingest: its ``ingest()`` moves the staged files to commit-unique names in
+   the bucket directories and reads their footers into manifest entries;
+3. commit: ``_commit`` publishes the new snapshot by conditional put — an
+   append rebases and retries, a rewrite (``replaced`` buckets) surfaces
+   ``CommitConflict``.
+
+No reader ever depends on a directory listing or an atomic rename, which is
+what makes COW DML safe on an object store and gives readers snapshot
+isolation against concurrent rewrites; a writer that fails before step 3
+leaves only unreferenced orphans (vacuumable).
 
 Scale notes (100 TB): a bucket is a *directory*, not a file — writes can
 produce many files per bucket, so intra-bucket parallelism survives any data
@@ -41,6 +52,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -340,9 +354,6 @@ class DistributedTable:
         dtype = resolve_field(self.meta.schema, self.meta.partition_column)
         return dtype.simpleString()
 
-    def _has_data(self) -> bool:
-        return bool(self.snapshot_files())
-
     def _empty_df(self, with_bucket: bool = False) -> DataFrame:
         df = self.spark.createDataFrame([], self.meta.schema)
         if with_bucket:
@@ -440,10 +451,9 @@ class DistributedTable:
         object store this per-file move is the standard rename-less
         committer pattern; the files stay invisible until the snapshot
         referencing them is published."""
-        import uuid as _uuid
         from concurrent.futures import ThreadPoolExecutor
 
-        tag = _uuid.uuid4().hex[:8]
+        tag = uuid.uuid4().hex[:8]
         new_rels = []
         for rel in _manifest_mod._list_data_files(tmp_path, BUCKET_COL):
             bdir, fname = rel.split("/", 1)
@@ -487,78 +497,92 @@ class DistributedTable:
             )
         return dict(zip(new_rels, stats))
 
-    def _commit_append(
+    @contextmanager
+    def _staged(self, frame: DataFrame):
+        """Stage bucket-routed ``frame`` (it carries ``__bucket``; the
+        caller shapes its partitioning) with ONE write job into a
+        ``<path>.stage-<hex>`` directory, and yield ``ingest()`` —
+        ``_ingest_staged`` over that directory. Rows are sorted within
+        partitions on (``__bucket``, SORT BY column): each written file is
+        clustered on the sort column, so footer min/max become tight zone
+        maps (zonemap.py), with no extra shuffle. The directory is removed
+        on every exit — a failed write job or a raising constraint check
+        included — so no stage outlives its statement."""
+        sort_cols = [BUCKET_COL] + (
+            [self.meta.sort_column] if self.meta.sort_column else []
+        )
+        tmp = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
+        try:
+            (
+                frame.sortWithinPartitions(*sort_cols)
+                .write.mode("overwrite")
+                .partitionBy(BUCKET_COL)
+                .parquet(tmp)
+            )
+            yield lambda: self._ingest_staged(tmp)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _commit(
         self,
         new_entries: dict[str, dict],
         base: int,
         files: dict[str, dict],
-        revalidate=None,
+        replaced: list[int] | None = None,
+        dirty: list[int] | None = None,
         stream_batch: tuple[str, int] | None = None,
+        revalidate=None,
     ) -> None:
-        """Publish snapshot ∪ new files. ``(base, files)`` must be the
-        snapshot read BEFORE the staged files were ingested. Appends
-        commute, so a concurrent head move just means rebase-and-retry —
-        bounded (ADVICE r3: an unbounded loop turns any head pathology
-        into a liveness hang; ~100 retries is far beyond any real writer
-        concurrency, so exhausting it means something is genuinely wrong).
+        """The one publish: snapshot ``files`` plus the ingested
+        ``new_entries``. ``(base, files)`` must be the snapshot read BEFORE
+        the staged files were ingested (a post-ingest load on an empty
+        commit log would bootstrap-absorb them).
 
-        ``revalidate(rebased_files, rebased_dirty)``: called after every
-        rebase, BEFORE the retry (review r4). Constraint checks made
-        against the original base are stale once the head moves — two
-        concurrent inserts of the same UNIQUE key would otherwise both
-        pass their pre-commit check and both land. The rebased head's
-        routing-dirty set rides along so the value-global partition-column
-        check can look at misplaced rows a racing partition-column UPDATE
-        just created (review r6). A raising revalidation aborts the
-        commit; the already-ingested files stay unreferenced orphans
-        (vacuumable), same as a crashed insert."""
+        ``replaced=None`` appends. Appends commute, so a head that moved
+        means rebase-and-retry — bounded (ADVICE r3: an unbounded loop
+        turns any head pathology into a liveness hang; ~100 retries is far
+        beyond any real writer concurrency, so exhausting it means
+        something is genuinely wrong). ``revalidate(rebased_files,
+        rebased_dirty)`` runs after every rebase, BEFORE the retry (review
+        r4): constraint checks made against the original base are stale
+        once the head moves — two concurrent inserts of the same UNIQUE key
+        would otherwise both land. The rebased head's routing-dirty set
+        rides along so the value-global partition-column check sees
+        misplaced rows a racing partition-column UPDATE just created
+        (review r6). A raising revalidation aborts the commit.
+
+        ``replaced=[bucket ids]`` publishes a COW rewrite: those buckets'
+        files leave the snapshot, the staged files enter. The base pins
+        optimistic concurrency — if another writer committed since the
+        rewrite read its input, ``CommitConflict`` surfaces instead of
+        silently losing the other write. Old files are NOT deleted here —
+        in-flight readers planned on the previous snapshot still hold their
+        file lists; ``vacuum()`` (SQL: ``VACUUM t``) reclaims them.
+
+        ``dirty``: the new snapshot's routing-dirty bucket ids; None
+        inherits the base snapshot's set (manifest.commit)."""
+        if replaced is not None:
+            gone = {f"{BUCKET_COL}={b}" for b in replaced}
+            files = {
+                rel: ent for rel, ent in files.items()
+                if rel.split("/", 1)[0] not in gone
+            }
         for _ in range(100):
             try:
                 _manifest_mod.commit(
                     self.path, {**files, **new_entries}, base,
-                    stream_batch=stream_batch,
+                    dirty_buckets=dirty, stream_batch=stream_batch,
                 )
                 return
             except _manifest_mod.CommitConflict:
-                base, files, dirty = self.snapshot_full()
+                if replaced is not None:
+                    raise
+                base, files, head_dirty = self.snapshot_full()
                 if revalidate is not None:
-                    revalidate(files, dirty)
+                    revalidate(files, head_dirty)
         raise RuntimeError(
             f"append to {self.meta.name} lost 100 consecutive commit races; "
             "giving up (check for a stuck or runaway concurrent writer)"
-        )
-
-    def _commit_replace(
-        self,
-        bucket_ids: list[int],
-        new_entries: dict[str, dict],
-        base: int,
-        base_files: dict[str, dict],
-        dirty_buckets: list[int] | None = None,
-        stream_batch: tuple[str, int] | None = None,
-    ) -> None:
-        """Publish a COW rewrite: the affected buckets' old files leave the
-        snapshot, the staged files enter. The base version pins optimistic
-        concurrency — if another writer committed since this rewrite read
-        its input, the rewrite is stale and the conflict surfaces instead of
-        silently losing the other write. Old files become unreferenced
-        garbage but are NOT deleted here — in-flight readers planned on the
-        previous snapshot still hold their file lists; physical deletion is
-        deferred to an explicit ``vacuum()`` (SQL: ``VACUUM t``), which at
-        scale runs behind a retention window.
-
-        ``(base, base_files)`` must be the snapshot read BEFORE the staged
-        files were ingested (a post-ingest load on an empty commit log
-        would bootstrap-absorb them — same contract as _commit_append)."""
-        rewritten = {f"{BUCKET_COL}={b}/" for b in bucket_ids}
-        survivors = {
-            rel: ent
-            for rel, ent in base_files.items()
-            if not any(rel.startswith(p) for p in rewritten)
-        }
-        _manifest_mod.commit(
-            self.path, {**survivors, **new_entries}, base,
-            dirty_buckets=dirty_buckets, stream_batch=stream_batch,
         )
 
     def vacuum(
@@ -605,26 +629,32 @@ class DistributedTable:
                 for c in cols
             ]
         )
-        # NOT NULL enforcement: the reference carries column constraints into
-        # the shard DDL, where DuckDB rejects null inserts
-        # (src/function/create_distributed_table.cpp:107-108). Enforced here
-        # inline with raise_error — single pass, no validation pre-scan; a
-        # failing write job never commits files (FileOutputCommitter), so the
-        # table is untouched on rejection.
+        return self._not_null_checked(aligned, cols)
+
+    def _not_null_checked(self, df: DataFrame, columns) -> DataFrame:
+        """``df`` with every NOT NULL column among ``columns`` guarded —
+        the one NOT NULL enforcement, applied to each column a write gives
+        a new value (insert and upsert: all; UPDATE: the assigned ones).
+        The reference carries column constraints into the shard DDL, where
+        DuckDB rejects null writes
+        (src/function/create_distributed_table.cpp:107-108). Enforced
+        inline with raise_error — single pass, no validation pre-scan; the
+        failing write job fails inside ``_staged``, before any commit, so
+        the table is untouched on rejection."""
         for field in self.meta.schema.fields:
-            if not field.nullable:
+            if not field.nullable and field.name in columns:
                 msg = (
                     f"NOT NULL constraint failed: NULL value in column "
                     f'"{field.name}" of table "{self.meta.name}"'
                 )
-                aligned = aligned.withColumn(
+                df = df.withColumn(
                     field.name,
                     F.when(
                         F.col(field.name).isNull(),
                         F.raise_error(F.lit(msg)).cast(field.dataType),
                     ).otherwise(F.col(field.name)),
                 )
-        return aligned
+        return df
 
     def _enforce_unique(
         self,
@@ -682,14 +712,10 @@ class DistributedTable:
         detection is transactional with the data — see
         ``applied_stream_batch``.
 
-        Stage → ingest → commit: the write job lands in a temp dir, files
-        move to commit-unique final names, then one snapshot publish makes
-        them visible atomically. A failed/crashed insert leaves only
-        unreferenced orphans (vacuumable), never a half-visible append.
+        Stage → ingest → commit (module docstring); a failed or crashed
+        insert leaves only unreferenced orphans, never a half-visible
+        append.
         """
-        import shutil as _shutil
-        import uuid as _uuid
-
         routed = self.route(self._aligned_for_insert(df))
         # volume estimate BEFORE any checkpoint (an RDD-backed plan reports
         # Long.MaxValue stats — see write_split_factor)
@@ -715,20 +741,12 @@ class DistributedTable:
         # each bucket spreads over ~input_parts/buckets write tasks. Small
         # batches (the common incremental case) keep one file per bucket —
         # no small-file explosion, and the bench insert path is unchanged.
-        routed = spread_for_bucket_write(routed, self.meta.buckets, split)
-        if self.meta.sort_column:
-            # SORT BY clustering: rows inside each written file are ordered
-            # on the sort column, so footer min/max become tight zone maps
-            # (zonemap.py). Sort, not range-partition — no extra shuffle.
-            routed = routed.sortWithinPartitions(BUCKET_COL, self.meta.sort_column)
         obs = Observation()
-        routed = routed.observe(obs, F.count(F.lit(1)).alias("cnt"))
-        tmp = self.path + f".stage-{_uuid.uuid4().hex[:8]}"
-        # (base, files) read above, before the pre-check AND before ingest
-        # — see _commit_append
-        try:
-            routed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            new_entries = self._ingest_staged(tmp)
+        frame = spread_for_bucket_write(routed, self.meta.buckets, split).observe(
+            obs, F.count(F.lit(1)).alias("cnt")
+        )
+        with self._staged(frame) as ingest:
+            new_entries = ingest()
             # commit-race closure of the pre-check (review r4): after a
             # rebase, the ingested files are re-checked against the NEW head
             revalidate = None
@@ -743,11 +761,10 @@ class DistributedTable:
             # r5 attempt to skip the commit broke exactly that. Pipelines
             # with frequently-empty batches guard with df.isEmpty() at the
             # source (the streaming sinks already do).
-            self._commit_append(
-                new_entries, base, files, revalidate, stream_batch=stream_batch
+            self._commit(
+                new_entries, base, files,
+                stream_batch=stream_batch, revalidate=revalidate,
             )
-        finally:
-            _shutil.rmtree(tmp, ignore_errors=True)
         try:
             return int(obs.get["cnt"])
         except Exception:
@@ -1011,9 +1028,6 @@ class DistributedTable:
         isolation. Same stage → ingest → snapshot-publish commit as DML:
         readers on the old snapshot keep a consistent view, no directory
         renames."""
-        import shutil as _shutil
-        import uuid as _uuid
-
         base, snap_files, dirty = self.snapshot_full()
         if not snap_files:
             return 0
@@ -1027,11 +1041,7 @@ class DistributedTable:
         # from ONE snapshot doc; a racing commit aborts ours (base pin).
         if dirty:
             df = self.route(df)
-        tmp = self.path + f".compact-{_uuid.uuid4().hex[:8]}"
         n_parts = max(self.meta.buckets * target_files_per_bucket, 1)
-        sort_cols = [BUCKET_COL] + (
-            [self.meta.sort_column] if self.meta.sort_column else []
-        )
         # repartition on BUCKET_COL alone hashes every row of a bucket to
         # ONE task — target_files_per_bucket > 1 would be a silent no-op
         # and a 100 TB bucket a single-task rewrite (review r5). The split
@@ -1054,31 +1064,16 @@ class DistributedTable:
             shuffle_cols = [BUCKET_COL, "__split"]
         else:
             shuffle_cols = [BUCKET_COL]
-        try:
-            (
-                df.repartition(n_parts, *shuffle_cols)
-                .drop("__split")
-                .sortWithinPartitions(*sort_cols)  # re-clusters SORT BY tables
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(tmp)
-            )
-            new_entries = self._ingest_staged(tmp)
-        finally:
-            _shutil.rmtree(tmp, ignore_errors=True)
-        rewritten = {rel.split("/", 1)[0] for rel in new_entries}
-        replaced = {int(b.split("=", 1)[1]) for b in rewritten}
+        with self._staged(
+            df.repartition(n_parts, *shuffle_cols).drop("__split")
+        ) as ingest:
+            new_entries = ingest()
         # every base bucket was read and rewritten — when re-routing moved
         # rows OUT of a bucket entirely, its old files must still leave the
         # snapshot even though no new file landed there
-        replaced |= {
-            int(rel.split("=", 1)[1].split("/", 1)[0]) for rel in snap_files
-        }
-        self._commit_replace(
-            sorted(replaced),
-            new_entries,
-            base,
-            snap_files,
-            dirty_buckets=[] if dirty else None,
+        self._commit(
+            new_entries, base, snap_files,
+            replaced=list(range(self.meta.buckets)),
+            dirty=[] if dirty else None,
         )
-        return len(rewritten)
+        return len({rel.split("/", 1)[0] for rel in new_entries})

@@ -116,9 +116,9 @@ def _(spark):
     got = _rows(tbl.scan())
     want = _rows(_frame(spark, 0, 20).union(_frame(spark, 100, 110, tag="b")))
     assert got == want, "rows lost or partially updated after the conflict"
-    # no COW staging litter beside the table directory
+    # no staging litter beside the table directory
     parent = os.path.dirname(tbl.path)
-    litter = [d for d in os.listdir(parent) if ".cow-" in d]
+    litter = [d for d in os.listdir(parent) if ".stage-" in d]
     assert not litter, f"staging litter left behind: {litter}"
 
 

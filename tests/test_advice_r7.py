@@ -194,7 +194,7 @@ def test_snapshot_full_version_zero_after_commit_conflicts(mpp):
     mpp.sql("INSERT INTO pin1 VALUES(1),(2)")  # the head moves past it
     # a rewrite based on the stale v0 fails like a lost commit race …
     with pytest.raises(manifest.CommitConflict):
-        t._commit_replace([0, 1], {}, base, files)
+        t._commit({}, base, files, replaced=[0, 1])
     assert sorted(r.k for r in t.scan().collect()) == [1, 2]
     # … but USER time travel keeps the time-travel error type (review r7:
     # CommitConflict is what retry/abort logic is written against)

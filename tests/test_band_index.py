@@ -99,10 +99,11 @@ def test_min_doc_only_layout_lossless_for_verdicts(bands, index):
     assert got == _verdicts(idx_mem, batch) and len(got) > 0
 
 
-def test_directory_partitioned_writes_only_in_table_and_dml():
-    """One bucketed layout: a DataFrameWriter ``.partitionBy(`` appears
-    only in the DistributedTable (``table.py``) and its COW DML
-    (``dml.py``), plus the hive-partitioned file sink of COPY/``write_df``
+def test_directory_partitioned_writes_only_in_table_and_formats():
+    """One bucketed layout and one staged write: a DataFrameWriter
+    ``.partitionBy(`` appears only in ``DistributedTable._staged``
+    (``table.py``), which every insert, compaction and COW DML stages
+    through, plus the hive-partitioned file sink of COPY/``write_df``
     (``sources/formats.py``), which partitions on user-named columns."""
     import os
     import re
@@ -116,4 +117,4 @@ def test_directory_partitioned_writes_only_in_table_and_dml():
                     src = re.sub(r"Window\s*\.\s*partitionBy\(", "", fh.read())
                 if ".partitionBy(" in src:
                     writers.add(os.path.relpath(os.path.join(root, f), pkg))
-    assert writers == {"table.py", "dml.py", os.path.join("sources", "formats.py")}
+    assert writers == {"table.py", os.path.join("sources", "formats.py")}

@@ -231,6 +231,25 @@ def test_insert_null_into_not_null_column_fails(session):
     assert rows(session.sql("SELECT id, tag FROM nn")) == [(1, "a")]
 
 
+def test_update_null_into_not_null_column_fails(session):
+    """UPDATE applies insert's NOT NULL guard to the columns it assigns:
+    the statement fails and commits nothing."""
+    session.sql(
+        "CREATE TABLE nn(id INT, tag TEXT NOT NULL, v INT) "
+        "PARTITION BY (id) WITH BUCKETS 4"
+    )
+    session.sql("INSERT INTO nn VALUES (1, 'a', 10), (2, 'b', 20)")
+    head = session.table("nn").snapshot()[0]
+    with pytest.raises(Exception, match="NOT NULL constraint failed"):
+        session.sql("UPDATE nn SET tag = NULL WHERE id = 1")
+    assert session.table("nn").snapshot()[0] == head
+    # a nullable column still takes NULL
+    assert session.sql("UPDATE nn SET v = NULL WHERE id = 1") == 1
+    assert rows(session.sql("SELECT id, tag, v FROM nn"), "id") == [
+        (1, "a", None), (2, "b", 20)
+    ]
+
+
 def test_struct_partition_column(mpp):
     """Struct-typed columns in DDL + a struct-field partition path, with
     pruning through the dotted ref (the reference resolves partition refs
