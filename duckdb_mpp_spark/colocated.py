@@ -130,7 +130,6 @@ class ColocatedTable(DistributedTable):
         self,
         where: str | None = None,
         columns: list[str] | None = None,
-        aliases: set[str] | None = None,
         keep_bucket: bool = False,
         qualifiers: set[str] | None = None,
         version: int | None = None,

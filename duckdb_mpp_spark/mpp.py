@@ -76,24 +76,18 @@ _DELETE_RE = re.compile(
 def _blank_quotes_and_comments(text: str) -> str:
     """Length-preserving blank of single-quoted literals, double-quoted /
     backtick identifiers, ``--`` line comments and ``/* */`` block
-    comments, in ONE left-to-right state-machine scan over RAW text
-    (review r7: a ``select`` inside a block comment or quoted identifier
-    between FROM and a relation-list comma made ``_comma_in_from_list``
-    classify the comma as a select-list comma, re-enabling pruning on a
-    CTE-fed source — the wrong-results direction that guard exists to
-    prevent).
+    comments, in ONE left-to-right state-machine scan over RAW text.
 
     Why a state machine and not sequential regex passes (ADVICE r7): with
     quote-blanking applied before comment-blanking, a lone unpaired quote
     INSIDE a comment (``-- don't``) pairs with a later real quote and
     blanks the genuine code between them — that can erase a real ``FROM
-    name`` reference in a WITH prefix and re-enable pruning on a CTE-fed
-    source. Scanned left-to-right with comment state tracked, a quote
-    character inside an already-open comment is inert. Same reason this
-    function consumes single-quoted literals itself rather than composing
-    with a literal-only pre-pass (the comment-blind ``_blank_literals``
-    helper this replaced in r8): the pre-pass would make the same
-    mis-pairing mistake before the state machine ever saw the text."""
+    name`` reference and let the WHERE prune a table it must not. Scanned
+    left-to-right with comment state tracked, a quote character inside an
+    already-open comment is inert. Same reason this function consumes
+    single-quoted literals itself rather than composing with a
+    literal-only pre-pass: the pre-pass would make the same mis-pairing
+    mistake before the state machine ever saw the text."""
     out = list(text)
     i, n = 0, len(text)
     while i < n:
@@ -190,39 +184,29 @@ def _find_keyword_top_level(text: str, word: str, start: int = 0) -> int:
     return -1
 
 
-def _comma_in_from_list(blank: str, pos: int) -> bool:
-    """True when the comma at ``pos`` (in literal-blanked SQL) plausibly
-    belongs to a FROM relation list rather than a SELECT list: walking
-    backwards, the nearest SELECT/FROM keyword at the comma's own paren
-    depth decides. Ambiguity (subquery boundary crossed, neither keyword
-    found) returns True — callers treat True as "relation reference" which
-    DISABLES pruning, so over-matching only loses an optimization while
-    under-matching would prune a CTE-fed source (ADVICE r6)."""
-    depth = 0
-    i = pos - 1
-    n = len(blank)
-    while i >= 0:
-        ch = blank[i]
-        if ch == ")":
-            depth += 1
-        elif ch == "(":
-            depth -= 1
-            if depth < 0:
-                # crossed the comma's enclosing open-paren (IN-list,
-                # function args, VALUES row, …): ambiguous — stay flagged
-                return True
-        elif depth == 0 and ch in "MmTt":
-            for kw in ("FROM", "SELECT"):
-                s = i - len(kw) + 1
-                if s >= 0 and blank[s : i + 1].upper() == kw:
-                    before = blank[s - 1] if s > 0 else " "
-                    after = blank[i + 1] if i + 1 < n else " "
-                    if not (before.isalnum() or before in "_$.") and not (
-                        after.isalnum() or after in "_$"
-                    ):
-                        return kw == "FROM"
-        i -= 1
-    return True
+def _blank_except_names(text: str) -> str:
+    """:func:`_blank_quotes_and_comments`, except that a backtick-quoted
+    plain identifier keeps its text (its backticks become spaces):
+    `` `t` `` names table ``t`` as surely as ``t`` does, while a literal
+    or a comment names nothing."""
+    blank = _blank_quotes_and_comments(text)
+
+    def unquote(m: re.Match) -> str:
+        inner = text[m.start() + 1 : m.end() - 1]
+        return f" {inner} " if re.fullmatch(r"[\w$]+", inner) else m.group(0)
+
+    return re.sub(r"`[^`]*`", unquote, blank)
+
+
+def _top_level(text: str) -> str:
+    """``text`` with every parenthesized span blanked (length-preserving):
+    what is left sits at paren depth 0."""
+    out, depth = [], 0
+    for ch in text:
+        depth += ch == "("
+        out.append(" " if depth else ch)
+        depth -= ch == ")" and depth > 0
+    return "".join(out)
 
 
 def _split_where_tail(rest: str) -> tuple[str, str | None]:
@@ -990,11 +974,12 @@ class MppSession:
         return query, versions
 
     def _distributed_tables_in(self, query: str) -> list[str]:
-        found = []
-        for name in self.catalog._tables:
-            if re.search(rf"\b{re.escape(name)}\b", query, re.IGNORECASE):
-                found.append(name)
-        return found
+        # names inside literals and comments are not references
+        text = _blank_except_names(query)
+        return [
+            name for name in self.catalog._tables
+            if re.search(rf"\b{re.escape(name)}\b", text, re.IGNORECASE)
+        ]
 
     def _where_span(self, query: str) -> tuple[int, int] | None:
         """(start, end) of the top-level WHERE predicate text, located with
@@ -1022,166 +1007,57 @@ class MppSession:
         span = self._where_span(query)
         return query[span[0]:span[1]].strip() if span else None
 
-    def _alias_names(self, query: str, part_col: str) -> set[str]:
-        """Select-list aliases of the partition column, so pruning resolves
-        filters through aliases (expression_helper.hpp:16-34 parity).
-        Harvested from comment-and-literal-blanked text (review r8b): an
-        alias-shaped fragment inside a comment — ``/* k AS foo */`` — made
-        ``foo = 5`` prune as a partition filter, the wrong-results
-        direction the r8 scanner sweep fixed in the keyword guards."""
-        aliases = set()
-        for m in re.finditer(
-            rf"\b{re.escape(part_col)}\s+(?:AS\s+)?([A-Za-z_]\w*)\b",
-            _blank_quotes_and_comments(query),
-            re.IGNORECASE,
-        ):
-            word = m.group(1)
-            if word.upper() not in (
-                "FROM", "WHERE", "GROUP", "ORDER", "AND", "OR", "AS", "IN",
-                "IS", "NOT", "JOIN", "ON", "LIMIT", "HAVING", "BY", "ASC", "DESC",
-            ):
-                aliases.add(word)
-        return aliases
-
     _NON_ALIAS_KEYWORDS = frozenset(
         "FROM WHERE GROUP ORDER AND OR AS IN IS NOT JOIN ON LIMIT HAVING BY "
         "ASC DESC LEFT RIGHT INNER OUTER FULL CROSS SEMI ANTI USING UNION "
         "INTERSECT EXCEPT SET NATURAL LATERAL QUALIFY WINDOW".split()
     )
 
-    def _table_qualifiers(self, query: str, name: str) -> set[str]:
-        """Relation names that denote distributed table ``name`` in ``query``:
-        the table name itself plus any ``FROM name [AS] alias`` aliases —
-        the qualifier whitelist for pruning (a filter qualified by any other
-        relation must never prune this table)."""
-        quals = {name.lower()}
-        # blanked text (review r8b): a comment containing ``st x`` must not
-        # let another relation's ``x.k = 5`` prune this table
-        for m in re.finditer(
-            rf"\b{re.escape(name)}\s+(?:AS\s+)?([A-Za-z_]\w*)\b",
-            _blank_quotes_and_comments(query),
-            re.IGNORECASE,
-        ):
-            word = m.group(1)
-            if word.upper() not in self._NON_ALIAS_KEYWORDS:
-                quals.add(word.lower())
-        return quals
+    def _prune_qualifiers(self, query: str, name: str) -> set[str] | None:
+        """The one prune rule: the names that qualify distributed table
+        ``name``'s columns when the query's top-level WHERE may prune it,
+        or None when it may not.
 
-    def _self_joined(self, query: str, name: str) -> bool:
-        """True when ``name`` appears more than once as a relation (FROM /
-        JOIN / comma list) — a self-join. One temp view then backs BOTH
-        relation instances, so per-alias WHERE conjuncts must not be merged
-        into a single bucket/zone-map restriction on the shared scan: AND
-        semantics intersect, but the shared scan needs the UNION of what
-        each leg reads (review r4). Pruning and file skipping are disabled
-        for self-joined tables; Catalyst still applies the full predicate."""
-        return (
-            len(
-                re.findall(
-                    # \s* after the comma: `FROM a,t` needs no space;
-                    # (?!\.) keeps `, t.v` select-list items from
-                    # counting as relations (review r5 — same lexeme
-                    # gaps as the set-op guard)
-                    rf"(?:\bFROM\s+|\bJOIN\s+|,\s*){re.escape(name)}\b(?!\.)",
-                    # state-machine blank (r8): a lone quote in a comment
-                    # erased a genuine second FROM ref under the literal
-                    # blanker, merging per-alias conjuncts (wrong results)
-                    _blank_quotes_and_comments(query),
-                    re.IGNORECASE,
-                )
-            )
-            > 1
-        )
-
-    def _cte_indirected(self, query: str, name: str) -> bool:
-        """True when a relation reference of ``name`` sits inside the WITH
-        prefix (before the main top-level SELECT). A CTE body feeds every
-        consumer of the CTE — including later set-op legs and renamed
-        column projections — so a bucket/zone-map restriction derived from
-        the MAIN query's WHERE must never be pushed onto the CTE's source
-        table (ADVICE r5, confirmed repro: ``WITH x AS (SELECT k FROM st)
-        SELECT k FROM x WHERE k=2 UNION ALL SELECT k FROM x`` dropped leg-2
-        rows). Conservative: Catalyst still applies the real predicates."""
-        if not re.match(r"^\s*WITH\b", query, re.IGNORECASE):
-            return False
-        # comments/quoted identifiers/literals blanked in one scan over
-        # the RAW query: the keyword scans must never see a 'select'
-        # inside any of them (review r7/r8 — a 'select' inside a comment
-        # in the WITH prefix made main_sel point into the comment, every
-        # CTE-body relation ref then read as post-main-SELECT, and
-        # pruning re-enabled on a CTE-fed source; confirmed repro), and a
-        # literal pre-pass would mis-pair a lone quote inside a comment
-        # (ADVICE r7). _find_keyword_top_level blanks internally since r8,
-        # and positions map 1:1 because blanking is length-preserving.
-        blank = _blank_quotes_and_comments(query)
-        main_sel = _find_keyword_top_level(blank, "SELECT")
-        if main_sel < 0:
-            return True  # unparseable WITH shape: stay conservative
-        for m in re.finditer(
-            rf"(\bFROM\s+|\bJOIN\s+|(,)\s*){re.escape(name)}\b(?!\.)",
-            blank,
-            re.IGNORECASE,
-        ):
-            if m.start() >= main_sel:
-                continue
-            # A comma match can also be a SELECT-list comma followed by a
-            # COLUMN that shares the table's name (`SELECT a, st FROM x`) —
-            # falsely flagging that disabled pruning (ADVICE r6, perf-only).
-            # Keep the comma alternative only when the nearest preceding
-            # SELECT/FROM at the same paren depth is FROM (a relation
-            # list); any ambiguity stays flagged — under-matching here
-            # would PRUNE a CTE-fed source, a wrong-results direction.
-            if m.group(2) is not None and not _comma_in_from_list(
-                blank, m.start()
-            ):
-                continue
-            return True
-        return False
-
-    def _setop_confined_to_first_leg(self, query: str, name: str) -> bool:
-        """Pruning derives its predicate from the FIRST leg's top-level WHERE
-        (``_where_span`` stops at UNION/INTERSECT/EXCEPT). Applying that
-        predicate to a table whose relation reference lives in a LATER
-        set-op leg would silently drop that leg's rows (ADVICE r4:
-        ``SELECT k FROM v WHERE x=5 UNION ALL SELECT k FROM dist_t`` must
-        not prune dist_t on x=5). True when no top-level set-op exists, or
-        every relation reference of ``name`` precedes the first set-op
-        keyword. False disables pruning/zone maps for the table — Catalyst
-        still applies the real predicates, so this is purely conservative."""
-        idxs = [
-            _find_keyword_top_level(query, kw)
-            for kw in ("UNION", "INTERSECT", "EXCEPT")
-        ]
-        idxs = [i for i in idxs if i >= 0]
-        if not idxs:
-            return True
-        setop = min(idxs)
-        # The top-level WHERE the pruner derives from must itself be in the
-        # FIRST leg: _find_keyword_top_level finds the first top-level
-        # WHERE anywhere, so in `SELECT .. FROM t UNION ALL SELECT .. FROM
-        # v WHERE p` the span starts in leg 2 — pruning leg 1's table on
-        # leg 2's predicate silently drops rows (review r5, confirmed).
-        span = self._where_span(query)
-        if span is not None and span[0] > setop:
-            return False
-        blank = _blank_quotes_and_comments(query)
-        # \s* not \s+: `FROM tv,st` is valid SQL with no space after the
-        # comma; (?!\.) so a qualified SELECT-list item `, st.v` is a
-        # COLUMN ref, not a second relation (review r5, twice)
+        The WHERE may prune ``name`` only when ``name`` is named exactly
+        once outside literals and comments, and that one reference sits at
+        paren depth 0 in the main SELECT's FROM clause, which the WHERE
+        directly follows and which holds no LEFT/RIGHT/FULL/SEMI/ANTI
+        join. Every occurrence not followed by ``.`` counts as a
+        reference, backtick-quoted ones too; a ``name.``-qualified column
+        does not. So a self-join, a CTE body, a derived table, a subquery,
+        a later set-op leg or the nullable side of an outer join reads
+        unpruned, and Catalyst applies the full WHERE either way. This is
+        the reference's rule in text form: it prunes a shard only on the
+        filters DuckDB's optimizer pushed into that one scan
+        (``src/function/mpp_table_scan.cpp:355-371``). The qualifiers are
+        ``name`` and the alias that follows the reference."""
+        text = _blank_except_names(query)
         refs = [
             m.start()
             for m in re.finditer(
-                rf"(?:\bFROM\s+|\bJOIN\s+|,\s*){re.escape(name)}\b(?!\.)",
-                blank,
+                rf"(?<![\w$]){re.escape(name)}(?![\w$])(?!\s*\.)",
+                text,
                 re.IGNORECASE,
             )
         ]
-        # no recognizable FROM/JOIN reference (CTE / subquery shapes the
-        # regex can't place relative to the set-op): stay conservative.
-        # Refs must ALSO sit after the main top-level SELECT — a ref before
-        # it lives in a CTE body, which feeds every leg (ADVICE r5).
-        main_sel = max(_find_keyword_top_level(query, "SELECT"), 0)
-        return bool(refs) and all(main_sel <= r < setop for r in refs)
+        span = self._where_span(query)
+        where = span[0] - len("WHERE") if span else -1
+        sel = _find_keyword_top_level(query, "SELECT")
+        frm = _find_keyword_top_level(query, "FROM", sel) if sel >= 0 else -1
+        if len(refs) != 1 or not 0 <= frm < refs[0] < where:
+            return None
+        clause = _top_level(text[frm:where])
+        if clause[refs[0] - frm] == " " or re.search(
+            r"\b(?:SELECT|UNION|INTERSECT|EXCEPT|MINUS|LEFT|RIGHT|FULL|SEMI|ANTI)\b",
+            clause,
+            re.IGNORECASE,
+        ):
+            return None
+        quals = {name.lower()}
+        alias = re.match(r"\s+(?:AS\s+)?([A-Za-z_]\w*)", text[refs[0] + len(name):])
+        if alias and alias.group(1).upper() not in self._NON_ALIAS_KEYWORDS:
+            quals.add(alias.group(1).lower())
+        return quals
 
     def _rewrite_where_aliases(self, query: str) -> str:
         """DuckDB allows select-list aliases in WHERE (``SELECT id AS c0 ...
@@ -1289,20 +1165,17 @@ class MppSession:
                 # the live head only
                 tbl.scan(version=versions[name]).createOrReplaceTempView(name)
                 continue
-            aliases = self._alias_names(query, tbl.meta.partition_column) if where else None
             # The view embeds ONLY the derived __bucket predicate (directory
-            # pruning) and, for SORT BY tables, the zone-map-skipped file
-            # list; the user's WHERE is applied in full by spark.sql itself,
-            # so both remain pure optimizations.
-            if (
-                where
-                and len(names) == 1
-                and not tbl.meta.colocated
-                and self._prune_safe(query, name)
-            ):
-                df = tbl.pruned_read(
-                    where, aliases, self._table_qualifiers(query, name)
-                ).drop("__bucket")
+            # pruning) and the zone-map-skipped file list; the user's WHERE
+            # is applied in full by spark.sql itself, so both remain pure
+            # optimizations.
+            quals = (
+                self._prune_qualifiers(query, name)
+                if where and len(names) == 1 and not tbl.meta.colocated
+                else None
+            )
+            if quals is not None:
+                df = tbl.pruned_read(where, quals).drop("__bucket")
                 if tbl.last_file_skip is not None:
                     self.last_file_skip[name] = tbl.last_file_skip
             else:
@@ -1436,17 +1309,6 @@ class MppSession:
 
         raise ValueError(f"unsupported COPY statement: {stripped!r}")
 
-    def _prune_safe(self, query: str, name: str) -> bool:
-        """True when the query's WHERE may prune ``name``'s buckets: no
-        self-join, no CTE indirection, and no set-op leg past the first
-        reads it. Shared by view registration and EXPLAIN, so the Shards
-        header always describes what the registered view scans."""
-        return (
-            not self._self_joined(query, name)
-            and not self._cte_indirected(query, name)
-            and self._setop_confined_to_first_leg(query, name)
-        )
-
     def _prepare_select(self, query: str) -> tuple[str, list[str]]:
         """The front door's one SELECT rewrite — system views, time travel,
         QUALIFY, DISTINCT ON, WHERE aliases — then view registration.
@@ -1469,15 +1331,18 @@ class MppSession:
         where = self._where_text(query)
         for name in names:
             tbl = self.table(name)
-            aliases = self._alias_names(query, tbl.meta.partition_column) if where else None
             # multi-table scans never embed the derived bucket predicate
             # (review r6). Colocated tables are exempt: their native
             # bucketed scan is pruned by Catalyst itself, and pruning
-            # maths == bucketBy maths.
-            if (len(names) == 1 or tbl.meta.colocated) and self._prune_safe(query, name):
-                ids = tbl.pruned_bucket_ids(
-                    where, aliases, qualifiers=self._table_qualifiers(query, name)
-                )
+            # maths == bucketBy maths. The same rule as the view, so the
+            # Shards header describes what the registered view scans.
+            quals = (
+                self._prune_qualifiers(query, name)
+                if len(names) == 1 or tbl.meta.colocated
+                else None
+            )
+            if quals is not None:
+                ids = tbl.pruned_bucket_ids(where, quals)
             else:
                 ids = list(range(tbl.meta.buckets))
             header.append(f"Table: {name}")

@@ -1,7 +1,19 @@
-"""Bucket (shard) pruning — the one piece of custom planner work
-(SURVEY §4: everything else the reference does is built into Catalyst).
+"""Bucket (shard) pruning and the one WHERE-predicate grammar — the one
+piece of custom planner work (SURVEY §4: everything else the reference
+does is built into Catalyst).
 
-Reference semantics (``src/function/mpp_table_scan.cpp:52-143``,
+One grammar, two readers. :func:`parse_predicate` reads a WHERE text into
+an AND/OR tree of comparison atoms (``=``, ``<``, ``<=``, ``>``, ``>=``,
+``IN``, ``BETWEEN``, ``IS NULL``; a literal-first comparison is flipped).
+An AND operand the grammar cannot read exactly — a function call,
+arithmetic, ``NOT``, a column on both sides, anything trailing a
+comparison — becomes an ``unknown`` atom for that operand only. Each atom
+keeps its literal tokens: :func:`bucket_predicate` hashes their SQL text,
+``zonemap.all_bounds`` folds their values (:func:`_parse_literal_value`)
+into per-column ranges. Both resolve column names through
+:func:`resolve_column`.
+
+Reference semantics for buckets (``src/function/mpp_table_scan.cpp:52-143``,
 ``src/function/prune_shards.cpp:60-132``):
 
 - ``col = const``        → exactly one shard
@@ -30,13 +42,14 @@ for copy-on-write DML, which must know which directories to rewrite.
 
 from __future__ import annotations
 
+import datetime
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 # ---------------------------------------------------------------------------
-# Tiny predicate parser (restricted SQL grammar; unparseable → no pruning)
+# The predicate grammar (restricted SQL; anything else → unknown)
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = re.compile(
@@ -77,9 +90,12 @@ def _tokenize(text: str) -> list[tuple[str, str]] | None:
 
 @dataclass
 class Atom:
-    kind: str  # "eq" | "in" | "isnull" | "unknown"
+    # "=" | "<" | "<=" | ">" | ">=" | "in" | "between" | "isnull" | "unknown"
+    kind: str
     col: str | None = None
-    literals: tuple[str, ...] = ()  # literal SQL text, verbatim
+    # (token kind, SQL text) per literal: the text feeds the bucket hash,
+    # _parse_literal_value the zone-map bound
+    literals: tuple[tuple[str, str], ...] = ()
 
 
 @dataclass
@@ -89,6 +105,7 @@ class BoolOp:
 
 
 UNKNOWN = Atom("unknown")
+_FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
 
 
 class _Parser:
@@ -109,25 +126,33 @@ class _Parser:
         t = self.peek()
         return bool(t and t[0] == "word" and t[1].upper() in words)
 
+    def at_boundary(self) -> bool:
+        t = self.peek()
+        return t is None or t[0] == "rparen" or self.at_word("AND", "OR")
+
     def parse_or(self):
-        left = self.parse_and()
-        children = [left]
+        children = [self.parse_and()]
         while self.at_word("OR"):
             self.next()
             children.append(self.parse_and())
         return children[0] if len(children) == 1 else BoolOp("or", children)
 
     def parse_and(self):
-        left = self.parse_atom()
-        children = [left]
+        children = [self._operand()]
         while self.at_word("AND"):
             self.next()
-            children.append(self.parse_atom())
+            children.append(self._operand())
         return children[0] if len(children) == 1 else BoolOp("and", children)
+
+    def _operand(self):
+        # an atom followed by anything but AND/OR/')'/end was only the head
+        # of a larger expression (``c0 = 1 + 1``): the operand is unknown
+        node = self.parse_atom()
+        return node if self.at_boundary() else self._skip_unknown()
 
     def parse_atom(self):
         t = self.peek()
-        if t is None:
+        if t is None or t[0] == "rparen":
             return UNKNOWN
         if t[0] == "lparen":
             # could be a parenthesized boolean expr
@@ -139,150 +164,155 @@ class _Parser:
                 return inner
             self.i = save
             return self._skip_unknown()
-        if t[0] == "word" and t[1].upper() == "NOT":
+        if self.at_word("NOT"):
             self.next()
             self.parse_atom()
             return UNKNOWN  # NOT never prunes in the reference either
-        return self._parse_comparison()
-
-    def _parse_comparison(self):
-        t = self.next()
-        if t is None:
-            return UNKNOWN
-        # <col> <op> <lit> | <lit> <op> <col> | <col> IN (...) | <col> IS [NOT] NULL
-        if t[0] == "word" and t[1].upper() not in ("NULL", "TRUE", "FALSE"):
-            col = t[1]
-            nxt = self.peek()
-            if nxt is None:
-                return UNKNOWN
-            if nxt[0] == "op":
-                op = self.next()[1]
-                lit = self._parse_literal()
-                if lit is not None and op == "=":
-                    return Atom("eq", _base_col(col), (lit,))
-                return UNKNOWN if lit is None else Atom("unknown")
-            if nxt[0] == "word" and nxt[1].upper() == "IS":
-                self.next()
-                neg = False
-                if self.at_word("NOT"):
-                    self.next()
-                    neg = True
-                if self.at_word("NULL"):
-                    self.next()
-                    return UNKNOWN if neg else Atom("isnull", _base_col(col))
-                return UNKNOWN
-            if nxt[0] == "word" and nxt[1].upper() == "IN":
-                self.next()
-                lits = self._parse_literal_list()
-                if lits is None:
-                    return UNKNOWN
-                return Atom("in", _base_col(col), tuple(lits))
-            if nxt[0] == "word" and nxt[1].upper() == "NOT":
-                # col NOT IN (...) — never prunes
-                self.next()
-                if self.at_word("IN"):
-                    self.next()
-                    self._parse_literal_list()
-                return UNKNOWN
-            if nxt[0] == "word" and nxt[1].upper() == "BETWEEN":
-                self.next()
-                self._parse_literal()
-                if self.at_word("AND"):
-                    self.next()
-                    self._parse_literal()
-                return UNKNOWN
+        start = self.i
+        atom = self._comparison()
+        if atom is None:
+            # re-read the operand from its start, so the skip sees every
+            # CASE and BETWEEN that owns a later AND
+            self.i = start
             return self._skip_unknown()
-        # literal-first form: <lit> = <col>
-        lit = self._literal_text(t)
-        if lit is not None:
-            nxt = self.peek()
-            if nxt and nxt[0] == "op" and nxt[1] == "=":
-                self.next()
-                ct = self.next()
-                if ct and ct[0] == "word":
-                    return Atom("eq", _base_col(ct[1]), (lit,))
-            return UNKNOWN
-        return self._skip_unknown()
+        return atom
 
-    def _parse_literal(self) -> str | None:
-        t = self.peek()
-        if t is None:
+    def _comparison(self) -> Atom | None:
+        """<col> <op> <lit> | <lit> <op> <col> | <col> IN (<lits>) |
+        <col> BETWEEN <lit> AND <lit> | <col> IS NULL; None otherwise."""
+        t = self.next()
+        lit = self._literal(t)
+        if lit is not None:
+            op, col = self.next(), self.next()
+            if (op and op[0] == "op" and op[1] in _FLIP and col
+                    and col[0] == "word" and self._literal(col) is None):
+                return Atom(_FLIP[op[1]], col[1].lower(), (lit,))
             return None
-        lit = self._literal_text(t)
+        if t[0] != "word":
+            return None
+        col, nxt = t[1].lower(), self.next()
+        if nxt is None:
+            return None
+        if nxt[0] == "op":
+            lit = self._parse_literal()
+            return Atom(nxt[1], col, (lit,)) if nxt[1] in _FLIP and lit else None
+        word = nxt[1].upper() if nxt[0] == "word" else None
+        if word == "IS" and self.at_word("NULL"):
+            self.next()
+            return Atom("isnull", col)
+        if word == "IN":
+            lits = self._parse_literal_list()
+            return Atom("in", col, tuple(lits)) if lits else None
+        if word == "BETWEEN":
+            lo = self._parse_literal()
+            if lo and self.at_word("AND"):
+                self.next()
+                hi = self._parse_literal()
+                return Atom("between", col, (lo, hi)) if hi else None
+        return None
+
+    def _parse_literal(self) -> tuple[str, str] | None:
+        lit = self._literal(self.peek())
         if lit is not None:
             self.next()
-            return lit
-        return None
+        return lit
 
-    def _literal_text(self, t: tuple[str, str]) -> str | None:
+    @staticmethod
+    def _literal(t: tuple[str, str] | None) -> tuple[str, str] | None:
+        if t is None:
+            return None
         kind, val = t
         if kind in ("string", "number", "typed"):
-            return val
+            return t
         if kind == "word" and val.upper() in ("NULL", "TRUE", "FALSE"):
-            return val.upper()
+            return kind, val.upper()
         return None
 
-    def _parse_literal_list(self) -> list[str] | None:
+    def _parse_literal_list(self) -> list[tuple[str, str]] | None:
+        # a non-constant element disables IN pruning (reference
+        # mpp_table_scan.cpp:68-84)
         if not (self.peek() and self.peek()[0] == "lparen"):
             return None
         self.next()
-        lits: list[str] = []
+        lits = []
         while True:
             lit = self._parse_literal()
-            if lit is None:
-                # non-constant element disables IN pruning (reference
-                # mpp_table_scan.cpp:68-84); skip to matching rparen
-                depth = 1
-                while depth and self.peek():
-                    k = self.next()[0]
-                    depth += k == "lparen"
-                    depth -= k == "rparen"
+            nxt = self.next()
+            if lit is None or nxt is None:
                 return None
             lits.append(lit)
-            nxt = self.next()
-            if nxt is None:
-                return None
             if nxt[0] == "rparen":
                 return lits
             if nxt[0] != "comma":
                 return None
 
     def _skip_unknown(self):
-        # swallow tokens until a boolean connective or rparen at depth 0
-        depth = 0
+        """Swallow the rest of one AND/OR operand: up to a ``)``, ``AND`` or
+        ``OR`` at paren depth 0 — except the AND of a BETWEEN and the
+        connectives inside CASE … END, which belong to the operand."""
+        depth = cases = 0
+        between = False
         while self.peek():
             k, v = self.peek()
-            if depth == 0 and (
-                k == "rparen" or (k == "word" and v.upper() in ("AND", "OR"))
-            ):
-                break
+            w = v.upper() if k == "word" else None
+            if depth == 0 and cases == 0:
+                if k == "rparen" or w == "OR" or (w == "AND" and not between):
+                    break
+                if w in ("AND", "BETWEEN"):
+                    between = w == "BETWEEN"
+            if depth == 0 and w == "CASE":
+                cases += 1
+            elif depth == 0 and w == "END" and cases:
+                cases -= 1
+            depth += (k == "lparen") - (k == "rparen")
             self.next()
-            depth += k == "lparen"
-            depth -= k == "rparen" and depth > 0
         return UNKNOWN
 
 
-def _base_col(name: str) -> str:
-    """Normalize a column ref, KEEPING any table qualifier: ``T."C0"`` →
-    ``t.c0``. Qualified refs are matched against the distributed table's
-    name/aliases in ``bucket_predicate`` — stripping the qualifier here would
-    let a filter on a *different* relation's same-named column prune the
-    distributed table (result-changing, see ADVICE r01)."""
-    return ".".join(p.strip('"').lower() for p in name.split("."))
+def resolve_column(name: str, qualifiers: set[str]) -> str:
+    """The one column resolver of bucket pruning and zone maps: ``name``
+    as a column path of the distributed table. An unqualified name or a
+    struct path (``c0``, ``s.a``) is the table's own column; a leading
+    qualifier in ``qualifiers`` (the table's name or FROM alias) is
+    stripped (``t.c0`` → ``c0``). Any other qualifier names another
+    relation, and the name comes back whole, so it matches neither the
+    partition column nor a column stat — the reference prunes on *bound*
+    expressions and never attributes another relation's column to the
+    partition column (ADVICE r01)."""
+    head, _, rest = name.partition(".")
+    return rest if rest and head in qualifiers else name
 
 
 def parse_predicate(text: str):
     """Parse a WHERE-clause string into the restricted AST; None if the
-    text doesn't tokenize at all."""
+    text doesn't tokenize or has an unbalanced ``)``."""
     toks = _tokenize(text)
     if toks is None:
         return None
     p = _Parser(toks)
     ast = p.parse_or()
-    # Trailing unconsumed tokens mean the atom grammar mis-read a larger
-    # expression (e.g. ``c0 = 1 + 1`` would otherwise look like ``c0 = 1``).
-    # Pruning on a misparse would be WRONG, not just suboptimal — bail out.
     return ast if p.i == len(p.toks) else None
+
+
+def _parse_literal_value(kind: str, text: str):
+    """SQL literal token → comparable Python value (None if unsupported)."""
+    if kind == "number":
+        f = float(text)
+        return int(text) if f.is_integer() and "." not in text and "e" not in text.lower() else f
+    if kind == "string":
+        return text[1:-1].replace("''", "'")
+    if kind == "typed":
+        head, _, rest = text.partition("'")
+        inner = rest.rstrip()[:-1].replace("''", "'")
+        t = head.strip().upper()
+        try:
+            if t == "DATE":
+                return datetime.date.fromisoformat(inner)
+            if t == "TIMESTAMP":
+                return datetime.datetime.fromisoformat(inner)
+        except ValueError:
+            return None
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -320,38 +350,16 @@ def bucket_predicate(
     part_col: str,
     ptype_ddl: str,
     buckets: int,
-    aliases: set[str] | None = None,
     qualifiers: set[str] | None = None,
 ) -> str | None:
     """SQL predicate over ``__bucket`` implied by ``ast``, or None.
 
-    ``aliases``: alternative names that refer to the partition column
-    (the reference resolves the partition column through projection aliases,
-    ``src/include/common/expression_helper.hpp:16-34``).
-    ``qualifiers``: relation names/aliases that denote the distributed table
-    itself. A qualified ref (``e.c0``) only matches when its qualifier is in
-    this set — the reference prunes on *bound* expressions and can never
-    attribute another relation's column to the partition column; with no
-    qualifier knowledge we must treat every qualified ref as foreign (no
-    pruning) to stay correctness-neutral.
+    ``qualifiers``: the names (table name, FROM alias) that denote the
+    distributed table itself (see :func:`resolve_column`); with none,
+    every qualified ref is another relation's and never prunes.
     """
-    names = {part_col.lower()} | {a.lower() for a in (aliases or set())}
+    part = part_col.lower()
     quals = {q.lower() for q in (qualifiers or set())}
-
-    def col_matches(col: str | None) -> bool:
-        if col is None:
-            return False
-        # exact match first — covers struct-field partition paths (``s.a``,
-        # expression_helper.hpp:23-30 struct_extract traversal parity)
-        if col in names:
-            return True
-        parts = col.split(".")
-        # qualifier-stripped match: ``t1.s.a`` → qualifier ``t1`` + ``s.a``
-        if len(parts) > 1 and parts[0] in quals and ".".join(parts[1:]) in names:
-            return True
-        if len(parts) > 1 and parts[-2] in quals and parts[-1] in names:
-            return True
-        return False
 
     def rec(node) -> str | None:
         if isinstance(node, BoolOp):
@@ -363,19 +371,15 @@ def bucket_predicate(
             if any(p is None for p in parts):
                 return None
             return f"({' OR '.join(parts)})"
-        if isinstance(node, Atom):
-            if not col_matches(node.col):
-                return None
-            if any(not _literal_prunes(l, ptype_ddl) for l in node.literals):
-                return None  # column-side coercion: hash(CAST(lit)) unsound
-            if node.kind == "eq":
-                return f"__bucket = {_hash_expr(node.literals[0], ptype_ddl, buckets)}"
-            if node.kind == "in":
-                hashes = ", ".join(_hash_expr(l, ptype_ddl, buckets) for l in node.literals)
-                return f"__bucket IN ({hashes})"
-            if node.kind == "isnull":
-                return f"__bucket = {_hash_expr('NULL', ptype_ddl, buckets)}"
-        return None
+        if node.kind not in ("=", "in", "isnull"):
+            return None
+        if resolve_column(node.col, quals) != part:
+            return None
+        lits = [text for _kind, text in node.literals] or ["NULL"]
+        if any(not _literal_prunes(l, ptype_ddl) for l in lits):
+            return None  # column-side coercion: hash(CAST(lit)) unsound
+        hashes = ", ".join(_hash_expr(l, ptype_ddl, buckets) for l in lits)
+        return f"__bucket IN ({hashes})" if node.kind == "in" else f"__bucket = {hashes}"
 
     return rec(ast)
 
@@ -385,7 +389,6 @@ def bucket_predicate_for_where(
     part_col: str,
     ptype_ddl: str,
     buckets: int,
-    aliases: set[str] | None = None,
     qualifiers: set[str] | None = None,
 ) -> str | None:
     if not where:
@@ -393,7 +396,7 @@ def bucket_predicate_for_where(
     ast = parse_predicate(where)
     if ast is None:
         return None
-    return bucket_predicate(ast, part_col, ptype_ddl, buckets, aliases, qualifiers)
+    return bucket_predicate(ast, part_col, ptype_ddl, buckets, qualifiers)
 
 
 def evaluate_bucket_ids(

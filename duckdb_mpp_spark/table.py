@@ -316,10 +316,11 @@ def spread_for_bucket_write(df: DataFrame, n_groups: int, split: int) -> DataFra
     rows (review r6 — a monotonically_increasing_id key depends on row
     ORDER, which is not stable for shuffle-fed inputs; that is the exact
     hazard SPARK-23207 fixed for round-robin repartition). Granularity:
-    each INPUT partition maps wholly to one split, which is exactly the
-    fan-out wanted — a bucket's rows arriving from many input partitions
-    spread over ~split writers; split never exceeds the input partition
-    count for any volume-derived factor.
+    each INPUT partition maps wholly to one split, so a bucket's rows
+    spread over as many writers as there are distinct ``pid mod split``
+    values among the NON-EMPTY input partitions — at most ``split``, and
+    fewer when the rows sit in few partitions (two non-empty partitions
+    1 and 4 with split 3 both map to split 1: one file per bucket).
 
     Partition count is 2× the (bucket, split) group count: hash
     partitioning is approximate, and at small split factors two groups of
@@ -779,7 +780,6 @@ class DistributedTable:
         self,
         where: str | None = None,
         columns: list[str] | None = None,
-        aliases: set[str] | None = None,
         keep_bucket: bool = False,
         qualifiers: set[str] | None = None,
         version: int | None = None,
@@ -787,10 +787,11 @@ class DistributedTable:
         """Bucket-pruned scan planned from the current snapshot's file list
         (or a historical one: ``version`` = time travel, free because every
         commit is a full snapshot). ``where`` is applied in full by Catalyst; the
-        derived ``__bucket`` predicate only narrows which partition
-        directories the file index keeps (pruning is an optimization,
-        never a filter)."""
-        df = self.pruned_read(where, aliases, qualifiers, version)
+        derived ``__bucket`` predicate and the zone maps only narrow which
+        files the scan reads (pruning is an optimization, never a filter).
+        ``qualifiers`` are the names that denote this table in ``where``
+        (default: its own name); see :meth:`pruned_read`."""
+        df = self.pruned_read(where, qualifiers, version)
         if where:
             df = df.where(where)
         out_cols = columns or [f.name for f in self.meta.schema.fields]
@@ -801,7 +802,6 @@ class DistributedTable:
     def pruned_read(
         self,
         where: str | None,
-        aliases: set[str] | None = None,
         qualifiers: set[str] | None = None,
         version: int | None = None,
     ) -> DataFrame:
@@ -809,7 +809,13 @@ class DistributedTable:
         door's per-query views: the snapshot's files narrowed to the
         buckets the derived ``__bucket`` predicate keeps (widened for the
         same snapshot's routing-dirty buckets) and, where ``where`` bounds
-        a column, by zone maps. Keeps ``__bucket`` and does NOT apply
+        a column, by zone maps. Both read ``where`` through the one
+        grammar in ``pruning.py``: a column qualified by a name in
+        ``qualifiers`` (default: the table's own name) or not qualified at
+        all is this table's; any other qualifier is another relation's and
+        never prunes. The front door passes the qualifiers only when its
+        prune rule (``MppSession._prune_qualifiers``) allows the WHERE to
+        prune this table at all. Keeps ``__bucket`` and does NOT apply
         ``where`` — the caller does, so pruning stays an optimization."""
         _v, snap_files, dirty = self.snapshot_full(version)
         if not snap_files:
@@ -817,7 +823,7 @@ class DistributedTable:
         bucket_pred = widen_bucket_pred(
             bucket_predicate_for_where(
                 where, self.meta.partition_column, self._part_type_ddl,
-                self.meta.buckets, aliases, qualifiers or {self.meta.name},
+                self.meta.buckets, qualifiers or {self.meta.name},
             ),
             dirty,
         )
@@ -959,7 +965,6 @@ class DistributedTable:
     def pruned_bucket_ids(
         self,
         where: str | None,
-        aliases: set[str] | None = None,
         qualifiers: set[str] | None = None,
         dirty: "list[int] | None" = None,
     ) -> list[int]:
@@ -969,19 +974,19 @@ class DistributedTable:
         don't pair the result with a file list."""
         bucket_pred = bucket_predicate_for_where(
             where, self.meta.partition_column, self._part_type_ddl,
-            self.meta.buckets, aliases, qualifiers or {self.meta.name},
+            self.meta.buckets, qualifiers or {self.meta.name},
         )
         if dirty is None:
             dirty = self.routing_dirty_ids()
         bucket_pred = widen_bucket_pred(bucket_pred, dirty)
         return evaluate_bucket_ids(self.spark, bucket_pred, self.meta.buckets)
 
-    def explain(self, where: str | None = None, aliases: set[str] | None = None) -> str:
+    def explain(self, where: str | None = None) -> str:
         """Reference-style explain: the custom scan annotations ``Table``,
         ``Shards: k/n``, ``Filter`` (src/function/mpp_table_scan.cpp:373-380,
         asserted by test/sql/mpp_filter.test:60-87) followed by the real
         Spark physical plan."""
-        ids = self.pruned_bucket_ids(where, aliases)
+        ids = self.pruned_bucket_ids(where)
         lines = [
             f"Table: {self.meta.name}",
             f"Shards: {len(ids)}/{self.meta.buckets}",
@@ -989,7 +994,7 @@ class DistributedTable:
         if where:
             lines.append(f"Filter: {where}")
         self.last_file_skip = None
-        plan = self.scan(where=where, aliases=aliases)._jdf.queryExecution().explainString(
+        plan = self.scan(where=where)._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         if self.last_file_skip is not None:

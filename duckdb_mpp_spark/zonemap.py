@@ -1,8 +1,9 @@
-"""Zone-map file skipping for sort-clustered distributed tables.
+"""Zone-map file skipping: the stat side.
 
 Tables declared with ``SORT BY (col)`` keep each written file clustered on
-the sort column, so parquet footer min/max statistics become *file-level*
-zone maps: a range predicate on the sort column can skip whole files before
+the sort column, and every committed file carries Iceberg-style per-column
+min/max stats in the snapshot manifest (``manifest.py``), so the stats are
+*file-level* zone maps: a range predicate can skip whole files before
 Spark ever schedules a task for them. This is the same design as
 Iceberg/Delta data skipping (manifest min/max per file) and the reference's
 DuckDB zone maps (row-group min/max), lifted to the bucket-directory layout.
@@ -10,18 +11,19 @@ DuckDB zone maps (row-group min/max), lifted to the bucket-directory layout.
 Division of labor with the engine: Spark already prunes *row groups* via
 pushed filters once a file is opened; file-level skipping removes the file
 from the scan plan entirely — fewer tasks, fewer footer opens, and on object
-storage fewer GETs. At 100 TB the min/max index belongs in a catalog
-manifest (one metadata read, like Delta's log); reading footers directly is
-the same O(#files) driver metadata pass as the file index itself and needs
-no extra infrastructure here.
+storage fewer GETs.
+
+This module owns the stat side only: :class:`Bounds`, and
+:func:`file_overlaps` with its coercion rules. The predicate side is the
+one grammar in ``pruning.py``; :func:`all_bounds` folds its top-level AND
+atoms into per-column bounds.
 
 Correctness contract (same as ``pruning.py``): skipping is an OPTIMIZATION,
-never a filter. Bounds extraction is conservative — only conjuncts of the
-shape ``col OP literal`` / ``literal OP col`` / ``col BETWEEN a AND b``
-tighten the range; anything else (ORs, functions, unknown syntax) is
-ignored, which can only keep extra files. A file is skipped only when its
-footer stats PROVE it disjoint from the bound; missing/untyped stats keep
-the file.
+never a filter. Only AND-conjuncts the grammar reads exactly (``col OP
+literal``, ``literal OP col``, ``col BETWEEN a AND b``, ``col IN (...)``)
+tighten a range; anything else is ignored, which can only keep extra files.
+A file is skipped only when its stats PROVE it disjoint from the bound;
+missing/untyped stats keep the file.
 """
 
 from __future__ import annotations
@@ -30,11 +32,12 @@ import datetime
 import re
 from dataclasses import dataclass
 
-from duckdb_mpp_spark.pruning import _tokenize
-
-_CMP = {"=", "<", "<=", ">", ">="}
-_FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
-
+from duckdb_mpp_spark.pruning import (
+    BoolOp,
+    _parse_literal_value,
+    parse_predicate,
+    resolve_column,
+)
 
 @dataclass
 class Bounds:
@@ -69,205 +72,74 @@ class Bounds:
         return not self.invalid and (self.lo is not None or self.hi is not None)
 
 
-def _parse_literal_value(kind: str, text: str):
-    """SQL literal token → comparable Python value (None if unsupported)."""
-    if kind == "number":
-        f = float(text)
-        return int(text) if f.is_integer() and "." not in text and "e" not in text.lower() else f
-    if kind == "string":
-        return text[1:-1].replace("''", "'")
-    if kind == "typed":
-        head, _, rest = text.partition("'")
-        inner = rest.rstrip()[:-1].replace("''", "'")
-        t = head.strip().upper()
+def _conjuncts(node):
+    """The atoms every row must satisfy: ``node`` itself, or the operands
+    of its (nested) ANDs. An OR yields nothing — no single branch is
+    required, so deriving bounds from one would skip files that satisfy
+    another (review r4: wrong results)."""
+    if isinstance(node, BoolOp):
+        if node.op == "and":
+            for child in node.children:
+                yield from _conjuncts(child)
+        return
+    yield node
+
+
+def _interval(atom):
+    """(lo, lo_inclusive, hi, hi_inclusive) of one atom's literal values;
+    None when the atom bounds nothing. An IN list gives its [min, max]
+    envelope: files outside it can't hold any listed value; exact
+    membership is left to the engine's filter."""
+    vals = [_parse_literal_value(k, t) for k, t in atom.literals]
+    if atom.kind == "in":
+        if None in vals:
+            return None  # non-literal element → no envelope
         try:
-            if t == "DATE":
-                return datetime.date.fromisoformat(inner)
-            if t == "TIMESTAMP":
-                return datetime.datetime.fromisoformat(inner)
-        except ValueError:
-            return None
-    return None
-
-
-def _split_top_level_and(toks: list[tuple[str, str]]) -> list[list[tuple[str, str]]]:
-    """Split on depth-0 ANDs — except the AND that belongs to a BETWEEN
-    phrase (``x BETWEEN a AND b`` must stay one conjunct, otherwise the
-    orphan upper bound could be misattributed to the sort column)."""
-    out, cur, depth, between_pending = [], [], 0, False
-    for k, v in toks:
-        if k == "lparen":
-            depth += 1
-        elif k == "rparen":
-            depth -= 1
-        if depth == 0 and k == "word" and v.upper() == "BETWEEN":
-            between_pending = True
-        if depth == 0 and k == "word" and v.upper() == "AND":
-            if between_pending:
-                between_pending = False
-                cur.append((k, v))
-                continue
-            out.append(cur)
-            cur = []
-            continue
-        cur.append((k, v))
-    out.append(cur)
-    return out
-
-
-def _strip_parens(toks: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    while (
-        len(toks) >= 2
-        and toks[0][0] == "lparen"
-        and toks[-1][0] == "rparen"
-    ):
-        depth = 0
-        for i, (k, _) in enumerate(toks):
-            depth += k == "lparen"
-            depth -= k == "rparen"
-            if depth == 0 and i < len(toks) - 1:
-                return toks  # outer parens don't wrap the whole conjunct
-        toks = toks[1:-1]
-    return toks
-
-
-_NOT_A_COLUMN = {
-    "AND", "OR", "NOT", "IN", "BETWEEN", "IS", "NULL", "TRUE", "FALSE",
-    "LIKE", "EXISTS", "CASE", "WHEN", "THEN", "ELSE", "END", "DATE",
-    "TIMESTAMP", "INTERVAL", "CAST",
-}
-
-
-def _col_name(tok: tuple[str, str], qualifiers: set[str]) -> str | None:
-    """Column name a word token references (qualifier stripped when it is a
-    known table alias), lower-cased; None for non-words and keywords."""
-    if tok[0] != "word":
-        return None
-    name = tok[1].lower()
-    if name.upper() in _NOT_A_COLUMN:
-        return None
-    if "." in name:
-        qual, _, base = name.rpartition(".")
-        if qual in qualifiers:
-            return base
-        return name  # struct-field path (matches the parquet leaf name)
-    return name
+            return min(vals), True, max(vals), True
+        except TypeError:
+            return None  # mixed-type list → incomparable
+    if atom.kind == "between":
+        return vals[0], True, vals[1], True
+    v = vals[0] if vals else None
+    return {
+        "=": (v, True, v, True),
+        ">": (v, False, None, True),
+        ">=": (v, True, None, True),
+        "<": (None, True, v, False),
+        "<=": (None, True, v, True),
+    }.get(atom.kind)
 
 
 def all_bounds(
     where: str | None, qualifiers: set[str] | None = None
 ) -> dict[str, Bounds]:
     """Conservative per-column bounds implied by ``where`` — the data-
-    skipping predicate analysis, generalized from the SORT BY column to
-    EVERY column (r4, Iceberg-style column stats in the manifest).
+    skipping predicate analysis over EVERY column (r4, Iceberg-style
+    column stats in the manifest).
 
     Returns {column_name_lower: Bounds} for columns with a usable
-    constraint. Top-level conjuncts that aren't a simple comparison on a
-    bare column (ORs, functions, col-vs-col) are ignored — they can only
-    narrow the result further, so ignoring them keeps skipping sound."""
-    if not where:
+    constraint, folded from the top-level AND atoms of
+    ``pruning.parse_predicate``. A top-level OR gives {}; operands that
+    aren't a literal comparison on a column of this table (ORs,
+    functions, col-vs-col, another relation's column) are ignored — they
+    can only narrow the result further, so ignoring them keeps skipping
+    sound."""
+    ast = parse_predicate(where) if where else None
+    if ast is None:
         return {}
-    toks = _tokenize(where)
-    if toks is None:
-        return {}
-    # A depth-0 OR means the expression is a DISJUNCTION of AND-chains
-    # (AND binds tighter than OR), so no individual comparison is a
-    # required conjunct — deriving bounds from any of them would skip
-    # files that satisfy a different disjunct (review r4: wrong results).
-    # ORs nested inside parentheses are safe: their parenthesized group is
-    # one unrecognized conjunct and is simply ignored below.
-    depth = 0
-    for k, v in toks:
-        depth += k == "lparen"
-        depth -= k == "rparen"
-        if depth == 0 and k == "word" and v.upper() == "OR":
-            return {}
     quals = {q.lower() for q in (qualifiers or set())}
     out: dict[str, Bounds] = {}
-
-    def bnd(col: str) -> Bounds:
-        return out.setdefault(col, Bounds())
-
-    for conj in _split_top_level_and(toks):
-        conj = _strip_parens(conj)
-        # col OP lit  |  lit OP col
-        if len(conj) == 3 and conj[1][0] == "op" and conj[1][1] in _CMP:
-            col = _col_name(conj[0], quals)
-            if col is not None and conj[2][0] != "word":
-                op, lit_tok = conj[1][1], conj[2]
-            else:
-                col = _col_name(conj[2], quals)
-                if col is None or conj[0][0] == "word":
-                    continue  # col-vs-col or lit-vs-lit: no bound
-                op, lit_tok = _FLIP.get(conj[1][1], "="), conj[0]
-            v = _parse_literal_value(lit_tok[0], lit_tok[1])
-            if v is None:
-                continue
-            b = bnd(col)
-            if op == "=":
-                b.tighten_lo(v, True)
-                b.tighten_hi(v, True)
-            elif op == ">":
-                b.tighten_lo(v, False)
-            elif op == ">=":
-                b.tighten_lo(v, True)
-            elif op == "<":
-                b.tighten_hi(v, False)
-            elif op == "<=":
-                b.tighten_hi(v, True)
-        # col IN (lit, lit, ...) → [min, max] envelope (files outside the
-        # envelope can't contain any listed value; exact membership is left
-        # to the engine's filter)
-        elif (
-            len(conj) >= 4
-            and _col_name(conj[0], quals) is not None
-            and conj[1][0] == "word"
-            and conj[1][1].upper() == "IN"
-            and conj[2][0] == "lparen"
-            and conj[-1][0] == "rparen"
-        ):
-            vals = []
-            for k, v in conj[3:-1]:
-                if k == "comma":
-                    continue
-                pv = _parse_literal_value(k, v)
-                if pv is None:
-                    vals = None  # non-literal element → no envelope
-                    break
-                vals.append(pv)
-            if vals:
-                try:
-                    lo, hi = min(vals), max(vals)
-                except TypeError:
-                    continue  # mixed-type list → incomparable, ignore
-                b = bnd(_col_name(conj[0], quals))
-                b.tighten_lo(lo, True)
-                b.tighten_hi(hi, True)
-        # col BETWEEN a AND b (kept whole by the splitter)
-        elif (
-            len(conj) == 5
-            and _col_name(conj[0], quals) is not None
-            and conj[1][0] == "word"
-            and conj[1][1].upper() == "BETWEEN"
-            and conj[3][0] == "word"
-            and conj[3][1].upper() == "AND"
-        ):
-            lo = _parse_literal_value(conj[2][0], conj[2][1])
-            hi = _parse_literal_value(conj[4][0], conj[4][1])
-            b = bnd(_col_name(conj[0], quals))
-            if lo is not None:
-                b.tighten_lo(lo, True)
-            if hi is not None:
-                b.tighten_hi(hi, True)
+    for atom in _conjuncts(ast):
+        iv = _interval(atom)
+        if iv is None:
+            continue
+        lo, lo_inclusive, hi, hi_inclusive = iv
+        b = out.setdefault(resolve_column(atom.col, quals), Bounds())
+        if lo is not None:
+            b.tighten_lo(lo, lo_inclusive)
+        if hi is not None:
+            b.tighten_hi(hi, hi_inclusive)
     return {c: b for c, b in out.items() if b.constrained}
-
-
-def sort_bounds(
-    where: str | None, sort_col: str, qualifiers: set[str] | None = None
-) -> Bounds | None:
-    """Conservative bounds on ``sort_col`` implied by ``where`` (the
-    single-column view of :func:`all_bounds`, kept for callers/tests)."""
-    return all_bounds(where, qualifiers).get(sort_col.lower())
 
 
 def _coerce(stat, bound):
@@ -400,23 +272,3 @@ def file_overlaps(fmin, fmax, bounds: Bounds) -> bool:
     except TypeError:
         return True
     return True
-
-
-def file_sort_stats(path: str, sort_col: str):
-    """(min, max) of ``sort_col`` over all row groups of one parquet file,
-    from footer metadata only; (None, None) when stats are absent."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    try:
-        idx = md.schema.names.index(sort_col)
-    except ValueError:
-        return None, None
-    mn = mx = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        mn = st.min if mn is None or st.min < mn else mn
-        mx = st.max if mx is None or st.max > mx else mx
-    return mn, mx

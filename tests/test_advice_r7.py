@@ -3,9 +3,7 @@
 1. sources/tables.py — pyarrow-less nanosecond detection degrades gracefully
    unless nanosAsLong is already active session-wide.
 2. colocated.py — ``ident`` really sanitizes the user-supplied name.
-3. mpp.py — ``_cte_indirected``'s comma alternative no longer flags a
-   SELECT-list column that shares the table's name (perf-only, but now the
-   safe direction is tested both ways).
+3. (CTE prune cases: now verdicts of ``test_prune_rule``.)
 4. dml.py — ``_check_unique_staged``'s value-global path only rejects
    duplicate groups the staged rewrite participates in.
 5. table.py — ``snapshot_full(version=0)`` serves the pin explicitly instead
@@ -15,7 +13,6 @@
 import pytest
 
 from duckdb_mpp_spark import manifest
-from duckdb_mpp_spark.mpp import MppSession, _comma_in_from_list
 from duckdb_mpp_spark.sources.tables import _nanos_timestamp_cols
 from duckdb_mpp_spark.table import check_unique_sides
 from tests.conftest import rows
@@ -52,64 +49,6 @@ def test_colocated_ident_is_sanitized(mpp):
     t.insert(t.spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
     got = rows(t.scan(), "k")
     assert got == [(1, "a"), (2, "b")]
-
-
-# --- 3. comma alternative in _cte_indirected -------------------------------
-
-@pytest.mark.parametrize(
-    "blank, needle, expected",
-    [
-        # relation list: FROM tv, st
-        ("SELECT a FROM tv, st WHERE x=1", ", st", True),
-        # select list: SELECT a, st FROM q (st is a COLUMN here)
-        ("SELECT a, st FROM q", ", st", False),
-        # subquery-derived relation then comma relation
-        ("SELECT * FROM (SELECT 1 AS a FROM q) z, st", ", st", True),
-        # select-list comma after a scalar subquery
-        ("SELECT (SELECT max(k) FROM t2), st FROM q", ", st", False),
-        # ambiguous (inside IN-list parens) stays flagged
-        ("SELECT a FROM q WHERE k IN (1, st)", ", st", True),
-    ],
-)
-def test_comma_in_from_list(blank, needle, expected):
-    pos = blank.index(needle)
-    assert _comma_in_from_list(blank, pos) is expected
-
-
-def test_cte_indirection_not_flagged_for_select_list_column(mpp):
-    mpp.sql("CREATE TABLE st(k INT, v TEXT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO st VALUES(1,'a'),(2,'b'),(3,'c')")
-    ses = mpp
-    # `, st` inside the CTE is a select-list COLUMN of q, not a relation
-    # reference of table st — pruning must stay enabled (perf-only assert:
-    # the query is still correct either way; we check the classifier)
-    q = "WITH c AS (SELECT k AS a, v AS st FROM st) SELECT a FROM c WHERE a = 2"
-    assert ses._cte_indirected(q, "st") is True  # real FROM st ref inside CTE
-    q2 = (
-        "WITH c AS (SELECT k AS a, st FROM q) "
-        "SELECT a FROM c WHERE a = 2 UNION ALL SELECT a FROM c"
-    )
-    assert ses._cte_indirected(q2, "st") is False
-    # and a genuine comma relation ref still disables pruning
-    q3 = (
-        "WITH c AS (SELECT q.k AS a FROM q, st) "
-        "SELECT a FROM c WHERE a = 2"
-    )
-    assert ses._cte_indirected(q3, "st") is True
-
-
-def test_cte_indirected_set_op_still_correct(mpp):
-    # end-to-end guard for the original ADVICE-r5 repro shape
-    mpp.sql("CREATE TABLE st2(k INT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO st2 VALUES(1),(2),(3)")
-    got = rows(
-        mpp.sql(
-            "WITH x AS (SELECT k FROM st2) "
-            "SELECT k FROM x WHERE k=2 UNION ALL SELECT k FROM x"
-        ),
-        "k",
-    )
-    assert [k for (k,) in got] == [1, 2, 2, 3]
 
 
 # --- 4. staged-unique global path ignores untouched-bucket duplicates ------

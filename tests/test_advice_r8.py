@@ -91,19 +91,6 @@ def test_blank_state_machine_blanks_all_regions():
         assert kept in out
 
 
-def test_cte_indirection_survives_lone_quote_in_comment(mpp):
-    # the ADVICE repro direction: a comment with an apostrophe between the
-    # WITH prefix's FROM ref and a later literal must not erase the FROM
-    # ref and re-enable pruning (wrong-results direction)
-    mpp.sql("CREATE TABLE stq(k INT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO stq VALUES(1),(2),(3)")
-    q = (
-        "WITH c AS (SELECT k FROM stq -- don't prune\n) "
-        "SELECT k FROM c WHERE k = 'x' || 2 UNION ALL SELECT k FROM c"
-    )
-    assert mpp._cte_indirected(q, "stq") is True
-
-
 # --- 4. mixed INT96/INT64 timestamp files fail loudly ------------------------
 
 def test_mixed_physical_timestamp_encodings_raise(tmp_path):

@@ -9,14 +9,16 @@ it must never change results.
 Strategy: generate predicates over the partition column (equality, IN,
 IS [NOT] NULL, ranges, arithmetic the grammar intentionally rejects, and
 random AND/OR/NOT nestings), run each against a 8-bucket table, and compare
-with the same predicate applied to the raw (unbucketed) DataFrame.
+with the same predicate applied to the raw (unbucketed) DataFrame — alone
+and inside every query shape the front door's prune rule must judge
+(joins, derived tables, CTEs, set-op legs, aliases, second references).
 """
 
 import shutil
 import tempfile
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from duckdb_mpp_spark.mpp import MppSession
@@ -250,6 +252,77 @@ def test_setop_shapes_never_lose_rows_to_pruning(table, pred, op, tmpl):
     got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
     want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
     assert got == want, f"{q_mpp!r}: {got} != {want}"
+
+
+# Every query shape the front door's prune rule must judge: {T} is the
+# table (``p`` for the front door, ``p_raw`` for the ground truth), {P} the
+# predicate with its column refs qualified by the shape's prefix.
+_QUERY_SHAPES = {
+    "plain": ("SELECT c0, c1 FROM {T} WHERE {P}", ""),
+    "from_alias": ("SELECT a.c0, a.c1 FROM {T} a WHERE {P}", "a."),
+    "inner_join": (
+        "SELECT {T}.c0, {T}.c1, tvx.c1 AS w FROM {T} "
+        "JOIN tvx ON {T}.c0 <= tvx.c0 WHERE {P}",
+        "{T}.",
+    ),
+    "left_join_nullable_side": (
+        "SELECT tvx.c0 AS k, {T}.c0, {T}.c1 FROM tvx "
+        "LEFT JOIN {T} ON tvx.c0 = {T}.c0 WHERE {P}",
+        "{T}.",
+    ),
+    "derived_table_rename": (
+        "SELECT * FROM (SELECT c0 + 1 AS c0, c1 FROM {T}) s WHERE {P}", ""
+    ),
+    "select_alias_shadows_column": ("SELECT c0 AS c1 FROM {T} WHERE {P}", ""),
+    "cte_body": (
+        "WITH x AS (SELECT c0, c1 FROM {T}) SELECT c0 FROM x WHERE {P}", ""
+    ),
+    "setop_leg1": (
+        "SELECT c0 FROM {T} WHERE {P} UNION ALL SELECT c0 FROM tvx", ""
+    ),
+    "setop_leg2": (
+        "SELECT c0 FROM tvx UNION ALL SELECT c0 FROM {T} WHERE {P}", ""
+    ),
+    "self_join": (
+        "SELECT a.c0, b.c1 FROM {T} a JOIN {T} b ON a.c0 = b.c0 + 1 WHERE {P}",
+        "a.",
+    ),
+    "backtick_second_ref": (
+        "SELECT c0, c1 FROM {T} WHERE ({P}) "
+        "AND NOT EXISTS (SELECT 1 FROM `{T}` s WHERE s.c0 = 13)",
+        "",
+    ),
+}
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(pred=_pred)
+@example(pred="c0 = 2")
+@example(pred="c0 IS NULL")
+@example(pred="c1 = 'apple'")
+def test_query_shapes_never_lose_rows_to_pruning(table, pred):
+    """For ANY predicate in EVERY query shape, the front door (bucket
+    pruning and zone maps active) returns exactly what the same SQL
+    returns over unpruned temp views of the raw rows: a WHERE prunes only
+    the one table its FROM clause names, never a self-joined, derived,
+    CTE-fed or outer-joined one, nor through a select alias."""
+    mpp, spark = table
+    spark.createDataFrame(
+        [(5, "mango"), (-2, "apple"), (None, "kiwi")], "c0 int, c1 string"
+    ).createOrReplaceTempView("tvx")
+    key = lambda t: tuple((x is None, str(x)) for x in t)
+    for shape, (tmpl, qual) in _QUERY_SHAPES.items():
+        # the fruit literals contain neither c0 nor c1
+        p = pred.replace("c0", qual + "c0").replace("c1", qual + "c1")
+        q_mpp = tmpl.replace("{P}", p).replace("{T}", "p")
+        q_raw = tmpl.replace("{P}", p).replace("{T}", "p_raw")
+        got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
+        want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
+        assert got == want, f"{shape}: {q_mpp!r}: {got} != {want}"
 
 
 def test_partition_column_update_keeps_pruned_reads_exact(spark):

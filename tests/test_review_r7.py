@@ -1,9 +1,8 @@
 """Regression tests for the r7 post-green code-review findings.
 
-1. mpp.py — the CTE comma classifier blanks comments and quoted
-   identifiers before its backward keyword scan (a 'select' inside either
-   misclassified a relation-list comma and re-enabled pruning on a
-   CTE-fed source — the wrong-results direction the guard prevents).
+1. mpp.py — a 'select' inside a comment beside a CTE's relation-list
+   comma must not let the main WHERE prune the CTE-fed source (the
+   classifier cases are now verdicts of ``test_prune_rule``).
 2. dedup band index — now a DistributedTable; see tests/test_band_index.py.
 3. streaming — the replay-detection lineage id lives IN the checkpoint
    dir, so a deleted/reset checkpoint mints a new lineage instead of
@@ -28,36 +27,7 @@ from tests.conftest import rows
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# --- 1. comment/quoted-identifier blindness in the comma classifier --------
-
-@pytest.mark.parametrize(
-    "query",
-    [
-        # block comment containing 'select' between FROM and the comma
-        "WITH c AS (SELECT q.k AS a FROM q /* select best */, st) "
-        "SELECT a FROM c WHERE a=2 UNION ALL SELECT a FROM c",
-        # line comment containing 'select'
-        "WITH c AS (SELECT q.k AS a FROM q -- select\n , st) "
-        "SELECT a FROM c WHERE a=2 UNION ALL SELECT a FROM c",
-        # double-quoted relation alias containing 'select'
-        'WITH c AS (SELECT x.a FROM q AS "select stats", st) '
-        "SELECT a FROM c WHERE a=2 UNION ALL SELECT a FROM c",
-        # backtick identifier containing 'select'
-        "WITH c AS (SELECT x.a FROM q AS `select stats`, st) "
-        "SELECT a FROM c WHERE a=2 UNION ALL SELECT a FROM c",
-    ],
-)
-def test_cte_comma_after_comment_or_quoted_ident_stays_flagged(mpp, query):
-    # relation-list comma → CTE indirection detected → pruning disabled
-    assert mpp._cte_indirected(query, "st") is True
-
-
-def test_cte_select_list_comma_still_unflagged(mpp):
-    # a SELECT-list column sharing the table's name must NOT flag (the
-    # ADVICE-r6 perf fix this review hardened, not reverted)
-    q = "WITH c AS (SELECT a, st FROM q) SELECT a FROM c WHERE a=2"
-    assert mpp._cte_indirected(q, "st") is False
-
+# --- 1. comment beside a CTE's relation-list comma --------------------------
 
 def test_cte_fed_setop_rows_survive_comment_near_comma(mpp):
     """End-to-end: the reproduced wrong-results shape — CTE source listed

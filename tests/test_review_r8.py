@@ -2,12 +2,10 @@
 the pruning guards (two confirmed wrong-results repros) and the sibling
 sites that shared the pattern.
 
-The r8 state machine fixed _cte_indirected's comma classifier, but
-main_sel and every other guard still scanned RAW text with the
-comment-blind _find_keyword_top_level / _blank_literals — a lone
-apostrophe inside a ``--`` comment opened a fake literal swallowing real
-keywords (UNION, FROM refs), re-enabling pruning in exactly the shapes
-the guards exist to protect.
+The keyword scanner once read RAW text: a lone apostrophe inside a
+``--`` comment opened a fake literal swallowing real keywords (UNION,
+FROM refs), re-enabling pruning in exactly the shapes that must not
+prune. The pruning cases are now verdicts of ``test_prune_rule``.
 """
 
 import pytest
@@ -25,46 +23,6 @@ def test_find_keyword_is_comment_aware():
     assert _find_keyword_top_level("SELECT 'union all' FROM t", "UNION") == -1
     assert _find_keyword_top_level("/* union */ SELECT 1", "UNION") == -1
     assert _find_keyword_top_level("-- union\nSELECT 1", "UNION") == -1
-
-
-def test_cte_indirected_survives_select_in_comment(mpp):
-    mpp.sql("CREATE TABLE st8(k INT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO st8 VALUES(1),(2),(3)")
-    q = (
-        "WITH /* select */ x AS (SELECT k FROM st8) "
-        "SELECT k FROM x WHERE k = 2 UNION ALL SELECT k FROM x"
-    )
-    # guard must stay engaged (pruning disabled on the CTE-fed source)
-    assert mpp._cte_indirected(q, "st8") is True
-    got = sorted(k for (k,) in rows(mpp.sql(q), "k"))
-    assert got == [1, 2, 2, 3]
-
-
-def test_setop_guard_survives_apostrophe_in_comment(mpp):
-    mpp.sql("CREATE TABLE st9(k INT, v TEXT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO st9 VALUES(1,'y'),(2,'n'),(3,'y')")
-    q = (
-        "SELECT k FROM st9 WHERE k = 2 -- don't prune\n"
-        "UNION ALL SELECT k FROM st9 WHERE v = 'y'"
-    )
-    got = sorted(k for (k,) in rows(mpp.sql(q), "k"))
-    # pre-fix the comment's apostrophe hid the UNION, the k=2 restriction
-    # pruned the SHARED scan, and leg 2 lost the k∈{1,3} rows
-    assert got == [1, 2, 3]
-
-
-def test_self_join_guard_survives_apostrophe_in_comment(mpp):
-    mpp.sql("CREATE TABLE stt(k INT, v INT) PARTITION BY(k) WITH BUCKETS 4")
-    mpp.sql("INSERT INTO stt VALUES(1,2),(2,3),(3,1)")
-    # two refs of stt with a comment between them: the literal blanker
-    # mis-paired the apostrophe and erased the second FROM ref
-    q = (
-        "SELECT a.k FROM stt a -- it's a self-join\n"
-        ", stt b WHERE a.k = 2 AND b.k = a.v"
-    )
-    assert mpp._self_joined(q, "stt") is True
-    got = [k for (k,) in rows(mpp.sql(q), "k")]
-    assert got == [2]
 
 
 def test_version_as_of_in_comment_does_not_pin(mpp):

@@ -9,7 +9,7 @@ import datetime
 
 import pytest
 
-from duckdb_mpp_spark.zonemap import Bounds, file_overlaps, sort_bounds
+from duckdb_mpp_spark.zonemap import Bounds, all_bounds, file_overlaps
 from tests.conftest import rows
 
 
@@ -18,42 +18,42 @@ from tests.conftest import rows
 # ---------------------------------------------------------------------------
 
 def test_bounds_simple_range():
-    b = sort_bounds("v >= 10 AND v < 20", "v")
+    b = all_bounds("v >= 10 AND v < 20").get("v")
     assert (b.lo, b.lo_inclusive, b.hi, b.hi_inclusive) == (10, True, 20, False)
 
 
 def test_bounds_flipped_and_equality():
-    b = sort_bounds("5 < v", "v")
+    b = all_bounds("5 < v").get("v")
     assert (b.lo, b.lo_inclusive, b.hi) == (5, False, None)
-    b = sort_bounds("v = 7", "v")
+    b = all_bounds("v = 7").get("v")
     assert (b.lo, b.hi) == (7, 7)
 
 
 def test_bounds_between_stays_whole():
-    b = sort_bounds("v BETWEEN 3 AND 9", "v")
+    b = all_bounds("v BETWEEN 3 AND 9").get("v")
     assert (b.lo, b.hi) == (3, 9)
 
 
 def test_bounds_other_columns_between_not_misattributed():
     # the AND inside another column's BETWEEN must not leak a bound onto v
-    b = sort_bounds("other BETWEEN 1 AND 5 AND v > 3", "v")
+    b = all_bounds("other BETWEEN 1 AND 5 AND v > 3").get("v")
     assert (b.lo, b.hi) == (3, None)
 
 
 def test_bounds_or_and_unknown_conjuncts_ignored():
-    assert sort_bounds("v > 5 OR x = 2", "v") is None
-    b = sort_bounds("f(v) = 3 AND v <= 8", "v")
+    assert all_bounds("v > 5 OR x = 2").get("v") is None
+    b = all_bounds("f(v) = 3 AND v <= 8").get("v")
     assert (b.lo, b.hi) == (None, 8)
 
 
 def test_bounds_qualified_refs():
-    assert sort_bounds("t.v > 5", "v", {"t"}) is not None
+    assert all_bounds("t.v > 5", {"t"}).get("v") is not None
     # a different relation's same-named column must not constrain
-    assert sort_bounds("e.v > 5", "v", {"t"}) is None
+    assert all_bounds("e.v > 5", {"t"}).get("v") is None
 
 
 def test_bounds_date_literals():
-    b = sort_bounds("d >= DATE '1994-01-01' AND d < DATE '1995-01-01'", "d")
+    b = all_bounds("d >= DATE '1994-01-01' AND d < DATE '1995-01-01'").get("d")
     assert b.lo == datetime.date(1994, 1, 1)
     assert b.hi == datetime.date(1995, 1, 1) and not b.hi_inclusive
 
@@ -64,7 +64,7 @@ def test_datetime_stat_vs_date_bound_not_truncated():
     compared at datetime resolution. Truncating fmax 2024-01-02 23:00 to the
     date 2024-01-02 made `ts > DATE '2024-01-02'` skip a file whose intraday
     rows satisfy the predicate."""
-    b = sort_bounds("ts > DATE '2024-01-02'", "ts")
+    b = all_bounds("ts > DATE '2024-01-02'").get("ts")
     assert file_overlaps(
         datetime.datetime(2024, 1, 2, 1), datetime.datetime(2024, 1, 2, 23), b
     )
@@ -73,15 +73,15 @@ def test_datetime_stat_vs_date_bound_not_truncated():
         datetime.datetime(2024, 1, 1, 0), datetime.datetime(2024, 1, 1, 23), b
     )
     # inclusive bound: rows at exactly midnight qualify, intraday too
-    b = sort_bounds("ts >= DATE '2024-01-02'", "ts")
+    b = all_bounds("ts >= DATE '2024-01-02'").get("ts")
     assert file_overlaps(
         datetime.datetime(2024, 1, 2, 1), datetime.datetime(2024, 1, 2, 23), b
     )
     # string-typed stats with datetime shape: same promotion, no [:10] cut
-    b = sort_bounds("ts > DATE '2024-01-02'", "ts")
+    b = all_bounds("ts > DATE '2024-01-02'").get("ts")
     assert file_overlaps("2024-01-02 01:00:00", "2024-01-02 23:00:00", b)
     # DATE column vs TIMESTAMP literal: date stat promotes to midnight
-    b = sort_bounds("d > TIMESTAMP '2024-01-02 05:00:00'", "d")
+    b = all_bounds("d > TIMESTAMP '2024-01-02 05:00:00'").get("d")
     assert not file_overlaps(
         datetime.date(2024, 1, 1), datetime.date(2024, 1, 2), b
     )
@@ -93,7 +93,7 @@ def test_large_int_bounds_compared_exactly():
     float cast — two distinct ints rounding to the same float could prove a
     false 'disjoint'."""
     lo = 2**55 + 1
-    b = sort_bounds(f"v > {lo}", "v")
+    b = all_bounds(f"v > {lo}").get("v")
     assert b.lo == lo and not b.lo_inclusive
     # fmax = lo+1 > lo: file overlaps; float(lo+1) == float(lo) would skip it
     assert file_overlaps(2**55 - 10, lo + 1, b)
@@ -275,7 +275,7 @@ if _HAVE_HYP:
     @settings(max_examples=300, deadline=None)
     def test_skipped_file_has_no_matching_row(conjs, fmin, fspan, probe):
         where = " AND ".join(conjs)
-        bounds = sort_bounds(where, "v")
+        bounds = all_bounds(where).get("v")
         if bounds is None:
             return  # no skipping — trivially sound
         fmax = fmin + fspan
@@ -316,12 +316,12 @@ def test_frontdoor_select_uses_zonemap_and_explain_reports_files(spark, mpp):
 
 
 def test_bounds_in_list_envelope():
-    b = sort_bounds("v IN (7, 3, 12)", "v")
+    b = all_bounds("v IN (7, 3, 12)").get("v")
     assert (b.lo, b.hi) == (3, 12)
     # non-literal element → no envelope from this conjunct
-    assert sort_bounds("v IN (3, x)", "v") is None
+    assert all_bounds("v IN (3, x)").get("v") is None
     # other column's IN must not constrain
-    assert sort_bounds("w IN (3, 5)", "v") is None
+    assert all_bounds("w IN (3, 5)").get("v") is None
 
 
 def test_all_column_skipping_without_sort_by(spark, mpp):
@@ -362,8 +362,6 @@ def test_multi_column_conjunct_skipping(spark, mpp):
 
 
 def test_all_bounds_ignores_col_vs_col_and_keywords():
-    from duckdb_mpp_spark.zonemap import all_bounds
-
     b = all_bounds("a < b AND c = 5 AND d IS NOT NULL AND e LIKE 'x%'", set())
     assert set(b) == {"c"}
     assert b["c"].lo == 5 and b["c"].hi == 5
@@ -377,18 +375,18 @@ def test_bounds_or_precedence_disables_all():
     """review r4: AND binds tighter than OR, so `x = 10 AND v > 5 OR b = 1`
     is a DISJUNCTION — no comparison in it is a required conjunct and no
     bound may be derived from any of them."""
-    assert sort_bounds("x = 10 AND v > 5 OR b = 1", "v") is None
-    assert sort_bounds("v > 5 AND x = 1 OR v < 2", "v") is None
+    assert all_bounds("x = 10 AND v > 5 OR b = 1").get("v") is None
+    assert all_bounds("v > 5 AND x = 1 OR v < 2").get("v") is None
     # a parenthesized OR under a top-level AND stays one ignorable conjunct
-    b = sort_bounds("(a > 5 OR b = 1) AND v = 10", "v")
+    b = all_bounds("(a > 5 OR b = 1) AND v = 10").get("v")
     assert (b.lo, b.hi) == (10, 10)
 
 
 def test_mixed_type_conjuncts_do_not_crash():
     """review r4: `v > 5 AND v > '7'` is legal SQL (Spark coerces) — bounds
     extraction must degrade to no-skipping, not raise TypeError."""
-    assert sort_bounds("v > 5 AND v > '7'", "v") is None
-    assert sort_bounds("v = 5 AND v = DATE '2024-01-02'", "v") is None
+    assert all_bounds("v > 5 AND v > '7'").get("v") is None
+    assert all_bounds("v = 5 AND v = DATE '2024-01-02'").get("v") is None
 
 
 def test_file_overlaps_naive_vs_aware_keeps_file():
