@@ -271,7 +271,7 @@ _QUERY_SHAPES = {
         "{T}.",
     ),
     "derived_table_rename": (
-        "SELECT * FROM (SELECT c0 + 1 AS c0, c1 FROM {T}) s WHERE {P}", ""
+        "SELECT * FROM (SELECT length(c1) AS c0, c1 FROM {T}) s WHERE {P}", ""
     ),
     "select_alias_shadows_column": ("SELECT c0 AS c1 FROM {T} WHERE {P}", ""),
     "cte_body": (
@@ -295,15 +295,17 @@ _QUERY_SHAPES = {
 }
 
 
+# two fixed predicates that the unsafe shapes used to prune on wrongly:
+# c0 IS NULL (derived rename, outer join, backtick second reference) and
+# c1 IS NULL (a select alias of c0 named c1)
 @settings(
-    max_examples=4,
+    max_examples=2,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(pred=_pred)
-@example(pred="c0 = 2")
 @example(pred="c0 IS NULL")
-@example(pred="c1 = 'apple'")
+@example(pred="c1 IS NULL")
 def test_query_shapes_never_lose_rows_to_pruning(table, pred):
     """For ANY predicate in EVERY query shape, the front door (bucket
     pruning and zone maps active) returns exactly what the same SQL
