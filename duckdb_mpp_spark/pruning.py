@@ -7,7 +7,10 @@ an AND/OR tree of comparison atoms (``=``, ``<``, ``<=``, ``>``, ``>=``,
 ``IN``, ``BETWEEN``, ``IS NULL``; a literal-first comparison is flipped).
 An AND operand the grammar cannot read exactly — a function call,
 arithmetic, ``NOT``, a column on both sides, anything trailing a
-comparison — becomes an ``unknown`` atom for that operand only. Each atom
+comparison, a parenthesized subquery — becomes an ``unknown`` atom for
+that operand only. Comments are whitespace; text Spark may lex other
+than we do (a double-quoted string, a backtick identifier, a nested
+block comment) makes the whole WHERE unreadable. Each atom
 keeps its literal tokens: :func:`bucket_predicate` hashes their SQL text,
 ``zonemap.all_bounds`` folds their values (:func:`_parse_literal_value`)
 into per-column ranges. Both resolve column names through
@@ -54,8 +57,10 @@ from pyspark.sql import SparkSession
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
-      (?P<string>'(?:[^']|'')*')
-    | (?P<typed>(?:DATE|TIMESTAMP|INTERVAL)\s+'(?:[^']|'')*')
+      (?P<comment>--[^\n]*|/\*(?:(?!/\*)[\s\S])*?\*/)
+    | (?P<unreadable>["`]|/\*)
+    | (?P<string>'(?:[^'\\]|\\.|'')*')
+    | (?P<typed>(?:DATE|TIMESTAMP|INTERVAL)\s+'(?:[^'\\]|\\.|'')*')
     | (?P<number>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
     | (?P<op><=|>=|<>|!=|=|<|>)
     | (?P<lparen>\()
@@ -69,6 +74,11 @@ _TOKEN_RE = re.compile(
 
 
 def _tokenize(text: str) -> list[tuple[str, str]] | None:
+    """Lex a WHERE text as Spark does, or None. A comment is whitespace.
+    A double-quoted string, a backtick identifier and a nested or
+    unterminated block comment are unreadable: read as stray tokens they
+    would let text Spark never sees as a conjunct (``v = 1 /* /* */ AND
+    k = 5 */``, ``note = "a AND k = 5"``) prune buckets."""
     # rstrip: the token regex requires a non-space char after \s*, so an
     # unstripped predicate ("c0 = 1 ") would fail to tokenize and silently
     # disable pruning/skipping for a cosmetic reason (review r4)
@@ -76,13 +86,11 @@ def _tokenize(text: str) -> list[tuple[str, str]] | None:
     out, pos = [], 0
     while pos < len(text):
         m = _TOKEN_RE.match(text, pos)
-        if not m:
+        if not m or m.lastgroup == "unreadable":
             return None
         pos = m.end()
-        for kind, val in m.groupdict().items():
-            if val is not None:
-                out.append((kind, val))
-                break
+        if m.lastgroup != "comment":
+            out.append((m.lastgroup, m.group(m.lastgroup)))
         if pos == m.start():  # no progress
             return None
     return out
@@ -158,6 +166,10 @@ class _Parser:
             # could be a parenthesized boolean expr
             save = self.i
             self.next()
+            if self.at_word("SELECT", "WITH", "VALUES", "FROM", "TABLE"):
+                # a subquery: its WHERE speaks of its own relations
+                self.i = save
+                return self._skip_unknown()
             inner = self.parse_or()
             if self.peek() and self.peek()[0] == "rparen":
                 self.next()
@@ -300,7 +312,8 @@ def _parse_literal_value(kind: str, text: str):
         f = float(text)
         return int(text) if f.is_integer() and "." not in text and "e" not in text.lower() else f
     if kind == "string":
-        return text[1:-1].replace("''", "'")
+        # a backslash escape is Spark's to read; no value, so no bound
+        return None if "\\" in text else text[1:-1].replace("''", "'")
     if kind == "typed":
         head, _, rest = text.partition("'")
         inner = rest.rstrip()[:-1].replace("''", "'")

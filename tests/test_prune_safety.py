@@ -238,6 +238,57 @@ def test_table_name_in_literal_is_not_a_reference(mpp, spark):
     assert not spark.catalog.tableExists("pu")
 
 
+@pytest.fixture()
+def commented(mpp, spark):
+    """cm(k, v, note) with rows (i, i % 3, 'n<i>'), i in 0..39, over 8
+    buckets, and the same rows as the unpruned temp view ``cm_raw``."""
+    data = [(i, i % 3, f"n{i}") for i in range(40)]
+    mpp.sql("CREATE TABLE cm(k INT, v INT, note TEXT) PARTITION BY (k) WITH BUCKETS 8")
+    mpp.sql("INSERT INTO cm VALUES " + ", ".join(f"({k}, {v}, '{n}')" for k, v, n in data))
+    spark.createDataFrame(data, "k int, v int, note string").createOrReplaceTempView("cm_raw")
+    return mpp, spark
+
+
+# WHERE texts whose conjunct on k Spark never reads as one of the WHERE
+UNREAD_CONJUNCTS = {
+    "line_comment": "v = 1\n-- AND k = 5",
+    "nested_block_comment": "v = 1 /* /* */ AND k = 5 */",
+    "double_quoted_string": 'v = 1 AND note <> "a AND k = 5 AND b"',
+    "backslash_escaped_quote": "v = 1 AND note <> 'a\\' AND k = 5 AND b = '",
+    "scalar_subquery": "(SELECT count(*) > 0 FROM cm_raw WHERE v = 1 AND k = 4)",
+}
+
+
+@pytest.mark.parametrize("where", list(UNREAD_CONJUNCTS.values()), ids=list(UNREAD_CONJUNCTS))
+def test_select_does_not_prune_on_text_spark_does_not_read(commented, where):
+    mpp, spark = commented
+    q = "SELECT k FROM {} WHERE " + where
+    want = sorted(r[0] for r in rows(spark.sql(q.format("cm_raw"))))
+    assert len(want) > 1
+    assert sorted(r[0] for r in rows(mpp.sql(q.format("cm")))) == want
+
+
+@pytest.mark.parametrize("where", list(UNREAD_CONJUNCTS.values()), ids=list(UNREAD_CONJUNCTS))
+def test_delete_does_not_prune_on_text_spark_does_not_read(commented, where):
+    mpp, spark = commented
+    gone = rows(spark.sql("SELECT k FROM cm_raw WHERE " + where))
+    kept = sorted(r[0] for r in rows(spark.sql(
+        f"SELECT k FROM cm_raw WHERE NOT coalesce(({where}\n), false)"
+    )))
+    assert mpp.sql("DELETE FROM cm WHERE " + where) == len(gone)
+    assert sorted(r[0] for r in rows(mpp.sql("SELECT k FROM cm"))) == kept
+
+
+def test_comments_around_a_conjunct_keep_pruning(commented):
+    mpp, _ = commented
+    for q in (
+        "SELECT k FROM cm WHERE k = 5 -- the one key",
+        "SELECT k FROM cm WHERE /* key */ k = 5 AND v = 2",
+    ):
+        assert rows(mpp.sql(q)) == [(5,)]
+        assert _shards(mpp.sql("EXPLAIN " + q)) == "1/8"
+
+
 def test_inner_join_and_backtick_reference_keep_pruning(mpp, spark):
     mpp.sql("CREATE TABLE ij(k INT, v INT) PARTITION BY (k) WITH BUCKETS 8")
     mpp.sql("INSERT INTO ij VALUES " + ", ".join(f"({k}, {k})" for k in range(8)))

@@ -199,65 +199,14 @@ def test_zonemap_skipping_never_changes_results(gen_table, pred):
 
 
 _setop_kw = st.sampled_from(["UNION ALL", "UNION", "EXCEPT", "INTERSECT"])
-_templates = st.sampled_from([
-    # {T} = the distributed table's name in the front-door text and the
-    # raw view's name in the ground-truth text; every shape the r5 set-op
-    # guard must handle: WHERE in first leg, WHERE in later leg, table in
-    # either leg, comma-join with and without a space.
-    "SELECT c0 FROM {T} WHERE {P} {OP} SELECT c0 FROM tvx",
-    "SELECT c0 FROM tvx WHERE {P} {OP} SELECT c0 FROM {T}",
-    "SELECT c0 FROM {T} {OP} SELECT c0 FROM tvx WHERE {P}",
-    "SELECT c0 FROM tvx {OP} SELECT c0 FROM {T} WHERE {P}",
-    "SELECT {T}.c0 AS c0 FROM tvx,{T} WHERE {P}",
-    "SELECT {T}.c0 AS c0 FROM tvx, {T} WHERE {P}",
-    "SELECT c0 FROM {T} WHERE {P} {OP} SELECT {T}.c0 FROM tvx,{T}",
-    # CTE indirection (ADVICE r5): the CTE body feeds EVERY leg, so a
-    # WHERE in any one leg must never prune the CTE's source table.
-    "WITH x AS (SELECT c0, c1 FROM {T}) "
-    "SELECT c0 FROM x WHERE {P} {OP} SELECT c0 FROM x",
-    "WITH x AS (SELECT c0, c1 FROM {T}) "
-    "SELECT c0 FROM x {OP} SELECT c0 FROM x WHERE {P}",
-    # CTE renames the partition column: pruning the source on the main
-    # WHERE would restrict on the WRONG values even without a set-op.
-    "WITH x AS (SELECT c0 + 100 AS c0, c1 FROM {T}) "
-    "SELECT c0 FROM x WHERE {P}",
-])
 
-
-@settings(
-    max_examples=30,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(pred=_atom, op=_setop_kw, tmpl=_templates)
-def test_setop_shapes_never_lose_rows_to_pruning(table, pred, op, tmpl):
-    """review r5 regression class, generalized: for ANY set-op shape and
-    ANY predicate, the front door (with bucket pruning / zone maps active)
-    must return exactly what the same query over the raw unbucketed data
-    returns — pruning may only skip buckets a leg cannot touch."""
-    mpp, spark = table
-    spark.createDataFrame(
-        [(5, "mango"), (-2, "apple"), (None, "kiwi")], "c0 int, c1 string"
-    ).createOrReplaceTempView("tvx")
-    if ",{T}" in tmpl or ", {T}" in tmpl:
-        # comma-join legs see BOTH relations — qualify the predicate's
-        # column refs or Spark rejects them as ambiguous (both tables
-        # carry c0/c1; the fruit literals contain no such substring)
-        pred = pred.replace("c0", "{T}.c0").replace("c1", "{T}.c1")
-    q_mpp = tmpl.replace("{T}", "p").format(P=pred.replace("{T}", "p"), OP=op)
-    q_raw = tmpl.replace("{T}", "p_raw").format(
-        P=pred.replace("{T}", "p_raw"), OP=op
-    )
-    key = lambda t: tuple((x is None, str(x)) for x in t)
-    got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
-    want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
-    assert got == want, f"{q_mpp!r}: {got} != {want}"
-
-
-# Every query shape the front door's prune rule must judge: {T} is the
-# table (``p`` for the front door, ``p_raw`` for the ground truth), {P} the
-# predicate with its column refs qualified by the shape's prefix.
-_QUERY_SHAPES = {
+# Every query shape the front door's prune rule must judge, as (template,
+# qualifier): {T} is the distributed table's name in the front-door text
+# and the raw view's name in the ground-truth text, {OP} a set operator,
+# {P} the predicate with its column refs prefixed by the qualifier (a
+# shape that sees two relations must qualify them, or Spark rejects them
+# as ambiguous; the fruit literals contain neither c0 nor c1).
+_SHAPES = {
     "plain": ("SELECT c0, c1 FROM {T} WHERE {P}", ""),
     "from_alias": ("SELECT a.c0, a.c1 FROM {T} a WHERE {P}", "a."),
     "inner_join": (
@@ -274,15 +223,6 @@ _QUERY_SHAPES = {
         "SELECT * FROM (SELECT length(c1) AS c0, c1 FROM {T}) s WHERE {P}", ""
     ),
     "select_alias_shadows_column": ("SELECT c0 AS c1 FROM {T} WHERE {P}", ""),
-    "cte_body": (
-        "WITH x AS (SELECT c0, c1 FROM {T}) SELECT c0 FROM x WHERE {P}", ""
-    ),
-    "setop_leg1": (
-        "SELECT c0 FROM {T} WHERE {P} UNION ALL SELECT c0 FROM tvx", ""
-    ),
-    "setop_leg2": (
-        "SELECT c0 FROM tvx UNION ALL SELECT c0 FROM {T} WHERE {P}", ""
-    ),
     "self_join": (
         "SELECT a.c0, b.c1 FROM {T} a JOIN {T} b ON a.c0 = b.c0 + 1 WHERE {P}",
         "a.",
@@ -292,39 +232,92 @@ _QUERY_SHAPES = {
         "AND NOT EXISTS (SELECT 1 FROM `{T}` s WHERE s.c0 = 13)",
         "",
     ),
+    # text Spark never reads as a conjunct: a commented-out condition, a
+    # double-quoted string, a subquery's own WHERE
+    "commented_out_conjunct": (
+        "SELECT c0, c1 FROM {T} WHERE {P}\n  -- AND c0 = 13\n", ""
+    ),
+    "block_commented_conjunct": (
+        "SELECT c0, c1 FROM {T} WHERE {P} /* AND c0 = 13 */", ""
+    ),
+    "double_quoted_string": (
+        'SELECT c0, c1 FROM {T} WHERE {P} AND "x AND c0 = 13 AND y" <> c1', ""
+    ),
+    "scalar_subquery_where": (
+        "SELECT c0, c1 FROM {T} WHERE "
+        "(SELECT count(*) > 0 FROM tvx WHERE c1 IS NOT NULL AND {P})",
+        "",
+    ),
+    # set-op legs: WHERE in either leg, table in either leg, comma-joins
+    "setop_leg1": ("SELECT c0 FROM {T} WHERE {P} {OP} SELECT c0 FROM tvx", ""),
+    "setop_leg1_other_table": (
+        "SELECT c0 FROM tvx WHERE {P} {OP} SELECT c0 FROM {T}", ""
+    ),
+    "setop_leg2_other_table": (
+        "SELECT c0 FROM {T} {OP} SELECT c0 FROM tvx WHERE {P}", ""
+    ),
+    "setop_leg2": ("SELECT c0 FROM tvx {OP} SELECT c0 FROM {T} WHERE {P}", ""),
+    "comma_join": ("SELECT {T}.c0 AS c0 FROM tvx,{T} WHERE {P}", "{T}."),
+    "comma_join_space": ("SELECT {T}.c0 AS c0 FROM tvx, {T} WHERE {P}", "{T}."),
+    "setop_comma_join_leg2": (
+        "SELECT c0 FROM {T} WHERE {P} {OP} SELECT {T}.c0 FROM tvx,{T}", "{T}."
+    ),
+    # a CTE body feeds every consumer, so no WHERE prunes its source
+    "cte_body": (
+        "WITH x AS (SELECT c0, c1 FROM {T}) SELECT c0 FROM x WHERE {P}", ""
+    ),
+    "cte_setop_leg1": (
+        "WITH x AS (SELECT c0, c1 FROM {T}) "
+        "SELECT c0 FROM x WHERE {P} {OP} SELECT c0 FROM x",
+        "",
+    ),
+    "cte_setop_leg2": (
+        "WITH x AS (SELECT c0, c1 FROM {T}) "
+        "SELECT c0 FROM x {OP} SELECT c0 FROM x WHERE {P}",
+        "",
+    ),
+    "cte_rename": (
+        "WITH x AS (SELECT c0 + 100 AS c0, c1 FROM {T}) "
+        "SELECT c0 FROM x WHERE {P}",
+        "",
+    ),
 }
+_templates = st.sampled_from(list(_SHAPES.values()))
 
 
-# two fixed predicates that the unsafe shapes used to prune on wrongly:
-# c0 IS NULL (derived rename, outer join, backtick second reference) and
-# c1 IS NULL (a select alias of c0 named c1)
 @settings(
-    max_examples=2,
+    max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(pred=_pred)
-@example(pred="c0 IS NULL")
-@example(pred="c1 IS NULL")
-def test_query_shapes_never_lose_rows_to_pruning(table, pred):
-    """For ANY predicate in EVERY query shape, the front door (bucket
-    pruning and zone maps active) returns exactly what the same SQL
-    returns over unpruned temp views of the raw rows: a WHERE prunes only
-    the one table its FROM clause names, never a self-joined, derived,
-    CTE-fed or outer-joined one, nor through a select alias."""
+@given(pred=_pred, op=_setop_kw, tmpl=_templates)
+# the shapes that once pruned wrongly, each on a predicate that shows it
+@example(pred="c0 IS NULL", op="UNION", tmpl=_SHAPES["derived_table_rename"])
+@example(pred="c0 IS NULL", op="UNION", tmpl=_SHAPES["left_join_nullable_side"])
+@example(pred="c0 IS NULL", op="UNION", tmpl=_SHAPES["backtick_second_ref"])
+@example(pred="c1 IS NULL", op="UNION", tmpl=_SHAPES["select_alias_shadows_column"])
+@example(pred="c1 = 'apple'", op="UNION", tmpl=_SHAPES["commented_out_conjunct"])
+@example(pred="c1 = 'apple'", op="UNION", tmpl=_SHAPES["double_quoted_string"])
+@example(pred="c0 = 5", op="UNION", tmpl=_SHAPES["scalar_subquery_where"])
+def test_setop_shapes_never_lose_rows_to_pruning(table, pred, op, tmpl):
+    """For ANY predicate in ANY query shape — set-op legs, joins, derived
+    tables, CTEs, aliases, second references, comments — the front door
+    (bucket pruning and zone maps active) returns exactly what the same
+    SQL returns over unpruned temp views of the raw rows: a WHERE prunes
+    only the one table its FROM clause names, and only on the conjuncts
+    Spark reads."""
     mpp, spark = table
     spark.createDataFrame(
         [(5, "mango"), (-2, "apple"), (None, "kiwi")], "c0 int, c1 string"
     ).createOrReplaceTempView("tvx")
+    tmpl, qual = tmpl
+    q = tmpl.replace("{P}", pred.replace("c0", qual + "c0").replace("c1", qual + "c1"))
+    q = q.replace("{OP}", op)
+    q_mpp, q_raw = q.replace("{T}", "p"), q.replace("{T}", "p_raw")
     key = lambda t: tuple((x is None, str(x)) for x in t)
-    for shape, (tmpl, qual) in _QUERY_SHAPES.items():
-        # the fruit literals contain neither c0 nor c1
-        p = pred.replace("c0", qual + "c0").replace("c1", qual + "c1")
-        q_mpp = tmpl.replace("{P}", p).replace("{T}", "p")
-        q_raw = tmpl.replace("{P}", p).replace("{T}", "p_raw")
-        got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
-        want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
-        assert got == want, f"{shape}: {q_mpp!r}: {got} != {want}"
+    got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
+    want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
+    assert got == want, f"{q_mpp!r}: {got} != {want}"
 
 
 def test_partition_column_update_keeps_pruned_reads_exact(spark):
