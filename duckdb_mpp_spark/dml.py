@@ -18,10 +18,14 @@ exactly ONCE per DML — no separate count pass. When the predicate matches
 nothing the stage is discarded and the table is left untouched (no
 spurious file-generation churn, rowids stay stable).
 
-Semantics matched deliberately:
-- Updating the partition column does NOT re-route rows to new buckets —
-  reference shard-local UPDATE keeps rows on their shard
-  (``test/sql/mpp_update.test:63`` updates the partition column in place).
+Semantics:
+- Updating the partition column MOVES each updated row to the bucket its
+  new value hashes to, so ``bucket = pmod(hash(col), n)`` holds for every
+  row and pruning needs no fallback. The reference's shard-local UPDATE
+  leaves the row on its shard (``test/sql/mpp_update.test:63``); SQL
+  results are the same, only placement and the moved row's shard-local
+  ``rowid`` differ. The rewrite still replaces only the buckets it read:
+  moved rows join their home bucket's files.
 - A NULL predicate result neither updates nor deletes the row (SQL 3VL).
 - ``DEFAULT`` in a SET list resolves to the column's declared default or
   NULL (``ResolveDefaults``, ``src/execution/mpp_physical_insert.cpp:150-181``).
@@ -69,10 +73,8 @@ def _observed_matched(obs: Observation, df, pred) -> int:
         return df.where(pred).count()
 
 
-def _assert_deterministic_assignment(
-    scan_df, text: str, col: str, what: str = "assignment"
-) -> None:
-    """UNIQUE enforcement for COW rewrites validates the operation's new
+def _assert_deterministic_assignment(scan_df, col: str, text: str) -> None:
+    """UNIQUE enforcement for COW UPDATE validates the operation's new
     values by re-deriving them from the base scan (the staged files mix
     modified rows with carried-through survivors, so they cannot supply a
     modified-only side). Re-derivation is only sound when every expression
@@ -83,9 +85,10 @@ def _assert_deterministic_assignment(
     which applies to EVERY COW rewrite, not only unique-assigned ones)."""
     if not _is_deterministic(scan_df, text):
         raise ValueError(
-            f"nondeterministic {what} ({text!r}) is not supported when a "
-            f"unique column ({col!r}) is assigned: the constraint check "
-            "would validate a different evaluation than the one committed"
+            f"nondeterministic assignment to {col!r} ({text!r}) is not "
+            "supported in an UPDATE that checks a unique column: the "
+            "constraint check would validate a different evaluation than "
+            "the one committed"
         )
 
 
@@ -114,48 +117,21 @@ def _assert_deterministic_where(scan_df, where: str) -> None:
         )
 
 
-def _dml_bucket_ids(
-    table: DistributedTable,
-    where: str | None,
-    dirty: list[int],
-    files: dict[str, dict],
-) -> list[int]:
-    """Buckets a COW rewrite must touch: the pruning survivors for
-    ``where``, plus only those routing-dirty buckets that actually HOLD a
-    matching row. Blindly widening to every dirty bucket made each
-    subsequent UPDATE/DELETE rewrite their full contents forever until
-    OPTIMIZE (review r6 — the same write-amplification hole upsert's probe
-    closed); the probe is one cheap job over the dirty buckets only, and
-    clean tables never run it."""
-    ids = table.pruned_bucket_ids(where, dirty=[])
-    extra = sorted(set(dirty) - set(ids))
-    if not extra or where is None:
-        return ids
-    hits = (
-        table.read_buckets(files, extra)
-        .where(F.coalesce(F.expr(where), F.lit(False)))
-        .select(BUCKET_COL)
-        .distinct()
-        .collect()
-    )
-    return sorted(set(ids) | {r[0] for r in hits})
-
-
 def _rewrite_matched(
     table: DistributedTable, where: str | None, rewrite, check=None
 ) -> int:
     """The copy-on-write body UPDATE and DELETE share → matched-row count.
 
-    Reads the touched buckets (``_dml_bucket_ids``) of ONE snapshot, stages
-    ``rewrite(scan, pred)`` — the rows those buckets keep, ``__bucket``
-    included — and publishes them in place of the buckets' files. The
-    count is an ``Observation`` on the staging job, taken BEFORE
-    ``rewrite`` so it counts matched rows even when ``rewrite`` filters
-    them out. ``check(scan, pred, files, dirty, ids)`` runs between stage
-    and commit: it raises to abort, and returns the new snapshot's
-    routing-dirty set (None inherits the base's)."""
-    base, files, dirty = table.snapshot_full()
-    ids = _dml_bucket_ids(table, where, dirty, files)
+    Reads the buckets ``where`` can match (``pruned_bucket_ids``) of ONE
+    snapshot, stages ``rewrite(scan, pred)`` — the rows those buckets keep,
+    each with the ``__bucket`` its partition value hashes to — and
+    publishes them in place of the buckets' files. The count is an
+    ``Observation`` on the staging job, taken BEFORE ``rewrite`` so it
+    counts matched rows even when ``rewrite`` filters them out.
+    ``check(scan, pred, files)`` runs between stage and commit and raises
+    to abort."""
+    base, files = table.snapshot()
+    ids = table.pruned_bucket_ids(where)
     if not files or not ids:
         return 0
     # reads the files of the SAME snapshot the commit below is based on —
@@ -187,8 +163,9 @@ def _rewrite_matched(
         matched = _observed_matched(obs, scan, pred)
         if matched == 0:
             return 0
-        new_dirty = check(scan, pred, files, dirty, ids) if check else None
-        table._commit(ingest(), base, files, replaced=ids, dirty=new_dirty)
+        if check:
+            check(scan, pred, files)
+        table._commit(ingest(), base, files, replaced=ids)
     return matched
 
 
@@ -204,6 +181,12 @@ def update(
         for col, text in assignments.items()
     }
 
+    # Assigning the partition column moves rows (module docstring); a
+    # STRUCT-typed partition column ('s.a') is re-valued by assigning its
+    # top-level field ('s').
+    part_top = meta.partition_column.split(".", 1)[0]
+    moving = {meta.partition_column, part_top} & set(texts)
+
     def rewrite(scan, pred):
         out_cols = [
             F.when(pred, F.expr(texts[f.name]).cast(f.dataType))
@@ -213,54 +196,45 @@ def update(
             else F.col(f.name)
             for f in meta.schema.fields
         ]
-        return table._not_null_checked(scan.select(*out_cols, BUCKET_COL), texts)
+        out = scan.select(*out_cols, BUCKET_COL)
+        # A row whose partition value stays keeps its (exact) bucket; the
+        # re-routing projection costs ~25 ms a statement, so only a moving
+        # UPDATE pays it.
+        out = table.route(out) if moving else out
+        return table._not_null_checked(out, texts)
 
-    def check(scan, pred, files, dirty, ids):
-        for col in meta.unique_columns:
-            if col not in texts:
-                continue
-            # The modified side is re-derived from the base scan (pred +
-            # the assignment expression), NOT read back from the staged
-            # files — staged files mix modified rows with carried-through
-            # survivors, and flagging survivors as operation-owned aborted
-            # unrelated UPDATEs on pre-existing duplicates (ADVICE r7,
-            # extended to the bucket-local columns in r8). Re-derivation
-            # requires the assignment to be deterministic (review r8); the
-            # WHERE predicate partitions BOTH sides, and was checked before
-            # staging (review r8b).
-            _assert_deterministic_assignment(scan, texts[col], col)
-            dt = meta.schema[col].dataType
-            modified = scan.where(pred).select(
-                BUCKET_COL, F.expr(texts[col]).cast(dt).alias(col)
-            )
-            # The partition-column constraint is value-GLOBAL (table.py
-            # _enforce_unique): SET k = 1 lands the new value in a bucket
-            # the rewrite never touched, so its others side covers the
-            # whole table. Every other unique column is bucket-local and —
-            # because the rewrite never re-routes — both sides restrict to
-            # the rewritten buckets (review r8; _dml_bucket_ids guarantees
-            # pred-matching rows live only in ids).
-            is_global = col == meta.partition_column
-            base_rows = table.read_buckets(files) if is_global else scan
-            # pred is NULL-coalesced to false, so ~pred is exactly the
-            # not-updated rows (their values survive the rewrite)
-            others = base_rows.where(~pred).select(BUCKET_COL, col)
+    def check(scan, pred, files):
+        # A moved row carries even its UNASSIGNED unique values into its
+        # new bucket, so a moving UPDATE checks every unique column; an
+        # in-place one only those it assigns.
+        cols = [c for c in meta.unique_columns if moving or c in texts]
+        if not cols:
+            return
+        # The modified side is re-derived from the base scan (pred + the
+        # assignments, routed like the staged rows), NOT read back from
+        # the staged files — staged files mix modified rows with
+        # carried-through survivors, and flagging survivors as
+        # operation-owned aborted unrelated UPDATEs on pre-existing
+        # duplicates (ADVICE r7). Re-derivation requires every assignment
+        # it replays to be deterministic (review r8); the WHERE predicate
+        # partitions BOTH sides, and was checked before staging (review
+        # r8b).
+        for col in sorted((set(cols) | moving) & set(texts)):
+            _assert_deterministic_assignment(scan, col, texts[col])
+        modified = rewrite(scan.where(pred), F.lit(True))
+        # Rows stay in the buckets read unless they move; a moved row can
+        # land in any bucket, so its others side is the whole table. pred
+        # is NULL-coalesced to false, so ~pred is exactly the not-updated
+        # rows (pruning guarantees no row outside ``scan`` matches).
+        base_rows = table.read_buckets(files) if moving else scan
+        others = base_rows.where(~pred)
+        for col in cols:
             check_unique_sides(
-                meta.name, col, modified, others, bucket_local=not is_global
+                meta.name,
+                col,
+                modified.select(BUCKET_COL, col),
+                others.select(BUCKET_COL, col),
             )
-        # Assigning the partition column keeps rows in their bucket
-        # (reference shard-local semantics, see module docstring) — which
-        # breaks the bucket == pmod(hash(col), n) invariant pruning relies
-        # on. Flag every rewritten bucket routing-dirty so pruned reads keep
-        # including them (wrong-results class caught by
-        # tests/test_pruning_property.py r6); OPTIMIZE/compact re-routes and
-        # clears. A STRUCT-typed partition column ('s.a') is re-valued by
-        # assigning its top-level field ('s'), so match on the top-level
-        # name too (review r6).
-        part_top = meta.partition_column.split(".", 1)[0]
-        if meta.partition_column in texts or part_top in texts:
-            return sorted(set(dirty) | set(ids))
-        return None
 
     return _rewrite_matched(table, where, rewrite, check)
 
@@ -301,7 +275,7 @@ def upsert(
         if c not in [f.name for f in meta.schema.fields]:
             raise ValueError(f"unknown key column {c!r}")
 
-    base, snap_files, dirty0 = table.snapshot_full()
+    base, snap_files = table.snapshot()
     # localCheckpoint: the input batch is evaluated exactly ONCE — the
     # bucket-discovery count and the staged union both read the
     # materialized blocks, so a computed input pipeline (or a re-readable
@@ -319,26 +293,7 @@ def upsert(
     applied = sum(r[1] for r in per_bucket)
     if not per_bucket:
         return 0
-    batch_ids = {r[0] for r in per_bucket}
-    # Routing-dirty buckets (partition-column UPDATE history — see
-    # routing_dirty_ids) may hold a matching key that no longer hashes to
-    # its bucket; bucket-local matching must look there too or the merge
-    # would duplicate the key. But REWRITING every dirty bucket on every
-    # merge forever would be unbounded write amplification for a one-time
-    # UPDATE (review r6) — probe which dirty buckets actually contain a
-    # matching key (one cheap semi-join, dirty buckets only) and widen the
-    # rewrite set to just those. Clean tables: no probe, no widening.
-    dirty_extra = sorted(set(dirty0) - batch_ids)
-    if dirty_extra:
-        hit = (
-            table.read_buckets(snap_files, dirty_extra)
-            .join(new_rows.select(*key_cols).distinct(), key_cols, "left_semi")
-            .select(BUCKET_COL)
-            .distinct()
-            .collect()
-        )
-        batch_ids |= {r[0] for r in hit}
-    ids = sorted(batch_ids)
+    ids = sorted(r[0] for r in per_bucket)
 
     # the commit's base snapshot — see _rewrite_matched
     existing = table.read_buckets(snap_files, ids)
@@ -366,32 +321,22 @@ def upsert(
     with table._staged(spread_for_bucket_write(staged, len(ids), split)) as ingest:
         if meta.unique_columns:
             # The modified side is the (checkpointed) input batch itself —
-            # values fixed, no re-evaluation hazard. partition-column
-            # constraint stays value-GLOBAL (review r6, live repro): with a
-            # COMPOSITE upsert key, a misplaced row in a dirty bucket can
-            # share the partition value but differ on the other key fields
-            # — it is then neither replaced (full-key match fails) nor
-            # visible bucket-locally; its surviving value rides the global
-            # others side. Every other unique column is bucket-local:
-            # routed input rows collide only within their own bucket, so
-            # both sides restrict to the rewritten buckets (``existing`` is
-            # exactly that). Survivor-only duplicate groups no longer abort
-            # (ADVICE r7, extended to bucket-local in r8).
-            keys = new_rows.select(*key_cols).distinct()
+            # values fixed, no re-evaluation hazard. Routed input rows
+            # collide only within their own bucket, so both sides restrict
+            # to the rewritten buckets (``existing`` is exactly that) — on
+            # the partition column too, where equal values share a bucket:
+            # an existing row with the batch's partition value but another
+            # composite key is neither replaced nor missed. Survivor-only
+            # duplicate groups never abort (ADVICE r7).
+            others = existing.join(
+                new_rows.select(*key_cols).distinct(), key_cols, "left_anti"
+            )
             for col in meta.unique_columns:
-                is_global = col == meta.partition_column
-                base_rows = (
-                    table.read_buckets(snap_files) if is_global else existing
-                )
-                others = base_rows.join(
-                    keys, key_cols, "left_anti"
-                ).select(BUCKET_COL, col)
                 check_unique_sides(
                     meta.name,
                     col,
                     modified=new_rows.select(BUCKET_COL, col),
-                    others=others,
-                    bucket_local=not is_global,
+                    others=others.select(BUCKET_COL, col),
                 )
         table._commit(
             ingest(), base, snap_files, replaced=ids, stream_batch=stream_batch
@@ -405,7 +350,7 @@ def delete(table: DistributedTable, where: str | None = None) -> int:
         return _rewrite_matched(table, where, lambda scan, pred: scan.where(~pred))
     # delete-all: metadata-only — count from the snapshot and publish an
     # empty one. No scan job, no file deletion (vacuum reclaims).
-    base, files, _dirty = table.snapshot_full()
+    base, files = table.snapshot()
     if not files:
         return 0
     table._commit({}, base, files, replaced=list(range(table.meta.buckets)))

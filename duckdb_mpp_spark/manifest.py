@@ -37,7 +37,10 @@ advisory cache over the directory listing):
 
 Format compatibility: a ``v*.json`` whose JSON object carries a ``buckets``
 key is a manifest list (format 2); a plain ``{relpath: entry}`` object is a
-legacy full snapshot (format 1) and stays readable.
+legacy full snapshot (format 1) and stays readable. Every row of a snapshot
+sits in the bucket its partition value hashes to; a manifest list with a
+non-empty ``dirty`` key was written before that held (``_misrouted``), and
+only OPTIMIZE reads it.
 
 Head agreement (ADVICE r3): readers and writers agree that the head is the
 latest *readable* version — ``current_version`` parses the head candidate,
@@ -236,7 +239,7 @@ def _resolve_doc(table_path: str, doc: dict) -> dict[str, dict] | None:
 
 def current_version(table_path: str) -> int:
     """Highest committed READABLE **and resolvable** snapshot version; 0 =
-    no commit yet. Agrees exactly with ``load`` on what the head is (ADVICE
+    no commit yet. Agrees exactly with ``load_full`` on what the head is (ADVICE
     r3): a torn head file written by external tooling is not the head, and
     neither is a manifest list whose bucket manifests are missing
     (partially-synced ``_commits``) — otherwise writers would base-check
@@ -250,8 +253,8 @@ def current_version(table_path: str) -> int:
 
 def _head(table_path: str) -> tuple[int, dict, dict[str, dict]] | None:
     """The newest readable AND resolvable version as ``(version, doc,
-    files)``, or None — the one head rule ``current_version``, ``load_full``,
-    ``dirty_buckets`` and ``applied_stream_batch`` share."""
+    files)``, or None — the one head rule ``current_version``, ``load_full``
+    and ``applied_stream_batch`` share."""
     for v in reversed(_list_versions(table_path)):
         doc = _read_version_doc(table_path, v)
         files = _resolve_doc(table_path, doc) if doc is not None else None
@@ -280,25 +283,6 @@ def _bucket_of(rel: str) -> str:
     return rel.split("/", 1)[0]
 
 
-def dirty_buckets(table_path: str, version: int | None = None) -> list[int]:
-    """Bucket ids flagged *routing-dirty* in a snapshot: they may hold rows
-    whose partition-column value no longer hashes to their bucket (an
-    UPDATE assigned the partition column; reference parity keeps such rows
-    on their shard — ``test/sql/mpp_update.test:63``). Bucket pruning must
-    always include these buckets or pruned reads silently lose the
-    re-valued rows; ``compact()`` re-routes and clears the flag.
-
-    ``version=None`` reads the head, with the same readable-AND-resolvable
-    head rule as ``load``/``current_version`` — the dirty set must describe
-    the snapshot readers actually plan from."""
-    if version is not None:
-        doc = _read_version_doc(table_path, version)
-    else:
-        head = _head(table_path)
-        doc = head[1] if head else None
-    return sorted(int(b) for b in (doc or {}).get("dirty", []))
-
-
 # Stream-map retention horizon (review r7): entries a lineage has not
 # refreshed within this many commits are pruned at the next commit, so
 # snapshot metadata is O(#lineages active in the horizon), not O(#lineages
@@ -324,7 +308,7 @@ def applied_stream_batch(table_path: str, lineage: str) -> int | None:
     """Highest streaming micro-batch id recorded as applied for checkpoint
     ``lineage`` (see ``commit(stream_batch=…)``); None when no batch of
     that lineage has ever committed. Reads the head snapshot doc with the
-    same readable-AND-resolvable rule as ``load`` — replay detection must
+    same readable-AND-resolvable rule as ``load_full`` — replay detection must
     describe the snapshot a re-delivered batch would actually append to."""
     head = _head(table_path)
     val = (head[1].get("stream") or {}).get(str(lineage)) if head else None
@@ -335,17 +319,9 @@ def commit(
     table_path: str,
     files: dict[str, dict],
     base_version: int,
-    dirty_buckets: "list[int] | None" = None,
     stream_batch: "tuple[str, int] | None" = None,
 ) -> int:
     """Publish ``files`` as the next snapshot after ``base_version``.
-
-    ``dirty_buckets``: routing-dirty bucket ids for the NEW snapshot —
-    ``None`` inherits the base snapshot's set (appends/deletes/rewrites
-    that neither create nor repair misplacement), a list replaces it
-    (``update`` widens it, ``compact`` clears it with ``[]``). Either way
-    ids whose bucket holds no files in the new snapshot are dropped — an
-    emptied bucket cannot hold misplaced rows.
 
     ``stream_batch`` = ``(lineage_id, batch_id)``: records that this
     snapshot contains the effects of streaming micro-batch ``batch_id``
@@ -389,14 +365,12 @@ def commit(
 
     # base bucket → manifest-name map (for unchanged-bucket reuse)
     base_map: dict[str, str] = {}
-    base_dirty: list[int] = []
     base_stream: "dict[str, tuple[int, int | None]]" = {}
     if base_version:
         base_doc = _read_version_doc(table_path, base_version)
         if base_doc is not None and "buckets" in base_doc:
             base_map = base_doc["buckets"]
         if base_doc is not None:
-            base_dirty = [int(b) for b in base_doc.get("dirty", [])]
             base_stream = {
                 str(k): _stream_entry(v)
                 for k, v in (base_doc.get("stream") or {}).items()
@@ -405,13 +379,6 @@ def commit(
     by_bucket: dict[str, dict[str, dict]] = {}
     for rel, ent in files.items():
         by_bucket.setdefault(_bucket_of(rel), {})[rel] = ent
-
-    if dirty_buckets is None:
-        dirty_buckets = base_dirty
-    live_ids = {
-        int(b.split("=", 1)[1]) for b in by_bucket if "=" in b
-    }
-    dirty = sorted({int(b) for b in dirty_buckets} & live_ids)
 
     bucket_manifests: dict[str, str] = {}
     for bucket, content in sorted(by_bucket.items()):
@@ -426,8 +393,6 @@ def commit(
     # content before the link — the loser must lose with ITS OWN file intact
     tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
     doc: dict = {"format": 2, "buckets": bucket_manifests}
-    if dirty:
-        doc["dirty"] = dirty
     stream: dict[str, tuple[int, int]] = {}
     for k, (bid, ver) in base_stream.items():
         # legacy bare-int entries carry no refresh version: date them at
@@ -455,26 +420,21 @@ def commit(
     return new_version
 
 
-def load(
-    table_path: str, bucket_col: str, sort_col: str | None
-) -> tuple[int, dict[str, dict]]:
-    """Current snapshot ``(version, {relpath: {rows, min, max}})`` —
-    see ``load_full`` (this drops the dirty set for callers that only
-    plan from the file list)."""
-    v, files, _dirty = load_full(table_path, bucket_col, sort_col)
-    return v, files
+def _misrouted(doc: dict) -> bool:
+    """Whether a version doc predates exact routing: docs written while a
+    partition-column UPDATE still left re-valued rows in their old bucket
+    carry a non-empty ``dirty`` list of such buckets. Pruning cannot trust
+    those snapshots; ``DistributedTable.snapshot`` refuses them and
+    OPTIMIZE re-routes every row into a clean snapshot."""
+    return bool(doc.get("dirty"))
 
 
 def load_full(
     table_path: str, bucket_col: str, sort_col: str | None
-) -> tuple[int, dict[str, dict], list[int]]:
-    """Current snapshot ``(version, {relpath: {rows, min, max}}, dirty)``.
-
-    ``dirty`` is the routing-dirty bucket list of the SAME version doc the
-    file list was resolved from — callers must never pair a file list with
-    a separately-resolved dirty set (a concurrent commit between the two
-    reads could clear the flag for files that still hold misplaced rows,
-    review r6).
+) -> tuple[int, dict[str, dict], bool]:
+    """Current snapshot ``(version, {relpath: {rows, min, max}},
+    misrouted)`` — ``misrouted`` per :func:`_misrouted`, from the same
+    version doc as the file list.
 
     The head is the latest READABLE version (a torn head file — only
     possible if written by something other than ``commit`` — falls back to
@@ -489,42 +449,37 @@ def load_full(
     crashed insert are never absorbed (ADVICE r3).
     """
     if not os.path.isdir(table_path):
-        return 0, {}, []
+        return 0, {}, False
     head = _head(table_path)
     if head is not None:
         v, doc, files = head
-        return v, files, sorted(int(b) for b in doc.get("dirty", []))
+        return v, files, _misrouted(doc)
     if os.path.isdir(_commits_path(table_path)) and not _list_versions(table_path):
-        return 0, {}, []  # snapshot-native table, nothing committed yet
+        return 0, {}, False  # snapshot-native table, nothing committed yet
     files = {
         rel: file_entry(os.path.join(table_path, rel), sort_col)
         for rel in _list_data_files(table_path, bucket_col)
     }
     if not files:
-        return 0, {}, []
+        return 0, {}, False
     # All-corrupt/unresolvable log (or none): base on the readable head —
     # 0 here, since any resolvable version would have returned above.
     # ``commit`` still publishes ABOVE the torn filenames via
     # max(listed + [base]) + 1, so the bootstrap cannot collide with them
     # and cannot raise a spurious CommitConflict (review r4). Bootstrap
-    # files were routed by hash at write time — never dirty.
+    # files were routed by hash at write time.
     try:
-        return commit(table_path, files, current_version(table_path)), files, []
+        return commit(table_path, files, current_version(table_path)), files, False
     except OSError:
-        return 0, files, []  # read-only storage: serve the listing, uncommitted
-
-
-def load_version(table_path: str, version: int) -> dict[str, dict]:
-    """Snapshot at an explicit version — time travel. Raises if that commit
-    has been vacuumed away (or never existed)."""
-    return load_version_full(table_path, version)[0]
+        return 0, files, False  # read-only storage: serve the listing, uncommitted
 
 
 def load_version_full(
     table_path: str, version: int
-) -> tuple[dict[str, dict], list[int]]:
-    """Time-travel snapshot ``(files, dirty)`` — both from the one version
-    doc, so the dirty set always describes exactly these files."""
+) -> tuple[dict[str, dict], bool]:
+    """Time-travel snapshot ``(files, misrouted)`` — both from the one
+    version doc. Raises if that commit has been vacuumed away (or never
+    existed)."""
     doc = _read_version_doc(table_path, version)
     files = _resolve_doc(table_path, doc) if doc is not None else None
     if files is None:
@@ -532,7 +487,7 @@ def load_version_full(
             f"no snapshot v{version} for {table_path} "
             f"(existing: {_list_versions(table_path) or 'none'})"
         )
-    return files, sorted(int(b) for b in doc.get("dirty", []))
+    return files, _misrouted(doc)
 
 
 def vacuum(
@@ -559,7 +514,7 @@ def vacuum(
     default 5 minutes; pass 0 for trust-single-writer). Files referenced
     by a PRUNED snapshot are known-committed garbage and reclaimed
     immediately regardless of age."""
-    load(table_path, bucket_col, sort_col)  # materialize a bootstrap commit if needed
+    load_full(table_path, bucket_col, sort_col)  # materialize a bootstrap commit if needed
     # Retention is decided over RESOLVABLE versions only (review r4): a
     # torn/partially-synced head must never shadow the snapshot readers
     # actually fall back to — counting it toward ``keep_commits`` could

@@ -42,18 +42,18 @@ BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
 def _tokens_sql(col_sql: str) -> str:
-    """SQL-string form of :func:`tokens` — same expression tree, parsed
-    JVM-side in ONE py4j round trip. The Column build (filter + lambda +
-    coalesce + cast) cost ~28 ms of driver wall per call and the family
-    is constructed ~19× per bench sweep (r13 construction-floor rework;
-    see dedup._simhash_bit_sums for the measurement)."""
+    """SQL text of :func:`tokens`, parsed JVM-side in ONE py4j round trip.
+    The equivalent Column build (filter + lambda + coalesce + cast) cost
+    ~28 ms of driver wall per call and the family is constructed ~19× per
+    bench sweep (r13 construction-floor rework; see
+    dedup._simhash_bit_sums for the measurement)."""
     return (
         f"coalesce(filter(split(lower(trim({col_sql})), ' '), x -> x != ''),"
         " CAST(array() AS array<string>))"
     )
 
 
-def tokens(col: Column | str) -> Column:
+def tokens(col: str) -> Column:
     """Whitespace tokens, lowercased, empties dropped (split on the literal
     space — the corpus is single-spaced; regex-free keeps both engines
     byte-identical). NULL text yields an EMPTY array, not NULL (review r4:
@@ -61,30 +61,18 @@ def tokens(col: Column | str) -> Column:
     which poisoned sequence-packing's cumulative offsets and produced
     out-of-range repetition fractions for fetch-failure docs — every
     consumer counts a missing doc as zero tokens instead)."""
-    if isinstance(col, str):
-        return F.expr(_tokens_sql(f"`{col}`"))
-    split = F.filter(F.split(F.lower(F.trim(col)), " "), lambda x: x != F.lit(""))
-    return F.coalesce(split, F.array().cast("array<string>"))
+    return F.expr(_tokens_sql(f"`{col}`"))
 
 
-def token_count(col: Column | str) -> Column:
-    if isinstance(col, str):
-        return F.expr(f"size({_tokens_sql(f'`{col}`')})")
-    return F.size(tokens(col))
+def token_count(col: str) -> Column:
+    return F.expr(f"size({_tokens_sql(f'`{col}`')})")
 
 
-def _lang_ratio(ws: Column, lang: str) -> Column:
-    hits = F.size(F.filter(ws, lambda x: x.isin(STOPWORDS[lang])))
-    return hits.cast("double") / F.greatest(F.size(ws), F.lit(1)).cast("double")
-
-
-# --- SQL-string twins (r13 construction-floor rework) -----------------------
-# Same expression trees as the Column builders below, emitted as SQL text so
-# a consumer pays ONE py4j round trip per projection instead of one per
-# F.xxx()/operator call (~0.5 ms each; the lambda-bound quality/language
-# trees cost 0.15-0.45 s of driver wall per query construction at r13's
-# measurement). The Column forms stay for Column-typed arguments; every
-# string-typed call routes through these.
+# --- SQL text builders (r13 construction-floor rework) ----------------------
+# Every text expression is emitted as SQL text, so a consumer pays ONE py4j
+# round trip per projection instead of one per F.xxx()/operator call
+# (~0.5 ms each; the lambda-bound quality/language trees cost 0.15-0.45 s
+# of driver wall per query construction at r13's measurement).
 
 
 def _lang_ratio_sql(ws: str, lang: str) -> str:
@@ -131,6 +119,8 @@ def _token_stats_sql(col_sql: str) -> str:
 
 
 def _punct_ratio_sql(t: str) -> str:
+    # greatest(len, 1): a zero-length doc must score 0.0, not raise
+    # DIVIDE_BY_ZERO under ANSI Spark where DuckDB yields NULL (review r4)
     return (
         f"CAST(length({t}) - length(regexp_replace({t}, '{PUNCT_CLASS}', ''))"
         f" AS DOUBLE) / CAST(greatest(length({t}), 1) AS DOUBLE)"
@@ -146,8 +136,7 @@ def _upper_ratio_sql(t: str) -> str:
 
 def _score_from_stats_sql(st: str, t: str) -> str:
     # double literals carry the D suffix: a bare 0.4 parses as DECIMAL in
-    # SQL, which would change the arithmetic tree the Column form built
-    # from Python floats
+    # SQL and would change the arithmetic (the oracle pins double math)
     stop = f"CAST({st}.stop_en AS DOUBLE) / CAST(greatest({st}.n, 1) AS DOUBLE)"
     return (
         f"0.4D * least(CAST({st}.n AS DOUBLE) / 100.0D, 1.0D)"
@@ -157,23 +146,7 @@ def _score_from_stats_sql(st: str, t: str) -> str:
     )
 
 
-def _lang_decide(rs: Column) -> Column:
-    """argmax CASE over a bound per-language ratio struct; alphabetically
-    earlier language wins ties, 'und' when no marker word hits."""
-    langs = sorted(STOPWORDS)
-    expr = F.lit("und")
-    # build CASE from last preference to first so earlier langs win ties
-    for lang in reversed(langs):
-        r = rs[lang]
-        cond = r > 0
-        for other in langs:
-            if other != lang:
-                cond = cond & (r >= rs[other])
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def language_id(col: Column | str) -> Column:
+def language_id(col: str) -> Column:
     """argmax over per-language stopword ratios; deterministic preference
     order (alphabetical) on ties; 'und' when no marker word hits.
 
@@ -185,14 +158,7 @@ def language_id(col: Column | str) -> Column:
     tokenization to ONE evaluation, the first transform computes the four
     ratios into a struct (one array scan each), and the CASE runs over the
     struct's scalar fields. Same value, same tie order."""
-    if isinstance(col, str):
-        return F.expr(_language_id_sql(f"`{col}`"))
-    langs = sorted(STOPWORDS)
-    ratios_arr = F.transform(
-        F.array(tokens(col)),
-        lambda ws: F.struct(*[_lang_ratio(ws, lang).alias(lang) for lang in langs]),
-    )
-    return F.element_at(F.transform(ratios_arr, _lang_decide), 1)
+    return F.expr(_language_id_sql(f"`{col}`"))
 
 
 def lang_quality_struct(text_col: str) -> Column:
@@ -221,18 +187,6 @@ def lang_quality_struct(text_col: str) -> Column:
     )
 
 
-def _punct_ratio(t: Column) -> Column:
-    # greatest(len, 1): a zero-length doc must score 0.0, not raise
-    # DIVIDE_BY_ZERO under ANSI Spark where DuckDB yields NULL (review r4)
-    punct = F.length(t) - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))
-    return punct.cast("double") / F.greatest(F.length(t), F.lit(1)).cast("double")
-
-
-def _upper_ratio(t: Column) -> Column:
-    upper = F.length(t) - F.length(F.regexp_replace(t, "[A-Z]", ""))
-    return upper.cast("double") / F.greatest(F.length(t), F.lit(1)).cast("double")
-
-
 def _token_stats(text_col: str) -> Column:
     """(n, sum_len, stop_en) token-derived scalars from ONE tokenization —
     the 1-element-array ``transform`` binding pins the token array to a
@@ -241,21 +195,6 @@ def _token_stats(text_col: str) -> Column:
     ``split``/``filter`` higher-order trees up to six times per row
     across its output columns)."""
     return F.expr(_token_stats_sql(f"`{text_col}`"))
-
-
-def _score_from_stats(st: Column, t: Column) -> Column:
-    """Composite quality score over a bound token-stats struct (shared by
-    quality_score_col and quality_features so the formula lives once)."""
-    n = st["n"]
-    stop = st["stop_en"].cast("double") / F.greatest(n, F.lit(1)).cast(
-        "double"
-    )
-    return (
-        0.4 * F.least(n.cast("double") / 100.0, F.lit(1.0))
-        + 0.3 * F.least(stop * 5.0, F.lit(1.0))
-        + 0.2 * (1.0 - F.least(_punct_ratio(t) * 10.0, F.lit(1.0)))
-        + 0.1 * (1.0 - F.least(_upper_ratio(t) * 10.0, F.lit(1.0)))
-    )
 
 
 def quality_score_col(text_col: str = "text") -> Column:
@@ -292,13 +231,13 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             st["sum_len"].cast("double")
             / F.greatest(n, F.lit(1)).cast("double")
         ).alias("avg_token_len"),
-        _punct_ratio(F.col("_t")).alias("punct_ratio"),
-        _upper_ratio(F.col("_t")).alias("upper_ratio"),
+        F.expr(_punct_ratio_sql("_t")).alias("punct_ratio"),
+        F.expr(_upper_ratio_sql("_t")).alias("upper_ratio"),
         (
             st["stop_en"].cast("double")
             / F.greatest(n, F.lit(1)).cast("double")
         ).alias("stopword_ratio"),
-        _score_from_stats(st, F.col("_t")).alias("quality_score"),
+        F.expr(_score_from_stats_sql("_st", "_t")).alias("quality_score"),
     )
 
 

@@ -7,7 +7,11 @@ Layout: ``<warehouse>/<name>_<oid>/__bucket=<i>/part-*.parquet``
   source of truth the reference derives from ``CAST(hash(col) % buckets AS
   USMALLINT)`` (``src/common/hash.cpp:39-48``). Spark's Murmur3 ``hash()`` ≠
   DuckDB's hash — internally consistent is all that correctness requires
-  (SURVEY §2.A5); NULL hashes to a concrete bucket in both engines.
+  (SURVEY §2.A5); NULL hashes to a concrete bucket in both engines. It
+  holds for every row of every snapshot: insert, upsert and compact route
+  every row they write, an UPDATE of the partition column routes the rows
+  it re-values (they move), and every other rewritten row keeps its
+  bucket — so pruning never needs a fallback.
 - Scan: plain ``spark.read.parquet`` + Catalyst. Projection/filter pushdown
   is built-in; bucket pruning is a derived constant-foldable predicate on the
   ``__bucket`` partition directory column (see ``pruning.py``), which Spark's
@@ -71,17 +75,10 @@ from duckdb_mpp_spark.session import conf_guard
 BUCKET_COL = "__bucket"
 
 
-def widen_bucket_pred(
-    bucket_pred: str | None, dirty: list[int]
-) -> str | None:
-    """OR routing-dirty bucket ids into a derived ``__bucket`` predicate
-    so misplaced rows (partition-column UPDATE history) always survive
-    pruning. ``dirty`` must come from the SAME snapshot doc as the file
-    list being planned (``snapshot_full``). No-op on clean tables."""
-    if bucket_pred is None or not dirty:
-        return bucket_pred
-    ids = ", ".join(str(b) for b in dirty)
-    return f"(({bucket_pred}) OR {BUCKET_COL} IN ({ids}))"
+class MisroutedSnapshot(ValueError):
+    """A snapshot may hold rows outside the bucket their partition value
+    hashes to (written before exact routing; see ``manifest._misrouted``)."""
+
 
 # commits touching more files than this run the footer-stats pass as a
 # Spark job instead of a driver threadpool (see _ingest_staged)
@@ -237,7 +234,6 @@ def check_unique_sides(
     col: str,
     modified: DataFrame,
     others: DataFrame,
-    bucket_local: bool,
 ) -> None:
     """The ONE duplicate-detection primitive every UNIQUE/PRIMARY KEY
     enforcement path shares (insert via ``_enforce_unique``, COW
@@ -247,12 +243,13 @@ def check_unique_sides(
     ``others`` holds every other row's value that could share the group.
     A duplicate group raises only when a modified value participates: the
     operation is rejected for duplicates IT would create, never for an
-    inconsistency already on disk (ADVICE r6/r7). ``bucket_local`` groups
-    by (bucket, value) — the reference's per-shard index semantics
-    (create_distributed_table.cpp:107); the value-GLOBAL partition-column
-    constraint groups by value alone (review r6). Multiple NULLs allowed
-    (SQL UNIQUE)."""
-    group = [BUCKET_COL, col] if bucket_local else [col]
+    inconsistency already on disk (ADVICE r6/r7). Both sides carry the
+    ``__bucket`` each value will live in, and groups are (bucket, value) —
+    the reference's per-shard index semantics
+    (create_distributed_table.cpp:107). On the partition column that is
+    also value-global, because exact routing puts equal values in one
+    bucket. Multiple NULLs allowed (SQL UNIQUE)."""
+    group = [BUCKET_COL, col]
     side = (
         modified.select(*group)
         .where(F.col(col).isNotNull())
@@ -362,21 +359,16 @@ class DistributedTable:
         return df
 
     # -- snapshot state ----------------------------------------------------
-    def snapshot(self) -> tuple[int, dict[str, dict]]:
-        """Current committed snapshot ``(version, {relpath: {rows,min,max}})``
-        — the single source of truth for which data files are live and for
-        their plan-time footer stats (manifest.py)."""
-        return _manifest_mod.load(self.path, BUCKET_COL, self.meta.sort_column)
-
-    def snapshot_full(
+    def snapshot(
         self, version: int | None = None
-    ) -> tuple[int, dict[str, dict], list[int]]:
-        """``(version, files, routing_dirty_bucket_ids)`` — all three from
-        ONE version doc. Every read or DML that both plans from a file list
-        and consults the dirty set must use this (not ``snapshot_files`` +
-        ``routing_dirty_ids`` separately): a concurrent OPTIMIZE committing
-        between two reads would pair old files with a cleared dirty set and
-        silently un-widen pruning over still-misplaced rows (review r6).
+    ) -> tuple[int, dict[str, dict]]:
+        """``(version, {relpath: {rows, min, max}})`` of the head, or — time
+        travel — of an explicit committed ``version``: the single source of
+        truth for which data files are live and for their plan-time footer
+        stats (manifest.py). Every read and every write plans from it, so
+        this is the one place that refuses a snapshot written before exact
+        routing (``MisroutedSnapshot``); ``compact`` alone reads such a
+        snapshot, and its rewrite repairs it.
 
         COW DML reads the ``files`` of its head read directly
         (``read_buckets``), so its scans describe exactly the version it
@@ -385,26 +377,32 @@ class DistributedTable:
         the commit's base check. User time travel to ``version=0`` gets
         ``load_version_full``'s clear "no snapshot v0" ValueError, never a
         silent empty frame (review r7)."""
-        if version is not None:
-            files, dirty = _manifest_mod.load_version_full(self.path, version)
-            return version, files, dirty
-        return _manifest_mod.load_full(
-            self.path, BUCKET_COL, self.meta.sort_column
-        )
+        if version is None:
+            version, files, misrouted = _manifest_mod.load_full(
+                self.path, BUCKET_COL, self.meta.sort_column
+            )
+        else:
+            files, misrouted = _manifest_mod.load_version_full(self.path, version)
+        if misrouted:
+            raise MisroutedSnapshot(
+                f"snapshot v{version} of table {self.meta.name!r} was written "
+                "before every row was routed to its hash bucket, so pruned "
+                f"reads could miss rows: run OPTIMIZE {self.meta.name} to "
+                "re-route them (versions before that stay unreadable)"
+            )
+        return version, files
 
     def snapshot_files(self, version: int | None = None) -> dict[str, dict]:
         """Current snapshot's files, or — time travel — the files of an
         explicit committed ``version`` (readable until vacuumed past)."""
-        if version is not None:
-            return _manifest_mod.load_version(self.path, version)
-        return self.snapshot()[1]
+        return self.snapshot(version)[1]
 
     def history(self) -> list[tuple[int, int, int]]:
         """Commit history: (version, n_files, n_rows) per retained
         snapshot, oldest first — metadata only."""
         out = []
         for v in _manifest_mod._list_versions(self.path):
-            files = _manifest_mod.load_version(self.path, v)
+            files = _manifest_mod.load_version_full(self.path, v)[0]
             out.append((v, len(files), sum(e["rows"] for e in files.values())))
         return out
 
@@ -433,9 +431,9 @@ class DistributedTable:
 
     def read_buckets(self, files: dict[str, dict], ids=None) -> DataFrame:
         """Every column plus ``__bucket`` of snapshot ``files`` restricted
-        to buckets ``ids`` (None: all) — how COW DML, its dirty-bucket
-        probes and its constraint checks read the base they commit
-        against. ``files`` must be that base snapshot's list (it already
+        to buckets ``ids`` (None: all) — how COW DML and its constraint
+        checks read the base they commit against. ``files`` must be that
+        base snapshot's list (it already
         pins the version), and the plan lists only the touched buckets'
         files, so a keyed DML costs O(files in touched buckets) at any
         table size."""
@@ -530,7 +528,6 @@ class DistributedTable:
         base: int,
         files: dict[str, dict],
         replaced: list[int] | None = None,
-        dirty: list[int] | None = None,
         stream_batch: tuple[str, int] | None = None,
         revalidate=None,
     ) -> None:
@@ -543,14 +540,11 @@ class DistributedTable:
         means rebase-and-retry — bounded (ADVICE r3: an unbounded loop
         turns any head pathology into a liveness hang; ~100 retries is far
         beyond any real writer concurrency, so exhausting it means
-        something is genuinely wrong). ``revalidate(rebased_files,
-        rebased_dirty)`` runs after every rebase, BEFORE the retry (review
-        r4): constraint checks made against the original base are stale
-        once the head moves — two concurrent inserts of the same UNIQUE key
-        would otherwise both land. The rebased head's routing-dirty set
-        rides along so the value-global partition-column check sees
-        misplaced rows a racing partition-column UPDATE just created
-        (review r6). A raising revalidation aborts the commit.
+        something is genuinely wrong). ``revalidate(rebased_files)`` runs
+        after every rebase, BEFORE the retry (review r4): constraint checks
+        made against the original base are stale once the head moves — two
+        concurrent inserts of the same UNIQUE key would otherwise both
+        land. A raising revalidation aborts the commit.
 
         ``replaced=[bucket ids]`` publishes a COW rewrite: those buckets'
         files leave the snapshot, the staged files enter. The base pins
@@ -558,10 +552,9 @@ class DistributedTable:
         rewrite read its input, ``CommitConflict`` surfaces instead of
         silently losing the other write. Old files are NOT deleted here —
         in-flight readers planned on the previous snapshot still hold their
-        file lists; ``vacuum()`` (SQL: ``VACUUM t``) reclaims them.
-
-        ``dirty``: the new snapshot's routing-dirty bucket ids; None
-        inherits the base snapshot's set (manifest.commit)."""
+        file lists; ``vacuum()`` (SQL: ``VACUUM t``) reclaims them. Staged
+        files may land outside ``replaced`` (an UPDATE that moves rows to
+        their new home bucket); they join those buckets' files."""
         if replaced is not None:
             gone = {f"{BUCKET_COL}={b}" for b in replaced}
             files = {
@@ -572,15 +565,15 @@ class DistributedTable:
             try:
                 _manifest_mod.commit(
                     self.path, {**files, **new_entries}, base,
-                    dirty_buckets=dirty, stream_batch=stream_batch,
+                    stream_batch=stream_batch,
                 )
                 return
             except _manifest_mod.CommitConflict:
                 if replaced is not None:
                     raise
-                base, files, head_dirty = self.snapshot_full()
+                base, files = self.snapshot()
                 if revalidate is not None:
-                    revalidate(files, head_dirty)
+                    revalidate(files)
         raise RuntimeError(
             f"append to {self.meta.name} lost 100 consecutive commit races; "
             "giving up (check for a stuck or runaway concurrent writer)"
@@ -661,22 +654,18 @@ class DistributedTable:
         self,
         routed: DataFrame,
         files: dict[str, dict],
-        dirty: list[int],
     ) -> None:
         """BUCKET-LOCAL uniqueness for declared UNIQUE/PRIMARY KEY columns —
         the reference's semantics exactly: constraints ride into shard DDL
         and DuckDB's per-shard index enforces them within each shard only
         (create_distributed_table.cpp:107), so a duplicate landing in a
         DIFFERENT bucket is accepted there and here. The one constraint
-        users read as GLOBAL — the unique column IS the partition column,
-        where routing makes same-value-same-bucket — is enforced by VALUE
-        (bucket-ignorant), so it stays global even when a partition-column
-        UPDATE has left misplaced rows in routing-dirty buckets (which the
-        existing-side filter therefore includes; review r6). Multiple NULLs
-        are allowed (SQL UNIQUE). Cost: one keyed shuffle per declared
-        unique column over the batch plus the AFFECTED (+dirty) buckets
-        only — opt-in, and the batch is already checkpointed so nothing is
-        re-evaluated. A failing check raises before any file is staged, so
+        users read as GLOBAL — the unique column IS the partition column —
+        is global here too, because routing puts equal values in one
+        bucket. Multiple NULLs are allowed (SQL UNIQUE). Cost: one keyed
+        shuffle per declared unique column over the batch plus the AFFECTED
+        buckets only — opt-in, and the batch is already checkpointed so
+        nothing is re-evaluated. A failing check raises before any file is staged, so
         the table is untouched. ``insert`` re-runs it with the ingested
         files as ``routed`` after every commit rebase, so a racing writer's
         duplicate aborts the commit, while duplicates already on disk never
@@ -686,20 +675,12 @@ class DistributedTable:
             for r in routed.select(BUCKET_COL).distinct().collect()
             if r[0] is not None
         )
-        # ``files``/``dirty``: the snapshot the caller will commit against —
-        # anything landing after it conflicts the commit and revalidates
-        # (review r6)
-        existing = self.read_buckets(files, set(ids) | set(dirty))
+        # ``files``: the snapshot the caller will commit against — anything
+        # landing after it conflicts the commit and revalidates (review r6)
+        existing = self.read_buckets(files, ids)
         for col in self.meta.unique_columns:
-            # partition-column constraint: value-global (same value can sit
-            # in different buckets only via routing-dirty misplacement, and
-            # that's exactly the duplicate this must catch)
             check_unique_sides(
-                self.meta.name,
-                col,
-                modified=routed,
-                others=existing,
-                bucket_local=col != self.meta.partition_column,
+                self.meta.name, col, modified=routed, others=existing
             )
 
     def insert(
@@ -723,16 +704,15 @@ class DistributedTable:
         split = write_split_factor(routed, self.meta.buckets)
         # snapshot resolved ONCE, before the pre-write uniqueness check:
         # the check scans THIS version and the commit below pins it as
-        # base, so any commit landing in between (e.g. a partition-column
-        # UPDATE creating new routing-dirty misplacement) forces a
-        # CommitConflict → rebase → revalidation against the NEW head's
-        # dirty set, instead of slipping through unchecked (review r6)
-        base, files, dirty = self.snapshot_full()
+        # base, so any commit landing in between forces a CommitConflict →
+        # rebase → revalidation against the NEW head, instead of slipping
+        # through unchecked (review r6)
+        base, files = self.snapshot()
         if self.meta.unique_columns:
             # single evaluation: the uniqueness check and the write job
             # both read the materialized batch
             routed = routed.localCheckpoint(eager=True)
-            self._enforce_unique(routed, files, dirty)
+            self._enforce_unique(routed, files)
         # One shuffle so each bucket directory is written by few tasks (no
         # small-file explosion when every input task holds every bucket).
         # Routing on BUCKET_COL alone caps write parallelism at #affected
@@ -752,9 +732,9 @@ class DistributedTable:
             # rebase, the ingested files are re-checked against the NEW head
             revalidate = None
             if self.meta.unique_columns:
-                def revalidate(head_files, head_dirty):
+                def revalidate(head_files):
                     self._enforce_unique(
-                        self.read_buckets(new_entries), head_files, head_dirty
+                        self.read_buckets(new_entries), head_files
                     )
             # An EMPTY insert still publishes a (no-op) snapshot: one
             # version per insert call is a load-bearing contract — time
@@ -807,9 +787,8 @@ class DistributedTable:
     ) -> DataFrame:
         """The one pruned-read planner, shared by ``scan`` and the front
         door's per-query views: the snapshot's files narrowed to the
-        buckets the derived ``__bucket`` predicate keeps (widened for the
-        same snapshot's routing-dirty buckets) and, where ``where`` bounds
-        a column, by zone maps. Both read ``where`` through the one
+        buckets the derived ``__bucket`` predicate keeps and, where
+        ``where`` bounds a column, by zone maps. Both read ``where`` through the one
         grammar in ``pruning.py``: a column qualified by a name in
         ``qualifiers`` (default: the table's own name) or not qualified at
         all is this table's; any other qualifier is another relation's and
@@ -817,15 +796,12 @@ class DistributedTable:
         prune rule (``MppSession._prune_qualifiers``) allows the WHERE to
         prune this table at all. Keeps ``__bucket`` and does NOT apply
         ``where`` — the caller does, so pruning stays an optimization."""
-        _v, snap_files, dirty = self.snapshot_full(version)
+        _v, snap_files = self.snapshot(version)
         if not snap_files:
             return self._empty_df(with_bucket=True)
-        bucket_pred = widen_bucket_pred(
-            bucket_predicate_for_where(
-                where, self.meta.partition_column, self._part_type_ddl,
-                self.meta.buckets, qualifiers or {self.meta.name},
-            ),
-            dirty,
+        bucket_pred = bucket_predicate_for_where(
+            where, self.meta.partition_column, self._part_type_ddl,
+            self.meta.buckets, qualifiers or {self.meta.name},
         )
         df = self._zonemap_read(where, qualifiers, snap_files, bucket_pred)
         if df is None:
@@ -948,37 +924,17 @@ class DistributedTable:
             df = df.where(where)
         return df.select("rowid", *base_cols)
 
-    def routing_dirty_ids(self, version: int | None = None) -> list[int]:
-        """Buckets that may hold rows whose partition-column value no
-        longer hashes to their bucket: an UPDATE assigned the partition
-        column, and (reference parity — ``test/sql/mpp_update.test:63``
-        updates it in place, shard-locally) the row stays where it is.
-        Every pruned read must include these buckets or it silently loses
-        the re-valued rows; ``compact()``/OPTIMIZE re-routes and clears.
-        Tracked per-snapshot in the manifest so time travel sees the dirty
-        set that matches the files it reads.
-
-        Diagnostic accessor: code that also resolves a file list must take
-        BOTH from one ``snapshot_full`` call instead (review r6)."""
-        return _manifest_mod.dirty_buckets(self.path, version)
-
     def pruned_bucket_ids(
         self,
         where: str | None,
         qualifiers: set[str] | None = None,
-        dirty: "list[int] | None" = None,
     ) -> list[int]:
-        """Surviving bucket ids for ``where``. ``dirty``: the routing-dirty
-        set of the snapshot the caller plans against (from
-        ``snapshot_full``); None reads the head — only for callers that
-        don't pair the result with a file list."""
+        """Surviving bucket ids for ``where`` — the buckets that can hold a
+        matching row, since every row sits in its hash bucket."""
         bucket_pred = bucket_predicate_for_where(
             where, self.meta.partition_column, self._part_type_ddl,
             self.meta.buckets, qualifiers or {self.meta.name},
         )
-        if dirty is None:
-            dirty = self.routing_dirty_ids()
-        bucket_pred = widen_bucket_pred(bucket_pred, dirty)
         return evaluate_bucket_ids(self.spark, bucket_pred, self.meta.buckets)
 
     def explain(self, where: str | None = None) -> str:
@@ -1032,20 +988,17 @@ class DistributedTable:
         compactions incrementally; the bucket is the natural unit of
         isolation. Same stage → ingest → snapshot-publish commit as DML:
         readers on the old snapshot keep a consistent view, no directory
-        renames."""
-        base, snap_files, dirty = self.snapshot_full()
+        renames.
+
+        The rewrite routes every row from its partition value, so it is
+        also the repair for a snapshot ``snapshot`` refuses as misrouted:
+        compact is the one reader that plans from such a snapshot."""
+        base, snap_files, _misrouted = _manifest_mod.load_full(
+            self.path, BUCKET_COL, self.meta.sort_column
+        )
         if not snap_files:
             return 0
-        df = self._read_files(snap_files)
-        # Repair routing-dirty buckets (a partition-column UPDATE left rows
-        # whose value no longer hashes to their bucket — see
-        # routing_dirty_ids): recompute __bucket from the live column
-        # values, so rows migrate home and full pruning power returns. The
-        # commit below clears the dirty flag; clean tables skip this
-        # entirely (no recompute, no flag churn). Dirty set and file list
-        # from ONE snapshot doc; a racing commit aborts ours (base pin).
-        if dirty:
-            df = self.route(df)
+        df = self.route(self._read_files(snap_files))
         n_parts = max(self.meta.buckets * target_files_per_bucket, 1)
         # repartition on BUCKET_COL alone hashes every row of a bucket to
         # ONE task — target_files_per_bucket > 1 would be a silent no-op
@@ -1079,6 +1032,5 @@ class DistributedTable:
         self._commit(
             new_entries, base, snap_files,
             replaced=list(range(self.meta.buckets)),
-            dirty=[] if dirty else None,
         )
         return len({rel.split("/", 1)[0] for rel in new_entries})

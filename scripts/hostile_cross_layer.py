@@ -107,7 +107,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = _mk(mpp)
     tbl.insert(_rows(spark, 0, 12))
-    base = tbl.snapshot_full()[0]
+    base = tbl.snapshot()[0]
     old_reader = tbl.scan(version=base)  # planned from v(base)'s file list
     assert update(tbl, {"v": "'new'"}, None) == 12
     # retention keeps both snapshots: the old reader must still see the
@@ -128,7 +128,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = _mk(mpp)
     tbl.insert(_rows(spark, 0, 12))
-    base = tbl.snapshot_full()[0]
+    base = tbl.snapshot()[0]
     update(tbl, {"v": "'new'"}, None)
     removed = tbl.vacuum(keep_commits=1, orphan_grace_seconds=0)
     assert removed > 0, "vacuum reclaimed nothing after a full COW rewrite"
@@ -153,7 +153,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = _mk(mpp)
     tbl.insert(_rows(spark, 0, 8), stream_batch=("L", 3))
-    base, files, _dirty = tbl.snapshot_full()
+    base, files = tbl.snapshot()
     # a streaming upsert lands between the compactor's snapshot read and
     # its commit — the head moves
     tbl.insert(_rows(spark, 8, 12), stream_batch=("L", 4))

@@ -29,8 +29,6 @@ Scenarios:
     to scans either way;
   * time-travel read across OPTIMIZE (compact): pre-compact version
     serves identical rows until vacuum prunes it;
-  * partition-column UPDATE (routing-dirty) -> pruned scans find the
-    moved row before AND after compact re-routes it;
   * DROP then CREATE of the same name -> fresh directory, no
     resurrection of the old table's rows;
   * an externally-written torn head file -> readers fall back, the next
@@ -70,12 +68,12 @@ def _rows(df):
 
 
 def _stale_head_patch(tbl, n_stale_reads):
-    """Monkeypatch tbl.snapshot_full so the next ``n_stale_reads`` HEAD
+    """Monkeypatch tbl.snapshot so the next ``n_stale_reads`` HEAD
     reads (version=None) return a pre-captured stale snapshot — the
     deterministic equivalent of a concurrent writer committing between a
     DML's planning read and its commit. Explicit-version reads pass
     through untouched. Returns a restore() callable."""
-    real = tbl.snapshot_full
+    real = tbl.snapshot
     stale = real()
     state = {"left": n_stale_reads}
 
@@ -85,8 +83,8 @@ def _stale_head_patch(tbl, n_stale_reads):
             return stale
         return real(version)
 
-    tbl.snapshot_full = patched
-    return lambda: setattr(tbl, "snapshot_full", real)
+    tbl.snapshot = patched
+    return lambda: setattr(tbl, "snapshot", real)
 
 
 # --- concurrency -------------------------------------------------------------
@@ -156,7 +154,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = mpp.create_distributed_table("t", "k int, v string", "k", 2)
     tbl.insert(_frame(spark, 0, 8))
-    base, files, _ = tbl.snapshot_full()
+    base, files = tbl.snapshot()
     v = manifest.commit(tbl.path, files, base)  # winner
     try:
         manifest.commit(tbl.path, files, base)
@@ -188,7 +186,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = mpp.create_distributed_table("t", "k int, v string", "k", 2)
     tbl.insert(_frame(spark, 0, 8))
-    base, files, _ = tbl.snapshot_full()
+    base, files = tbl.snapshot()
     # freeze the head the loser sees: patch current_version so the
     # loser's base check passes AFTER the winner has already published —
     # the deterministic equivalent of two writers racing the link
@@ -240,7 +238,7 @@ def _(spark):
     n = dml.delete(tbl, f"k in ({','.join(map(str, bucket_rows))})")
     assert n == len(bucket_rows)
     # head: rows gone; the emptied bucket holds no files in the snapshot
-    _, files, _ = tbl.snapshot_full()
+    _, files = tbl.snapshot()
     target_dir = "__bucket=" + str(
         spark.sql("SELECT pmod(hash(7), 4)").collect()[0][0]
     )
@@ -309,7 +307,7 @@ def _(spark):
     mpp = _mpp(spark)
     tbl = mpp.create_distributed_table("t", "k int, v string", "k", 4)
     tbl.insert(_frame(spark, 0, 20))
-    v1, files_v1, _ = tbl.snapshot_full()
+    v1, files_v1 = tbl.snapshot()
     assert dml.update(tbl, {"v": "'upd'"}, "k < 10") == 10
     removed = tbl.vacuum(keep_commits=1, orphan_grace_seconds=0)
     assert removed > 0, "vacuum reclaimed nothing after a COW rewrite"
@@ -376,25 +374,6 @@ def _(spark):
     except ValueError as e:
         assert "no snapshot" in str(e)
     assert _rows(tbl.scan()) == pre
-
-
-@case("partition_update_dirty_routing_survives_compact")
-def _(spark):
-    from duckdb_mpp_spark import dml
-
-    mpp = _mpp(spark)
-    tbl = mpp.create_distributed_table("t", "k int, v string", "k", 8)
-    tbl.insert(_frame(spark, 0, 64))
-    # move k=3 to k=77: the row stays in hash(3)'s bucket (reference
-    # shard-local semantics) — pruned reads of k=77 must still find it
-    assert dml.update(tbl, {"k": "77"}, "k = 3") == 1
-    got = _rows(tbl.scan(where="k = 77"))
-    assert got == [(77, "a3")], f"dirty-widened pruning lost the row: {got}"
-    assert _rows(tbl.scan(where="k = 3")) == []
-    # compact re-routes the misplaced row home and clears the flag
-    assert tbl.compact() > 0
-    assert _rows(tbl.scan(where="k = 77")) == [(77, "a3")]
-    assert tbl.scan().count() == 64
 
 
 # --- catalog tombstone / torn head ----------------------------------------------

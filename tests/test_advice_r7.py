@@ -4,10 +4,10 @@
    unless nanosAsLong is already active session-wide.
 2. colocated.py — ``ident`` really sanitizes the user-supplied name.
 3. (CTE prune cases: now verdicts of ``test_prune_rule``.)
-4. dml.py — ``_check_unique_staged``'s value-global path only rejects
-   duplicate groups the staged rewrite participates in.
-5. table.py — ``snapshot_full(version=0)`` serves the pin explicitly instead
-   of silently un-pinning to a head read.
+4. dml.py — the unique check only rejects duplicate groups the rewrite's
+   own new values participate in.
+5. table.py — ``snapshot(version=0)`` serves the pin explicitly instead of
+   silently un-pinning to a head read.
 """
 
 import pytest
@@ -51,32 +51,34 @@ def test_colocated_ident_is_sanitized(mpp):
     assert got == [(1, "a"), (2, "b")]
 
 
-# --- 4. staged-unique global path ignores untouched-bucket duplicates ------
+# --- 4. the unique check ignores untouched-bucket duplicates ---------------
+
+def _routed(t, *ks):
+    """Modified side of ``SET k = <each of ks>``: the new values, routed."""
+    return t.route(t.spark.createDataFrame([(k,) for k in ks], "k int"))
+
 
 def test_update_unaffected_by_preexisting_duplicate_elsewhere(mpp):
     # no declared constraint at insert time, so the on-disk duplicate (7,7)
-    # can exist; then exercise the value-global check directly the way a
-    # partition-column UPDATE would: modified = the operation's new values,
-    # others = every other post-commit row's value
+    # can exist; then exercise the check directly the way a partition-column
+    # UPDATE would: modified = the operation's new values routed to their
+    # bucket, others = every other post-commit row's value
     mpp.sql("CREATE TABLE gdup(k INT, v TEXT) PARTITION BY(k) WITH BUCKETS 4")
     mpp.sql("INSERT INTO gdup VALUES(1,'a'),(7,'x'),(7,'y'),(9,'z')")
     t = mpp.table("gdup")
-    spark = t.spark
-    full = t.scan()
+    full = t.scan(keep_bucket=True)
     # UPDATE SET k=2 WHERE k=1: the untouched (7,7) pair must not abort
     check_unique_sides(
         t.meta.name, "k",
-        modified=spark.createDataFrame([(2,)], "k int"),
-        others=full.where("k <> 1").select("k"),
-        bucket_local=False,
+        modified=_routed(t, 2),
+        others=full.where("k <> 1").select("k", "__bucket"),
     )
     # and a modified value colliding with an untouched row still raises
     with pytest.raises(ValueError, match="Duplicate key"):
         check_unique_sides(
             t.meta.name, "k",
-            modified=spark.createDataFrame([(9,)], "k int"),
-            others=full.where("k <> 1").select("k"),
-            bucket_local=False,
+            modified=_routed(t, 9),
+            others=full.where("k <> 1").select("k", "__bucket"),
         )
 
 
@@ -88,47 +90,44 @@ def test_update_unaffected_by_survivor_duplicate_in_rewritten_bucket(mpp):
     mpp.sql("CREATE TABLE gdup2(k INT, v TEXT) PARTITION BY(k) WITH BUCKETS 4")
     mpp.sql("INSERT INTO gdup2 VALUES(1,'a'),(7,'x'),(7,'y')")
     t = mpp.table("gdup2")
-    spark = t.spark
-    full = t.scan()
+    full = t.scan(keep_bucket=True)
     # UPDATE SET k=2 WHERE v='a': both 7s are survivors (others side), the
     # only modified value is 2 — no abort even though the 7s share the
     # rewritten layout in the real staged files
     check_unique_sides(
         t.meta.name, "k",
-        modified=spark.createDataFrame([(2,)], "k int"),
-        others=full.where("v <> 'a'").select("k"),
-        bucket_local=False,
+        modified=_routed(t, 2),
+        others=full.where("v <> 'a'").select("k", "__bucket"),
     )
     # two rows modified TO the same value: the operation creates the
     # duplicate itself — must raise
     with pytest.raises(ValueError, match="Duplicate key"):
         check_unique_sides(
             t.meta.name, "k",
-            modified=spark.createDataFrame([(2,), (2,)], "k int"),
-            others=full.where("v = 'never'").select("k"),
-            bucket_local=False,
+            modified=_routed(t, 2, 2),
+            others=full.where("v = 'never'").select("k", "__bucket"),
         )
 
 
 # --- 5. version=0 base ------------------------------------------------------
 
-def test_snapshot_full_version_zero_empty_table(mpp):
+def test_snapshot_version_zero_empty_table(mpp):
     mpp.sql("CREATE TABLE pin0(k INT) PARTITION BY(k) WITH BUCKETS 2")
     t = mpp.table("pin0")
     # a DML on the empty table plans from the head read's empty v0
-    assert t.snapshot_full() == (0, {}, [])
+    assert t.snapshot() == (0, {})
     assert mpp.sql("UPDATE pin0 SET k = 2 WHERE k = 1") == 0
     assert mpp.sql("DELETE FROM pin0 WHERE k = 1") == 0
     # user time travel to v0: a clear error, never a silent empty frame
     # (review r7)
     with pytest.raises(ValueError, match="no snapshot v0"):
-        t.snapshot_full(version=0)
+        t.snapshot(version=0)
 
 
-def test_snapshot_full_version_zero_after_commit_conflicts(mpp):
+def test_snapshot_version_zero_after_commit_conflicts(mpp):
     mpp.sql("CREATE TABLE pin1(k INT) PARTITION BY(k) WITH BUCKETS 2")
     t = mpp.table("pin1")
-    base, files, _dirty = t.snapshot_full()  # a rewrite's base: v0
+    base, files = t.snapshot()  # a rewrite's base: v0
     assert base == 0
     mpp.sql("INSERT INTO pin1 VALUES(1),(2)")  # the head moves past it
     # a rewrite based on the stale v0 fails like a lost commit race …
@@ -138,7 +137,7 @@ def test_snapshot_full_version_zero_after_commit_conflicts(mpp):
     # … but USER time travel keeps the time-travel error type (review r7:
     # CommitConflict is what retry/abort logic is written against)
     with pytest.raises(ValueError, match="no snapshot v0"):
-        t.snapshot_full(version=0)
+        t.snapshot(version=0)
 
 
 # --- r7: commit-embedded streaming batch ids -------------------------------

@@ -728,115 +728,3 @@ def test_qualified_select_item_does_not_disable_pruning(setop_t):
     q = "SELECT k, st.v FROM st WHERE k = 2"
     assert rows(setop_t.sql(q)) == [(2, 20)]
     assert "Shards: 1/8" in setop_t.explain(q)
-
-
-def test_partition_col_update_cannot_shadow_global_unique(spark, mpp):
-    """review r6: the partition-column UNIQUE constraint is value-GLOBAL.
-    UPDATE SET k = <existing value> lands the new value in a bucket the
-    staged rewrite never touches (rows stay shard-local), so the old
-    staged-only bucket-local check silently accepted a global duplicate."""
-    mpp.sql(
-        "CREATE TABLE gu(k INT UNIQUE, v TEXT) PARTITION BY (k) WITH BUCKETS 8"
-    )
-    assert mpp.sql("INSERT INTO gu VALUES (1, 'a'), (2, 'b')") == 2
-    with pytest.raises(ValueError, match="unique constraint"):
-        mpp.sql("UPDATE gu SET k = 1 WHERE k = 2")
-    # rejected update leaves the table untouched
-    rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM gu").collect())
-    assert rows == [(1, "a"), (2, "b")]
-    # a non-colliding partition-column update still works
-    assert mpp.sql("UPDATE gu SET k = 40 WHERE k = 2") == 1
-    rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM gu").collect())
-    assert rows == [(1, "a"), (40, "b")]
-
-
-def test_insert_sees_misplaced_unique_value_in_dirty_bucket(spark, mpp):
-    """review r6: after a partition-column UPDATE leaves (40,'b') in k=2's
-    bucket, INSERT k=40 routes to a DIFFERENT bucket — the value-global
-    check must still reject the duplicate (the old bucket-local check
-    grouped by (bucket, value) and never saw it)."""
-    mpp.sql(
-        "CREATE TABLE gi(k INT UNIQUE, v TEXT) PARTITION BY (k) WITH BUCKETS 8"
-    )
-    assert mpp.sql("INSERT INTO gi VALUES (1, 'a'), (2, 'b')") == 2
-    assert mpp.sql("UPDATE gi SET k = 40 WHERE k = 2") == 1
-    with pytest.raises(ValueError, match="unique constraint"):
-        mpp.sql("INSERT INTO gi VALUES (40, 'dup')")
-    # non-colliding values insert fine while the table is routing-dirty
-    assert mpp.sql("INSERT INTO gi VALUES (7, 'c')") == 1
-    rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM gi").collect())
-    assert rows == [(1, "a"), (7, "c"), (40, "b")]
-    # OPTIMIZE re-routes; constraint still holds after repair
-    mpp.sql("OPTIMIZE gi")
-    with pytest.raises(ValueError, match="unique constraint"):
-        mpp.sql("INSERT INTO gi VALUES (40, 'dup2')")
-
-
-def test_composite_key_upsert_cannot_shadow_global_unique(spark, mpp):
-    """review r6 (live repro): with a COMPOSITE upsert key, a misplaced
-    routing-dirty row sharing the partition value but differing on the
-    other key fields is neither replaced (full-key match fails) nor seen
-    by the staged bucket-local check — the value-global partition-column
-    check must reject the merge."""
-    import pytest as _pytest
-
-    from duckdb_mpp_spark.dml import upsert
-
-    mpp.sql(
-        "CREATE TABLE cgu(k INT UNIQUE, v TEXT) PARTITION BY (k) WITH BUCKETS 8"
-    )
-    assert mpp.sql("INSERT INTO cgu VALUES (1, 'a'), (2, 'b')") == 2
-    assert mpp.sql("UPDATE cgu SET k = 40 WHERE k = 2") == 1  # (40,'b') misplaced
-    tbl = mpp.table("cgu")
-    batch = spark.createDataFrame([(40, "x")], "k int, v string")
-    with _pytest.raises(ValueError, match="unique constraint"):
-        upsert(tbl, batch, ["k", "v"])
-    # rejected merge leaves the table untouched
-    rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM cgu").collect())
-    assert rows == [(1, "a"), (40, "b")]
-    # the same batch with the FULL matching key replaces instead
-    batch = spark.createDataFrame([(40, "b")], "k int, v string")
-    assert upsert(tbl, batch, ["k", "v"]) == 1
-    rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM cgu").collect())
-    assert rows == [(1, "a"), (40, "b")]
-
-
-def test_dml_rewrites_skip_unmatched_dirty_buckets(spark):
-    """review r6: UPDATE/DELETE on a routing-dirty table must rewrite only
-    dirty buckets that actually hold a matching row — not every dirty
-    bucket on every DML forever (write amplification)."""
-    import shutil as _sh
-    import tempfile
-
-    from duckdb_mpp_spark.mpp import MppSession
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_dml_")
-    mpp2 = MppSession(spark, wh)
-    try:
-        mpp2.sql("CREATE TABLE dm(k INT, v TEXT) PARTITION BY (k) WITH BUCKETS 8")
-        mpp2.sql("INSERT INTO dm VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-        mpp2.sql("UPDATE dm SET k = 40 WHERE k = 2")  # dirty: k=2's bucket
-        tbl = mpp2.table("dm")
-        dirty = set(tbl.routing_dirty_ids())
-        assert dirty
-        before = {
-            rel for rel in tbl.snapshot_files()
-            if int(rel.split("=", 1)[1].split("/", 1)[0]) in dirty
-        }
-        # unrelated-key UPDATE: dirty bucket's files survive untouched
-        assert mpp2.sql("UPDATE dm SET v = 'A' WHERE k = 1") == 1
-        after = {
-            rel for rel in tbl.snapshot_files()
-            if int(rel.split("=", 1)[1].split("/", 1)[0]) in dirty
-        }
-        assert after == before
-        # but a pruned UPDATE matching the MISPLACED row still reaches it
-        assert mpp2.sql("UPDATE dm SET v = upper(v) WHERE k = 40") == 1
-        rows = sorted(tuple(r) for r in mpp2.sql("SELECT k, v FROM dm").collect())
-        assert rows == [(1, "A"), (3, "c"), (40, "B")]
-        # and a pruned DELETE of the misplaced row works too
-        assert mpp2.sql("DELETE FROM dm WHERE k = 40") == 1
-        rows = sorted(tuple(r) for r in mpp2.sql("SELECT k, v FROM dm").collect())
-        assert rows == [(1, "A"), (3, "c")]
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)

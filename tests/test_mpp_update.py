@@ -48,8 +48,8 @@ def test_full_table_function_update(session):
 def test_multi_column_default_and_date_arith(session):
     # test/sql/mpp_update.test:63-71: SET name=DEFAULT (no declared default →
     # NULL), create_date=create_date+1 — note the partition column itself is
-    # updated; rows stay in their original bucket exactly like the
-    # reference's shard-local UPDATE keeps rows on their shard.
+    # updated; the reference keeps the row on its shard, this port moves it
+    # to the bucket its new value hashes to (same SQL result).
     session.sql("UPDATE test_update SET name=upper(name)")
     n = session.sql(
         "UPDATE test_update SET name=DEFAULT, create_date=create_date+1 "

@@ -150,6 +150,22 @@ def test_cow_dml_matches_plain_semantics(spark, tmp_path_factory, ops):
         got = sorted((tuple(r) for r in mpp.sql("SELECT c0, c1 FROM d").collect()), key=key)
         want = sorted((tuple(r) for r in expected.collect()), key=key)
         assert got == want, f"ops {ops}: {got} != {want}"
+        # every row sits in the bucket its c0 hashes to (an UPDATE of c0
+        # moves it), so a pruned point read of each value is exact
+        tbl = mpp.table("d")
+        misplaced = (
+            tbl.read_buckets(tbl.snapshot_files())
+            .where("__bucket <> pmod(hash(c0), 8)")
+            .collect()
+        )
+        assert not misplaced, f"ops {ops}: rows outside their bucket {misplaced}"
+        for v in {r[0] for r in want}:
+            cond = "c0 IS NULL" if v is None else f"c0 = {v}"
+            point = sorted(
+                (tuple(r) for r in mpp.sql(f"SELECT c0, c1 FROM d WHERE {cond}").collect()),
+                key=key,
+            )
+            assert point == [r for r in want if r[0] == v], f"ops {ops}: {cond}"
     finally:
         _sh.rmtree(wh, ignore_errors=True)
 
@@ -318,197 +334,3 @@ def test_setop_shapes_never_lose_rows_to_pruning(table, pred, op, tmpl):
     got = sorted((tuple(r) for r in mpp.sql(q_mpp).collect()), key=key)
     want = sorted((tuple(r) for r in spark.sql(q_raw).collect()), key=key)
     assert got == want, f"{q_mpp!r}: {got} != {want}"
-
-
-def test_partition_column_update_keeps_pruned_reads_exact(spark):
-    """r6 wrong-results regression (hypothesis counterexample, pinned):
-    UPDATE assigning the partition column keeps rows in their bucket
-    (reference shard-local semantics, mpp_update.test:63), so the bucket
-    routing invariant breaks. The snapshot flags the rewritten buckets
-    routing-dirty; every pruned read — scan, front-door SQL, a second
-    UPDATE — must keep including them, and OPTIMIZE re-routes + clears."""
-    import shutil as _sh
-    import tempfile
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_")
-    mpp = MppSession(spark, wh)
-    try:
-        mpp.sql("CREATE TABLE dd(c0 INT, c1 TEXT) PARTITION BY (c0) WITH BUCKETS 8")
-        vals = ", ".join(
-            f"({'NULL' if v is None else v}, {'NULL' if s is None else repr(s)})"
-            for v, s in VALUES
-        )
-        mpp.sql(f"INSERT INTO dd VALUES {vals}")
-        # pruning fully active pre-update
-        assert "Shards: 1/8" in mpp.sql("EXPLAIN SELECT * FROM dd WHERE c0 = 0")
-
-        # (NULL, 'pear') becomes (0, 'pear') but STAYS in NULL's bucket
-        mpp.sql("UPDATE dd SET c0 = 0 WHERE c0 IS NULL")
-
-        # pruned front-door read must still see the re-valued row
-        got = sorted(
-            (r["c1"] or "") for r in mpp.sql("SELECT c1 FROM dd WHERE c0 = 0").collect()
-        )
-        assert got == ["", "pear"]
-        # a second pruned UPDATE must reach it too (the falsifying sequence)
-        assert mpp.sql("UPDATE dd SET c1 = upper(c1) WHERE c0 = 0") == 2
-        got = sorted(
-            (r["c1"] or "") for r in mpp.sql("SELECT c1 FROM dd WHERE c0 = 0").collect()
-        )
-        assert got == ["", "PEAR"]
-        # explain header reflects the widened (honest) shard set
-        shards_line = [
-            ln for ln in mpp.sql("EXPLAIN SELECT * FROM dd WHERE c0 = 0").splitlines()
-            if ln.startswith("Shards:")
-        ][0]
-        k = int(shards_line.split()[1].split("/")[0])
-        assert k > 1  # dirty buckets force extra shards into the pruned read
-
-        # OPTIMIZE re-routes rows home and restores full pruning
-        mpp.sql("OPTIMIZE dd")
-        assert "Shards: 1/8" in mpp.sql("EXPLAIN SELECT * FROM dd WHERE c0 = 0")
-        got = sorted(
-            (r["c1"] or "") for r in mpp.sql("SELECT c1 FROM dd WHERE c0 = 0").collect()
-        )
-        assert got == ["", "PEAR"]
-        # nothing lost or duplicated table-wide
-        assert mpp.sql("SELECT count(*) AS n FROM dd").collect()[0]["n"] == len(VALUES)
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)
-
-
-def test_upsert_matches_misplaced_key_after_partition_update(spark):
-    """A key whose partition value changed via UPDATE lives in the 'wrong'
-    bucket; a later upsert of that key must still replace it (via the
-    routing-dirty widening), not duplicate it."""
-    import shutil as _sh
-    import tempfile
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_ups_")
-    mpp = MppSession(spark, wh)
-    try:
-        mpp.sql("CREATE TABLE du(k INT, v TEXT) PARTITION BY (k) WITH BUCKETS 8")
-        mpp.sql("INSERT INTO du VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-        mpp.sql("UPDATE du SET k = 40 WHERE k = 2")  # (40,'b') stays in k=2's bucket
-        t = mpp.catalog  # sanity: table is dirty now
-        tbl = mpp.table("du")
-        assert tbl.routing_dirty_ids()
-        batch = spark.createDataFrame([(40, "B2")], "k int, v string")
-        from duckdb_mpp_spark.dml import upsert
-
-        assert upsert(tbl, batch, ["k"]) == 1
-        rows = sorted(
-            tuple(r) for r in mpp.sql("SELECT k, v FROM du").collect()
-        )
-        assert rows == [(1, "a"), (3, "c"), (40, "B2")]
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)
-
-
-def test_struct_partition_update_flags_dirty(spark):
-    """review r6: a STRUCT-typed partition column ('s.a') is re-valued by
-    assigning its TOP-LEVEL field ('s') — the dirty flag must key on the
-    top-level name too, or pruned reads lose the re-valued rows."""
-    import shutil as _sh
-    import tempfile
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_struct_")
-    mpp = MppSession(spark, wh)
-    try:
-        mpp.sql(
-            "CREATE TABLE sd(id INT, s STRUCT(a INT, b TEXT)) "
-            "PARTITION BY (s.a) WITH BUCKETS 6"
-        )
-        mpp.sql(
-            "INSERT INTO sd VALUES (1, named_struct('a', 1, 'b', 'x')), "
-            "(2, named_struct('a', 2, 'b', 'y')), (3, named_struct('a', 5, 'b', 'z'))"
-        )
-        # re-value the partition field via the top-level struct assignment
-        mpp.sql("UPDATE sd SET s = named_struct('a', 1, 'b', 'moved') WHERE id = 2")
-        assert mpp.table("sd").routing_dirty_ids()
-        got = sorted(
-            r["id"] for r in mpp.sql("SELECT id FROM sd WHERE s.a = 1").collect()
-        )
-        assert got == [1, 2]
-        mpp.sql("OPTIMIZE sd")
-        assert not mpp.table("sd").routing_dirty_ids()
-        got = sorted(
-            r["id"] for r in mpp.sql("SELECT id FROM sd WHERE s.a = 1").collect()
-        )
-        assert got == [1, 2]
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)
-
-
-def test_upsert_rewrites_only_matched_dirty_buckets(spark):
-    """review r6: an upsert on a routing-dirty table must rewrite the
-    batch's buckets plus only the dirty buckets that actually hold a
-    matching key — NOT every dirty bucket forever (write amplification)."""
-    import shutil as _sh
-    import tempfile
-
-    from duckdb_mpp_spark.dml import upsert
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_amp_")
-    mpp = MppSession(spark, wh)
-    try:
-        mpp.sql("CREATE TABLE da(k INT, v TEXT) PARTITION BY (k) WITH BUCKETS 8")
-        mpp.sql("INSERT INTO da VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-        mpp.sql("UPDATE da SET k = 40 WHERE k = 2")  # dirty: k=2's bucket
-        tbl = mpp.table("da")
-        dirty = set(tbl.routing_dirty_ids())
-        assert dirty
-        before = {
-            rel for rel in tbl.snapshot_files()
-            if int(rel.split("=", 1)[1].split("/", 1)[0]) in dirty
-        }
-        # unrelated-key upsert: dirty bucket's files must survive untouched
-        batch = spark.createDataFrame([(7, "new")], "k int, v string")
-        assert upsert(tbl, batch, ["k"]) == 1
-        after = {
-            rel for rel in tbl.snapshot_files()
-            if int(rel.split("=", 1)[1].split("/", 1)[0]) in dirty
-        }
-        assert after == before
-        # matching-key upsert: the misplaced key IS replaced (no duplicate)
-        batch = spark.createDataFrame([(40, "B2")], "k int, v string")
-        assert upsert(tbl, batch, ["k"]) == 1
-        rows = sorted(tuple(r) for r in mpp.sql("SELECT k, v FROM da").collect())
-        assert rows == [(1, "a"), (3, "c"), (7, "new"), (40, "B2")]
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)
-
-
-def test_time_travel_keeps_versioned_dirty_set(spark):
-    """The dirty set is per-snapshot: after OPTIMIZE clears it at head, a
-    time-travel scan of the pre-OPTIMIZE version must still widen pruning
-    with THAT version's dirty buckets (its files still hold the misplaced
-    row), and a pre-UPDATE version must scan clean."""
-    import shutil as _sh
-    import tempfile
-
-    wh = tempfile.mkdtemp(prefix="mpp_dirty_tt_")
-    mpp = MppSession(spark, wh)
-    try:
-        mpp.sql("CREATE TABLE tt(k INT, v TEXT) PARTITION BY (k) WITH BUCKETS 8")
-        mpp.sql("INSERT INTO tt VALUES (1, 'a'), (2, 'b')")       # v2 (v1 = CREATE)
-        tbl = mpp.table("tt")
-        v_clean = tbl.snapshot()[0]
-        mpp.sql("UPDATE tt SET k = 40 WHERE k = 2")               # dirty
-        v_dirty = tbl.snapshot()[0]
-        mpp.sql("OPTIMIZE tt")                                    # re-routed, clean
-        assert not tbl.routing_dirty_ids()
-        assert tbl.routing_dirty_ids(version=v_dirty)
-        assert not tbl.routing_dirty_ids(version=v_clean)
-        # pruned time-travel read of the dirty version sees the misplaced row
-        got = sorted(
-            r["v"] for r in tbl.scan(where="k = 40", version=v_dirty).collect()
-        )
-        assert got == ["b"]
-        # head read after repair still exact
-        got = sorted(r["v"] for r in tbl.scan(where="k = 40").collect())
-        assert got == ["b"]
-        # pre-update version: k=40 never existed
-        assert tbl.scan(where="k = 40", version=v_clean).count() == 0
-    finally:
-        _sh.rmtree(wh, ignore_errors=True)

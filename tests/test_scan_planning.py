@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from duckdb_mpp_spark import dml, pruning
+from duckdb_mpp_spark import pruning
 from duckdb_mpp_spark import table as table_mod
 from duckdb_mpp_spark.pruning import bucket_predicate_for_where
 from tests.conftest import bucket_files, count_jobs, input_paths, rows
@@ -90,9 +90,9 @@ def test_read_files_past_spark_listing_threshold_runs_no_job(spark, many_files):
 
 def test_keyed_update_bucket_selection_and_scan_run_no_job(spark, many_files):
     tbl = many_files
-    _base, files, dirty = tbl.snapshot_full()
+    _base, files = tbl.snapshot()
     with count_jobs(spark) as jobs:
-        ids = dml._dml_bucket_ids(tbl, "k = 5", dirty, files)
+        ids = tbl.pruned_bucket_ids("k = 5")
         df = tbl.read_buckets(files, ids)
     assert jobs == [0]
     assert len(ids) == 1

@@ -117,7 +117,7 @@ def test_sql_version_as_of(spark, mpp):
 def test_manifest_load_version_missing(mpp):
     tbl = mpp.create_distributed_table("mv", "k INT", "k", 2)
     with pytest.raises(ValueError, match="no snapshot v9"):
-        manifest.load_version(tbl.path, 9)
+        manifest.load_version_full(tbl.path, 9)
 
 
 def test_upsert_null_keys_append(spark, mpp):
@@ -162,7 +162,7 @@ def test_concurrent_commits_race_one_winner(mpp):
     assert len(winners) == 1  # exactly one writer claimed v(base+1)
     assert manifest.current_version(tbl.path) == base + 1
     # the committed snapshot is exactly the winner's content
-    assert set(manifest.load_version(tbl.path, base + 1)) == {winners[0][1]}
+    assert set(manifest.load_version_full(tbl.path, base + 1)[0]) == {winners[0][1]}
 
 
 def test_describe_history_sql(spark, mpp):
