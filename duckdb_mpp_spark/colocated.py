@@ -111,7 +111,7 @@ class ColocatedTable(DistributedTable):
         bucketed sort-merge joins skip the per-partition sort when file
         counts allow."""
         self.ensure_registered()
-        aligned = self._aligned_for_insert(df)
+        aligned = df.select(*self._insert_columns(df))
         obs = Observation()
         aligned = aligned.observe(obs, F.count(F.lit(1)).alias("cnt"))
         key = self.meta.partition_column

@@ -280,7 +280,7 @@ def upsert(
     # bucket-discovery count and the staged union both read the
     # materialized blocks, so a computed input pipeline (or a re-readable
     # file batch) is never run twice (VERDICT r3 "What's wrong" #1).
-    routed = table.route(table._aligned_for_insert(df))
+    routed = table._aligned_for_insert(df)
     # volume estimate BEFORE the checkpoint (RDD-backed plans report no
     # stats); the batch is often the dominant write volume — an initial
     # load via upsert into an empty table must still fan out (review r6)

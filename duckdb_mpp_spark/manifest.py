@@ -132,8 +132,15 @@ def file_entry(path: str, sort_col: str | None) -> dict:
             if st is None or not st.has_min_max:
                 complete = False  # any stats-less row group → no bound
                 break
-            mn = st.min if mn is None or st.min < mn else mn
-            mx = st.max if mx is None or st.max > mx else mx
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                # pyarrow cannot decode some stats (a DECIMAL stored as
+                # INT32/INT64, Spark's encoding up to 18 digits)
+                complete = False
+                break
+            mn = lo if mn is None or lo < mn else mn
+            mx = hi if mx is None or hi > mx else mx
         if not complete:
             continue
         emn, emx = _enc(mn), _enc(mx)

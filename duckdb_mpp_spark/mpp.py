@@ -824,11 +824,12 @@ class MppSession:
             src = self.spark.sql(rest)
             src = src.toDF(*target_cols)
         # missing columns → declared default or NULL (ResolveDefaults parity,
-        # src/execution/mpp_physical_insert.cpp:150-181)
+        # src/execution/mpp_physical_insert.cpp:150-181); insert casts
+        # every column to its declared type
         exprs = []
         for field in schema.fields:
             if field.name in target_cols:
-                exprs.append(F.col(field.name).cast(field.dataType).alias(field.name))
+                exprs.append(F.col(field.name))
             else:
                 default = tbl.meta.defaults.get(field.name, "NULL")
                 exprs.append(F.expr(default).cast(field.dataType).alias(field.name))

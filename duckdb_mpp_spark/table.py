@@ -18,18 +18,24 @@ Layout: ``<warehouse>/<name>_<oid>/__bucket=<i>/part-*.parquet``
   file-index partition pruning turns into "read only k of n directories" —
   the reference's scatter-gather scan (``src/function/mpp_table_scan.cpp``)
   collapses to this.
-- Insert: one shuffle on the bucket id, then a partitioned append — Spark's
-  shuffle replaces the reference's ShuffleManager + gRPC pull loop
-  (``src/execution/mpp_physical_insert.cpp``) wholesale. Row count comes from
-  an ``Observation`` on the write job itself (no second pass over the data).
+- Insert: a batch Catalyst folds to a local relation (a VALUES list, up to
+  ``REGIMES["small_write"]``) is routed on the driver and written bucket by
+  bucket with pyarrow, no Spark job — the reference's coordinator, which
+  splits each chunk by bucket and sends every shard its slice
+  (``src/execution/mpp_physical_insert.cpp:105-148``). Any other batch takes
+  one shuffle on the bucket id, then a partitioned append — Spark's shuffle
+  replaces the reference's ShuffleManager + gRPC pull loop wholesale, and
+  the row count comes from an ``Observation`` on the write job itself (no
+  second pass over the data).
 
 Commit protocol (manifest.py): data files are immutable and the versioned
 snapshot manifest is the source of truth; every read plans from the current
 snapshot's explicit file list. Every mutation — insert, compact and the COW
 DML in ``dml.py`` — takes the same three steps through two primitives:
 
-1. stage: ``_staged(frame)`` writes the bucket-routed frame in ONE job into
-   a ``<path>.stage-<hex>`` directory (removed on every exit);
+1. stage: ``_staged(frame)`` writes the bucket-routed frame in ONE job (or
+   an insert's collected local batch with no job) into a
+   ``<path>.stage-<hex>`` directory (removed on every exit);
 2. ingest: its ``ingest()`` moves the staged files to commit-unique names in
    the bucket directories and reads their footers into manifest entries;
 3. commit: ``_commit`` publishes the new snapshot by conditional put — an
@@ -44,7 +50,8 @@ leaves only unreferenced orphans (vacuumable).
 Scale notes (100 TB): a bucket is a *directory*, not a file — writes can
 produce many files per bucket, so intra-bucket parallelism survives any data
 size; pruning cost is O(#buckets) metadata; inserts are a single hash
-shuffle, identical to what any Spark groupBy pays. Scan planning is one
+shuffle, identical to what any Spark groupBy pays (the driver write takes
+only batches whose rows already sit in the driver's plan). Scan planning is one
 snapshot read plus a stat of each planned file — no directory listing, no
 footer schema inference (the reader gets the catalog schema), and, up to
 ``DRIVER_LISTING_FILES`` files, no Spark job: the stat runs on the driver;
@@ -54,14 +61,18 @@ COW DML plans only the touched buckets' files (``read_buckets``).
 
 from __future__ import annotations
 
+import datetime
 import os
 import re
 import shutil
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from duckdb_mpp_spark import manifest as _manifest_mod
@@ -198,6 +209,15 @@ REGIMES: dict[str, tuple[tuple[str, int | None], ...]] = {
     # the vocabulary-sized doc_freq broadcast back (0.88 -> 0.61 s at
     # sf0.1, 4 data exchanges -> 2); past it the tok-keyed hash join.
     "tfidf_vocab": (("broadcast", 256 * MiB), ("shuffle", None)),
+    # DistributedTable.insert of a batch Catalyst folds to a local
+    # relation (a VALUES list; its rows already sit in the driver's plan):
+    # collect it and write each bucket's rows with pyarrow (0 jobs), or
+    # the shuffle-and-write (2 jobs, ~0.9 s floor). Measured on a 4-core
+    # host, local[2], 12-bucket SORT BY table, planner bytes: 0.08/0.40/
+    # 0.80/1.60/3.20/4.81/6.41 MiB took 143/220/447/526/1069/1605/2367 ms
+    # on the driver against 959/926/881/963/1306/1850/2066 ms in Spark;
+    # the serving 10-row INSERT fell from ~790 to ~185 ms.
+    "small_write": (("driver", 4 * MiB), ("spark", None)),
 }
 
 # Forced arms, by regime name — tests patch this (monkeypatch.setitem) to
@@ -333,6 +353,77 @@ def spread_for_bucket_write(df: DataFrame, n_groups: int, split: int) -> DataFra
             .drop("__split")
         )
     return df.repartition(n_groups, BUCKET_COL)
+
+
+def _bucket_of_rel(rel: str) -> int:
+    """The bucket id of a snapshot file path (``__bucket=<b>/<file>``)."""
+    return int(rel.split("/", 1)[0].split("=", 1)[1])
+
+
+# Spark's default INT96 timestamps carry no footer min/max, so TIMESTAMP
+# columns would never skip a file (zonemap.py); INT64 microseconds
+# (UTC-adjusted, what the driver arm's pyarrow files hold too) do.
+_MICROS_TIMESTAMPS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+
+# Spark types whose collected Python values pyarrow writes as a parquet
+# column that Spark and DuckDB read back as the Spark writer's: same
+# logical type, same values.
+_ARROW_PLAIN = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _arrow_writable(dtype: T.DataType) -> bool:
+    if isinstance(dtype, StructType):
+        return all(_arrow_writable(f.dataType) for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return _arrow_writable(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return _arrow_writable(dtype.keyType) and _arrow_writable(dtype.valueType)
+    return type(dtype) in _ARROW_PLAIN
+
+
+def _arrow_value(dtype: T.DataType):
+    """A function from a collected value of Spark type ``dtype`` to the
+    value pyarrow writes as the same data, or None when the value passes
+    as it is. ``collect()`` hands a TIMESTAMP back as a naive wall time in
+    the Python process's local zone; ``astimezone`` reads it back as the
+    instant it came from (DST fold included), so the file holds the
+    collected instant whatever that zone is. Structs become tuples and
+    maps key/value pairs only where a timestamp sits inside them."""
+    if isinstance(dtype, T.TimestampType):
+        return lambda v: None if v is None else v.astimezone(datetime.timezone.utc)
+    if isinstance(dtype, T.ArrayType):
+        elem = _arrow_value(dtype.elementType)
+        return elem and (lambda v: None if v is None else [elem(x) for x in v])
+    if isinstance(dtype, T.MapType):
+        key, val = _arrow_value(dtype.keyType), _arrow_value(dtype.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or (lambda x: x), val or (lambda x: x)
+        return lambda v: None if v is None else [(key(k), val(x)) for k, x in v.items()]
+    if isinstance(dtype, StructType):
+        fields = [_arrow_value(f.dataType) for f in dtype.fields]
+        if not any(fields):
+            return None
+        return lambda v: None if v is None else tuple(
+            x if fn is None else fn(x) for fn, x in zip(fields, v)
+        )
+    return None
+
+
+def _folds_to_local(df: DataFrame) -> bool:
+    """True when Catalyst folds ``df`` to a LocalRelation — rows computed
+    on the driver while planning, so its ``collect()`` runs no job (a
+    VALUES list, however cast, routed and NOT NULL-guarded). A plan that
+    fails to optimize is not local: the Spark arm raises its error."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+    except (Py4JJavaError, PySparkException):
+        return False
+    return plan.getClass().getSimpleName() == "LocalRelation"
 
 
 class DistributedTable:
@@ -497,30 +588,84 @@ class DistributedTable:
         return dict(zip(new_rels, stats))
 
     @contextmanager
-    def _staged(self, frame: DataFrame):
-        """Stage bucket-routed ``frame`` (it carries ``__bucket``; the
-        caller shapes its partitioning) with ONE write job into a
+    def _staged(self, frame: DataFrame | list[Row]):
+        """Stage bucket-routed ``frame`` (it carries ``__bucket``) into a
         ``<path>.stage-<hex>`` directory, and yield ``ingest()`` —
-        ``_ingest_staged`` over that directory. Rows are sorted within
-        partitions on (``__bucket``, SORT BY column): each written file is
-        clustered on the sort column, so footer min/max become tight zone
-        maps (zonemap.py), with no extra shuffle. The directory is removed
-        on every exit — a failed write job or a raising constraint check
-        included — so no stage outlives its statement."""
-        sort_cols = [BUCKET_COL] + (
-            [self.meta.sort_column] if self.meta.sort_column else []
-        )
+        ``_ingest_staged`` over that directory. The directory is removed
+        on every exit — a failed write or a raising constraint check
+        included — so no stage outlives its statement.
+
+        A DataFrame (the caller shapes its partitioning) is written by ONE
+        job, its rows sorted within partitions on (``__bucket``, SORT BY
+        column): each file is clustered on the sort column, so footer
+        min/max become tight zone maps (zonemap.py), with no extra
+        shuffle. A list is a batch ``insert`` collected from a local
+        relation; ``_write_collected`` writes it with no job. Both write
+        TIMESTAMP columns as UTC-adjusted INT64 microseconds, whose footers
+        carry the min/max that Spark's default INT96 lacks."""
         tmp = f"{self.path}.stage-{uuid.uuid4().hex[:8]}"
         try:
-            (
-                frame.sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(tmp)
-            )
+            if isinstance(frame, DataFrame):
+                sort_cols = [BUCKET_COL] + (
+                    [self.meta.sort_column] if self.meta.sort_column else []
+                )
+                with conf_guard(self.spark, _MICROS_TIMESTAMPS):
+                    (
+                        frame.sortWithinPartitions(*sort_cols)
+                        .write.mode("overwrite")
+                        .partitionBy(BUCKET_COL)
+                        .parquet(tmp)
+                    )
+            else:
+                self._write_collected(frame, tmp)
             yield lambda: self._ingest_staged(tmp)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
+
+    def _write_collected(self, batch: list[Row], tmp: str) -> None:
+        """The driver arm of ``_staged``: one pyarrow-written parquet file
+        per bucket of ``batch`` (collected rows of ``_aligned_for_insert``,
+        ``__bucket`` last) under ``tmp/__bucket=<b>/`` — the directory
+        layout, types and column order of the Spark arm's files. Rows are
+        sorted on a primitive SORT BY column in Spark's ascending order:
+        nulls first, NaN last."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self.meta.schema)
+        convert = [_arrow_value(f.dataType) for f in self.meta.schema.fields]
+        os.makedirs(tmp)  # an empty batch stages an empty directory
+        by_bucket: dict[int, list[Row]] = {}
+        for r in batch:
+            by_bucket.setdefault(r[-1], []).append(r)
+        sort_col = self.meta.sort_column
+        for b, rs in by_bucket.items():
+            arrays = [
+                pa.array([r[i] for r in rs] if fn is None
+                         else [fn(r[i]) for r in rs], type=field.type)
+                for i, (fn, field) in enumerate(zip(convert, schema))
+            ]
+            data = pa.Table.from_arrays(arrays, schema=schema)
+            if sort_col and not pa.types.is_nested(data[sort_col].type):
+                keys = [(sort_col, "ascending")]
+                if pa.types.is_floating(data[sort_col].type):
+                    # Arrow puts NaN next to the nulls; Spark puts it last
+                    data = data.append_column("__nan", pc.is_nan(data[sort_col]))
+                    keys.insert(0, ("__nan", "ascending"))
+                order = pc.sort_indices(
+                    data, sort_keys=keys, null_placement="at_start"
+                )
+                data = data.take(order).select(schema.names)
+            bdir = os.path.join(tmp, f"{BUCKET_COL}={b}")
+            os.makedirs(bdir)
+            # no ARROW:schema footer: it grows a 1-row file by a third and
+            # no reader uses it (the Spark reader gets the catalog schema)
+            pq.write_table(
+                data, os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
+                store_schema=False,
+            )
 
     def _commit(
         self,
@@ -602,51 +747,81 @@ class DistributedTable:
         replay check for idempotent foreachBatch sinks (r7)."""
         return _manifest_mod.applied_stream_batch(self.path, lineage)
 
-    def route(self, df: DataFrame) -> DataFrame:
-        """Append the bucket-id column (the reference's hash-partitioning
-        expression, src/common/hash.cpp:39-48, re-expressed in Catalyst)."""
+    def _bucket_of(self, key: Column) -> Column:
+        """The bucket id of partition value ``key`` (the reference's
+        hash-partitioning expression, src/common/hash.cpp:39-48,
+        re-expressed in Catalyst)."""
         n = self.meta.buckets
+        return F.pmod(F.hash(key), F.lit(n)).cast("int")
+
+    def route(self, df: DataFrame) -> DataFrame:
+        """Append the bucket-id column to ``df`` (rows a moving UPDATE,
+        OPTIMIZE or a band-index probe route; an insert routes inside
+        ``_aligned_for_insert``'s projection instead)."""
         return df.withColumn(
-            BUCKET_COL,
-            F.pmod(F.hash(F.col(self.meta.partition_column)), F.lit(n)).cast("int"),
+            BUCKET_COL, self._bucket_of(F.col(self.meta.partition_column))
         )
 
     # -- write path -------------------------------------------------------
-    def _aligned_for_insert(self, df: DataFrame) -> DataFrame:
-        """Column-order/type alignment + NOT NULL enforcement shared by both
-        storage flavors (directory-per-bucket here, native bucketed in
-        colocated.py)."""
-        cols = [f.name for f in self.meta.schema.fields]
-        aligned = df.select(
-            *[
-                F.col(c).cast(self.meta.schema[c].dataType).alias(c)
-                for c in cols
-            ]
+    def _not_null_guard(self, field: StructField, col: Column) -> Column:
+        """``col``, raising when it is NULL in a NOT NULL ``field`` — the
+        one NOT NULL enforcement. The reference carries column constraints
+        into the shard DDL, where DuckDB rejects null writes
+        (src/function/create_distributed_table.cpp:107-108). Enforced
+        inline with raise_error — single pass, no validation pre-scan: a
+        VALUES batch fails while Catalyst folds it, any other batch inside
+        ``_staged``'s write job, both before any commit, so the table is
+        untouched on rejection."""
+        if field.nullable:
+            return col
+        msg = (
+            f"NOT NULL constraint failed: NULL value in column "
+            f'"{field.name}" of table "{self.meta.name}"'
         )
-        return self._not_null_checked(aligned, cols)
+        return F.when(
+            col.isNull(), F.raise_error(F.lit(msg)).cast(field.dataType)
+        ).otherwise(col)
+
+    def _insert_columns(self, df: DataFrame) -> list[Column]:
+        """Every catalog column of insert batch ``df``, cast to its
+        declared type and NOT NULL-guarded — shared by both storage
+        flavors (directory-per-bucket here, native bucketed in
+        colocated.py). A nullable column ``df`` already holds at its
+        declared type passes as it is: each Column call costs py4j round
+        trips, and the front door has cast every column already."""
+        have = {f.name: f.dataType for f in df.schema.fields}
+        return [
+            F.col(f.name)
+            if f.nullable and have.get(f.name) == f.dataType
+            else self._not_null_guard(f, F.col(f.name).cast(f.dataType)).alias(f.name)
+            for f in self.meta.schema.fields
+        ]
+
+    def _aligned_for_insert(self, df: DataFrame) -> DataFrame:
+        """``df`` as insert and upsert write it, in ONE projection: the
+        catalog columns (``_insert_columns``) plus ``__bucket``, hashed
+        from the partition value at its declared type. One ``select`` is
+        one analysis; ``route``'s ``withColumn`` would add another (~12 ms
+        of driver time a call) to every write."""
+        top, *path = self.meta.partition_column.split(".")
+        declared = self.meta.schema[top].dataType
+        key = F.col(top)
+        if top not in df.columns or df.schema[top].dataType != declared:
+            key = key.cast(declared)
+        for name in path:
+            key = key.getField(name)
+        return df.select(
+            *self._insert_columns(df), self._bucket_of(key).alias(BUCKET_COL)
+        )
 
     def _not_null_checked(self, df: DataFrame, columns) -> DataFrame:
-        """``df`` with every NOT NULL column among ``columns`` guarded —
-        the one NOT NULL enforcement, applied to each column a write gives
-        a new value (insert and upsert: all; UPDATE: the assigned ones).
-        The reference carries column constraints into the shard DDL, where
-        DuckDB rejects null writes
-        (src/function/create_distributed_table.cpp:107-108). Enforced
-        inline with raise_error — single pass, no validation pre-scan; the
-        failing write job fails inside ``_staged``, before any commit, so
-        the table is untouched on rejection."""
+        """``df`` with every NOT NULL column among ``columns`` guarded
+        (``_not_null_guard``) — how an UPDATE checks the columns it
+        assigns."""
         for field in self.meta.schema.fields:
-            if not field.nullable and field.name in columns:
-                msg = (
-                    f"NOT NULL constraint failed: NULL value in column "
-                    f'"{field.name}" of table "{self.meta.name}"'
-                )
+            if field.name in columns and not field.nullable:
                 df = df.withColumn(
-                    field.name,
-                    F.when(
-                        F.col(field.name).isNull(),
-                        F.raise_error(F.lit(msg)).cast(field.dataType),
-                    ).otherwise(F.col(field.name)),
+                    field.name, self._not_null_guard(field, F.col(field.name))
                 )
         return df
 
@@ -654,6 +829,7 @@ class DistributedTable:
         self,
         routed: DataFrame,
         files: dict[str, dict],
+        ids: list[int],
     ) -> None:
         """BUCKET-LOCAL uniqueness for declared UNIQUE/PRIMARY KEY columns —
         the reference's semantics exactly: constraints ride into shard DDL
@@ -664,17 +840,13 @@ class DistributedTable:
         is global here too, because routing puts equal values in one
         bucket. Multiple NULLs are allowed (SQL UNIQUE). Cost: one keyed
         shuffle per declared unique column over the batch plus the AFFECTED
-        buckets only — opt-in, and the batch is already checkpointed so
-        nothing is re-evaluated. A failing check raises before any file is staged, so
-        the table is untouched. ``insert`` re-runs it with the ingested
-        files as ``routed`` after every commit rebase, so a racing writer's
-        duplicate aborts the commit, while duplicates already on disk never
-        reject the batch."""
-        ids = sorted(
-            r[0]
-            for r in routed.select(BUCKET_COL).distinct().collect()
-            if r[0] is not None
-        )
+        buckets ``ids`` (the buckets ``routed`` lands in) only — opt-in,
+        and the batch is a local relation or already checkpointed, so
+        nothing is re-evaluated. A failing check raises before any file is
+        staged, so the table is untouched. ``insert`` re-runs it with the
+        ingested files as ``routed`` after every commit rebase, so a racing
+        writer's duplicate aborts the commit, while duplicates already on
+        disk never reject the batch."""
         # ``files``: the snapshot the caller will commit against — anything
         # landing after it conflicts the commit and revalidates (review r6)
         existing = self.read_buckets(files, ids)
@@ -694,39 +866,61 @@ class DistributedTable:
         detection is transactional with the data — see
         ``applied_stream_batch``.
 
-        Stage → ingest → commit (module docstring); a failed or crashed
-        insert leaves only unreferenced orphans, never a half-visible
-        append.
+        Two arms (``REGIMES["small_write"]``), one stage → ingest → commit
+        (module docstring); a failed or crashed insert leaves only
+        unreferenced orphans, never a half-visible append:
+
+        - ``driver``: a batch Catalyst folds to a local relation (a VALUES
+          list) is routed, cast and NOT NULL-checked by that folding, so
+          ``collect()`` runs no job, and ``_staged`` writes each touched
+          bucket's rows with pyarrow — the reference's coordinator-side
+          routing (src/execution/mpp_physical_insert.cpp:105-148);
+        - ``spark``: every other batch — one shuffle on the bucket id and
+          a partitioned write job, the scale-safe shape.
         """
-        routed = self.route(self._aligned_for_insert(df))
-        # volume estimate BEFORE any checkpoint (an RDD-backed plan reports
-        # Long.MaxValue stats — see write_split_factor)
-        split = write_split_factor(routed, self.meta.buckets)
+        routed = self._aligned_for_insert(df)
         # snapshot resolved ONCE, before the pre-write uniqueness check:
         # the check scans THIS version and the commit below pins it as
         # base, so any commit landing in between forces a CommitConflict →
         # rebase → revalidation against the NEW head, instead of slipping
         # through unchecked (review r6)
         base, files = self.snapshot()
+        count = None
+        if (
+            _arrow_writable(self.meta.schema)
+            and _folds_to_local(routed)
+            and regime("small_write", routed) == "driver"
+        ):
+            batch = routed.collect()
+            count = len(batch)
+            ids = sorted({r[-1] for r in batch})
+        else:
+            # volume estimate BEFORE any checkpoint (an RDD-backed plan
+            # reports Long.MaxValue stats — see write_split_factor)
+            split = write_split_factor(routed, self.meta.buckets)
+            if self.meta.unique_columns:
+                # single evaluation: the uniqueness check and the write
+                # job both read the materialized batch
+                routed = routed.localCheckpoint(eager=True)
+                ids = sorted(
+                    r[0] for r in routed.select(BUCKET_COL).distinct().collect()
+                )
+            # One shuffle so each bucket directory is written by few tasks
+            # (no small-file explosion when every input task holds every
+            # bucket). Routing on BUCKET_COL alone caps write parallelism
+            # at #affected buckets (SCALING.md names it as the first
+            # write-side wall at initial-load scale): when the batch is
+            # large relative to the bucket count, add a content-independent
+            # intra-bucket split key so each bucket spreads over
+            # ~input_parts/buckets write tasks. Small batches keep one file
+            # per bucket.
+            obs = Observation()
+            batch = spread_for_bucket_write(
+                routed, self.meta.buckets, split
+            ).observe(obs, F.count(F.lit(1)).alias("cnt"))
         if self.meta.unique_columns:
-            # single evaluation: the uniqueness check and the write job
-            # both read the materialized batch
-            routed = routed.localCheckpoint(eager=True)
-            self._enforce_unique(routed, files)
-        # One shuffle so each bucket directory is written by few tasks (no
-        # small-file explosion when every input task holds every bucket).
-        # Routing on BUCKET_COL alone caps write parallelism at #affected
-        # buckets (SCALING.md names it as the first write-side wall at
-        # initial-load scale): when the batch is large relative to the
-        # bucket count, add a content-independent intra-bucket split key so
-        # each bucket spreads over ~input_parts/buckets write tasks. Small
-        # batches (the common incremental case) keep one file per bucket —
-        # no small-file explosion, and the bench insert path is unchanged.
-        obs = Observation()
-        frame = spread_for_bucket_write(routed, self.meta.buckets, split).observe(
-            obs, F.count(F.lit(1)).alias("cnt")
-        )
-        with self._staged(frame) as ingest:
+            self._enforce_unique(routed, files, ids)
+        with self._staged(batch) as ingest:
             new_entries = ingest()
             # commit-race closure of the pre-check (review r4): after a
             # rebase, the ingested files are re-checked against the NEW head
@@ -734,7 +928,8 @@ class DistributedTable:
             if self.meta.unique_columns:
                 def revalidate(head_files):
                     self._enforce_unique(
-                        self.read_buckets(new_entries), head_files
+                        self.read_buckets(new_entries), head_files,
+                        sorted({_bucket_of_rel(rel) for rel in new_entries}),
                     )
             # An EMPTY insert still publishes a (no-op) snapshot: one
             # version per insert call is a load-bearing contract — time
@@ -746,6 +941,8 @@ class DistributedTable:
                 new_entries, base, files,
                 stream_batch=stream_batch, revalidate=revalidate,
             )
+        if count is not None:
+            return count
         try:
             return int(obs.get["cnt"])
         except Exception:
@@ -849,9 +1046,10 @@ class DistributedTable:
             evaluate_bucket_ids(self.spark, bucket_pred, self.meta.buckets)
         )
         sort_lc = (self.meta.sort_column or "").lower()
+        zoned: dict[str, zonemap.Bounds] = {}  # bounds against aware stats
         total, kept = 0, []
         for rel, ent in sorted(snap_files.items()):
-            b = int(rel.split("=", 1)[1].split("/", 1)[0])
+            b = _bucket_of_rel(rel)
             if b not in bucket_ids:
                 continue
             total += 1
@@ -865,6 +1063,10 @@ class DistributedTable:
                     continue  # no stats for this column → cannot exclude
                 mn = _manifest_mod._dec(stat[0])
                 mx = _manifest_mod._dec(stat[1])
+                if isinstance(mn, datetime.datetime) and mn.tzinfo is not None:
+                    if cname not in zoned:
+                        zoned[cname] = bnd.in_zone(zonemap.session_zone(self.spark))
+                    bnd = zoned[cname]
                 if mn is not None and not zonemap.file_overlaps(mn, mx, bnd):
                     keep = False
                     break
@@ -971,7 +1173,7 @@ class DistributedTable:
 
         stats = {b: [0, 0, 0] for b in range(self.meta.buckets)}
         for rel, ent in self.snapshot_files().items():
-            b = int(rel.split("=", 1)[1].split("/", 1)[0])
+            b = _bucket_of_rel(rel)
             stats[b][0] += 1
             stats[b][1] += _os.path.getsize(_os.path.join(self.path, rel))
             stats[b][2] += ent["rows"]

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from duckdb_mpp_spark.pruning import (
     BoolOp,
@@ -70,6 +70,39 @@ class Bounds:
     @property
     def constrained(self) -> bool:
         return not self.invalid and (self.lo is not None or self.hi is not None)
+
+    def in_zone(self, tz) -> "Bounds":
+        """These bounds as Spark compares them with a UTC-adjusted
+        TIMESTAMP column, whose footer stats are aware datetimes: a naive
+        TIMESTAMP or DATE literal, or an ISO date string, is a wall time
+        in the session time zone ``tz`` (None: left naive, so the aware
+        stat keeps its file). Other ends stay as they are."""
+        return replace(self, lo=_instant(self.lo, tz), hi=_instant(self.hi, tz))
+
+
+def _instant(v, tz):
+    if isinstance(v, str):
+        try:
+            v = datetime.datetime.fromisoformat(v)
+        except ValueError:
+            return v
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+        v = datetime.datetime.combine(v, datetime.time.min)
+    if isinstance(v, datetime.datetime) and v.tzinfo is None:
+        return v.replace(tzinfo=tz)
+    return v
+
+
+def session_zone(spark):
+    """The zone Spark reads a naive TIMESTAMP literal in
+    (``spark.sql.session.timeZone``), or None when it is not an IANA name
+    Python knows (a fixed offset such as ``+08:00``)."""
+    from zoneinfo import ZoneInfo
+
+    try:
+        return ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    except (KeyError, ValueError):  # ZoneInfoNotFoundError is a KeyError
+        return None
 
 
 def _conjuncts(node):

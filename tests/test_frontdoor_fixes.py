@@ -450,12 +450,15 @@ def test_predicate_trailing_whitespace_still_prunes():
     assert parse_predicate("c0 = 1\n") is not None
 
 
-def test_concurrent_insert_unique_race_detected(spark, mpp, monkeypatch):
+@pytest.mark.parametrize("batch", ["rows", "values"])
+def test_concurrent_insert_unique_race_detected(spark, mpp, monkeypatch, batch):
     """review r4: two concurrent inserts of the same UNIQUE key — both
     pass the pre-commit check against the same base snapshot; the loser's
     rebase-and-retry must re-validate against the new head and abort. The
     re-check is the pre-check's own primitive, so a duplicate already on
-    disk in the affected bucket never rejects the batch."""
+    disk in the affected bucket never rejects the batch. The losing
+    writer's batch is a client-built frame (the Spark write) or a VALUES
+    list (the driver write, ``REGIMES["small_write"]``)."""
     import dataclasses
 
     mpp.sql("CREATE TABLE cr(id INT UNIQUE, grp INT) PARTITION BY (grp) WITH BUCKETS 2")
@@ -478,11 +481,26 @@ def test_concurrent_insert_unique_race_detected(spark, mpp, monkeypatch):
             return entries
 
         monkeypatch.setattr(tbl, "_ingest_staged", ingest)
-        return tbl.insert(spark.createDataFrame([(own_id, 10)], "id INT, grp INT"))
+        if batch == "values":
+            own = spark.sql(f"SELECT * FROM VALUES ({own_id}, 10) AS v(id, grp)")
+        else:
+            own = spark.createDataFrame([(own_id, 10)], "id INT, grp INT")
+        return tbl.insert(own)
 
+    collected = []
+    real_write = tbl._write_collected
+    monkeypatch.setattr(
+        tbl, "_write_collected",
+        lambda rows, tmp: collected.append(len(rows)) or real_write(rows, tmp),
+    )
     assert insert_racing(42, 43) == 1
+    head = tbl.snapshot()[0]
     with pytest.raises(ValueError, match="unique constraint"):
         insert_racing(44, 44)
+    # the racing writer B's commit is the only new version
+    assert tbl.snapshot()[0] == head + 1
+    # a VALUES batch took the driver write; a client-built one did not
+    assert collected == ([1, 1] if batch == "values" else [])
     # only writer B's id 44 is visible; A's files stay unreferenced orphans
     got = mpp.sql("SELECT id, COUNT(*) AS n FROM cr GROUP BY id")
     assert rows(got, "id") == [(1, 1), (5, 2), (42, 1), (43, 1), (44, 1)]

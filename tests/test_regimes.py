@@ -11,17 +11,42 @@ certificate, contamination overlap — return non-empty answers there.
 
 import os
 import re
+import shutil
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from duckdb_mpp_spark import table
+from duckdb_mpp_spark.mpp import MppSession
 from duckdb_mpp_spark.operators.lm import lm_fluency_gate_fn
 from duckdb_mpp_spark.queries import run_spark_query
 from duckdb_mpp_spark.sources import load_table
 from tests.test_oracle import SF_DIR, _canon
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "duckdb_mpp_spark")
+
+def values_insert(spark, sf):
+    """A VALUES INSERT (NULLs, a NOT NULL column, a TIMESTAMP SORT BY
+    column) into a fresh table, read back: ``small_write`` is a write."""
+    warehouse = tempfile.mkdtemp(prefix="regimes_wh_")
+    try:
+        mpp = MppSession(spark, warehouse)
+        mpp.sql(
+            "CREATE TABLE sw(k INT, v DOUBLE NOT NULL, s TEXT, ts TIMESTAMP, "
+            "d DECIMAL(18,4)) PARTITION BY (k) WITH BUCKETS 4 SORT BY (ts)"
+        )
+        mpp.sql(
+            "INSERT INTO sw VALUES (1, 1.5, 'a', TIMESTAMP '2024-01-02 03:04:05', "
+            "1.25), (2, -2, NULL, NULL, NULL), (NULL, 0, 'c', "
+            "TIMESTAMP '1999-12-31 23:59:59.5', -7), (1, 4, 'd', "
+            "TIMESTAMP '2024-01-01 00:00:00', 0)"
+        )
+        got = mpp.sql("SELECT * FROM sw")
+        return spark.createDataFrame(got.collect(), got.schema)
+    finally:
+        shutil.rmtree(warehouse, ignore_errors=True)
+
 
 # regime -> (gates that reach it, arms forced alongside so they do). A gate
 # is a registry name or a gate function (the LM-fluency gate is not
@@ -39,6 +64,7 @@ GATES = {
     "span_owner_broadcast": (("dedup_substring_spans",), {}),
     "cut_spans_frame": (("dedup_cut_spans",), {}),
     "tfidf_vocab": (("text_tfidf_keywords",), {}),
+    "small_write": ((values_insert,), {}),
 }
 
 _DEFAULTS: dict = {}

@@ -57,19 +57,25 @@ def test_failed_statement_keeps_head_and_leaves_no_stage(mpp, verb):
 
 # Spark jobs per statement on a plain 12-bucket SORT BY table, as measured
 # when every verb still had its own copy of the write path: sharing one
-# path must not add a job to any of them.
-JOB_BUDGET = {"insert": 2, "update": 2, "delete": 2, "upsert": 8, "optimize": 2}
+# path must not add a job to any of them. A VALUES INSERT runs none: the
+# driver collects the folded batch and writes it (REGIMES["small_write"]);
+# into a table with a UNIQUE column it runs only the duplicate check's.
+JOB_BUDGET = {
+    "insert": 0, "update": 2, "delete": 2, "upsert": 8, "optimize": 2,
+    "insert_unique": 2,
+}
 
 
 def test_plain_table_write_job_counts(spark, mpp):
-    mpp.sql(
-        "CREATE TABLE jc(k INT, u INT, v INT, d INT) PARTITION BY (k) "
-        "WITH BUCKETS 12 SORT BY (d)"
-    )
-    mpp.sql(
-        "INSERT INTO jc SELECT CAST(id % 50 AS INT), CAST(id AS INT), "
-        "CAST(id AS INT), CAST(id % 97 AS INT) FROM range(2000)"
-    )
+    for name, u in (("jc", "u INT"), ("ju", "u INT UNIQUE")):
+        mpp.sql(
+            f"CREATE TABLE {name}(k INT, {u}, v INT, d INT) PARTITION BY (k) "
+            "WITH BUCKETS 12 SORT BY (d)"
+        )
+        mpp.sql(
+            f"INSERT INTO {name} SELECT CAST(id % 50 AS INT), CAST(id AS INT), "
+            "CAST(id AS INT), CAST(id % 97 AS INT) FROM range(2000)"
+        )
     vals = ", ".join(f"({i % 50}, {10000 + i}, {i}, {i})" for i in range(10))
     batch = spark.createDataFrame(
         [(3, 20000, 1, 1), (4, 20001, 2, 2)], "k int, u int, v int, d int"
@@ -80,6 +86,7 @@ def test_plain_table_write_job_counts(spark, mpp):
         "delete": lambda: mpp.sql("DELETE FROM jc WHERE k = 9 AND v % 7 = 0"),
         "upsert": lambda: mpp.upsert("jc", batch, ["k", "u"]),
         "optimize": lambda: mpp.sql("OPTIMIZE jc"),
+        "insert_unique": lambda: mpp.sql(f"INSERT INTO ju VALUES {vals}"),
     }
     got = {}
     for verb, run in statements.items():

@@ -410,3 +410,44 @@ def test_or_predicate_returns_all_matching_rows(sorted_table):
     merge skipped everything outside the first conjunct's range)."""
     got = rows(sorted_table.scan(where="v = 10 AND k >= 0 OR v = 250"), "v")
     assert [r[1] for r in got] == [10, 250]
+
+
+def test_timestamp_sort_by_skips_files(spark, mpp):
+    """A TIMESTAMP SORT BY column skips files: staged writes store
+    TIMESTAMP as UTC-adjusted INT64 microseconds, whose footers carry the
+    min/max that INT96 lacks, and a naive literal is read in the session
+    time zone before it meets those aware stats. Every read returns the
+    unpruned view's rows, in zones on both sides of UTC."""
+    from duckdb_mpp_spark.session import conf_guard
+
+    tbl = mpp.create_distributed_table(
+        "tsz", "k INT, ts TIMESTAMP", "k", 4, sort_column="ts"
+    )
+    hours = spark.range(200).selectExpr(
+        "CAST(id AS INT) AS k",
+        "timestampadd(HOUR, id, TIMESTAMP '2024-01-01 00:00:00') AS ts",
+    )
+    # two range-disjoint loads: k 0-99 end at 2024-01-05 03:00 UTC
+    for lo in (0, 100):
+        tbl.insert(hours.where(f"k >= {lo} AND k < {lo + 100}"))
+    assert all(e["min"] is not None for e in tbl.snapshot_files().values())
+    unpruned = tbl._read_files(tbl.snapshot_files())
+    cases = [
+        ("UTC", "ts >= TIMESTAMP '2024-01-06 00:00:00'"),
+        ("UTC", "ts < '2024-01-03'"),
+        ("UTC", "ts BETWEEN DATE '2024-01-07' AND DATE '2024-01-08'"),
+        # 11:00 in Tokyo is 02:00 UTC: k = 99 (03:00 UTC) is in the first
+        # load, which a literal read as UTC would skip whole
+        ("Asia/Tokyo", "ts > TIMESTAMP '2024-01-05 11:00:00'"),
+        # 23:00 in New York is 04:00 UTC the next day: the first load is out
+        ("America/New_York", "ts > TIMESTAMP '2024-01-04 23:00:00'"),
+    ]
+    for zone, where in cases:
+        with conf_guard(spark, {"spark.sql.session.timeZone": zone}):
+            got = rows(tbl.scan(where=where), "k")
+            kept, total = tbl.last_file_skip
+            assert got == rows(unpruned.where(where).select("k", "ts"), "k"), where
+        assert kept < total, (zone, where, kept, total)
+    assert "Files: " in mpp.sql(
+        "EXPLAIN SELECT k FROM tsz WHERE ts >= TIMESTAMP '2024-01-06 00:00:00'"
+    )
