@@ -118,13 +118,17 @@ def file_entry(path: str, sort_col: str | None) -> dict:
     column, not just the SORT BY one). The sort column's bounds are also
     kept in the legacy top-level ``min``/``max`` fields so pre-r4
     snapshots and readers stay compatible. Absent/partial/unencodable
-    stats simply omit the column — conservative (the file is kept)."""
+    stats simply omit the column — conservative (the file is kept). Only
+    top-level columns count: a nested leaf's name is its last path part
+    (``x`` of struct ``st``), which would pose as a top-level ``x``."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
     entry: dict = {"rows": md.num_rows, "min": None, "max": None}
     cols: dict[str, list] = {}
     for idx, name in enumerate(md.schema.names):
+        if md.schema.column(idx).path != name:
+            continue
         mn = mx = None
         complete = True
         for rg in range(md.num_row_groups):

@@ -628,7 +628,8 @@ class DistributedTable:
         ``__bucket`` last) under ``tmp/__bucket=<b>/`` — the directory
         layout, types and column order of the Spark arm's files. Rows are
         sorted on a primitive SORT BY column in Spark's ascending order:
-        nulls first, NaN last."""
+        nulls first, NaN last. Footer min/max cover the top-level columns
+        that hold no NaN."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -658,13 +659,24 @@ class DistributedTable:
                     data, sort_keys=keys, null_placement="at_start"
                 )
                 data = data.take(order).select(schema.names)
+            # Arrow leaves NaN out of a float column's min/max while Spark
+            # orders NaN above every value, so a NaN-holding column gets no
+            # stats: with them, the zone maps and Spark's row-group filter
+            # would skip its NaN rows on `d > x`. Nested columns get none
+            # either (no zone map reads them; a NaN may hide in a leaf).
+            stats = [
+                f.name for f in schema
+                if not pa.types.is_nested(f.type)
+                and not (pa.types.is_floating(f.type)
+                         and pc.any(pc.is_nan(data[f.name])).as_py())
+            ]
             bdir = os.path.join(tmp, f"{BUCKET_COL}={b}")
             os.makedirs(bdir)
             # no ARROW:schema footer: it grows a 1-row file by a third and
             # no reader uses it (the Spark reader gets the catalog schema)
             pq.write_table(
                 data, os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
-                store_schema=False,
+                store_schema=False, write_statistics=stats,
             )
 
     def _commit(
@@ -1046,7 +1058,7 @@ class DistributedTable:
             evaluate_bucket_ids(self.spark, bucket_pred, self.meta.buckets)
         )
         sort_lc = (self.meta.sort_column or "").lower()
-        zoned: dict[str, zonemap.Bounds] = {}  # bounds against aware stats
+        tz = zonemap.session_zone(self.spark)
         total, kept = 0, []
         for rel, ent in sorted(snap_files.items()):
             b = _bucket_of_rel(rel)
@@ -1063,11 +1075,7 @@ class DistributedTable:
                     continue  # no stats for this column → cannot exclude
                 mn = _manifest_mod._dec(stat[0])
                 mx = _manifest_mod._dec(stat[1])
-                if isinstance(mn, datetime.datetime) and mn.tzinfo is not None:
-                    if cname not in zoned:
-                        zoned[cname] = bnd.in_zone(zonemap.session_zone(self.spark))
-                    bnd = zoned[cname]
-                if mn is not None and not zonemap.file_overlaps(mn, mx, bnd):
+                if mn is not None and not zonemap.file_overlaps(mn, mx, bnd, tz):
                     keep = False
                     break
             if keep:

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from duckdb_mpp_spark.pruning import (
     BoolOp,
@@ -71,16 +71,13 @@ class Bounds:
     def constrained(self) -> bool:
         return not self.invalid and (self.lo is not None or self.hi is not None)
 
-    def in_zone(self, tz) -> "Bounds":
-        """These bounds as Spark compares them with a UTC-adjusted
-        TIMESTAMP column, whose footer stats are aware datetimes: a naive
-        TIMESTAMP or DATE literal, or an ISO date string, is a wall time
-        in the session time zone ``tz`` (None: left naive, so the aware
-        stat keeps its file). Other ends stay as they are."""
-        return replace(self, lo=_instant(self.lo, tz), hi=_instant(self.hi, tz))
-
 
 def _instant(v, tz):
+    """Bound ``v`` as Spark compares it with a UTC-adjusted TIMESTAMP
+    column, whose footer stats are aware datetimes: a naive TIMESTAMP or
+    DATE literal, or an ISO date string, is a wall time in the session
+    time zone ``tz`` (None: left naive, so the aware stat keeps its file).
+    Other values stay as they are."""
     if isinstance(v, str):
         try:
             v = datetime.datetime.fromisoformat(v)
@@ -175,13 +172,17 @@ def all_bounds(
     return {c: b for c, b in out.items() if b.constrained}
 
 
-def _coerce(stat, bound):
+def _coerce(stat, bound, tz=None):
     """Coerce a parquet stat and a parsed literal to comparable types;
-    returns (stat, bound) or None when incomparable (→ keep the file)."""
+    returns (stat, bound) or None when incomparable (→ keep the file).
+    ``tz`` is the session time zone a naive bound is read in against an
+    aware (UTC-adjusted TIMESTAMP) stat."""
     import datetime as _dt
 
     if stat is None or bound is None:
         return None
+    if isinstance(stat, _dt.datetime) and stat.tzinfo is not None:
+        bound = _instant(bound, tz)
     if isinstance(stat, (int, float)) and isinstance(bound, (int, float)):
         # compare as-is: Python's int/float comparison is exact, while a
         # float cast collapses distinct int64 values above 2^53 and could
@@ -195,9 +196,9 @@ def _coerce(stat, bound):
     if isinstance(stat, str) and isinstance(bound, str):
         return stat, bound
     if isinstance(stat, _dt.datetime) and isinstance(bound, _dt.datetime):
-        # naive/aware mixes are incomparable in Python (TypeError) even
-        # though Spark compares them fine after session-tz normalization —
-        # keep the file rather than crash the scan (review r4)
+        # a naive/aware mix left over (no usable session zone, or a naive
+        # stat against an aware bound) is incomparable in Python — keep
+        # the file rather than crash the scan (review r4)
         if (stat.tzinfo is None) != (bound.tzinfo is None):
             return None
         return stat, bound
@@ -274,10 +275,12 @@ def _canonical_temporal_stat(s) -> bool:
     return bool(_CANON_DATE_RE.fullmatch(s))
 
 
-def file_overlaps(fmin, fmax, bounds: Bounds) -> bool:
+def file_overlaps(fmin, fmax, bounds: Bounds, tz=None) -> bool:
     """True unless the footer stats PROVE the file disjoint from bounds.
-    Any comparison that raises (types _coerce paired but Python still
-    can't order) keeps the file — skipping degrades, never crashes."""
+    ``tz`` is the session time zone (:func:`session_zone`) naive bounds
+    are read in against aware stats. Any comparison that raises (types
+    _coerce paired but Python still can't order) keeps the file —
+    skipping degrades, never crashes."""
     if isinstance(bounds.lo, datetime.date) or isinstance(
         bounds.hi, datetime.date
     ):
@@ -291,13 +294,13 @@ def file_overlaps(fmin, fmax, bounds: Bounds) -> bool:
                 return True
     try:
         if bounds.lo is not None:
-            c = _coerce(fmax, bounds.lo)
+            c = _coerce(fmax, bounds.lo, tz)
             if c is not None:
                 fmx, lo = c
                 if fmx < lo or (fmx == lo and not bounds.lo_inclusive):
                     return False
         if bounds.hi is not None:
-            c = _coerce(fmin, bounds.hi)
+            c = _coerce(fmin, bounds.hi, tz)
             if c is not None:
                 fmn, hi = c
                 if fmn > hi or (fmn == hi and not bounds.hi_inclusive):

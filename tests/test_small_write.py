@@ -204,3 +204,30 @@ def test_only_local_batches_take_the_driver_arm(spark, mpp, monkeypatch):
     assert sorted(tuple(r) for r in mpp.sql("SELECT * FROM lb").collect()) == [
         (0, 1), (1, 1), (1, 1), (2, 1), (2, 2), (3, 1), (3, 3), (4, 1)
     ]
+
+
+def test_nan_rows_survive_range_reads_on_both_arms(mpp, monkeypatch):
+    """Arrow leaves NaN out of a DOUBLE column's footer min/max, while Spark
+    orders NaN above every value: a driver-written file that holds a NaN
+    carries no stats for that column, or ``d > 3`` would skip its NaN rows
+    (in the zone maps and in Spark's row-group filter alike)."""
+    values = "(1, 2.5, 1.0), (1, double('NaN'), 2.0), (2, -1.0, double('NaN'))"
+    for name, arm in (("nd", "driver"), ("ns", "spark")):
+        mpp.sql(
+            f"CREATE TABLE {name}(k INT, d DOUBLE, e DOUBLE) PARTITION BY (k) "
+            "WITH BUCKETS 4 SORT BY (d)"
+        )
+        with monkeypatch.context() as m:
+            m.setitem(table._FORCED, "small_write", arm)
+            assert mpp.sql(f"INSERT INTO {name} VALUES {values}") == 3
+        tbl = mpp.table(name)
+        unpruned = tbl._read_files(tbl.snapshot_files()).select("k", "d", "e")
+        # 2.5 and 1.0 are the largest finite values of d and e
+        for where in ("d > 3", "e > 2.5", "d > 2.5 AND e > 1.0"):
+            want = sorted(repr(tuple(r)) for r in unpruned.where(where).collect())
+            assert want, where
+            for got in (
+                mpp.sql(f"SELECT k, d, e FROM {name} WHERE {where}"),
+                tbl.scan(where=where).select("k", "d", "e"),
+            ):
+                assert sorted(repr(tuple(r)) for r in got.collect()) == want, (arm, where)

@@ -60,9 +60,10 @@ def test_failed_statement_keeps_head_and_leaves_no_stage(mpp, verb):
 # path must not add a job to any of them. A VALUES INSERT runs none: the
 # driver collects the folded batch and writes it (REGIMES["small_write"]);
 # into a table with a UNIQUE column it runs only the duplicate check's.
+# INSERT ... SELECT keeps the Spark write's two.
 JOB_BUDGET = {
-    "insert": 0, "update": 2, "delete": 2, "upsert": 8, "optimize": 2,
-    "insert_unique": 2,
+    "insert": 0, "insert_select": 2, "update": 2, "delete": 2, "upsert": 8,
+    "optimize": 2, "insert_unique": 2,
 }
 
 
@@ -82,6 +83,10 @@ def test_plain_table_write_job_counts(spark, mpp):
     )
     statements = {
         "insert": lambda: mpp.sql(f"INSERT INTO jc VALUES {vals}"),
+        "insert_select": lambda: mpp.sql(
+            "INSERT INTO jc SELECT CAST(id % 50 AS INT), CAST(id AS INT), "
+            "CAST(id AS INT), CAST(id AS INT) FROM range(10)"
+        ),
         "update": lambda: mpp.sql("UPDATE jc SET v = v + 1 WHERE k = 7"),
         "delete": lambda: mpp.sql("DELETE FROM jc WHERE k = 9 AND v % 7 = 0"),
         "upsert": lambda: mpp.upsert("jc", batch, ["k", "u"]),

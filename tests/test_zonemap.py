@@ -404,6 +404,42 @@ def test_file_overlaps_naive_vs_aware_keeps_file():
     )
 
 
+def test_file_overlaps_reads_naive_bounds_in_the_session_zone():
+    """Against aware (UTC-adjusted TIMESTAMP) stats, a naive TIMESTAMP or
+    DATE bound, or an ISO date string, is a wall time in the session zone."""
+    from zoneinfo import ZoneInfo
+
+    utc = datetime.timezone.utc
+    # the file spans 2024-01-01 00:00 .. 2024-01-01 20:00 UTC
+    fmin = datetime.datetime(2024, 1, 1, 0, tzinfo=utc)
+    fmax = datetime.datetime(2024, 1, 1, 20, tzinfo=utc)
+    tokyo, new_york = ZoneInfo("Asia/Tokyo"), ZoneInfo("America/New_York")
+    # 16:00 is 07:00 UTC in Tokyo (inside the file), 21:00 UTC in New York
+    late = Bounds(lo=datetime.datetime(2024, 1, 1, 16))
+    assert file_overlaps(fmin, fmax, late, tokyo)
+    assert not file_overlaps(fmin, fmax, late, new_york)
+    assert file_overlaps(fmin, fmax, late)  # no zone: kept
+    # midnight 2024-01-02 is 15:00 UTC on 2024-01-01 in Tokyo, and 05:00
+    # UTC on 2024-01-02 in New York
+    for day in (datetime.date(2024, 1, 2), "2024-01-02"):
+        assert file_overlaps(fmin, fmax, Bounds(lo=day), tokyo)
+        assert not file_overlaps(fmin, fmax, Bounds(lo=day), new_york)
+
+
+def test_nested_leaf_stats_do_not_pose_as_top_level_column(spark, mpp):
+    """A parquet footer names a struct field's stats by the leaf alone:
+    ``st.x`` must not stand in for the top-level ``x`` it shadows."""
+    # a range, not a local relation: the Spark write, which keeps leaf stats
+    df = spark.range(1).selectExpr(
+        "1 AS k", "5 AS x", "named_struct('x', 1) AS st"
+    )
+    tbl = mpp.create_distributed_table("nl", df.schema, "k", 2)
+    tbl.insert(df)
+    (ent,) = tbl.snapshot_files().values()
+    assert set(ent["cols"]) == {"k", "x"}
+    assert rows(tbl.scan(where="x > 1"), "k") == [(1, 5, (1,))]
+
+
 def test_or_predicate_returns_all_matching_rows(sorted_table):
     """End-to-end review-r4 case: WHERE v = <in-file-A> AND k >= 0 OR
     v = <in-file-B> must return rows from BOTH files (the old bounds
